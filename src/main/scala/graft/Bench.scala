@@ -117,7 +117,7 @@ object Bench {
       operators.DataSelection.trainScored(spark, sfDir)
       operators.LangModel.clearScoreCache()
       operators.LangModel.trainScores(spark, sfDir)
-    } catch { case _: Throwable => }
+    } catch { case scala.util.control.NonFatal(_) => }
     // GRAFT_BENCH_ONLY=<comma-separated names>: targeted re-bench of a
     // family under iteration (the full sf10 suite is a ~2 h single
     // sweep — measuring one fix must not cost that). The per-sweep

@@ -48,7 +48,7 @@ import org.apache.spark.sql.SparkSession
   * cleaner) — releasing a checkpoint outside the clear window can't be
   * proven safe from here.
   */
-final class SessionCache[V](maxEntries: Int = 4,
+final class SessionCache[V](val maxEntries: Int = 4,
     onEvict: V => Unit = (_: V) => (),
     onClear: V => Unit = (_: V) => ()) {
   private final class Holder(build: () => V) {
@@ -71,13 +71,18 @@ final class SessionCache[V](maxEntries: Int = 4,
       if (clearing) runHook(h, onClear)
     }
 
-  def getOrCompute(s: SparkSession, key: String)(build: => V): V = {
+  /** Map bookkeeping under the monitor: purge stopped sessions, map
+    * (s, key) to `pick(previous holder)` as the most recent entry and
+    * trim to the bound. The hooks of whatever left run after the
+    * monitor is released. */
+  private def touch(s: SparkSession, key: String)(pick: Option[Holder] => Holder)
+      : Holder = {
     val evicted = List.newBuilder[Holder]
     val h = m.synchronized {
       m.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      // re-insert on hit = LRU order; a miss reserves the slot with an
-      // unforced holder so a concurrent same-key caller joins this fit
-      val hh = m.remove((s, key)).getOrElse(new Holder(() => build))
+      val prev = m.remove((s, key))
+      val hh = pick(prev)
+      prev.filterNot(_ eq hh).foreach(evicted += _)
       m.put((s, key), hh)
       while (m.size > maxEntries) {
         evicted += m.head._2
@@ -86,6 +91,13 @@ final class SessionCache[V](maxEntries: Int = 4,
       hh
     }
     evicted.result().foreach(evictHook(_))
+    h
+  }
+
+  def getOrCompute(s: SparkSession, key: String)(build: => V): V = {
+    // re-insert on hit = LRU order; a miss reserves the slot with an
+    // unforced holder so a concurrent same-key caller joins this fit
+    val h = touch(s, key)(_.getOrElse(new Holder(() => build)))
     val v = h.value
     // evicted mid-build? the eviction pass saw forced=false and skipped
     // the hook — the builder releases its own orphaned value
@@ -93,6 +105,19 @@ final class SessionCache[V](maxEntries: Int = 4,
     if (!stillMapped) evictHook(h)
     v
   }
+
+  /** Seed (s, key) with an already-built value. A value it replaces
+    * leaves through the eviction path (onEvict only). */
+  def put(s: SparkSession, key: String, v: V): Unit = {
+    val h = new Holder(() => v)
+    h.value
+    touch(s, key)(_ => h)
+    ()
+  }
+
+  /** Keys mapped for `s`, least recently used first — spec hook. */
+  private[graft] def keys(s: SparkSession): Seq[String] =
+    m.synchronized(m.keys.collect { case (sess, k) if sess eq s => k }.toList)
 
   def clear(): Unit = {
     val all = m.synchronized {

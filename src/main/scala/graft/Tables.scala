@@ -126,7 +126,7 @@ object Tables {
           try groups += r.getRowGroups.size finally r.close()
         }
         ScanMeta(groups, bytes)
-      } catch { case _: Throwable =>
+      } catch { case scala.util.control.NonFatal(_) =>
         // unreadable footer: report "wide enough" so no spread fires
         ScanMeta(Int.MaxValue, 0L)
       }

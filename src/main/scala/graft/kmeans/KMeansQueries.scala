@@ -85,37 +85,20 @@ object KMeansQueries {
     * same hooks and cap, so their shared trajectory is trained once and
     * both consume it (a model is fit once and read many times; the
     * duplicated ~70-iteration loop was 8 s × 2 of the sf0.1 bench).
-    * Same lifecycle discipline as [[graft.operators.Similarity]]'s
-    * train cache: stopped sessions purged on access, LRU-bounded at
-    * [[FitCacheMaxEntries]] dirs, [[clearFitCache]] for the bench
+    * [[graft.SessionCache]] lifecycle; [[clearFitCache]] for the bench
     * protocol (which prices the rebuild as its own `kmeans_train_build`
     * entry per sweep). The cached value is K driver-side centroids plus
     * two scalars — no executor storage is pinned. */
   private[graft] def contractModel(s: SparkSession, dir: String): KMeansModel =
-    fitCache.synchronized {
-      fitCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      fitCache.get((s, dir)) match {
-        case Some(m) =>
-          fitCache.remove((s, dir)); fitCache.put((s, dir), m) // LRU touch
-          m
-        case None =>
-          val m = KMeans.fitLoop(Points.lineitem(s, dir), K, FitTraceCap,
-            KMeans.init, roundChain, KMeans.allclose10k)
-          fitCache.put((s, dir), m)
-          while (fitCache.size > FitCacheMaxEntries)
-            fitCache.remove(fitCache.head._1)
-          m
-      }
+    fitCache.getOrCompute(s, dir) {
+      KMeans.fitLoop(Points.lineitem(s, dir), K, FitTraceCap,
+        KMeans.init, roundChain, KMeans.allclose10k)
     }
 
-  /** Most dirs a session keeps contract-chain models for at once. */
-  val FitCacheMaxEntries = 4
-
-  private val fitCache =
-    scala.collection.mutable.LinkedHashMap[(SparkSession, String), KMeansModel]()
+  private val fitCache = new graft.SessionCache[KMeansModel]()
 
   /** Drop all memoized models (next [[contractModel]] retrains). */
-  def clearFitCache(): Unit = fitCache.synchronized(fitCache.clear())
+  def clearFitCache(): Unit = fitCache.clear()
 
   /** Force the memoized model — the bench's `kmeans_train_build` entry. */
   def trainFit(s: SparkSession, dir: String): Unit = { contractModel(s, dir); () }

@@ -310,61 +310,31 @@ object Dedup {
     * pipeline materializes this stage). `localCheckpoint` (eager)
     * truncates the plan to the materialized partitions, so each
     * consumer's plan starts from the pair ROWS, not the gram scan.
-    * Lifecycle (round-4 verdict blemish #1): entries are keyed by
-    * session (a stopped session's entries are purged on next access),
-    * the cache is LRU-bounded at [[PairCacheMaxEntries]] dirs —
-    * eviction drops the entry and leaves the blocks to the
-    * ContextCleaner (a still-held frame stays executable; round-5
-    * ADVICE) — and [[clearPairCache]] drops+releases everything
-    * (bench sweeps use it so every sweep prices the build exactly
-    * once, as its own `dedup_pairs_build` entry). DedupSpec exercises
-    * the eviction. */
-  def ngramPairs(s: SparkSession, dir: String): DataFrame = pairCache.synchronized {
-    // entries whose session has stopped are dead weight (their blocks
-    // died with the context) — purge before any lookup
-    pairCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    pairCache.get((s, dir)) match {
-      case Some(df) =>
-        pairCache.remove((s, dir)); pairCache.put((s, dir), df) // LRU touch
-        df
-      case None =>
-        // r14: spread the gram explode + verify substrate (see
-        // Tables.spread) — measured −0.7 s at sf0.1, and at sf1+ the
-        // single-row-group documents scan serializes the whole
-        // candidates+verify build otherwise. Quadratic pair-stage
-        // compute per byte ⇒ the low floor.
-        val docs = graft.Tables.spread(
-          Tables(s, dir, "documents"), dir, "documents",
-          graft.Tables.SpreadMinComputeBytes, col("doc_id"))
-        val g = hashedGramsOf(docs).persist()
-        val df =
-          try verifyPairs(docs, ngramCandidates(docs, NgramDfCap, g))
-            .localCheckpoint() // eager: materializes before g is released
-          finally g.unpersist(blocking = false)
-        pairCache.put((s, dir), df)
-        // LRU bound: a long-lived service session touching many dirs
-        // must not accumulate checkpoint storage until session stop
-        // (round-4 verdict blemish #1). Eviction only DROPS the map
-        // entry — it must NOT force-unpersist the checkpoint blocks,
-        // because a frame previously RETURNED to a caller may still be
-        // live, and localCheckpoint truncated its lineage: unpersisting
-        // under it would fail later executions with missing blocks
-        // (round-5 ADVICE). The ContextCleaner unpersists the RDD once
-        // the frame is actually unreachable; only [[clearPairCache]]
-        // (bench protocol, callers provably done) force-releases.
-        while (pairCache.size > PairCacheMaxEntries)
-          pairCache.remove(pairCache.head._1)
-        df
+    * [[graft.SessionCache]] lifecycle: LRU eviction only drops the
+    * entry and leaves the blocks to the ContextCleaner (a still-held
+    * frame stays executable: localCheckpoint truncated its lineage, so
+    * unpersisting under it would fail later executions), and
+    * [[clearPairCache]] drops+releases everything (bench sweeps use it
+    * so every sweep prices the build exactly once, as its own
+    * `dedup_pairs_build` entry). DedupSpec exercises the eviction. */
+  def ngramPairs(s: SparkSession, dir: String): DataFrame =
+    pairCache.getOrCompute(s, dir) {
+      // r14: spread the gram explode + verify substrate (see
+      // Tables.spread) — measured −0.7 s at sf0.1, and at sf1+ the
+      // single-row-group documents scan serializes the whole
+      // candidates+verify build otherwise. Quadratic pair-stage
+      // compute per byte ⇒ the low floor.
+      val docs = graft.Tables.spread(
+        Tables(s, dir, "documents"), dir, "documents",
+        graft.Tables.SpreadMinComputeBytes, col("doc_id"))
+      val g = hashedGramsOf(docs).persist()
+      try verifyPairs(docs, ngramCandidates(docs, NgramDfCap, g))
+        .localCheckpoint() // eager: materializes before g is released
+      finally g.unpersist(blocking = false)
     }
-  }
 
-  /** Most dirs a session keeps materialized pair lists for at once. */
-  val PairCacheMaxEntries = 4
-
-  // LinkedHashMap = insertion order; the explicit remove+put on hit
-  // makes it LRU order. All access synchronized on the map.
-  private val pairCache =
-    scala.collection.mutable.LinkedHashMap[(SparkSession, String), DataFrame]()
+  private[graft] val pairCache =
+    new graft.SessionCache[DataFrame](onClear = releaseCheckpoint)
 
   /** The block-backed RDD of an eagerly localCheckpoint'ed frame, if
     * the plan shape is the expected LogicalRDD leaf. */
@@ -379,13 +349,7 @@ object Dedup {
   private[operators] def releaseCheckpoint(df: DataFrame): Unit =
     try if (!df.sparkSession.sparkContext.isStopped)
       checkpointRdd(df).foreach(_.unpersist(blocking = false))
-    catch { case _: Throwable => () }
-
-  /** Dirs currently cached for `s`, oldest first — spec hook. */
-  private[graft] def pairCacheDirs(s: SparkSession): Seq[String] =
-    pairCache.synchronized {
-      pairCache.keys.collect { case (sess, d) if sess eq s => d }.toSeq
-    }
+    catch { case scala.util.control.NonFatal(_) => () }
 
   /** Whether the frame's checkpoint blocks are still registered — spec
     * hook for asserting eviction actually released storage. */
@@ -394,10 +358,7 @@ object Dedup {
       r.sparkContext.getPersistentRDDs.contains(r.id))
 
   /** Drop all materialized pair lists (next [[ngramPairs]] rebuilds). */
-  def clearPairCache(): Unit = pairCache.synchronized {
-    pairCache.values.foreach(releaseCheckpoint)
-    pairCache.clear()
-  }
+  def clearPairCache(): Unit = pairCache.clear()
 
   def dedupNgram(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -91,17 +91,19 @@ object EntityResolution {
   val VerifySalts = 32
 
   /** Cached (pairs, labels) per (session, dir) — the ER family's
-    * shared-build stage, the [[Dedup]] pair-cache discipline verbatim:
-    * five queries consume the same verified edge list and two of them
-    * the same component fixpoint, so both materialize ONCE
-    * (localCheckpoint / persisted fixpoint) and every query measures
-    * pure consumption; the bench prices the build as its own
-    * `er_link_build` entry. Eviction only drops the map entry (a
-    * returned frame may still be live); [[clearLinkCache]] (bench
-    * protocol, callers provably done) force-releases. */
-  val LinkCacheMaxEntries = 4
-  private val linkCache =
-    scala.collection.mutable.LinkedHashMap[(SparkSession, String), (DataFrame, DataFrame)]()
+    * shared-build stage, [[graft.SessionCache]] lifecycle: five queries
+    * consume the same verified edge list and two of them the same
+    * component fixpoint, so both materialize ONCE (localCheckpoint /
+    * persisted fixpoint) and every query measures pure consumption;
+    * the bench prices the build as its own `er_link_build` entry.
+    * Eviction only drops the entry (a returned frame may still be
+    * live); [[clearLinkCache]] (bench protocol, callers provably done)
+    * force-releases. */
+  private val linkCache = new graft.SessionCache[(DataFrame, DataFrame)](
+    onClear = { case (pairs, labels) =>
+      Dedup.releaseCheckpoint(pairs)
+      if (!labels.sparkSession.sparkContext.isStopped) labels.unpersist(blocking = false)
+    })
 
   /** The verified edge list: (a_key, b_key, nation, dist), a < b, one
     * row per linked pair — shared by the pair report, the clustering,
@@ -115,38 +117,17 @@ object EntityResolution {
   /** Force-build the shared stage (bench pricing hook). */
   def linkBuild(s: SparkSession, dir: String): Unit = { linkOf(s, dir); () }
 
-  def clearLinkCache(): Unit = linkCache.synchronized {
-    linkCache.values.foreach { case (pairs, labels) =>
-      Dedup.releaseCheckpoint(pairs)
-      try if (!labels.sparkSession.sparkContext.isStopped)
-        labels.unpersist(blocking = false)
-      catch { case _: Throwable => () }
-    }
-    linkCache.clear()
-  }
+  def clearLinkCache(): Unit = linkCache.clear()
 
   private def linkOf(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    linkCache.synchronized {
+    linkCache.getOrCompute(s, dir) {
       import s.implicits._
-      linkCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      linkCache.get((s, dir)) match {
-        case Some(v) =>
-          linkCache.remove((s, dir)); linkCache.put((s, dir), v) // LRU touch
-          v
-        case None =>
-          val pairs = linkPairs(Tables(s, dir, "customer")
-              .select($"c_custkey".as("key"), $"c_name".as("name"),
-                $"c_nationkey".as("nation")))
-            .localCheckpoint() // eager
-          // labelsOf returns an already-materialized persisted frame
-          val labels = Dedup.labelsOf(
-            pairs.select($"a_key".as("a_id"), $"b_key".as("b_id")))
-          val v = (pairs, labels)
-          linkCache.put((s, dir), v)
-          if (linkCache.size > LinkCacheMaxEntries)
-            linkCache.remove(linkCache.head._1) // drop only, never unpersist
-          v
-      }
+      val pairs = linkPairs(Tables(s, dir, "customer")
+          .select($"c_custkey".as("key"), $"c_name".as("name"),
+            $"c_nationkey".as("nation")))
+        .localCheckpoint() // eager
+      // labelsOf returns an already-materialized persisted frame
+      (pairs, Dedup.labelsOf(pairs.select($"a_key".as("a_id"), $"b_key".as("b_id"))))
     }
 
   /** The chunk-masked blocking passes, exploded as one (pass, key)

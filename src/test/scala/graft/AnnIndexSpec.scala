@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import graft.operators.Similarity
+import graft.operators.{Dedup, Similarity}
 
 /** The ANN index persistence contract: a saved index reloads into the
   * train-once cache and every ANN query consumes it — same results as
@@ -32,6 +32,17 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val loadedPq = SparkEntry.queries("ann_pq")(spark, dir).collect().toSeq
     assert(loadedIvf == freshIvf, "IVF results must match fresh training")
     assert(loadedPq == freshPq, "PQ results must match fresh training")
+  }
+
+  test("clearTrainCache releases the PQ codes checkpoint") {
+    val dir = "/root/testdata/sf0.001"
+    Similarity.clearTrainCache()
+    val codes = Similarity.pqModel(spark, dir).codes
+    assert(Dedup.checkpointLive(codes), "fresh codes must be materialized")
+    assert(Similarity.pqModel(spark, dir).codes eq codes, "second call must hit the memo")
+    Similarity.clearTrainCache()
+    assert(!Dedup.checkpointLive(codes),
+      "clearTrainCache must unpersist the codes' checkpoint blocks")
   }
 
   test("incremental append: batch-composable, and recall on the union matches a rebuild") {

@@ -689,13 +689,13 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     Dedup.clearPairCache()
     // path variants of the same physical dir give distinct cache keys
     // without needing 5 datasets
-    val dirs = (0 to Dedup.PairCacheMaxEntries).map(i => sf + "/." * i)
+    val dirs = (0 to Dedup.pairCache.maxEntries).map(i => sf + "/." * i)
     val first = Dedup.ngramPairs(spark, dirs.head)
     val firstRows = first.count()
     assert(Dedup.checkpointLive(first), "fresh entry must be materialized")
     dirs.tail.foreach(d => Dedup.ngramPairs(spark, d))
-    val cached = Dedup.pairCacheDirs(spark)
-    assert(cached.size == Dedup.PairCacheMaxEntries)
+    val cached = Dedup.pairCache.keys(spark)
+    assert(cached.size == Dedup.pairCache.maxEntries)
     assert(!cached.contains(dirs.head), "LRU head must be evicted")
     // round-5 ADVICE: eviction must NOT unpersist the truncated-lineage
     // checkpoint under a frame a caller may still hold — the held frame
@@ -708,7 +708,7 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     // clearPairCache (callers provably done) force-releases blocks
     val last = Dedup.ngramPairs(spark, dirs.head)
     Dedup.clearPairCache()
-    assert(Dedup.pairCacheDirs(spark).isEmpty)
+    assert(Dedup.pairCache.keys(spark).isEmpty)
     assert(!Dedup.checkpointLive(last),
       "clearPairCache must unpersist checkpoint blocks")
   }

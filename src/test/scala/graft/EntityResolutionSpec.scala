@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import graft.operators.EntityResolution
+import graft.operators.{Dedup, EntityResolution}
 
 /** Entity-resolution laws (exact values are DuckDB-oracle-checked via
   * the driver contract; these are the structural guarantees the
@@ -203,5 +203,18 @@ class EntityResolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(clusters.forall(_.getLong(1) >= 2))
     val nodes = pairs.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
     assert(clusters.map(_.getLong(1)).sum == nodes.length)
+  }
+
+  test("link cache: one build per dir; clearLinkCache releases it") {
+    EntityResolution.clearLinkCache()
+    val pairs = EntityResolution.pairsOf(spark, sf)
+    val labels = EntityResolution.labelsFor(spark, sf)
+    assert(EntityResolution.pairsOf(spark, sf) eq pairs, "pairs must be memoized")
+    assert(EntityResolution.labelsFor(spark, sf) eq labels, "labels must be memoized")
+    assert(Dedup.checkpointLive(pairs), "fresh pairs must be materialized")
+    EntityResolution.clearLinkCache()
+    assert(!Dedup.checkpointLive(pairs),
+      "clearLinkCache must unpersist the pairs' checkpoint blocks")
+    assert(EntityResolution.pairsOf(spark, sf) ne pairs, "clear must force a rebuild")
   }
 }

@@ -115,4 +115,17 @@ class SessionCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ev.toArray.toList == List(7),
       "the mid-build-evicted fit must release its own value on completion")
   }
+
+  test("put seeds a key; a replaced value leaves through onEvict") {
+    val ev = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val c = new SessionCache[Int](maxEntries = 2, onEvict = v => { ev.add(v); () })
+    c.put(spark, "a", 1)
+    assert(c.getOrCompute(spark, "a")(-1) == 1, "a seeded key must serve the seed")
+    c.put(spark, "a", 2)
+    assert(ev.toArray.toList == List(1), "the replaced value must run onEvict")
+    c.put(spark, "b", 3)
+    c.put(spark, "c", 4) // evicts a, the LRU head
+    assert(c.keys(spark) == List("b", "c"))
+    assert(ev.toArray.toList == List(1, 2))
+  }
 }
