@@ -32,6 +32,11 @@ object Main {
       scenario: Int = 1, seed: Option[Long] = None,
       partitions: Option[Int] = None, log: String = "dump.txt")
 
+  private def usage(problem: String): Nothing =
+    throw new IllegalArgumentException(
+      s"$problem; usage: graft.Main [--k K] [--max-iter N] " +
+        "[--scenario 1|2] [--seed S] [--partitions P] [--log FILE] <csv>...")
+
   def parse(argv: Array[String]): Args = {
     def loop(rest: List[String], acc: Args): Args = rest match {
       case "--k" :: v :: t          => loop(t, acc.copy(k = v.toInt))
@@ -40,16 +45,16 @@ object Main {
       case "--seed" :: v :: t       => loop(t, acc.copy(seed = Some(v.toLong)))
       case "--partitions" :: v :: t => loop(t, acc.copy(partitions = Some(v.toInt)))
       case "--log" :: v :: t        => loop(t, acc.copy(log = v))
-      case f :: _ if f.startsWith("--") =>
-        throw new IllegalArgumentException(
-          s"unknown option '$f'; usage: graft.Main [--k K] [--max-iter N] " +
-            "[--scenario 1|2] [--seed S] [--partitions P] [--log FILE] <csv>...")
+      case f :: _ if f.startsWith("--") => usage(s"unknown option '$f'")
       case p :: t                   => loop(t, acc.copy(paths = acc.paths :+ p))
       case Nil                      => acc
     }
     val a = loop(argv.toList, Args(Nil))
     require(a.paths.nonEmpty, "at least one points CSV path is required")
     require(a.k > 0 && a.maxIter > 0, "--k and --max-iter must be positive")
+    if (a.scenario != 1 && a.scenario != 2)
+      usage(s"--scenario must be 1 or 2, got ${a.scenario}")
+    a.partitions.filter(_ <= 0).foreach(p => usage(s"--partitions must be positive, got $p"))
     a
   }
 

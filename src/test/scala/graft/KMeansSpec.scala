@@ -23,6 +23,28 @@ class KMeansSpec extends AnyFunSuite {
   def pts(rows: (Long, Double, Double)*) =
     rows.toDF("pid", "x", "y")
 
+  private def round4(cs: Seq[Centroid]): Seq[Centroid] =
+    cs.map(c => Centroid(c.id,
+      graft.functions.Round4.r4(c.x), graft.functions.Round4.r4(c.y)))
+
+  /** Three contract-rounded fitLoop iterations against the DataFrame
+    * step() chain from the same init: every boundary, sizes, count. */
+  private def assertLoopMatchesStepChain(df: org.apache.spark.sql.DataFrame, k: Int,
+      clue: String): Unit = {
+    val m = KMeans.fitLoop(df, k, 3, KMeans.init, round4, (_, _) => false)
+    var cur = KMeans.init(df, k)
+    val hist = Seq.newBuilder[Seq[Centroid]]
+    hist += cur
+    var lastSizes = Map.empty[Int, Long]
+    for (_ <- 1 to 3) {
+      // no points, no centroids: step() needs >= 1, the loop keeps none
+      val (st, ns) = if (cur.isEmpty) (Nil, Map.empty[Int, Long]) else KMeans.step(df, cur)
+      cur = round4(st); hist += cur; lastSizes = ns
+    }
+    assert(m.history == hist.result(), clue)
+    assert(m.iterations == 3 && m.centroids == cur && m.sizes == lastSizes, clue)
+  }
+
   test("nearest centroid: argmin with smaller-id tie-break (codegen path)") {
     // (0,0) is equidistant from centroids 1 and 2 -> id 1 must win,
     // mirroring the reference's strict-< scan in id order.
@@ -82,20 +104,61 @@ class KMeansSpec extends AnyFunSuite {
     // chain with the same 4-decimal contract rounding
     val df = pts((1L, 0.0, 0.0), (2L, 2.0, 0.0), (3L, 10.0, 10.0),
       (4L, 10.2, 10.1), (5L, 0.3, 1.7), (6L, -4.5, 2.25))
-    def round(cs: Seq[Centroid]): Seq[Centroid] =
-      cs.map(c => Centroid(c.id,
-        graft.functions.Round4.r4(c.x), graft.functions.Round4.r4(c.y)))
-    val m = KMeans.fitLoop(df, 2, 3, KMeans.init, round, (_, _) => false)
-    var cur = KMeans.init(df, 2)
-    val hist = Seq.newBuilder[Seq[Centroid]]
-    hist += cur
-    var lastSizes = Map.empty[Int, Long]
-    for (_ <- 1 to 3) {
-      val (st, ns) = KMeans.step(df, cur)
-      cur = round(st); hist += cur; lastSizes = ns
+    assertLoopMatchesStepChain(df, 2, "")
+  }
+
+  test("fit fails with a clear error on a null coordinate") {
+    val df = Seq((1L, Some(0.0), Some(1.0)), (2L, Some(2.0), None),
+      (3L, Some(5.0), Some(5.0))).toDF("pid", "x", "y")
+    val e = intercept[Exception](KMeans.fit(df, 2, maxIter = 3))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(msgs.contains("null pid, x or y"), msgs)
+  }
+
+  test("fit scans its input once and runs iterations + 1 Spark jobs") {
+    val n = 2000
+    val read = spark.sparkContext.longAccumulator("points read")
+    val df = spark.range(0, n, 1, 4)
+      .selectExpr("id AS pid", "cast(id % 97 AS double) AS x",
+        "cast(id % 89 AS double) AS y")
+      .as[(Long, Double, Double)]
+      .mapPartitions(_.map { r => read.add(1); r })
+      .toDF("pid", "x", "y")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    assert(m.history == hist.result())
-    assert(m.iterations == 3 && m.centroids == cur && m.sizes == lastSizes)
+    org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val m = try {
+      KMeans.fit(df, 4, maxIter = 6, initFn = KMeans.initSample(_, _, 3L))
+    } finally {
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(read.value == n, s"fit read ${read.value} rows of $n")
+    assert(m.sizes.values.sum == n)
+    assert(jobs.get == m.iterations + 1,
+      s"${jobs.get} Spark jobs for ${m.iterations} iterations")
+  }
+
+  test("chunk edges: fitLoop ≡ step chain and init from the cache ≡ init from the source") {
+    // the cache packs each partition into chunks of 32 768 points; sizes
+    // straddle the chunk boundary, in one partition and spread over three
+    for (n <- Seq(0L, 1L, 32767L, 32768L, 32769L); parts <- Seq(1, 3)) {
+      val one = spark.range(0, n, 1, 1).selectExpr("id AS pid",
+        "cast(id * 7919 % 1000 AS double) / 10 AS x",
+        "cast(id * 104729 % 997 AS double) / 10 AS y")
+      val df = if (parts == 1) one else one.repartition(parts)
+      val clue = s"n=$n partitions=$parts"
+      assertLoopMatchesStepChain(df, 4, clue)
+      val sampled = KMeans.fit(df, 4, maxIter = 1,
+        initFn = KMeans.initSample(_, _, 11L))
+      assert(sampled.history.head == KMeans.initSample(df, 4, 11L), clue)
+      assert(sampled.sizes.values.sum == n, clue)
+    }
   }
 
   test("multi-step chain: empty cluster survives every iteration") {

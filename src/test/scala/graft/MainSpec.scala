@@ -71,6 +71,19 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException](Main.parse(Array("--k", "3"))) // no path
   }
 
+  test("CLI rejects a scenario other than 1 or 2 and non-positive partitions") {
+    for (bad <- Seq(Seq("--scenario", "3"), Seq("--scenario", "0"),
+        Seq("--partitions", "0"), Seq("--partitions", "-2"))) {
+      val e = intercept[IllegalArgumentException] {
+        Main.parse((bad :+ "points.csv").toArray)
+      }
+      assert(e.getMessage.contains(bad.head) && e.getMessage.contains("usage"),
+        e.getMessage)
+    }
+    assert(Main.parse(Array("--scenario", "2", "--partitions", "1", "p.csv"))
+      == Main.Args(Seq("p.csv"), scenario = 2, partitions = Some(1)))
+  }
+
   test("seeded sample init: deterministic under a seed, varies across seeds") {
     val dir = Files.createTempDirectory("graft_seed")
     val csv = blobCsv(dir, "points.txt", 0.0)
