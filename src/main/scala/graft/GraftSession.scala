@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The engine's SparkSession factory (SURVEY.md §4) — one place for the
-  * settings every entry point (Verify, Bench, tests, user code) should
+  * settings every entry point (Verify, Main, tests, user code) should
   * share:
   *
   *   - AQE on: runtime partition coalescing and skew-join splitting are

@@ -38,23 +38,35 @@ object Main {
         "[--scenario 1|2] [--seed S] [--partitions P] [--log FILE] <csv>...")
 
   def parse(argv: Array[String]): Args = {
+    // every option value goes through here: a missing, unparsable or
+    // out-of-range value is a usage error naming its option (a next
+    // token that is itself an option counts as missing)
+    def value[T](flag: String, v: Option[String], what: String)(
+        conv: String => Option[T]): T =
+      v.flatMap(conv).getOrElse(
+        usage(s"$flag expects $what, got ${v.fold("no value")(x => s"'$x'")}"))
+    def positive(v: String) = v.toIntOption.filter(_ > 0)
     def loop(rest: List[String], acc: Args): Args = rest match {
-      case "--k" :: v :: t          => loop(t, acc.copy(k = v.toInt))
-      case "--max-iter" :: v :: t   => loop(t, acc.copy(maxIter = v.toInt))
-      case "--scenario" :: v :: t   => loop(t, acc.copy(scenario = v.toInt))
-      case "--seed" :: v :: t       => loop(t, acc.copy(seed = Some(v.toLong)))
-      case "--partitions" :: v :: t => loop(t, acc.copy(partitions = Some(v.toInt)))
-      case "--log" :: v :: t        => loop(t, acc.copy(log = v))
-      case f :: _ if f.startsWith("--") => usage(s"unknown option '$f'")
-      case p :: t                   => loop(t, acc.copy(paths = acc.paths :+ p))
-      case Nil                      => acc
+      case f :: t if f.startsWith("--") =>
+        val v = t.headOption.filterNot(_.startsWith("--"))
+        val next = f match {
+          case "--k" => acc.copy(k = value(f, v, "a positive integer")(positive))
+          case "--max-iter" =>
+            acc.copy(maxIter = value(f, v, "a positive integer")(positive))
+          case "--scenario" =>
+            acc.copy(scenario = value(f, v, "1 or 2")(_.toIntOption.filter(Set(1, 2))))
+          case "--seed" => acc.copy(seed = Some(value(f, v, "an integer")(_.toLongOption)))
+          case "--partitions" =>
+            acc.copy(partitions = Some(value(f, v, "a positive integer")(positive)))
+          case "--log" => acc.copy(log = value(f, v, "a file path")(Some(_)))
+          case _ => usage(s"unknown option '$f'")
+        }
+        loop(t.drop(1), next)
+      case p :: t => loop(t, acc.copy(paths = acc.paths :+ p))
+      case Nil    => acc
     }
     val a = loop(argv.toList, Args(Nil))
-    require(a.paths.nonEmpty, "at least one points CSV path is required")
-    require(a.k > 0 && a.maxIter > 0, "--k and --max-iter must be positive")
-    if (a.scenario != 1 && a.scenario != 2)
-      usage(s"--scenario must be 1 or 2, got ${a.scenario}")
-    a.partitions.filter(_ <= 0).foreach(p => usage(s"--partitions must be positive, got $p"))
+    if (a.paths.isEmpty) usage("at least one points CSV path is required")
     a
   }
 

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-keyed train-once memo — the shared mechanics behind the
-  * Bench build entries (`dsir_train_build` et al.): at most
+/** Session-keyed train-once memo — the shared mechanics behind every
+  * build-once stage (the DSIR weights, LM scores, ANN indexes, dedup
+  * pairs et al.): at most
   * [[maxEntries]] live (session, key) entries, stopped sessions purged
   * on every access, LRU eviction.
   *
@@ -30,11 +31,12 @@ import org.apache.spark.sql.SparkSession
   *     here anyway: dropping the checkpoint RDD's blocks under a frame
   *     some caller still executes breaks that execution outright.
   *   - [[onClear]] runs ONLY from [[clear]] (after onEvict), where the
-  *     caller asserts every consumer is done — the Bench per-sweep
-  *     clears. This is where checkpoint-backed caches release their
-  *     storage via the underlying RDD (the Dedup.releaseCheckpoint
-  *     pattern); LRU eviction stays drop-only for them, leaving
-  *     mid-flight frames to the context cleaner.
+  *     caller asserts every consumer is done — the `clear*` hooks
+  *     (the benchmark clears before every job). This is where
+  *     checkpoint-backed caches release their storage via the
+  *     underlying RDD (the Dedup.releaseCheckpoint pattern); LRU
+  *     eviction stays drop-only for them, leaving mid-flight frames to
+  *     the context cleaner.
   *
   * Unforced holders evict silently (nothing was built), and
   * stopped-session purges skip both hooks (their blocks died with the

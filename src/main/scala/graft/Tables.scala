@@ -17,8 +17,8 @@ object Tables {
 
   // -------------------------------------------------- narrow-scan spread
   //
-  // r14 optimization-round machinery. The driver's testdata (and the
-  // ScaleUp-derived sf1/sf10 sets) are single-file, SINGLE-ROW-GROUP
+  // r14 optimization-round machinery. The driver's testdata (and any
+  // set derived from it by replication) are single-file, SINGLE-ROW-GROUP
   // parquet tables. Parquet cannot split a row group, so every scan —
   // and the whole WholeStageCodegen pipeline fused onto it: tokenize/
   // regex work, dot-product pair streams of broadcast self-joins,
@@ -166,8 +166,8 @@ object Tables {
     // parquet reader rejects by default; read it as raw nanos and narrow
     // to µs (integral DIV — a double division would lose precision at
     // 1.7e18). Conditional on the surfaced dtype so a re-written events
-    // table that already stores µs timestamps (the ScaleUp-derived sf1
-    // set) reads through unchanged.
+    // table that already stores µs timestamps (e.g. one re-written by
+    // Spark) reads through unchanged.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$dir/$name.parquet")
     val fixed =

@@ -85,9 +85,8 @@ object KMeansQueries {
     * same hooks and cap, so their shared trajectory is trained once and
     * both consume it (a model is fit once and read many times; the
     * duplicated ~70-iteration loop was 8 s × 2 of the sf0.1 bench).
-    * [[graft.SessionCache]] lifecycle; [[clearFitCache]] for the bench
-    * protocol (which prices the rebuild as its own `kmeans_train_build`
-    * entry per sweep). The cached value is K driver-side centroids plus
+    * [[graft.SessionCache]] lifecycle; [[clearFitCache]] forces a
+    * retrain. The cached value is K driver-side centroids plus
     * two scalars — no executor storage is pinned. */
   private[graft] def contractModel(s: SparkSession, dir: String): KMeansModel =
     fitCache.getOrCompute(s, dir) {
@@ -99,9 +98,6 @@ object KMeansQueries {
 
   /** Drop all memoized models (next [[contractModel]] retrains). */
   def clearFitCache(): Unit = fitCache.clear()
-
-  /** Force the memoized model — the bench's `kmeans_train_build` entry. */
-  def trainFit(s: SparkSession, dir: String): Unit = { contractModel(s, dir); () }
 
   /** Simplified silhouette of the converged contract model — the
     * clustering-quality read (Rousseeuw 1987; the SIMPLIFIED variant

@@ -112,10 +112,10 @@ object DataSelection {
     weightTable(featsOf(docs), targetIdsOf(docs))
 
   /** Memoized TRAINED weight table per (session, sf dir) — the
-    * train-once accounting the ANN/kmeans families use (`dsir_train_build`
-    * in Bench). Fitting runs the featurization scan once and collapses
-    * to ≤ [[Buckets]] rows; those collect to the driver (KB-scale) and
-    * replay as a LocalRelation, so every subsequent scoring query
+    * train-once accounting the ANN/kmeans families use. Fitting runs
+    * the featurization scan once and collapses to ≤ [[Buckets]] rows;
+    * those collect to the driver (KB-scale) and replay as a
+    * LocalRelation, so every subsequent scoring query
     * featurizes the corpus exactly ONCE (the scan-count upgrade the
     * [[weightsOf]] scaladoc priced) and joins the table broadcast-side
     * with zero recomputation. [[graft.SessionCache]] lifecycle: stopped
@@ -183,8 +183,8 @@ object DataSelection {
   /** Memoized per-document weight table per (session, sf dir) — the
     * score-once stage above [[trainWeights]] (round-9 verdict item 3):
     * one row per document, materialized eagerly via localCheckpoint;
-    * all three registry queries consume it, and Bench prices the build
-    * as `dsir_score_build`. Values identical to [[docWeights]] — the
+    * all three registry queries consume it, so the build is paid once
+    * per (session, dir). Values identical to [[docWeights]] — the
     * oracle SQL is untouched. Checkpoint storage is released on
     * clear() via the underlying RDD (round-13 ADVICE: Dataset.unpersist
     * is a CacheManager no-op for a localCheckpoint'd plan); LRU

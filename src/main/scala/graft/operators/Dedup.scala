@@ -314,9 +314,9 @@ object Dedup {
     * entry and leaves the blocks to the ContextCleaner (a still-held
     * frame stays executable: localCheckpoint truncated its lineage, so
     * unpersisting under it would fail later executions), and
-    * [[clearPairCache]] drops+releases everything (bench sweeps use it
-    * so every sweep prices the build exactly once, as its own
-    * `dedup_pairs_build` entry). DedupSpec exercises the eviction. */
+    * [[clearPairCache]] drops+releases everything (perfbench clears it
+    * before every job, so each job pays the build exactly once).
+    * DedupSpec exercises the eviction. */
   def ngramPairs(s: SparkSession, dir: String): DataFrame =
     pairCache.getOrCompute(s, dir) {
       // r14: spread the gram explode + verify substrate (see
@@ -1027,8 +1027,8 @@ object Dedup {
     * cap, so the DuckDB oracle sees the pure exact path.
     *
     * SIZED FROM MEASUREMENT (round-5 verdict item 1, was a chosen
-    * 20,000): HotBlockBench forced a 21,800-row block over the cap at
-    * real volume and measured the exact quadratic at 2.5-2.8·10⁵
+    * 20,000): a round-5 probe forced a 21,800-row block over the cap
+    * at real volume and measured the exact quadratic at 2.5-2.8·10⁵
     * verified pairs/s across runs on the 32-thread bench host
     * (sort-merge join fan-out, 64-d codegen dot + round per pair —
     * dominated by the pair MATERIALIZE, not the arithmetic).
@@ -1038,7 +1038,7 @@ object Dedup {
     * the LSH-routed arm measured 25.8× faster than exact on the
     * crossed block (40.4 s vs 1041.5 s) with recall 1.0000 at cosine
     * ≥ 0.6 and ≥ 0.9 (the dup bands; 0.78 over all ≥ 0.35 pairs,
-    * misses confined to the borderline band) — HOTBLOCK_BENCH.json. */
+    * misses confined to the borderline band). */
   val HotBlockCap = 6000
 
   /** Embedding-cosine near-dup pairs within label blocks. Sequential
@@ -1057,32 +1057,30 @@ object Dedup {
       graft.Tables.SpreadMinComputeBytes,
       org.apache.spark.sql.functions.col("vec_id")), HotBlockCap)
 
-  /** The uncapped exact-all-pairs baseline — the quadratic regime the
-    * hot-block cap exists to avoid. Measurement surface only
-    * (HotBlockBench times it against the routed plan and measures the
-    * LSH arm's recall against its pairs); never registered as a query. */
-  def dedupEmbeddingAllPairs(s: SparkSession, dir: String): DataFrame =
-    dedupEmbeddingOn(Similarity.embedded(s, dir), Int.MaxValue)
-
   /** True when any label block of `e0` crosses `cap` — the regime
     * detector behind the Verify ORACLE WAIVERS (round-12 verdict #2):
     * over the cap, [[dedupEmbeddingOn]] routes the block to the LSH
     * arm whose sub-dup-band recall is < 1 BY DESIGN, while the DuckDB
     * oracle models only the exact arm — a compare in that regime is
     * designed to fail and must self-declare rows-only (the recall
-    * floors in RECALL_SF*.json are the real gate there) instead of
-    * recording a structural trade as a mismatch. One tiny aggregate,
-    * stopped at the first hot block. */
+    * floors are the real gate there: SimilaritySpec and DedupSpec at
+    * sf0.01, perfbench's ann_embed check) instead of recording a
+    * structural trade as a mismatch. One tiny aggregate, stopped at the
+    * first hot block. */
   private[graft] def overCap(e0: DataFrame, cap: Int): Boolean =
     e0.groupBy(col("label")).agg(count(lit(1)).as("bn"))
       .filter(col("bn") > cap).limit(1).count() > 0
 
+  private def overCapWaiver(block: String): String =
+    s"over-cap regime: $block exceeds HotBlockCap=$HotBlockCap;" +
+      " the routed LSH arm's sub-dup-band recall is < 1 by design —" +
+      " recall-gated (SimilaritySpec/DedupSpec floors at sf0.01, perfbench's" +
+      " ann_embed check) instead of oracle-compared"
+
   /** [[overCap]] waiver for `dedup_embedding` (metadata-label blocks). */
   def embeddingOverCapReason(s: SparkSession, dir: String): Option[String] =
     if (overCap(Similarity.embedded(s, dir), HotBlockCap))
-      Some(s"over-cap regime: a label block exceeds HotBlockCap=$HotBlockCap;" +
-        " the routed LSH arm's sub-dup-band recall is < 1 by design —" +
-        " recall-gated (RECALL_SF*.json) instead of oracle-compared")
+      Some(overCapWaiver("a label block"))
     else None
 
   /** [[overCap]] waiver for `dedup_semantic` (K-Means cluster blocks —
@@ -1092,33 +1090,9 @@ object Dedup {
     val assigned = Similarity.clusterAssigned(s, dir)
       .select($"vec_id", $"cluster_seed".as("label"), $"v", $"nrm")
     if (overCap(assigned, HotBlockCap))
-      Some(s"over-cap regime: a cluster exceeds HotBlockCap=$HotBlockCap;" +
-        " the routed LSH arm's sub-dup-band recall is < 1 by design —" +
-        " recall-gated (RECALL_SF*.json) instead of oracle-compared")
+      Some(overCapWaiver("a cluster"))
     else None
   }
-
-  /** Clone-closed anchor sample for the scale gate's dedup-LSH recall
-    * entry (graft.RecallGate): the derived sf1/sf10 corpora shift
-    * vec_id by r·span per replica with span = [[SampleMod]] at every
-    * decade (the sf0.1 base key span, and sf10's 20,000-span shift is
-    * ≡ 0 mod 2000), so one mod-[[SampleMod]] residue window keeps every
-    * replica of each sampled original and the dup-band (cosine ≥ 0.9)
-    * pairs at scale — which are exactly the clone pairs — stay inside
-    * the sample. Exact all-pairs on the sample is O((N/10)²/labels):
-    * trivial at any gate scale, while full exact is the quadratic the
-    * LSH path exists to avoid. */
-  def dedupEmbeddingSampleExact(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    dedupEmbeddingOn(
-      Similarity.embedded(s, dir).filter($"vec_id" % SampleMod < SampleKeep),
-      Int.MaxValue)
-  }
-
-  /** [[dedupEmbeddingSampleExact]]'s residue window: the sf0.1 key
-    * span (every ScaleUp decade shifts ids by a multiple of it). */
-  val SampleMod = 2000L
-  val SampleKeep = 200L
 
   /** Most over-cap labels the driver will hold as literals — hot
     * labels are structurally few (each owns > cap rows, and isin lists
@@ -1133,7 +1107,7 @@ object Dedup {
     * fan-out is ~b²/2^planes — with 3 planes a 21,800-row hot block
     * would emit b²/8 pairs PER TABLE, i.e. the full quadratic it was
     * routed here to avoid (measured: the fixed-plane hot arm ran no
-    * faster than exact all-pairs; see HOTBLOCK_BENCH.json). So the arm
+    * faster than exact all-pairs in the round-5 probe). So the arm
     * sizes its plane count from the measured largest block:
     * planes = ⌈log₂(maxBlock/64)⌉ — the same 64-row expected bucket the
     * kNN-graph build targets ([[Similarity.KnnTargetBucket]]), which
@@ -1627,7 +1601,7 @@ object Dedup {
     * ceiling. Sub-dup-band pairs (CosineTau 0.35 .. ~0.6) are
     * explicitly NOT chased at scale — collision odds at 0.35 fall as
     * 0.61^planes and no affordable table count recovers them; the
-    * recall specs and HOTBLOCK_BENCH gate the ≥ 0.6 and ≥ 0.9 bands. */
+    * recall specs gate the ≥ 0.6 and ≥ 0.9 bands. */
   private[operators] def adaptiveTables(planes: Int): Int = {
     val q = math.pow(1.0 - math.acos(0.9) / math.Pi, planes.toDouble)
     math.max(Similarity.Tables_,
@@ -1814,8 +1788,8 @@ object Dedup {
     * (~15-28 s EACH at sf10) — the same rebuild-per-consumer class the
     * round-3 verdict flagged for the pair list itself. [[labelsOf]]
     * already returns a persisted frame, so the memo holds the reference;
-    * priced per bench sweep as `dedup_labels_build` (the
-    * `dedup_pairs_build` accounting), [[graft.SessionCache]] lifecycle. */
+    * built once per (session, dir) like the pair list,
+    * [[graft.SessionCache]] lifecycle. */
   def ngramLabels(s: SparkSession, dir: String): DataFrame =
     labelCache.getOrCompute(s, dir) { labelsOf(ngramPairs(s, dir)) }
 
@@ -2427,8 +2401,8 @@ object Dedup {
     * (distinct-line-sized, not occurrence-sized); the census rollup
     * reduces to |sources| rows. The synthetic corpus has no newlines
     * (each doc is one line — the census degenerates to doc-level
-    * duplication, still exercised: ScaleUp replication crosses
-    * [[LineMinDocs]]); multi-line semantics are pinned by crafted docs
+    * duplication, still exercised: a corpus with enough repeated docs
+    * crosses [[LineMinDocs]]); multi-line semantics are pinned by crafted docs
     * in DedupSpec, the c4_rules precedent. */
   def dedupLines(s: SparkSession, dir: String): DataFrame =
     dedupLinesOn(Tables(s, dir, "documents"))

@@ -95,9 +95,8 @@ object EntityResolution {
     * consume the same verified edge list and two of them the same
     * component fixpoint, so both materialize ONCE (localCheckpoint /
     * persisted fixpoint) and every query measures pure consumption;
-    * the bench prices the build as its own `er_link_build` entry.
     * Eviction only drops the entry (a returned frame may still be
-    * live); [[clearLinkCache]] (bench protocol, callers provably done)
+    * live); [[clearLinkCache]] (callers provably done)
     * force-releases. */
   private val linkCache = new graft.SessionCache[(DataFrame, DataFrame)](
     onClear = { case (pairs, labels) =>
@@ -113,9 +112,6 @@ object EntityResolution {
   /** The per-node component labels (id → min reachable key) over the
     * link graph — shared by [[erClusters]] and [[erGolden]]. */
   def labelsFor(s: SparkSession, dir: String): DataFrame = linkOf(s, dir)._2
-
-  /** Force-build the shared stage (bench pricing hook). */
-  def linkBuild(s: SparkSession, dir: String): Unit = { linkOf(s, dir); () }
 
   def clearLinkCache(): Unit = linkCache.clear()
 

@@ -292,16 +292,16 @@ object LangModel {
   }
 
   /** Memoized per-document score table per (session, sf dir) — the
-    * score-once accounting (round-9 verdict item 3, the
-    * `dsir_train_build` discipline one stage later): a production
+    * score-once accounting (round-9 verdict item 3, the DSIR
+    * train-once discipline one stage later): a production
     * perplexity filter scores the corpus once and every downstream
     * consumer (ranking head, bucketing, the approx cut) reads the
     * scored rows. The table is one row per document (far smaller than
     * the corpus), materialized eagerly via localCheckpoint to
-    * executor-local storage; Bench prices the build as
-    * `lm_score_build` and the three consuming queries then measure
-    * pure consumption. Values are identical to [[docScores]] — the
-    * oracle SQL is untouched. Checkpoint storage is released on
+    * executor-local storage; the build is paid once per (session, dir)
+    * and the three consuming queries then read the scored rows.
+    * Values are identical to [[docScores]] — the oracle SQL is
+    * untouched. Checkpoint storage is released on
     * clear() via the underlying RDD (round-13 ADVICE: Dataset.unpersist
     * is a CacheManager no-op for a localCheckpoint'd plan); LRU
     * eviction stays drop-only — see [[graft.SessionCache]]. */
@@ -761,8 +761,8 @@ object LangModel {
 
   /** Train-once learned weights ([[clfTrain]]'s `w` by bucket index) —
     * the [[ClfBuckets]]-row artifact [[qualityClassifier]] and the
-    * streaming quality gate consume as literals; priced per Bench
-    * sweep as `clf_train_build`. */
+    * streaming quality gate consume as literals; trained once per
+    * (session, dir). */
   def clfLearnedWeights(s: SparkSession, dir: String): IndexedSeq[Long] =
     clfCache.getOrCompute(s, dir) {
       clfTrain(s, dir).collect().map(_.getLong(3)).toIndexedSeq

@@ -95,8 +95,8 @@ object Similarity {
     pqCache.put(s, dir, PqModel(cb, codes, dim))
   }
 
-  /** Force both memoized ANN artifacts — the bench's `ann_train_build`
-    * entry (train-once accounting; see [[ivfCache]], [[pqCache]]). */
+  /** Force both memoized ANN artifacts (train-once accounting; see
+    * [[ivfCache]], [[pqCache]]) — perfbench times it as its own span. */
   def trainAnn(s: SparkSession, dir: String): Unit = {
     ivfCentroids(s, dir)
     pqModel(s, dir)
@@ -281,7 +281,7 @@ object Similarity {
     annIvfProbing(s, dir, NList)
 
   /** The memoized IVF coarse quantizer for a data dir — train-once
-    * surface (also what the bench prices under `ann_train_build`). */
+    * surface (forced by [[trainAnn]]). */
   private[operators] def ivfCentroids(s: SparkSession, dir: String)
       : Array[(Int, Seq[Double], Double)] =
     ivfCache.getOrCompute(s, dir) {
@@ -462,7 +462,7 @@ object Similarity {
     * label spread, which otherwise re-ran the whole bucket join —
     * measured 77 of its 77.3 s at sf10 was exactly that rebuild).
     * `localCheckpoint` (eager) truncates the plan to the edge ROWS
-    * (N·K skinny rows); priced per sweep as `knn_graph_build`,
+    * (N·K skinny rows), built once per (session, dir),
     * [[graft.SessionCache]] lifecycle. */
   def knnEdges(s: SparkSession, dir: String): DataFrame =
     knnCache.getOrCompute(s, dir) {
@@ -720,7 +720,7 @@ object Similarity {
       cb: Array[Array[Seq[Double]]], codes: DataFrame, dim: Int)
 
   /** The memoized PQ training + encode for a data dir — train-once
-    * surface (priced by the bench under `ann_train_build`). */
+    * surface (forced by [[trainAnn]]). */
   private[graft] def pqModel(s: SparkSession, dir: String): PqModel =
     pqCache.getOrCompute(s, dir) {
       import s.implicits._
@@ -879,8 +879,7 @@ object Similarity {
     * re-rank of the shortlist restores true cosines. Both trained
     * artifacts are the MEMOIZED ones the standalone operators use
     * ([[ivfCentroids]], [[pqModel]]) — one index, trained once, serves
-    * every probe shape, and the bench prices training under
-    * `ann_train_build`.
+    * every probe shape.
     *
     * Scale shape: the fact side is the ~50×-compressed codes frame
     * joined to a slim `(vec_id, list_id)` routing projection — full

@@ -253,10 +253,10 @@ object TextAnalysis {
     * registry consumers read it (`quality_score`, `source_quota`,
     * `source_quota_approx` — the approx cut alone reads it twice:
     * threshold pass + census pass), so the one-row-per-doc scored frame
-    * memoizes per (session, dir) via localCheckpoint, priced by the
-    * bench as `quality_score_build` — the same score-once accounting as
-    * `lm_score_build`/`dsir_score_build` ([[graft.SessionCache]]
-    * lifecycle: stopped-session purge, LRU, fit outside the monitor).
+    * memoizes per (session, dir) via localCheckpoint — the same
+    * score-once accounting as the LM and DSIR scores
+    * ([[graft.SessionCache]] lifecycle: stopped-session purge, LRU, fit
+    * outside the monitor).
     * Checkpoint storage is released on clear() via the underlying RDD
     * (round-13 ADVICE: Dataset.unpersist is a CacheManager no-op for a
     * localCheckpoint'd plan); LRU eviction stays drop-only — see
@@ -1463,8 +1463,8 @@ object TextAnalysis {
   /** Train-once memo for [[bpeCore]]'s result — three registry
     * consumers (`bpe_train`, `bpe_vocab`, `tok_fertility_learned`) read
     * the same trained table, so the one corpus word-count + driver
-    * merge loop runs once per (session, sf) and is priced by the bench
-    * as `bpe_train_build` (the dsir/lm/quality score-once accounting). */
+    * merge loop runs once per (session, sf) (the dsir/lm/quality
+    * score-once accounting). */
   private val bpeCache = new graft.SessionCache[
     (Seq[(Int, String, String, String, Long)], Seq[(Vector[String], Long)])]()
 

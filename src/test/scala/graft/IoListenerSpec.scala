@@ -5,11 +5,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** The bench artifact's byte columns are only as trustworthy as the
-  * listener behind them: these pin that (a) a shuffling query actually
-  * registers shuffle read+write bytes after a bus drain, (b) a
-  * shuffle-free scan registers none, and (c) deltas are monotone — the
-  * snapshot protocol Bench's per-query accounting depends on. */
+/** Pins the read-after-action contract of
+  * [[org.apache.spark.graft.ListenerDrain.drain]]: stage-completed
+  * events post asynchronously, so a listener read right after an action
+  * is only sound after a drain. KMeansSpec's "iterations + 1 Spark
+  * jobs" count relies on it. The subject is a test-local stage I/O
+  * counter: (a) a shuffling query registers shuffle read+write bytes
+  * after a drain, (b) a shuffle-free scan registers none, and (c)
+  * spill bytes are never negative. */
 class IoListenerSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -18,6 +21,26 @@ class IoListenerSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
+
+  /** Cumulative stage-level shuffle read/write and spill bytes over
+    * every stage completed since registration. */
+  private final class IoListener extends org.apache.spark.scheduler.SparkListener {
+    import java.util.concurrent.atomic.AtomicLong
+    val shuffleRead = new AtomicLong
+    val shuffleWrite = new AtomicLong
+    val spill = new AtomicLong
+    override def onStageCompleted(
+        ev: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+      val m = ev.stageInfo.taskMetrics
+      if (m != null) {
+        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        spill.addAndGet(m.diskBytesSpilled)
+      }
+    }
+    def snapshot: (Long, Long, Long) =
+      (shuffleRead.get, shuffleWrite.get, spill.get)
+  }
 
   test("shuffle bytes register after drain; scans register none") {
     val s = spark

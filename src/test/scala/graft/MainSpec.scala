@@ -84,6 +84,25 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
       == Main.Args(Seq("p.csv"), scenario = 2, partitions = Some(1)))
   }
 
+  test("CLI rejects a missing, unparsable or non-positive option value with a usage error") {
+    for (bad <- Seq(Seq("--k", "abc"), Seq("--max-iter", "x"), Seq("--k", "0"),
+        Seq("--max-iter", "-1"))) {
+      val e = intercept[IllegalArgumentException] {
+        Main.parse((bad :+ "points.csv").toArray)
+      }
+      assert(e.getMessage.contains(bad.head) && e.getMessage.contains("usage"),
+        e.getMessage)
+    }
+    for (noValue <- Seq(Seq("points.csv", "--partitions"), // trailing
+        Seq("--log", "--k", "3", "points.csv"))) {          // next is an option
+      val e = intercept[IllegalArgumentException](Main.parse(noValue.toArray))
+      assert(e.getMessage.contains(s"${noValue.find(_.startsWith("--")).get} expects") &&
+        e.getMessage.contains("usage"), e.getMessage)
+    }
+    assert(Main.parse(Array("--seed", "-3", "--log", "out.txt", "--k", "2", "p.csv"))
+      == Main.Args(Seq("p.csv"), k = 2, seed = Some(-3L), log = "out.txt"))
+  }
+
   test("seeded sample init: deterministic under a seed, varies across seeds") {
     val dir = Files.createTempDirectory("graft_seed")
     val csv = blobCsv(dir, "points.txt", 0.0)

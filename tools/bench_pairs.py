@@ -13,13 +13,18 @@ resumes). For each workload and end-to-end metric of BENCHMARK.json it
 prints both sides' median and quartiles, the change's win count and a
 verdict:
 
-  gain        the change wins at least 9/10 of the pairs and the medians
-              differ by more than the parent's interquartile range
+  failed-more the change's share of failed operations is above the
+              parent's (an errored run counts as one failed operation)
+  gain        the change wins at least 9/10 of all pairs run and the
+              medians differ by more than the parent's interquartile range
   regression  the change's median is worse than the parent's by more than
               the metric's bound
   unresolved  a side's interquartile range exceeds the bound and not every
               change run beats every parent run
   within      none of the above: no gain shown, no regression
+
+A pair whose change run errored counts as a loss; medians and quartiles
+are over each side's runs that produced a result.
 
 `--report` only prints the summary of an existing file.
 """
@@ -68,12 +73,23 @@ def run_one(tree, workload, seed, seconds):
     return row
 
 
-def verdict(par, chg, better, bound):
+def verdict(pairs, better, bound, failed_more):
+    """pairs: (parent, change) value per pair run, None where that run
+    errored. Returns wins, pairs run, both sides' quartiles (None when a
+    side has no result), the change's relative median change (+ = worse)
+    and the verdict."""
     sign = 1 if better == "lower" else -1
-    pairs = list(zip(par, chg))
-    wins = sum(1 for p, c in pairs if sign * (c - p) < 0)
-    (pq1, pm, pq3), (cq1, cm, cq3) = quartiles(par), quartiles(chg)
-    worse = sign * (cm - pm) / pm
+    wins = sum(1 for p, c in pairs if p is not None and c is not None and sign * (c - p) < 0)
+    par = [p for p, _ in pairs if p is not None]
+    chg = [c for _, c in pairs if c is not None]
+    pq = quartiles(par) if par else None
+    cq = quartiles(chg) if chg else None
+    worse = sign * (cq[1] - pq[1]) / pq[1] if pq and cq else None
+    if failed_more:
+        return wins, len(pairs), pq, cq, worse, "failed-more"
+    if worse is None:
+        return wins, len(pairs), pq, cq, worse, "unresolved"
+    (pq1, pm, pq3), (cq1, cm, cq3) = pq, cq
     all_better = all(sign * (c - p) < 0 for c in chg for p in par)
     if wins * 10 >= 9 * len(pairs) and sign * (cm - pm) < 0 and abs(cm - pm) > pq3 - pq1:
         v = "gain"
@@ -83,32 +99,32 @@ def verdict(par, chg, better, bound):
         v = "unresolved"
     else:
         v = "within"
-    return wins, len(pairs), (pq1, pm, pq3), (cq1, cm, cq3), worse, v
+    return wins, len(pairs), pq, cq, worse, v
 
 
 def report(runs, bench):
+    def fmt(q):
+        return "%10.4g [%.4g, %.4g]" % (q[1], q[0], q[2]) if q else "%10s [-, -]" % "-"
     for w in dict.fromkeys(r["workload"] for r in runs):
         by = {(r["side"], r["seed"]): r for r in runs if r["workload"] == w}
         seeds = sorted(s for side, s in by if side == "parent" and ("change", s) in by)
-        ok = [s for s in seeds if "error" not in by[("parent", s)]
-              and "error" not in by[("change", s)]]
         att = {side: sum(by[(side, s)]["attempted"] for s in seeds) for side in ("parent", "change")}
         fail = {side: sum(by[(side, s)]["failed"] for s in seeds) for side in ("parent", "change")}
         correct = all(by[(side, s)]["correct"] for s in seeds for side in ("parent", "change"))
+        failed_more = fail["change"] * att["parent"] > fail["parent"] * att["change"]
         print("%s: %d pairs (seeds %s), failed %d/%d parent, %d/%d change, all correct: %s"
               % (w, len(seeds), ",".join(map(str, seeds)), fail["parent"], att["parent"],
                  fail["change"], att["change"], correct))
         for m in bench["end_to_end"]:
             name = m["name"]
-            par = [by[("parent", s)][name] for s in ok]
-            chg = [by[("change", s)][name] for s in ok]
-            if not par:
+            pairs = [tuple(by[(side, s)].get(name) for side in ("parent", "change"))
+                     for s in seeds]
+            if not pairs:
                 continue
-            wins, n, pq, cq, worse, v = verdict(par, chg, m["better"], m["bound"])
-            print("  %-13s parent %10.4g [%.4g, %.4g]  change %10.4g [%.4g, %.4g]  "
-                  "wins %2d/%-2d  change %+6.1f%% (+ = worse, bound %.0f%%)  %s"
-                  % (name, pq[1], pq[0], pq[2], cq[1], cq[0], cq[2], wins, n,
-                     100 * worse, 100 * m["bound"], v))
+            wins, n, pq, cq, worse, v = verdict(pairs, m["better"], m["bound"], failed_more)
+            change = "%+6.1f%%" % (100 * worse) if worse is not None else "%7s" % "-"
+            print("  %-13s parent %s  change %s  wins %2d/%-2d  change %s (+ = worse, bound %.0f%%)  %s"
+                  % (name, fmt(pq), fmt(cq), wins, n, change, 100 * m["bound"], v))
 
 
 def main():
