@@ -82,6 +82,29 @@ object PqCode {
     best
   }
 
+  /** The same argmin over a primitive row: the slice is
+    * `v(offset until offset + subdim)` — ANN training runs it on the
+    * packed plane ([[graft.PackedPlane]]). */
+  def argmin(v: Array[Double], offset: Int, subdim: Int, cb: Array[Double]): Int = {
+    val k = cb.length / subdim
+    var best = 0
+    var bestD = Double.MaxValue
+    var c = 0
+    while (c < k) {
+      var d = 0.0
+      var j = 0
+      val base = c * subdim
+      while (j < subdim) {
+        val diff = v(offset + j) - cb(base + j)
+        d += diff * diff
+        j += 1
+      }
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
   /** Column API. `codebook(k)` is codeword k for this block. */
   def apply(c: Column, offset: Int, subdim: Int,
       codebook: Array[Seq[Double]]): Column =

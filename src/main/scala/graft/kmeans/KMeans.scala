@@ -1,13 +1,12 @@
 package graft.kmeans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 import org.apache.spark.storage.StorageLevel
-import graft.Tables
+import graft.{PackedPlane, PlaneChunk, PlaneRow, Tables}
 import graft.functions.NearestCentroid
 
 /** A centroid — reference `Centroid{id, Point{x, y}}` (mapreduce.proto:12-15),
@@ -41,8 +40,8 @@ final case class KMeansModel(centroids: Seq[Centroid], sizes: Map[Int, Long],
   * Per-iteration driver traffic is K rows; the scan is a narrow projection
   * of two double columns — at 100 TB the plan is scan + partial-agg +
   * K-row shuffle, nothing else. [[fit]] scans its input once: init and
-  * every iteration read a chunked 24 B/point primitive cache filled by
-  * the init job (see [[fitLoop]]).
+  * every iteration read a [[graft.PackedPlane]] at d = 2 (24 B/point:
+  * pid plus row-major x, y) filled by the init job (see [[fitLoop]]).
   *
   * Deviations from the reference (documented): empty clusters keep their
   * previous centroid (the reference drops the id from the reducer dict and
@@ -162,9 +161,9 @@ object KMeans {
     * centroids against the new ones.
     *
     * ONE scan of `points` per fit: the plane is packed once into a
-    * persisted cache of per-partition primitive columns (`pid`, `x`,
-    * `y`) and every later pass reads that cache. `initFn` receives a
-    * DataFrame over the cache (same schema as
+    * persisted [[graft.PackedPlane]] (ids = `pid`, row-major values
+    * (`x`, `y`), d = 2) and every later pass reads that cache.
+    * `initFn` receives a DataFrame over the cache (same schema as
     * `points.select("pid", "x", "y")`), so the init job is the single
     * job that parses the source and fills the cache; each iteration's
     * engine is a `treeAggregate` over the same cache — MLlib's own
@@ -185,10 +184,11 @@ object KMeans {
     * fix for a latency-bound loop is cheaper jobs, not bigger plans.
     *
     * Scale shape at 100 TB: the cache is 24 bytes/point
-    * (MEMORY_AND_DISK — spills gracefully), held in chunks of at most
-    * [[ChunkPoints]] points (256 KB per column) so that no column
-    * array reaches the G1 humongous threshold and packing leaves no
-    * builder-doubling garbage; each iteration moves K×partitions
+    * (MEMORY_AND_DISK — spills gracefully), held in chunks of
+    * 16 384 points (the plane's 32 768 doubles per chunk at d = 2:
+    * 256 KB of values, 128 KB of ids) so that no array reaches the G1
+    * humongous threshold and packing leaves no builder-doubling
+    * garbage; each iteration moves K×partitions
     * partial sums through a depth-2 tree aggregation and K rows to the
     * driver. A null `pid`/`x`/`y` fails the fit while packing. */
   def fitLoop(points: DataFrame, k: Int, maxIter: Int,
@@ -198,13 +198,14 @@ object KMeans {
     val plane = points.select("pid", "x", "y")
     require(plane.schema.map(_.dataType) == Seq(LongType, DoubleType, DoubleType),
       s"fit needs pid bigint, x double, y double; got ${plane.schema.simpleString}")
-    val packed = plane.queryExecution.toRdd.mapPartitions(packChunks)
+    val packed = plane.queryExecution.toRdd
+      .mapPartitions(PackedPlane.pack(_, 2, PointRow))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // init is NOT post-stepped: the oracle chain's c0 is the raw
       // init (centroidChain rounds only at step boundaries), so the
       // first assignment must run against unrounded init on both sides
-      var cs = initFn(cachedPlane(packed, plane), k)
+      var cs = initFn(PackedPlane.asDataFrame(packed, plane.sparkSession, plane.schema), k)
       val history = Seq.newBuilder[Seq[Centroid]]
       history += cs
       var sizes = Map.empty[Int, Long]
@@ -223,64 +224,25 @@ object KMeans {
     } finally packed.unpersist(blocking = false)
   }
 
-  /** Points per cache chunk: 32 768 × 8 B = 256 KB per column, below
-    * half the smallest G1 region (1 MB), so no chunk is humongous. */
-  private val ChunkPoints = 32768
-
-  /** Consecutive points of one partition, column-wise, in input order. */
-  private final case class PointChunk(pid: Array[Long], x: Array[Double], y: Array[Double])
-
-  /** Packs one partition's (pid, x, y) rows into [[PointChunk]]s of
-    * [[ChunkPoints]] points; the last chunk is trimmed to its size. */
-  private def packChunks(rows: Iterator[InternalRow]): Iterator[PointChunk] =
-    new Iterator[PointChunk] {
-      def hasNext: Boolean = rows.hasNext
-      def next(): PointChunk = {
-        var pid = new Array[Long](ChunkPoints)
-        var xs = new Array[Double](ChunkPoints)
-        var ys = new Array[Double](ChunkPoints)
-        var n = 0
-        while (n < ChunkPoints && rows.hasNext) {
-          val r = rows.next()
-          if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))
-            throw new IllegalArgumentException(
-              "KMeans.fit: null pid, x or y in the points; drop or fill nulls before fitting")
-          pid(n) = r.getLong(0); xs(n) = r.getDouble(1); ys(n) = r.getDouble(2)
-          n += 1
-        }
-        if (n < ChunkPoints) {
-          pid = java.util.Arrays.copyOf(pid, n)
-          xs = java.util.Arrays.copyOf(xs, n)
-          ys = java.util.Arrays.copyOf(ys, n)
-        }
-        PointChunk(pid, xs, ys)
-      }
+  /** Packs one (pid, x, y) row at d = 2: values (x, y), id pid. */
+  private object PointRow extends PlaneRow {
+    def put(r: InternalRow, vals: Array[Double], off: Int): Long = {
+      if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))
+        throw new IllegalArgumentException(
+          "KMeans.fit: null pid, x or y in the points; drop or fill nulls before fitting")
+      vals(off) = r.getDouble(1)
+      vals(off + 1) = r.getDouble(2)
+      r.getLong(0)
     }
-
-  /** The cache served back as `plane`'s DataFrame: one reused UnsafeRow
-    * per partition, walked chunk by chunk in input order. */
-  private def cachedPlane(packed: RDD[PointChunk], plane: DataFrame): DataFrame = {
-    val rows = packed.mapPartitions { chunks =>
-      val row = new UnsafeRow(3)
-      val bytes = UnsafeRow.calculateBitSetWidthInBytes(3) + 3 * 8
-      row.pointTo(new Array[Byte](bytes), bytes)
-      chunks.flatMap { c =>
-        Iterator.range(0, c.pid.length).map { i =>
-          row.setLong(0, c.pid(i)); row.setDouble(1, c.x(i)); row.setDouble(2, c.y(i))
-          row: InternalRow
-        }
-      }
-    }
-    GraftShims.internalCreateDataFrame(plane.sparkSession, rows, plane.schema)
   }
 
   /** One Lloyd cycle over the packed plane — [[step]]'s math on the
-    * [[fitLoop]] substrate: per partition, a tight primitive loop over
-    * the chunks in order (argmin with the reference's strict-<
-    * first-wins tie-break) accumulating K sums/counts; partials merge
-    * through `treeAggregate`. Empty cluster keeps the old centroid,
-    * exactly like [[step]]. */
-  private def stepPacked(packed: RDD[PointChunk],
+    * [[fitLoop]] substrate: per partition, a tight 2-D loop over the
+    * chunks' row-major values in order (argmin with the reference's
+    * strict-< first-wins tie-break) accumulating K sums/counts; partials
+    * merge through `treeAggregate`. Empty cluster keeps the old
+    * centroid, exactly like [[step]]. */
+  private def stepPacked(packed: RDD[PlaneChunk],
       cs: Seq[Centroid]): (Seq[Centroid], Map[Int, Long]) = {
     val sorted = cs.sortBy(_.id)
     val k = sorted.size
@@ -290,10 +252,10 @@ object KMeans {
       (new Array[Double](k), new Array[Double](k), new Array[Long](k)))(
       seqOp = { (acc, chunk) =>
         val (ax, ay, an) = acc
-        val xs = chunk.x; val ys = chunk.y
+        val v = chunk.vals
         var i = 0
-        while (i < xs.length) {
-          val px = xs(i); val py = ys(i)
+        while (i < v.length) {
+          val px = v(i); val py = v(i + 1)
           var best = 0
           var bestD = Double.PositiveInfinity
           var j = 0
@@ -304,7 +266,7 @@ object KMeans {
             j += 1
           }
           ax(best) += px; ay(best) += py; an(best) += 1L
-          i += 1
+          i += 2
         }
         acc
       },

@@ -1,9 +1,13 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
+import org.apache.spark.storage.StorageLevel
+import graft.{PackedPlane, PlaneChunk, PlaneRow, Tables}
 
 /** SURVEY.md §2.D — similarity search over the `embeddings` table
   * (`Array[Float]` column): exact brute-force top-k cosine as the
@@ -29,27 +33,26 @@ import graft.Tables
 object Similarity {
   val NumQueries = 10 // query set = vec_id < 10
 
-  // Trained ANN artifacts (IVF coarse centroids, PQ codebooks + encoded
-  // codes, the k-NN graph) are PURE DETERMINISTIC functions of the data
-  // dir, and a production ANN index trains ONCE and serves many queries
-  // — so the engine memoizes them per (session, dir) instead of
-  // retraining on every query call (which re-ran the 3+2 sequential
-  // training jobs per bench sweep). Driver footprint is KB-scale
-  // (NList×dim / M×K×subdim doubles) plus, for PQ and the graph, one
-  // checkpointed frame each. [[graft.SessionCache]] lifecycle: LRU
-  // eviction drops the entry and leaves any checkpoint blocks to the
-  // ContextCleaner (a still-held frame stays executable);
-  // [[clearTrainCache]] releases them.
-  private val ivfCache = new graft.SessionCache[Array[(Int, Seq[Double], Double)]]()
-  private val pqCache =
-    new graft.SessionCache[PqModel](onClear = pm => Dedup.releaseCheckpoint(pm.codes))
+  // Trained ANN artifacts (the ANN index — IVF coarse centroids, PQ
+  // codebooks + encoded codes — and the k-NN graph) are PURE
+  // DETERMINISTIC functions of the data dir, and a production ANN index
+  // trains ONCE and serves many queries — so the engine memoizes them
+  // per (session, dir) instead of retraining on every query call (the
+  // index's training is one pack job, one init pass, max(QuantizerIters,
+  // PqIters) fused Lloyd passes and one encode; see [[trainIndex]]).
+  // Driver footprint is KB-scale (NList×dim / M×K×subdim doubles) plus,
+  // for the PQ codes and the graph, one checkpointed frame each.
+  // [[graft.SessionCache]] lifecycle: LRU eviction drops the entry and
+  // leaves any checkpoint blocks to the ContextCleaner (a still-held
+  // frame stays executable); [[clearTrainCache]] releases them.
+  private val annCache =
+    new graft.SessionCache[AnnIndex](onClear = ix => Dedup.releaseCheckpoint(ix.pq.codes))
   private val knnCache =
     new graft.SessionCache[DataFrame](onClear = Dedup.releaseCheckpoint)
 
   /** Test hook: drop all memoized training artifacts. */
   def clearTrainCache(): Unit = {
-    ivfCache.clear()
-    pqCache.clear()
+    annCache.clear()
     knnCache.clear()
   }
 
@@ -82,7 +85,6 @@ object Similarity {
       .select($"cid", $"v", $"nrm").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1), r.getDouble(2)))
       .sortBy(_._1)
-    ivfCache.put(s, dir, ivf)
     val cbRows = s.read.parquet(s"$path/pq_codebook")
       .select($"block", $"code", $"v", $"dim").collect()
     val dim = cbRows.head.getInt(3)
@@ -92,14 +94,13 @@ object Similarity {
     // localCheckpoint: downstream plans read materialized code rows,
     // matching the freshly-trained frame's plan shape
     val codes = s.read.parquet(s"$path/pq_codes").localCheckpoint()
-    pqCache.put(s, dir, PqModel(cb, codes, dim))
+    annCache.put(s, dir, AnnIndex(ivf, PqModel(cb, codes, dim)))
   }
 
-  /** Force both memoized ANN artifacts (train-once accounting; see
-    * [[ivfCache]], [[pqCache]]) — perfbench times it as its own span. */
+  /** Force the memoized ANN index (train-once accounting; see
+    * [[trainIndex]]) — perfbench times it as its own span. */
   def trainAnn(s: SparkSession, dir: String): Unit = {
-    ivfCentroids(s, dir)
-    pqModel(s, dir)
+    annIndex(s, dir)
     ()
   }
   val TopK = 10
@@ -222,42 +223,6 @@ object Similarity {
   val NProbe = 11
   val QuantizerIters = 3
 
-  /** Coarse-quantizer centroids: evenly spaced vectors in vec_id order
-    * (deterministic; the reference seeds its init in the same spirit,
-    * master.py:27-34), refined by [[QuantizerIters]] spherical-k-means
-    * Lloyd iterations — the same broadcast-assign / K-row-aggregate loop
-    * as [[graft.kmeans.KMeans]], in n dimensions. Each iteration moves
-    * only NList×dim doubles to the driver. Returns (list_id, vector,
-    * norm). */
-  private def coarseCentroids(e: DataFrame): Array[(Int, Seq[Double], Double)] = {
-    import e.sparkSession.implicits._
-    val n = e.count()
-    val dim = e.select(size($"v")).head().getInt(0)
-    val ids = (0 until NList).map(i => i * n / NList)
-    var cs = e.filter($"vec_id".isin(ids: _*)).orderBy($"vec_id")
-      .select($"v", $"nrm").collect()
-      .zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Double](0), r.getDouble(1)) }
-    for (_ <- 1 to QuantizerIters) {
-      val meanAggs = (0 until dim).map(i => avg($"v"(i)).as(s"m$i"))
-      val means = e.withColumn("ds", centroidCosines(cs))
-        .withColumn("list_id", expr("array_position(ds, array_max(ds)) - 1"))
-        .groupBy($"list_id").agg(meanAggs.head, meanAggs.tail: _*)
-        .collect()
-        .map { r =>
-          val v = (0 until dim).map(i => r.getDouble(i + 1))
-          r.getLong(0).toInt -> v
-        }.toMap
-      cs = cs.map { case (i, old, oldNrm) =>
-        means.get(i) match {
-          case Some(v) => (i, v, math.sqrt(v.map(x => x * x).sum))
-          case None    => (i, old, oldNrm) // empty list keeps its centroid
-        }
-      }
-    }
-    cs
-  }
-
   /** Cosine of the row vector against each centroid, as an array column. */
   private def centroidCosines(cents: Array[(Int, Seq[Double], Double)]): Column =
     array(cents.map { case (_, cv, cn) =>
@@ -280,19 +245,14 @@ object Similarity {
   def annIvfExact(s: SparkSession, dir: String): DataFrame =
     annIvfProbing(s, dir, NList)
 
-  /** The memoized IVF coarse quantizer for a data dir — train-once
-    * surface (forced by [[trainAnn]]). */
+  /** The IVF coarse quantizer of a data dir, (list_id, vector, norm):
+    * [[NList]] centroids refined by [[QuantizerIters]] spherical Lloyd
+    * iterations (cosine argmax, first max wins) from evenly spaced
+    * vec_id seeds. The memoized index's half — trained with the PQ
+    * codebooks in the same passes ([[trainIndex]]). */
   private[operators] def ivfCentroids(s: SparkSession, dir: String)
       : Array[(Int, Seq[Double], Double)] =
-    ivfCache.getOrCompute(s, dir) {
-      // Persist only for the quantizer refinement (QuantizerIters+2
-      // passes), then release: downstream plans build on a fresh scan
-      // so repeated calls don't accumulate cache entries.
-      val cached = embedded(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try coarseCentroids(cached)
-      finally cached.unpersist(blocking = false)
-    }
+    annIndex(s, dir).ivf
 
   private def annIvfProbing(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
     import s.implicits._
@@ -475,7 +435,8 @@ object Similarity {
       // only this build's materialization sees it; at sf0.1/sf1 the
       // estimate floors at the session parallelism and the plan is
       // byte-identical to r14.
-      val n = embedded(s, dir).count()
+      val shape = vectorShape(embedded(s, dir))
+      val n = shape._1
       val pairBytes = n * KnnTables.toLong * KnnTargetBucket * 48L
       val np = math.max(s.sparkContext.defaultParallelism,
         math.min(4096L, pairBytes / KnnShufflePartitionBytes).toInt)
@@ -483,22 +444,38 @@ object Similarity {
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       try {
         s.conf.set("spark.sql.shuffle.partitions", np.toString)
-        knnGraphFresh(s, dir, pinned).localCheckpoint()
+        knnGraphFresh(s, dir, pinned, Some(shape)).localCheckpoint()
       } finally s.conf.set("spark.sql.shuffle.partitions", prev)
     }
 
   /** The un-checkpointed build plan — PlanShapeSpec asserts the bucket
     * join / edge-exchange / WindowGroupLimit shape on THIS (the memoized
-    * [[knnEdges]] frame's plan is just the checkpoint scan). */
+    * [[knnEdges]] frame's plan is just the checkpoint scan). `shape` is
+    * the corpus's [[vectorShape]] when the caller already has it. */
   private[graft] def knnGraphFresh(s: SparkSession, dir: String,
-      pinnedWidth: Option[Int] = None): DataFrame = {
+      pinnedWidth: Option[Int] = None, shape: Option[(Long, Int)] = None): DataFrame = {
     import s.implicits._
     // r14: spread the bucket-signature scan (see Tables.spread) — the
     // per-row multi-table bucket projection is the map-side cost here
     val e = graft.Tables.spread(embedded(s, dir), dir, "embeddings",
       Tables.SpreadMinComputeBytes, $"vec_id")
-    val n = e.count()
-    knnGraphWith(e, KnnTables, knnPlanes(n), None, pinnedWidth)
+    val (n, dim) = shape.getOrElse(vectorShape(embedded(s, dir)))
+    knnGraphWith(e, dim, KnnTables, knnPlanes(n), None, pinnedWidth)
+  }
+
+  /** (row count, vector dimension) of `e`'s `v` column in one job;
+    * fails unless every vector has the same dimension (a null vector
+    * counts as dimension -1). An empty frame reads (0, 0). */
+  private def vectorShape(e: DataFrame): (Long, Int) = {
+    val sizes = coalesce(size(col("v")), lit(-1))
+    val r = e.agg(count(lit(1)), min(sizes), max(sizes)).head()
+    val n = r.getLong(0)
+    if (n == 0L) (0L, 0)
+    else {
+      require(r.getInt(1) == r.getInt(2), "vectors must share one dimension; sizes " +
+        s"range over [${r.getInt(1)}, ${r.getInt(2)}] (-1 is a null vector)")
+      (n, r.getInt(1))
+    }
   }
 
   /** The kNN-graph EXACTNESS ANCHOR ([[annLshExact]] discipline): zero
@@ -516,13 +493,13 @@ object Similarity {
     // otherwise runs inside the single-row-group scan's one task
     val e = graft.Tables.spread(embedded(s, dir), dir, "embeddings",
       Tables.SpreadMinComputeBytes, $"vec_id")
-    knnGraphWith(e, tables = 1, nplanes = 0, nodeMax = Some(KnnNodes))
+    knnGraphWith(e, vectorShape(embedded(s, dir))._2, tables = 1, nplanes = 0,
+      nodeMax = Some(KnnNodes))
   }
 
-  private def knnGraphWith(e: DataFrame, tables: Int, nplanes: Int,
+  private def knnGraphWith(e: DataFrame, dim: Int, tables: Int, nplanes: Int,
       nodeMax: Option[Int], pinnedWidth: Option[Int] = None): DataFrame = {
     import e.sparkSession.implicits._
-    val dim = e.select(size($"v")).head().getInt(0)
     val corpus = withBuckets(e, dim, tables, nplanes)
       .select($"vec_id", $"v", $"nrm", $"t", $"bucket")
     val nodeSide = nodeMax match {
@@ -680,10 +657,10 @@ object Similarity {
     *   1. TRAIN: the vector space is split into [[PqBlocks]] disjoint
     *      coordinate blocks; each block gets a [[PqCodes]]-codeword
     *      codebook (deterministic evenly-spaced init + [[PqIters]]
-    *      Lloyd rounds). ALL blocks train in the same pass: one scan
-    *      per round, assignments for every block computed in one
-    *      projection, then a posexplode → (block, code)-keyed mean
-    *      aggregation whose output is M×K rows to the driver — the
+    *      L2 Lloyd rounds, first min wins). ALL blocks train in the
+    *      same pass over the packed plane, fused with the IVF
+    *      quantizer's pass ([[trainIndex]]): one `treeAggregate` per
+    *      round whose output is M×K×subdim sums and M×K counts — the
     *      same K-row-loop discipline as [[graft.kmeans.KMeans]].
     *   2. ENCODE: map-only projection replacing each 64×8-byte vector
     *      with M 4-bit codes + one reconstructed norm (blocks are
@@ -719,61 +696,251 @@ object Similarity {
   private[graft] final case class PqModel(
       cb: Array[Array[Seq[Double]]], codes: DataFrame, dim: Int)
 
-  /** The memoized PQ training + encode for a data dir — train-once
-    * surface (forced by [[trainAnn]]). */
+  /** The PQ model of a data dir — the memoized index's other half
+    * ([[trainIndex]]). */
   private[graft] def pqModel(s: SparkSession, dir: String): PqModel =
-    pqCache.getOrCompute(s, dir) {
-      import s.implicits._
-      val cached = embedded(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val dim = cached.select(size($"v")).head().getInt(0)
-        require(dim % PqBlocks == 0, s"dim $dim not divisible into $PqBlocks blocks")
-        val subdim = dim / PqBlocks
+    annIndex(s, dir).pq
 
-        // ---- train: deterministic init, then fused per-round refinement
-        val n = cached.count()
-        val initIds = (0 until PqCodes).map(k => k * n / PqCodes)
-        var cb: Array[Array[Seq[Double]]] = {
-          val rows = cached.filter($"vec_id".isin(initIds: _*)).orderBy($"vec_id")
-            .select($"v").collect().map(_.getSeq[Double](0))
-          Array.tabulate(PqBlocks)(b =>
-            rows.map(v => v.slice(b * subdim, (b + 1) * subdim)).toArray
-              .map(_.toSeq))
-        }
-        // per-block argmin via the native [[graft.functions.PqCode]]
-        // expression: ONE codegen call per block with the codeword loop
-        // in compiled bytecode — the composed K-distance-expressions form
-        // made janino compilation the dominant cost of this query (see
-        // PqCode's scaladoc for the measurement)
-        def withCodes(df: DataFrame): DataFrame =
-          df.withColumn("codes", array((0 until PqBlocks).map(b =>
-            graft.functions.PqCode(col("v"), b * subdim, subdim, cb(b))): _*))
-        for (_ <- 1 to PqIters) {
-          val meanAggs = (0 until subdim).map(i => avg($"sv"(i)).as(s"m$i"))
-          val means = withCodes(cached)
-            .select($"v", posexplode($"codes").as(Seq("block", "code")))
-            .withColumn("sv", slice($"v", $"block" * subdim + 1, lit(subdim)))
-            .groupBy($"block", $"code")
-            .agg(meanAggs.head, meanAggs.tail: _*)
-            .collect()
-            .map(r => (r.getInt(0), r.getInt(1),
-              (0 until subdim).map(i => r.getDouble(i + 2))))
-          val next = cb.map(_.clone())
-          means.foreach { case (b, k, v) => next(b)(k) = v }
-          cb = next
-        }
+  /** The ANN index: the IVF coarse quantizer and the PQ model, trained
+    * together and memoized as one value. */
+  private[graft] final case class AnnIndex(
+      ivf: Array[(Int, Seq[Double], Double)], pq: PqModel)
 
-        // ---- encode: codes + exact reconstructed norm (disjoint
-        // blocks) — the shared frozen-codebook path ([[encodeWith]]).
-        // localCheckpoint (eager): the codes frame materializes HERE,
-        // while `cached` is still persisted — every downstream plan
-        // (approx scan, shortlist, re-rank) then reads the materialized
-        // codes instead of re-encoding from a re-scanned corpus
-        val codes = encodeWith(cb, subdim, cached).localCheckpoint()
-        PqModel(cb, codes, dim)
-      } finally cached.unpersist(blocking = false)
+  private def annIndex(s: SparkSession, dir: String): AnnIndex =
+    annCache.getOrCompute(s, dir)(trainIndex(embedded(s, dir)))
+
+  /** Trains the ANN index from `e` (vec_id bigint, v array<double>) on
+    * one packed plane ([[graft.PackedPlane]], ids = vec_id, d = the
+    * embedding width), in this job plan:
+    *
+    *   1. one job packs the plane and returns n and d;
+    *   2. one init pass picks the seeds: seed i of K is the vector of
+    *      the smallest vec_id ≥ i·n/K, for the [[NList]] IVF lists and
+    *      the [[PqCodes]] codewords of every block (K running minima
+    *      per partition, merged by min — order-free);
+    *   3. max([[QuantizerIters]], [[PqIters]]) fused Lloyd passes, each
+    *      ONE `treeAggregate` returning NList×d sums and counts (cosine
+    *      argmax, first max wins) plus M×K×subdim sums and counts
+    *      (per-block L2 argmin, first min wins); a rule stops updating
+    *      after its own count, and an empty list or codeword keeps its
+    *      old value;
+    *   4. one encode of a fresh scan of `e` through [[encodeWith]] —
+    *      the path [[appendAnnIndex]] shares — checkpointed eagerly.
+    *
+    * The plane is released once training ends. A null vector, a null
+    * element or a ragged dimension fails the pack naming its vec_id;
+    * n < K (or vec_ids that leave two seeds equal) fails the init. */
+  private[graft] def trainIndex(e: DataFrame): AnnIndex = {
+    val src = e.select("vec_id", "v")
+    require(src.schema(0).dataType == LongType && (src.schema(1).dataType match {
+        case ArrayType(DoubleType, _) => true
+        case _ => false
+      }), s"ANN training needs vec_id bigint, v array<double>; got ${src.schema.simpleString}")
+    val plane = src.queryExecution.toRdd.mapPartitions(packVectors)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (ivf, cb, dim) = try lloyd(plane) finally plane.unpersist(blocking = false)
+    val subdim = dim / PqBlocks
+    val codebooks = cb.map(_.grouped(subdim).map(_.toSeq).toArray)
+    val codes = encodeWith(codebooks, subdim, e).localCheckpoint()
+    AnnIndex(ivf, PqModel(codebooks, codes, dim))
+  }
+
+  /** Steps 1-3 of [[trainIndex]]: the quantizer, the flat per-block
+    * codebooks (codeword k of block b at `cb(b)(k*subdim ..)`) and d. */
+  private def lloyd(plane: RDD[PlaneChunk])
+      : (Array[(Int, Seq[Double], Double)], Array[Array[Double]], Int) = {
+    val (n, d) = planeShape(plane)
+    require(d % PqBlocks == 0, s"dim $d not divisible into $PqBlocks blocks")
+    val subdim = d / PqBlocks
+    val (ivfSeeds, pqSeeds) = plane.treeAggregate(
+      (new Seeds(NList, n, d), new Seeds(PqCodes, n, d)))(
+      seqOp = { case ((a, b), c) => (a.add(c), b.add(c)) },
+      combOp = { case ((a, b), (x, y)) => (a.merge(x), b.merge(y)) })
+    val cents = ivfSeeds.vectors()
+    val cnorm = Array.tabulate(NList)(l => normOf(cents, l * d, d))
+    val seeds = pqSeeds.vectors()
+    val cb = Array.tabulate(PqBlocks)(b => Array.tabulate(PqCodes * subdim)(i =>
+      seeds((i / subdim) * d + b * subdim + i % subdim)))
+    for (iter <- 1 to math.max(QuantizerIters, PqIters)) {
+      val (ivfOn, pqOn) = (iter <= QuantizerIters, iter <= PqIters)
+      val sums = plane.treeAggregate(new LloydSums(d, subdim))(
+        seqOp = (acc, c) => acc.add(c, cents, cnorm, cb, ivfOn, pqOn),
+        combOp = (a, b) => a.merge(b))
+      if (ivfOn) (0 until NList).foreach { l =>
+        val m = sums.ivfCnt(l)
+        if (m > 0L) {
+          (0 until d).foreach(j => cents(l * d + j) = sums.ivfSum(l * d + j) / m)
+          cnorm(l) = normOf(cents, l * d, d)
+        }
+      }
+      if (pqOn) for (b <- 0 until PqBlocks; k <- 0 until PqCodes) {
+        val m = sums.pqCnt(b * PqCodes + k)
+        if (m > 0L) (0 until subdim).foreach(j =>
+          cb(b)(k * subdim + j) = sums.pqSum((b * PqCodes + k) * subdim + j) / m)
+      }
     }
+    val ivf = Array.tabulate(NList)(l =>
+      (l, cents.slice(l * d, (l + 1) * d).toSeq, cnorm(l)))
+    (ivf, cb, d)
+  }
+
+  /** ‖v(off until off + d)‖ — [[graft.functions.DotProduct.norm]]'s
+    * left-to-right fold. */
+  private def normOf(v: Array[Double], off: Int, d: Int): Double = {
+    var s = 0.0
+    var j = 0
+    while (j < d) { s += v(off + j) * v(off + j); j += 1 }
+    math.sqrt(s)
+  }
+
+  /** Packs one partition of (vec_id, v) rows at its first row's
+    * dimension (a null first vector fails in [[VectorRow]]);
+    * partitions that disagree fail in [[planeShape]]. */
+  private def packVectors(rows: Iterator[InternalRow]): Iterator[PlaneChunk] = {
+    val in = rows.buffered
+    if (!in.hasNext) Iterator.empty
+    else {
+      val d = if (in.head.isNullAt(1)) 1 else in.head.getArray(1).numElements()
+      if (d == 0) throw VectorRow.bad(s"empty vector at vec_id ${in.head.getLong(0)}")
+      PackedPlane.pack(in, d, new VectorRow(d))
+    }
+  }
+
+  /** One (vec_id, v) row into a plane of width d. */
+  private final class VectorRow(d: Int) extends PlaneRow {
+    def put(r: InternalRow, vals: Array[Double], off: Int): Long = {
+      if (r.isNullAt(0)) throw VectorRow.bad("null vec_id")
+      val id = r.getLong(0)
+      if (r.isNullAt(1)) throw VectorRow.bad(s"null vector at vec_id $id")
+      val v = r.getArray(1)
+      if (v.numElements() != d) throw VectorRow.bad(
+        s"ragged vectors: vec_id $id has dimension ${v.numElements()}, its partition $d")
+      var j = 0
+      while (j < d) {
+        if (v.isNullAt(j)) throw VectorRow.bad(s"null element $j in vec_id $id")
+        vals(off + j) = v.getDouble(j)
+        j += 1
+      }
+      id
+    }
+  }
+
+  // an object, not a method of Similarity: task closures that call it
+  // must not capture the (unserializable) Similarity module
+  private object VectorRow {
+    def bad(msg: String) = new IllegalArgumentException(s"ANN training: $msg")
+  }
+
+  /** The pack job: (n, d) of the plane. The packer holds a partition
+    * to one d; partitions that disagree fail here, naming a vec_id of
+    * each. */
+  private def planeShape(plane: RDD[PlaneChunk]): (Long, Int) = {
+    type Shape = (Long, Int, Long) // rows, d, a vec_id
+    def join(a: Shape, b: Shape): Shape =
+      if (a._1 == 0L) b
+      else if (b._1 == 0L || a._2 == b._2) (a._1 + b._1, a._2, a._3)
+      else throw VectorRow.bad(
+        s"ragged vectors: vec_id ${a._3} has dimension ${a._2}, vec_id ${b._3} has dimension ${b._2}")
+    val (n, d, _) = plane.treeAggregate[Shape]((0L, 0, 0L))(
+      seqOp = (a, c) => join(a, (c.rows.toLong, c.d, c.ids(0))), combOp = join)
+    (n, d)
+  }
+
+  /** Running minima for an init of `k` seeds over n vectors of width
+    * d: seed i is the vector of the smallest vec_id ≥ i·n/k. */
+  private final class Seeds(k: Int, n: Long, d: Int) extends Serializable {
+    private val ids = Array.fill(k)(Long.MaxValue)
+    private val vecs = new Array[Double](k * d)
+
+    private def offer(i: Int, id: Long, src: Array[Double], off: Int): Unit =
+      if (id < ids(i)) { ids(i) = id; System.arraycopy(src, off, vecs, i * d, d) }
+
+    def add(c: PlaneChunk): Seeds = {
+      var r = 0
+      while (r < c.rows) {
+        val id = c.ids(r)
+        var i = 0 // thresholds ascend: the seeds id may serve are a prefix
+        while (i < k && i * n / k <= id) { offer(i, id, c.vals, r * d); i += 1 }
+        r += 1
+      }
+      this
+    }
+
+    def merge(o: Seeds): Seeds = {
+      (0 until k).foreach(i => offer(i, o.ids(i), o.vecs, i * d))
+      this
+    }
+
+    /** The k seed vectors, row-major; fails unless all k are distinct. */
+    def vectors(): Array[Double] = {
+      require(ids.forall(_ != Long.MaxValue) && ids.distinct.length == k,
+        s"ANN init: $k seeds over n=$n vectors are not distinct (seed i is the " +
+          s"smallest vec_id >= i*n/$k); needs n >= $k and vec_ids spread over [0, n)")
+      vecs.clone()
+    }
+  }
+
+  /** One fused Lloyd pass's partial sums: per IVF list (NList×d sums,
+    * counts) and per (block, codeword) (M×K×subdim sums, counts). */
+  private final class LloydSums(d: Int, subdim: Int) extends Serializable {
+    val ivfSum = new Array[Double](NList * d)
+    val ivfCnt = new Array[Long](NList)
+    val pqSum = new Array[Double](PqBlocks * PqCodes * subdim)
+    val pqCnt = new Array[Long](PqBlocks * PqCodes)
+
+    /** The whole-chunk kernel: per vector, the cosine argmax over the
+      * NList centroids (DotProduct's fold, first max wins, NaN above
+      * every number as in `array_max`) and the per-block
+      * [[graft.functions.PqCode.argmin]]. */
+    def add(c: PlaneChunk, cents: Array[Double], cnorm: Array[Double],
+        cb: Array[Array[Double]], ivfOn: Boolean, pqOn: Boolean): LloydSums = {
+      val v = c.vals
+      var r = 0
+      while (r < c.rows) {
+        val off = r * d
+        if (ivfOn) {
+          val nrm = normOf(v, off, d)
+          var best = 0
+          var bestCos = 0.0
+          var l = 0
+          while (l < NList) {
+            var dot = 0.0
+            var j = 0
+            while (j < d) { dot += v(off + j) * cents(l * d + j); j += 1 }
+            val cos = dot / (nrm * cnorm(l))
+            if (l == 0 || cos > bestCos || (cos.isNaN && !bestCos.isNaN)) {
+              best = l; bestCos = cos
+            }
+            l += 1
+          }
+          var j = 0
+          while (j < d) { ivfSum(best * d + j) += v(off + j); j += 1 }
+          ivfCnt(best) += 1L
+        }
+        if (pqOn) {
+          var b = 0
+          while (b < PqBlocks) {
+            val k = graft.functions.PqCode.argmin(v, off + b * subdim, subdim, cb(b))
+            val at = (b * PqCodes + k) * subdim
+            var j = 0
+            while (j < subdim) { pqSum(at + j) += v(off + b * subdim + j); j += 1 }
+            pqCnt(b * PqCodes + k) += 1L
+            b += 1
+          }
+        }
+        r += 1
+      }
+      this
+    }
+
+    def merge(o: LloydSums): LloydSums = {
+      ivfSum.indices.foreach(i => ivfSum(i) += o.ivfSum(i))
+      ivfCnt.indices.foreach(i => ivfCnt(i) += o.ivfCnt(i))
+      pqSum.indices.foreach(i => pqSum(i) += o.pqSum(i))
+      pqCnt.indices.foreach(i => pqCnt(i) += o.pqCnt(i))
+      this
+    }
+  }
 
   /** ENCODE `e` (vec_id, v) against FROZEN per-block codebooks: M 4-bit
     * codes + the exact reconstructed norm per vector — shared by the

@@ -1,0 +1,217 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.BeforeAndAfterAll
+import graft.operators.Similarity
+
+/** Plain-Scala ANN training: spherical Lloyd over [[Similarity.NList]]
+  * lists (cosine by a left-to-right fold, first max wins) and per-block
+  * L2 Lloyd over [[Similarity.PqCodes]] codewords (first min wins), both
+  * seeded with the vector of the smallest vec_id ≥ i·n/K; an empty list
+  * or codeword keeps its value. */
+object AnnReference {
+  import Similarity.{NList, PqBlocks, PqCodes, PqIters, QuantizerIters}
+
+  private def dot(a: Array[Double], b: Array[Double]): Double =
+    a.indices.foldLeft(0.0)((s, j) => s + a(j) * b(j))
+
+  /** (IVF centroids, PQ codebooks(block)(code)) of `vecs` (vec_id, v). */
+  def train(vecs: Seq[(Long, Array[Double])])
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val sorted = vecs.sortBy(_._1)
+    val n = sorted.size.toLong
+    def seeds(k: Int) = Array.tabulate(k)(i => sorted.find(_._1 >= i * n / k).get._2.clone())
+    def lloyd(init: Array[Array[Double]], iters: Int, part: Array[Double] => Array[Double],
+        nearest: (Array[Double], Array[Array[Double]]) => Int): Array[Array[Double]] = {
+      var cs = init
+      for (_ <- 1 to iters) {
+        val members = sorted.map(v => part(v._2)).groupBy(nearest(_, cs))
+        cs = cs.indices.map(c => members.get(c).fold(cs(c)) { ms =>
+          cs(c).indices.map(j => ms.foldLeft(0.0)(_ + _(j)) / ms.size).toArray
+        }).toArray
+      }
+      cs
+    }
+    def firstMax(xs: Seq[Double]): Int = xs.indices.foldLeft(0)((b, i) => if (xs(i) > xs(b)) i else b)
+    def firstMin(xs: Seq[Double]): Int = xs.indices.foldLeft(0)((b, i) => if (xs(i) < xs(b)) i else b)
+    val ivf = lloyd(seeds(NList), QuantizerIters, identity, (v, cs) =>
+      firstMax(cs.toSeq.map(c => dot(v, c) / (math.sqrt(dot(v, v)) * math.sqrt(dot(c, c))))))
+    val d = sorted.head._2.length
+    val sub = d / PqBlocks
+    val pqSeeds = seeds(PqCodes)
+    val cb = Array.tabulate(PqBlocks) { b =>
+      def slice(v: Array[Double]) = v.slice(b * sub, (b + 1) * sub)
+      lloyd(pqSeeds.map(slice), PqIters, slice, (v, cs) =>
+        firstMin(cs.toSeq.map(c => v.indices.foldLeft(0.0)((s, j) =>
+          s + (v(j) - c(j)) * (v(j) - c(j))))))
+    }
+    (ivf, cb)
+  }
+}
+
+/** ANN index training: one packed plane, one fused Lloyd pass per
+  * iteration — job count, reads, equality with [[AnnReference]], the
+  * init's seeds and the pack's input checks. */
+class AnnTrainSpec extends AnyFunSuite with BeforeAndAfterAll {
+  private val sf = "/root/testdata/sf0.001"
+  private lazy val spark = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
+
+  /** (vec_id, v array<double>) of a dir's embeddings. */
+  private def vectors(dir: String): DataFrame =
+    Tables(spark, dir, "embeddings").select(col("vec_id"),
+      transform(col("embedding"), _.cast("double")).as("v"))
+
+  private def collectVecs(df: DataFrame): Seq[(Long, Array[Double])] =
+    df.collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+
+  private def assertMatchesReference(e: DataFrame, clue: String): Unit = {
+    val (ivf, cb) = AnnReference.train(collectVecs(e))
+    val ix = Similarity.trainIndex(e)
+    assert(ix.ivf.map(_._1).toSeq == (0 until Similarity.NList), clue)
+    ix.ivf.foreach { case (l, v, nrm) =>
+      assert(v.zip(ivf(l)).forall { case (a, b) => math.abs(a - b) <= 1e-9 }, s"$clue list $l")
+      assert(math.abs(nrm - math.sqrt(ivf(l).map(x => x * x).sum)) <= 1e-9, s"$clue norm $l")
+    }
+    assert(ix.pq.cb.forall(_.length == Similarity.PqCodes), clue)
+    for (b <- 0 until Similarity.PqBlocks; k <- 0 until Similarity.PqCodes)
+      assert(ix.pq.cb(b)(k).zip(cb(b)(k)).forall { case (x, y) => math.abs(x - y) <= 1e-9 },
+        s"$clue block $b code $k")
+  }
+
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  private def writeEmbeddings(rows: Seq[Row]): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_anntrain").toString
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType, nullable = false),
+      StructField("embedding", ArrayType(FloatType, containsNull = true)),
+      StructField("label", IntegerType, nullable = false)))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+      .write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  /** n deterministic pseudo-random vectors of width `dim`, vec_ids from `ids`. */
+  private def synthetic(ids: Seq[Long], dim: Int): Seq[(Long, Array[Double])] =
+    ids.map { id =>
+      id -> Array.tabulate(dim) { j =>
+        val h = (id * 0x9E3779B97F4A7C15L + j * 0xC2B2AE3D27D4EB4FL) >>> 11
+        (h % 2001).toDouble / 100.0 - 10.0 + (id % 7) * (if (j % 7 == 0) 3.0 else 0.0)
+      }
+    }
+
+  test("trainAnn runs at most 8 Spark jobs and reads each row once to pack") {
+    Similarity.clearTrainCache()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try Similarity.trainAnn(spark, sf)
+    finally {
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    Similarity.clearTrainCache()
+    assert(jobs.get <= 8, s"trainAnn ran ${jobs.get} Spark jobs")
+
+    // the pack reads each row once; the encode is the one other scan
+    val s = spark
+    import s.implicits._
+    val read = spark.sparkContext.longAccumulator("vectors read")
+    val base = vectors(sf)
+    val n = base.count()
+    val e = base.as[(Long, Array[Double])]
+      .mapPartitions(_.map { r => read.add(1); r }).toDF("vec_id", "v")
+    Similarity.trainIndex(e)
+    assert(read.value == 2 * n, s"training read ${read.value} rows of $n (pack + encode)")
+  }
+
+  test("IVF centroids and PQ codebooks equal the plain-Scala Lloyd, stored and repartitioned") {
+    val e = vectors(sf)
+    assertMatchesReference(e, "as stored")
+    assertMatchesReference(e.repartition(3), "repartition(3)")
+  }
+
+  test("init trains NList distinct lists and PqCodes codewords on ids 1..n and with a gap") {
+    val base = Tables(spark, sf, "embeddings")
+    for ((name, shifted) <- Seq(
+        "ids 1..n" -> base.withColumn("vec_id", col("vec_id") + 1),
+        "a gap" -> base.withColumn("vec_id",
+          when(col("vec_id") >= 100, col("vec_id") + 37).otherwise(col("vec_id"))))) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_anninit").toString
+      shifted.coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+      val path = java.nio.file.Files.createTempDirectory("graft_annidx").toString
+      Similarity.clearTrainCache()
+      Similarity.saveAnnIndex(spark, dir, path)
+      Similarity.clearTrainCache()
+      val ivf = spark.read.parquet(s"$path/ivf").collect().map(_.getSeq[Double](1))
+      val (lists, distinct) = (ivf.length, ivf.distinct.length)
+      assert(lists == Similarity.NList && distinct == lists,
+        s"$name: $distinct distinct of $lists IVF centroids")
+      val cb = spark.read.parquet(s"$path/pq_codebook").collect()
+        .groupBy(_.getAs[Int]("block"))
+      assert(cb.size == Similarity.PqBlocks, name)
+      cb.foreach { case (b, rows) =>
+        val words = rows.map(r => r.getSeq[Double](r.fieldIndex("v")))
+        val (codes, distinct) = (words.length, words.distinct.length)
+        assert(codes == Similarity.PqCodes && distinct == codes,
+          s"$name block $b: $distinct distinct of $codes codewords")
+      }
+    }
+  }
+
+  test("init fails naming n and K when the seeds coincide (n < K)") {
+    val dir = writeEmbeddings((0 until 10).map(i =>
+      Row(i.toLong, Seq.tabulate(8)(j => (i * 8 + j).toFloat), 0)))
+    Similarity.clearTrainCache()
+    val msg = messages(intercept[Exception](Similarity.trainAnn(spark, dir)))
+    assert(msg.contains("n=10") && msg.contains(s"${Similarity.NList} seeds"), msg)
+  }
+
+  test("a null vector, a null element or a ragged vector fails trainAnn naming the vec_id") {
+    def vec(i: Int, dim: Int = 8) = Seq.tabulate(dim)(j => ((i * 31 + j * 7) % 13).toFloat)
+    val cases = Seq(
+      ("null vector", 17, Row(17L, null, 0)),
+      ("null element", 19, Row(19L, vec(19).updated(3, null), 0)),
+      ("ragged", 23, Row(23L, vec(23, 7), 0)))
+    cases.foreach { case (name, bad, badRow) =>
+      val rows = (0 until 40).map(i => if (i == bad) badRow else Row(i.toLong, vec(i), 0))
+      val dir = writeEmbeddings(rows)
+      Similarity.clearTrainCache()
+      val msg = messages(intercept[Exception](Similarity.trainAnn(spark, dir)))
+      assert(msg.contains(s"vec_id $bad"), s"$name: $msg")
+    }
+    // ragged across partitions: the partitions' dimensions disagree
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("v", ArrayType(DoubleType))))
+    val rows = (0 until 40).map(i => Row(i.toLong, Seq.fill(if (i == 39) 7 else 8)(i.toDouble)))
+    val split = spark.createDataFrame(spark.sparkContext.parallelize(rows, 40), schema)
+    val msg = messages(intercept[Exception](Similarity.trainIndex(split)))
+    assert(msg.contains("vec_id 39") && msg.contains("dimension 7"), msg)
+  }
+
+  test("chunk edges at d = 64: 511, 512 and 513 rows train like the reference") {
+    val s = spark
+    import s.implicits._
+    for (n <- Seq(511L, 512L, 513L); parts <- Seq(1, 3)) {
+      val one = spark.createDataset(synthetic(0L until n, 64))
+        .toDF("vec_id", "v").coalesce(1)
+      assertMatchesReference(if (parts == 1) one else one.repartition(parts),
+        s"n=$n partitions=$parts")
+    }
+  }
+}

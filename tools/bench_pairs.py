@@ -14,7 +14,8 @@ prints both sides' median and quartiles, the change's win count and a
 verdict:
 
   failed-more the change's share of failed operations is above the
-              parent's (an errored run counts as one failed operation)
+              parent's (an errored run counts as one failed operation,
+              an incorrect run as failing every operation it attempted)
   gain        the change wins at least 9/10 of all pairs run and the
               medians differ by more than the parent's interquartile range
   regression  the change's median is worse than the parent's by more than
@@ -23,8 +24,8 @@ verdict:
               change run beats every parent run
   within      none of the above: no gain shown, no regression
 
-A pair whose change run errored counts as a loss; medians and quartiles
-are over each side's runs that produced a result.
+A pair whose change run errored or was incorrect counts as a loss;
+medians and quartiles are over each side's correct runs.
 
 `--report` only prints the summary of an existing file.
 """
@@ -102,6 +103,11 @@ def verdict(pairs, better, bound, failed_more):
     return wins, len(pairs), pq, cq, worse, v
 
 
+def failed_ops(run):
+    """Failed operations of a run; an incorrect run failed all it attempted."""
+    return run["failed"] if run["correct"] else run["attempted"]
+
+
 def report(runs, bench):
     def fmt(q):
         return "%10.4g [%.4g, %.4g]" % (q[1], q[0], q[2]) if q else "%10s [-, -]" % "-"
@@ -109,7 +115,7 @@ def report(runs, bench):
         by = {(r["side"], r["seed"]): r for r in runs if r["workload"] == w}
         seeds = sorted(s for side, s in by if side == "parent" and ("change", s) in by)
         att = {side: sum(by[(side, s)]["attempted"] for s in seeds) for side in ("parent", "change")}
-        fail = {side: sum(by[(side, s)]["failed"] for s in seeds) for side in ("parent", "change")}
+        fail = {side: sum(failed_ops(by[(side, s)]) for s in seeds) for side in ("parent", "change")}
         correct = all(by[(side, s)]["correct"] for s in seeds for side in ("parent", "change"))
         failed_more = fail["change"] * att["parent"] > fail["parent"] * att["change"]
         print("%s: %d pairs (seeds %s), failed %d/%d parent, %d/%d change, all correct: %s"
@@ -117,7 +123,8 @@ def report(runs, bench):
                  fail["change"], att["change"], correct))
         for m in bench["end_to_end"]:
             name = m["name"]
-            pairs = [tuple(by[(side, s)].get(name) for side in ("parent", "change"))
+            pairs = [tuple(by[(side, s)].get(name) if by[(side, s)]["correct"] else None
+                           for side in ("parent", "change"))
                      for s in seeds]
             if not pairs:
                 continue
