@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.dsl.expressions._
 import org.apache.spark.sql.catalyst.expressions.{
   Add, AttributeReference, BinaryExpression, EvalMode, Expression, If, IsNull,
   Literal, Or, UnaryExpression}

@@ -22,26 +22,35 @@ final case class KMeansModel(centroids: Seq[Centroid], sizes: Map[Int, Long],
     history: Seq[Seq[Centroid]] = Nil)
 
 /** Spark-native Lloyd's K-Means — the reference engine's whole workload
-  * (master.py / mapper.py / reducer.py), re-expressed as a DataFrame plan:
+  * (master.py / mapper.py / reducer.py), re-expressed on Spark:
   *
-  *   - centroid "broadcast" (master.py:59) = double arrays embedded in a
-  *     codegen'd [[NearestCentroid]] expression — no gRPC, no protobuf;
+  *   - the engine is [[fitLoop]]: the points are packed ONCE into a
+  *     persisted [[graft.PackedPlane]] at d = 2 (24 B/point: pid plus
+  *     row-major x, y), filled by the init job, and every iteration is
+  *     one `treeAggregate` over it ([[stepPacked]]);
+  *   - centroid "broadcast" (master.py:59) = the K centroids as double
+  *     arrays captured in the iteration's closure — no gRPC, no protobuf;
   *   - the mapper's per-reducer partition files + FetchData shuffle
-  *     (mapper.py:68-71, reducer.py:19-27) = Spark's hash shuffle under
-  *     `groupBy(cid)`, with map-side partial aggregation, so the wire
-  *     carries K×partitions partial sums instead of every point;
-  *   - the reducer's per-cluster mean (reducer.py:41-51) = `avg(x),avg(y)`;
+  *     (mapper.py:68-71, reducer.py:19-27) = per-partition K sums and
+  *     counts merged through the aggregation tree, so the wire carries
+  *     K×partitions partial sums instead of every point;
+  *   - the reducer's per-cluster mean (reducer.py:41-51) = sum / count
+  *     per cluster on the driver;
   *   - the master's retry-forever loop on simulated failures
   *     (master.py:73-89) = Spark task re-execution, natively;
   *   - convergence: `np.allclose(old, new, atol=1e-4)` (master.py:144) =
   *     |old-new| <= atol + rtol*|new| per coordinate, rtol=1e-5 (numpy's
   *     default rtol is retained by the reference).
   *
-  * Per-iteration driver traffic is K rows; the scan is a narrow projection
-  * of two double columns — at 100 TB the plan is scan + partial-agg +
-  * K-row shuffle, nothing else. [[fit]] scans its input once: init and
-  * every iteration read a [[graft.PackedPlane]] at d = 2 (24 B/point:
-  * pid plus row-major x, y) filled by the init job (see [[fitLoop]]).
+  * [[step]] is the DataFrame twin of one iteration — a codegen'd
+  * [[NearestCentroid]] assignment, a `groupBy(cid)` shuffle with
+  * map-side partial aggregation and `avg(x), avg(y)` — which the
+  * contract queries ([[KMeansQueries]]) and the specs use; KMeansSpec
+  * pins the packed loop to it on the contract chain.
+  *
+  * Per-iteration driver traffic is K rows; at 100 TB an iteration is one
+  * single-stage job over the cached plane plus a K-row tree merge, and
+  * [[fit]] scans its input once.
   *
   * Deviations from the reference (documented): empty clusters keep their
   * previous centroid (the reference drops the id from the reducer dict and

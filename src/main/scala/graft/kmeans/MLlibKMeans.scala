@@ -3,7 +3,6 @@ package graft.kmeans
 import org.apache.spark.ml.clustering.{KMeans => SparkKMeans}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Production path: `org.apache.spark.ml.clustering.KMeans` (k-means||
   * init, distributed Lloyd) over the same point planes. This is the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{PolyHash, SimHash64, WordNgrams, WordNgramHashes, TextFeatures => TF}
+import graft.functions.{PolyHash, SimHash64, WordNgramHashes, TextFeatures => TF}
 
 /** SURVEY.md §2.C — the deduplication suite over the `documents` table:
   * exact hash-dedup, n-gram Jaccard, MinHash+LSH, SimHash, and
@@ -170,28 +170,6 @@ object Dedup {
     * candidate reduction on boilerplate AND the >cap near-identical
     * cluster (the round-2 advisor's blind spot). */
   val NgramDfCap = 64L
-
-  /** Distinct word-3-grams per doc, exploded, each row carrying the
-    * blocking key (lang, n_chars DIV 100) and the doc's TOTAL distinct-
-    * gram count `n` — denormalizing `n` onto every gram row costs 8
-    * bytes/row and saves the separate per-doc count aggregation plus two
-    * re-join shuffles downstream.
-    *
-    * Gram generation is the native one-pass [[WordNgrams]] expression;
-    * see its scaladoc for why the composed HOF form is an optimizer
-    * trap. `n` is computed BELOW the explode so the Generate carries 4
-    * scalar columns, not the gram array. */
-  private def gramsOf(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs
-      .withColumn("gs", WordNgrams($"text", NgramN))
-      .withColumn("n", size($"gs"))
-      .select($"doc_id", $"lang", expr("n_chars DIV 100").as("lb"),
-        $"n", explode($"gs").as("gram"))
-  }
-
-  private def grams(s: SparkSession, dir: String): DataFrame =
-    gramsOf(Tables(s, dir, "documents"))
 
   /** Exploded 62-bit gram-hash rows ([[WordNgramHashes]]) with the
     * blocking key — the candidate-stage representation: the exchange
@@ -1172,7 +1150,7 @@ object Dedup {
       if (hotLabels.isEmpty) exact
       else {
         val hot = e0.filter($"label".isin(hotLabels: _*))
-        val dim = e0.select(size($"v")).head().getInt(0)
+        val dim = Similarity.vectorShape(e0)._2
         // plane count sized from the largest hot block (see
         // [[HotTargetBucketRows]]): fixed NPlanes=3 keeps only 8
         // buckets/table, which on a block ≫ 8·bucket leaves the
@@ -1630,7 +1608,7 @@ object Dedup {
     val e = graft.Tables.spread(
       Similarity.embedded(s, dir), dir, "embeddings",
       graft.Tables.SpreadMinComputeBytes, $"vec_id")
-    val dim = e.select(size($"v")).head().getInt(0)
+    val dim = Similarity.vectorShape(Similarity.embedded(s, dir))._2
     lshCosinePairs(e, dim, tables, nplanes)
       .filter($"cosine" >= CosineTau)
       .select($"a_id", $"b_id", $"cosine")

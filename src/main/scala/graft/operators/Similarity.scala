@@ -11,9 +11,10 @@ import graft.{PackedPlane, PlaneChunk, PlaneRow, Tables}
 
 /** SURVEY.md §2.D — similarity search over the `embeddings` table
   * (`Array[Float]` column): exact brute-force top-k cosine as the
-  * oracle-checked baseline, and two sub-quadratic scale paths (IVF coarse
-  * quantization, random-hyperplane LSH), both deterministic and
-  * recall-tested against the brute force in ScalaTest.
+  * oracle-checked baseline, and the sub-quadratic scale paths — IVF
+  * coarse quantization, random-hyperplane LSH, product quantization
+  * (PQ), the IVF+PQ composite and the LSH-bucketed k-NN graph — all
+  * deterministic and recall-tested against the brute force in ScalaTest.
   *
   * Scale shapes:
   *   - brute force: the query set is tiny and broadcast; the corpus scan
@@ -26,6 +27,16 @@ import graft.{PackedPlane, PlaneChunk, PlaneRow, Tables}
   *     cluster co-locates by.
   *   - LSH: per-row signature (L tables × nplanes sign bits, all codegen
   *     arithmetic), candidates = bucket equi-join — no pairwise scan.
+  *   - PQ / IVF+PQ: one pipeline — a compressed-domain ADC scan over the
+  *     codes (restricted to the probed inverted lists; PQ probes all of
+  *     them), then an exact re-rank of the shortlist.
+  *   - k-NN graph: every vector is a query; LSH-bucketed self-join with
+  *     the vectors riding the join.
+  *
+  * Every approximate query (IVF, LSH, PQ, IVF+PQ) collects its query
+  * set once ([[queryRows]]), generates candidates, and scores them
+  * exactly; the probe ranking ([[probeLists]]) and the exact re-rank
+  * ([[rerankExact]]) are written once.
   *
   * Cosine math is sequential left-to-right double folds, identical to the
   * DuckDB oracle (SURVEY.md §5).
@@ -85,16 +96,24 @@ object Similarity {
       .select($"cid", $"v", $"nrm").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1), r.getDouble(2)))
       .sortBy(_._1)
-    val cbRows = s.read.parquet(s"$path/pq_codebook")
-      .select($"block", $"code", $"v", $"dim").collect()
-    val dim = cbRows.head.getInt(3)
-    val cb = Array.tabulate(PqBlocks)(b =>
-      cbRows.filter(_.getInt(0) == b).sortBy(_.getInt(1))
-        .map(_.getSeq[Double](2)))
+    val (cb, dim) = readCodebooks(s, path)
     // localCheckpoint: downstream plans read materialized code rows,
     // matching the freshly-trained frame's plan shape
     val codes = s.read.parquet(s"$path/pq_codes").localCheckpoint()
     annCache.put(s, dir, AnnIndex(ivf, PqModel(cb, codes, dim)))
+  }
+
+  /** The per-block codebooks (block → code → sub-vector) and the
+    * vector dimension of a [[saveAnnIndex]] index. */
+  private def readCodebooks(s: SparkSession, path: String)
+      : (Array[Array[Seq[Double]]], Int) = {
+    import s.implicits._
+    val cbRows = s.read.parquet(s"$path/pq_codebook")
+      .select($"block", $"code", $"v", $"dim").collect()
+    val cb = Array.tabulate(PqBlocks)(b =>
+      cbRows.filter(_.getInt(0) == b).sortBy(_.getInt(1))
+        .map(_.getSeq[Double](2)))
+    (cb, cbRows.head.getInt(3))
   }
 
   /** Force the memoized ANN index (train-once accounting; see
@@ -129,6 +148,43 @@ object Similarity {
       .filter($"rk" <= TopK)
       .select($"q_id", $"vec_id".as("n_id"), $"rk", round($"cos", 4).as("cosine"))
       .orderBy($"q_id", $"rk")
+  }
+
+  /** The query set (vec_id, v, nrm) — vec_id < [[NumQueries]] — in one
+    * collect, sorted on the driver (NumQueries rows need no distributed
+    * sort). Every approximate query reads these rows for its query side:
+    * probe sets, ADC tables, LSH query buckets and the exact re-rank. */
+  private def queryRows(s: SparkSession, dir: String): Array[(Long, Seq[Double], Double)] = {
+    import s.implicits._
+    embedded(s, dir).filter($"vec_id" < NumQueries)
+      .select($"vec_id", $"v", $"nrm").collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
+      .sortBy(_._1)
+  }
+
+  /** The `nprobe` inverted lists a query (qv, qn) probes: the lists by
+    * (cosine DESC, list_id), the cosine by the same left-to-right dot
+    * fold as the corpus-side assignment ([[centroidCosines]]). */
+  private def probeLists(cents: Array[(Int, Seq[Double], Double)],
+      qv: Seq[Double], qn: Double, nprobe: Int): Seq[Int] =
+    cents.map { case (lid, cv, cn) =>
+      (-cv.zip(qv).map { case (x, y) => x * y }.sum / (qn * cn), lid)
+    }.sorted.take(nprobe).map(_._2).toSeq
+
+  /** The exact re-rank every candidate-generating query ends in:
+    * candidate (q_id, vec_id) ids re-attach their corpus vectors by an
+    * id equi-join (candidate set ≪ corpus) and the query vectors from a
+    * broadcast frame of `qs` ([[queryRows]]), are scored by exact cosine
+    * and ranked by [[topk]] — reported cosines are exact, recall is the
+    * only approximation. */
+  private def rerankExact(s: SparkSession, dir: String, cands: DataFrame,
+      qs: Array[(Long, Seq[Double], Double)]): DataFrame = {
+    import s.implicits._
+    val qVecs = qs.toSeq.toDF("q_id", "qv", "qn")
+    topk(cands
+      .join(embedded(s, dir).select($"vec_id", $"v", $"nrm"), Seq("vec_id"))
+      .join(broadcast(qVecs), Seq("q_id"))
+      .withColumn("cos", dot($"qv", $"v") / ($"qn" * $"nrm")))
   }
 
   // ----------------------------------------------------------- bruteforce
@@ -257,17 +313,13 @@ object Similarity {
   private def annIvfProbing(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
     import s.implicits._
     val cents = ivfCentroids(s, dir)
-    val e = embedded(s, dir)
-    val lists = e.withColumn("ds", centroidCosines(cents))
+    val lists = embedded(s, dir).withColumn("ds", centroidCosines(cents))
       .withColumn("list_id", expr("array_position(ds, array_max(ds)) - 1"))
       .select($"vec_id", $"v", $"nrm", $"list_id")
-    val probes = e.filter($"vec_id" < NumQueries)
-      .withColumn("ds", centroidCosines(cents))
-      .withColumn("probe", expr(
-        s"slice(transform(array_sort(zip_with(ds, sequence(0, ${NList - 1}), " +
-          s"(d, i) -> struct(-d AS nd, i AS i))), x -> x.i), 1, $nprobe)"))
-      .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn"),
-        explode($"probe").as("list_id"))
+    val probes = (for {
+      (qId, qv, qn) <- queryRows(s, dir).toSeq
+      l <- probeLists(cents, qv, qn, nprobe)
+    } yield (qId, qv, qn, l)).toDF("q_id", "qv", "qn", "list_id")
     val cands = lists.join(broadcast(probes),
         lists("list_id") === probes("list_id") && $"vec_id" =!= $"q_id")
       .withColumn("cos", dot($"qv", $"v") / ($"qn" * $"nrm"))
@@ -346,21 +398,16 @@ object Similarity {
       tables: Int, nplanes: Int): DataFrame = {
     import s.implicits._
     val e = embedded(s, dir)
-    val dim = e.select(size($"v")).head().getInt(0)
+    val dim = vectorShape(e)._2
+    val qs = queryRows(s, dir)
     val corpusBuckets = withBuckets(e, dim, tables, nplanes)
       .select($"vec_id", $"t", $"bucket")
-    val qBuckets = withBuckets(e.filter($"vec_id" < NumQueries), dim, tables, nplanes)
-      .select($"vec_id".as("q_id"), $"t", $"bucket")
+    val qBuckets = withBuckets(qs.toSeq.toDF("q_id", "v", "nrm"), dim, tables, nplanes)
+      .select($"q_id", $"t", $"bucket")
     val candIds = corpusBuckets.join(broadcast(qBuckets), Seq("t", "bucket"))
       .filter($"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id").distinct()
-    val qVecs = e.filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn"))
-    val cands = candIds
-      .join(e.select($"vec_id", $"v", $"nrm"), Seq("vec_id"))
-      .join(broadcast(qVecs), Seq("q_id"))
-      .withColumn("cos", dot($"qv", $"v") / ($"qn" * $"nrm"))
-    topk(cands)
+    rerankExact(s, dir, candIds, qs)
   }
 
   // ------------------------------------------------------------ kNN graph
@@ -466,7 +513,7 @@ object Similarity {
   /** (row count, vector dimension) of `e`'s `v` column in one job;
     * fails unless every vector has the same dimension (a null vector
     * counts as dimension -1). An empty frame reads (0, 0). */
-  private def vectorShape(e: DataFrame): (Long, Int) = {
+  private[operators] def vectorShape(e: DataFrame): (Long, Int) = {
     val sizes = coalesce(size(col("v")), lit(-1))
     val r = e.agg(count(lit(1)), min(sizes), max(sizes)).head()
     val n = r.getLong(0)
@@ -653,43 +700,22 @@ object Similarity {
   val PqRerank = 8 * TopK // exact re-rank depth
 
   /** Product-quantization ANN (the FAISS-style compressed-domain scan):
-    *
-    *   1. TRAIN: the vector space is split into [[PqBlocks]] disjoint
-    *      coordinate blocks; each block gets a [[PqCodes]]-codeword
-    *      codebook (deterministic evenly-spaced init + [[PqIters]]
-    *      L2 Lloyd rounds, first min wins). ALL blocks train in the
-    *      same pass over the packed plane, fused with the IVF
-    *      quantizer's pass ([[trainIndex]]): one `treeAggregate` per
-    *      round whose output is M×K×subdim sums and M×K counts — the
-    *      same K-row-loop discipline as [[graft.kmeans.KMeans]].
-    *   2. ENCODE: map-only projection replacing each 64×8-byte vector
-    *      with M 4-bit codes + one reconstructed norm (blocks are
-    *      disjoint coordinates, so ‖v̂‖² = Σ_b ‖c_b‖² exactly) — the
-    *      ~50× compression that lets a 100-TB vector corpus live in
-    *      executor memory.
-    *   3. QUERY (ADC): per query, the q·codeword partial dots form an
-    *      M×K literal lookup table baked into the plan (queries are
-    *      few and collected driver-side like centroids); approximate
-    *      cosine = table lookups summed / (‖q‖·‖v̂‖) — a map-only
-    *      codegen scan over the CODES, never the vectors.
-    *   4. RE-RANK: the top [[PqRerank]] per query re-attach their true
-    *      vectors (id equi-join; candidate set ≪ corpus) and re-score
-    *      exactly — reported cosines are exact, recall is the only
-    *      approximation (measured vs brute force in SimilaritySpec).
-    * rows-only. */
+    * [[annIvfPq]] with every inverted list probed, so the ADC scan
+    * covers all codes and no routing runs. rows-only; recall vs brute
+    * force asserted in SimilaritySpec. */
   def annPq(s: SparkSession, dir: String): DataFrame =
-    annPqReranking(s, dir, PqRerank)
+    annIvfPqWith(s, dir, NList, PqRerank)
 
   /** The PQ EXACTNESS ANCHOR: at rerank ≥ corpus size the shortlist is
     * every (query, vector) pair and the exact re-rank scores all of
     * them — the output ranking is brute force regardless of the
     * compressed-domain approximation, so this configuration is
     * oracle-checked against [[annBruteForceSql]] while still
-    * exercising the full train/encode/ADC machinery. The production
-    * shortlist depth ([[annPq]]) stays rows-only with its recall
-    * spec. */
+    * exercising the full train/encode/ADC machinery. It runs the same
+    * plan as [[annIvfPqExact]]; both registry keys stay. The production
+    * shortlist depth ([[annPq]]) stays rows-only with its recall spec. */
   def annPqExact(s: SparkSession, dir: String): DataFrame =
-    annPqReranking(s, dir, Int.MaxValue)
+    annIvfPqWith(s, dir, NList, Int.MaxValue)
 
   /** A trained PQ index: per-block codebooks + the checkpointed,
     * ~50×-compressed codes frame. */
@@ -978,61 +1004,11 @@ object Similarity {
     * a fresh rebuild's. */
   def appendAnnIndex(s: SparkSession, path: String, extra: DataFrame): Unit = {
     import s.implicits._
-    val cbRows = s.read.parquet(s"$path/pq_codebook")
-      .select($"block", $"code", $"v", $"dim").collect()
-    val dim = cbRows.head.getInt(3)
-    val cb = Array.tabulate(PqBlocks)(b =>
-      cbRows.filter(_.getInt(0) == b).sortBy(_.getInt(1))
-        .map(_.getSeq[Double](2)))
+    val (cb, dim) = readCodebooks(s, path)
     val e = extra.select($"vec_id",
       transform($"embedding", x => x.cast("double")).as("v"))
     encodeWith(cb, dim / PqBlocks, e)
       .write.mode("append").parquet(s"$path/pq_codes")
-  }
-
-  private def annPqReranking(s: SparkSession, dir: String, rerank: Int): DataFrame = {
-    import s.implicits._
-    val model = pqModel(s, dir)
-    val (cb, codes) = (model.cb, model.codes)
-    val subdim = model.dim / PqBlocks
-    locally {
-      // ---- query: per-query ADC lookup tables as plan literals
-      val qs = embedded(s, dir).filter($"vec_id" < NumQueries)
-        .orderBy($"vec_id").select($"vec_id", $"v", $"nrm").collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
-      val scored = qs.map { case (qId, qv, qn) =>
-        val tables = Array.tabulate(PqBlocks) { b =>
-          cb(b).map(c => c.zip(qv.slice(b * subdim, (b + 1) * subdim))
-            .map { case (x, y) => x * y }.sum).toSeq
-        }
-        val approxDot = (0 until PqBlocks).map(b =>
-          element_at(typedlit(tables(b)), col("codes")(b) + 1)).reduce(_ + _)
-        struct(lit(qId).as("q_id"), (approxDot / (lit(qn) * col("vn"))).as("approx"))
-      }
-      val approx = codes
-        .select($"vec_id", explode(array(scored: _*)).as("qa"))
-        .select($"vec_id", $"qa.q_id".as("q_id"), $"qa.approx".as("approx"))
-        .filter($"vec_id" =!= $"q_id")
-      val w = Window.partitionBy($"q_id").orderBy($"approx".desc, $"vec_id")
-      val candIds = approx.withColumn("rk", row_number().over(w))
-        .filter($"rk" <= rerank)
-        .select($"q_id", $"vec_id")
-
-      // ---- exact re-rank of the shortlist: at production depths the
-      // shortlist is queries×rerank bare ids — BROADCAST it so the
-      // re-rank probes the corpus scan shuffle-free and full vectors
-      // never enter an exchange; the anchor's corpus-sized shortlist
-      // keeps the shuffled join
-      val shortlist =
-        if (rerank == Int.MaxValue) candIds else broadcast(candIds)
-      val qVecs = embedded(s, dir).filter($"vec_id" < NumQueries)
-        .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn"))
-      val cands = shortlist
-        .join(embedded(s, dir).select($"vec_id", $"v", $"nrm"), Seq("vec_id"))
-        .join(broadcast(qVecs), Seq("q_id"))
-        .withColumn("cos", dot($"qv", $"v") / ($"qn" * $"nrm"))
-      topk(cands)
-    }
   }
 
   // ------------------------------------------------------------- IVF+PQ
@@ -1040,30 +1016,49 @@ object Similarity {
   /** IVF+PQ composite — the production layout for ANN over a corpus
     * that cannot be brute-force scanned per query (the IVFADC scheme
     * of Jégou/Douze/Schmid, "Product Quantization for Nearest Neighbor
-    * Search", TPAMI 2011): the IVF coarse index bounds the scan to
-    * `nprobe` inverted lists, PQ codes score the survivors in the
-    * compressed domain (per-query ADC lookup tables), and an exact
-    * re-rank of the shortlist restores true cosines. Both trained
-    * artifacts are the MEMOIZED ones the standalone operators use
-    * ([[ivfCentroids]], [[pqModel]]) — one index, trained once, serves
-    * every probe shape.
+    * Search", TPAMI 2011), and the one pipeline [[annPq]] also runs:
+    *
+    *   1. TRAIN: the IVF coarse quantizer ([[NList]] lists) and the PQ
+    *      codebooks — the vector space split into [[PqBlocks]] disjoint
+    *      coordinate blocks, each with a [[PqCodes]]-codeword codebook
+    *      (deterministic evenly-spaced init + [[PqIters]] L2 Lloyd
+    *      rounds, first min wins) — train together on one packed plane,
+    *      one `treeAggregate` per round ([[trainIndex]]), and are
+    *      memoized: one index, trained once, serves every probe shape.
+    *   2. ENCODE: map-only projection replacing each 64×8-byte vector
+    *      with M 4-bit codes + one reconstructed norm (blocks are
+    *      disjoint coordinates, so ‖v̂‖² = Σ_b ‖c_b‖² exactly) — the
+    *      ~50× compression that lets a 100-TB vector corpus live in
+    *      executor memory.
+    *   3. QUERY (ADC): the queries are collected once ([[queryRows]]);
+    *      per query, the q·codeword partial dots form an M×K literal
+    *      lookup table and the [[probeLists]] probe set a literal array,
+    *      both baked into the plan; approximate cosine = table lookups
+    *      summed / (‖q‖·‖v̂‖) — a codegen scan over the CODES of the
+    *      probed lists, never the vectors. The top `rerank` per query
+    *      form the shortlist.
+    *   4. RE-RANK: the shortlist re-attaches its true vectors and is
+    *      re-scored exactly ([[rerankExact]]) — reported cosines are
+    *      exact, recall is the only approximation (measured vs brute
+    *      force in SimilaritySpec).
     *
     * Scale shape: the fact side is the ~50×-compressed codes frame
     * joined to a slim `(vec_id, list_id)` routing projection — full
-    * vectors are read only by the routing scan and the pushed-filter
-    * shortlist re-rank. Per-query ADC tables (M×K doubles) and probe
-    * sets are plan LITERALS, so candidate scoring is one codegen'd
-    * pass over the codes with no vector shuffle anywhere. */
+    * vectors are read only by the routing scan and the re-rank. At
+    * nprobe ≥ nlist every list is probed, so the routing join and the
+    * probe filter are skipped and the scan reads the codes alone. */
   def annIvfPq(s: SparkSession, dir: String): DataFrame =
     annIvfPqWith(s, dir, NProbe, PqRerank)
 
-  /** The composite EXACTNESS ANCHOR: nprobe = nlist makes routing a
-    * no-op (every list probed) and rerank ≥ corpus makes the ADC
-    * shortlist the whole corpus, so the output is brute force by
-    * construction — oracle-checked against [[annBruteForceSql]] while
-    * still exercising routing, the codes join, ADC scoring, and the
-    * re-rank. The production shape ([[annIvfPq]]) stays rows-only with
-    * its recall spec, like the other approximate defaults. */
+  /** The composite EXACTNESS ANCHOR: nprobe = nlist probes every list
+    * and rerank ≥ corpus makes the ADC shortlist the whole corpus, so
+    * the output is brute force by construction — oracle-checked against
+    * [[annBruteForceSql]] while exercising ADC scoring over the codes
+    * and the re-rank. With every list probed no routing runs, so this
+    * anchor no longer covers the routing join; it runs the same plan as
+    * [[annPqExact]]. The production shape ([[annIvfPq]]) stays
+    * rows-only with its recall spec, like the other approximate
+    * defaults. */
   def annIvfPqExact(s: SparkSession, dir: String): DataFrame =
     annIvfPqWith(s, dir, NList, Int.MaxValue)
 
@@ -1073,56 +1068,47 @@ object Similarity {
     val cents = ivfCentroids(s, dir)
     val model = pqModel(s, dir)
     val (cb, subdim) = (model.cb, model.dim / PqBlocks)
-    // slim routing projection: ids only, vectors stay in the scan
-    val lists = embedded(s, dir)
-      .withColumn("ds", centroidCosines(cents))
-      .withColumn("list_id",
-        expr("CAST(array_position(ds, array_max(ds)) - 1 AS INT)"))
-      .select($"vec_id", $"list_id")
-    val coded = model.codes.join(lists, Seq("vec_id"))
-    // query side: probe sets + ADC tables, driver-computed literals
-    // (queries and centroids are already K-row driver state). The
-    // probe ranking mirrors [[annIvfProbing]]'s (cos DESC, list_id)
-    // sort, with the same left-to-right dot fold → identical doubles.
-    val qs = embedded(s, dir).filter($"vec_id" < NumQueries)
-      .orderBy($"vec_id").select($"vec_id", $"v", $"nrm").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
+    val routed = nprobe < NList
+    val qs = queryRows(s, dir)
+    // query side: ADC tables and probe sets, driver-computed literals
+    // (queries and centroids are already K-row driver state)
     val scored = qs.map { case (qId, qv, qn) =>
-      val probe = cents.map { case (lid, cv, cn) =>
-        (-cv.zip(qv).map { case (x, y) => x * y }.sum / (qn * cn), lid)
-      }.sorted.take(nprobe).map(_._2).toSeq
       val tables = Array.tabulate(PqBlocks) { b =>
         cb(b).map(c => c.zip(qv.slice(b * subdim, (b + 1) * subdim))
           .map { case (x, y) => x * y }.sum).toSeq
       }
       val approxDot = (0 until PqBlocks).map(b =>
         element_at(typedlit(tables(b)), col("codes")(b) + 1)).reduce(_ + _)
-      struct(lit(qId).as("q_id"), typedlit(probe).as("probe"),
-        (approxDot / (lit(qn) * col("vn"))).as("approx"))
+      val probe =
+        if (routed) Seq(typedlit(probeLists(cents, qv, qn, nprobe)).as("probe")) else Nil
+      struct((lit(qId).as("q_id") +: probe) :+
+        (approxDot / (lit(qn) * col("vn"))).as("approx"): _*)
     }
-    val approx = coded
-      .select($"vec_id", $"list_id", explode(array(scored: _*)).as("qa"))
-      .filter(array_contains($"qa.probe", $"list_id") && $"vec_id" =!= $"qa.q_id")
-      .select($"vec_id", $"qa.q_id".as("q_id"), $"qa.approx".as("approx"))
+    val approx =
+      if (routed) {
+        // slim routing projection: ids only, vectors stay in the scan
+        val lists = embedded(s, dir)
+          .withColumn("ds", centroidCosines(cents))
+          .withColumn("list_id",
+            expr("CAST(array_position(ds, array_max(ds)) - 1 AS INT)"))
+          .select($"vec_id", $"list_id")
+        model.codes.join(lists, Seq("vec_id"))
+          .select($"vec_id", $"list_id", explode(array(scored: _*)).as("qa"))
+          .filter(array_contains($"qa.probe", $"list_id"))
+      } else model.codes.select($"vec_id", explode(array(scored: _*)).as("qa"))
     val w = Window.partitionBy($"q_id").orderBy($"approx".desc, $"vec_id")
-    val candIds = approx.withColumn("rk", row_number().over(w))
+    val candIds = approx
+      .filter($"vec_id" =!= $"qa.q_id")
+      .select($"vec_id", $"qa.q_id".as("q_id"), $"qa.approx".as("approx"))
+      .withColumn("rk", row_number().over(w))
       .filter($"rk" <= rerank)
       .select($"q_id", $"vec_id")
-    // exact re-rank of the shortlist: at production depths the
-    // shortlist is queries×rerank rows of bare ids — BROADCAST it so
-    // the re-rank is a shuffle-free probe of the corpus scan and full
-    // vectors never enter an exchange (plan-asserted in
-    // PlanShapeSpec). The exactness anchor's corpus-sized shortlist
+    // at production depths the shortlist is queries×rerank rows of bare
+    // ids — BROADCAST it so the re-rank is a shuffle-free probe of the
+    // corpus scan and full vectors never enter an exchange (plan-asserted
+    // in PlanShapeSpec). The exactness anchor's corpus-sized shortlist
     // keeps the shuffled join.
-    val shortlist =
-      if (rerank == Int.MaxValue) candIds else broadcast(candIds)
-    val qVecs = embedded(s, dir).filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn"))
-    val cands = shortlist
-      .join(embedded(s, dir).select($"vec_id", $"v", $"nrm"), Seq("vec_id"))
-      .join(broadcast(qVecs), Seq("q_id"))
-      .withColumn("cos", dot($"qv", $"v") / ($"qn" * $"nrm"))
-    topk(cands)
+    rerankExact(s, dir, if (rerank == Int.MaxValue) candIds else broadcast(candIds), qs)
   }
 
   // ------------------------------------------------------------ clusters

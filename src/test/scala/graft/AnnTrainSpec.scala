@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import graft.operators.Similarity
+import graft.operators.{Dedup, Similarity}
 
 /** Plain-Scala ANN training: spherical Lloyd over [[Similarity.NList]]
   * lists (cosine by a left-to-right fold, first max wins) and per-block
@@ -54,7 +54,9 @@ object AnnReference {
 
 /** ANN index training: one packed plane, one fused Lloyd pass per
   * iteration — job count, reads, equality with [[AnnReference]], the
-  * init's seeds and the pack's input checks. */
+  * init's seeds and the pack's input checks. Also the Spark-job budget
+  * of one IVF+PQ query against a trained index and the LSH paths'
+  * vector-dimension check. */
 class AnnTrainSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sf = "/root/testdata/sf0.001"
   private lazy val spark = SparkSession.builder()
@@ -100,6 +102,23 @@ class AnnTrainSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
       .write.parquet(s"$dir/embeddings.parquet")
     dir
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try body
+    finally {
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    jobs.get
   }
 
   /** n deterministic pseudo-random vectors of width `dim`, vec_ids from `ids`. */
@@ -212,6 +231,28 @@ class AnnTrainSpec extends AnyFunSuite with BeforeAndAfterAll {
         .toDF("vec_id", "v").coalesce(1)
       assertMatchesReference(if (parts == 1) one else one.repartition(parts),
         s"n=$n partitions=$parts")
+    }
+  }
+
+  test("annIvfPq on a trained index runs at most 12 Spark jobs (15 before one query collect)") {
+    Similarity.clearTrainCache()
+    Similarity.trainAnn(spark, sf)
+    try {
+      val jobs = jobsOf(Similarity.annIvfPq(spark, sf).collect())
+      assert(jobs <= 12, s"annIvfPq ran $jobs Spark jobs")
+    } finally Similarity.clearTrainCache()
+  }
+
+  test("a ragged vector fails annLsh and dedupEmbeddingLsh with the dimension message") {
+    val dir = writeEmbeddings((0 until 40).map { i =>
+      Row(i.toLong, Seq.tabulate(if (i == 23) 7 else 8)(j => ((i * 31 + j * 7) % 13 - 6).toFloat),
+        i % 3)
+    })
+    for ((name, run) <- Seq[(String, () => Unit)](
+        "annLsh" -> (() => Similarity.annLsh(spark, dir).collect()),
+        "dedupEmbeddingLsh" -> (() => Dedup.dedupEmbeddingLsh(spark, dir).collect()))) {
+      val msg = messages(intercept[Exception](run()))
+      assert(msg.contains("vectors must share one dimension"), s"$name: $msg")
     }
   }
 }

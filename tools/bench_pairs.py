@@ -63,12 +63,18 @@ def run_one(tree, workload, seed, seconds):
     p = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE,
                        stderr=subprocess.DEVNULL, text=True)
     lines = p.stdout.strip().splitlines()
+    # a non-zero exit is an errored run, whatever it printed: perfbench
+    # prints the harness's result line before it exits 1
     try:
-        res = json.loads(lines[-1])
+        res = json.loads(lines[-1]) if p.returncode == 0 else None
     except (IndexError, ValueError):
-        return {"correct": False, "attempted": 1, "failed": 1,
-                "error": "exit %d, no result line" % p.returncode}
+        res = None
+    if res is None:
+        return {"correct": False, "attempted": 1, "failed": 1, "exit_code": p.returncode,
+                "error": "exit %d" % p.returncode if p.returncode
+                else "exit 0, no result line"}
     row = {k: res[k] for k in ("correct", "attempted", "failed")}
+    row["exit_code"] = p.returncode
     for name, m in res["metrics"].items():
         row[name] = m["value"]
     return row
