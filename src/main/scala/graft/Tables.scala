@@ -85,8 +85,10 @@ object Tables {
     * broadcast self-joins, gram-explode candidate builds): per-byte
     * compute dwarfs the exchange cost well below [[SpreadMinBytes]] —
     * the r14 3-sweep measured 1.18-1.31× at sf0.1 (embeddings 798 KB,
-    * documents 594 KB) on dedup_embedding/dedup_semantic/knn_graph* —
-    * but at sf0.01 (65-194 KB) the stage is sub-exchange-cost work. */
+    * documents 594 KB) on dedup_embedding/dedup_semantic (and on the
+    * kNN graph, which now spreads its scoring by its own bucket
+    * shuffle and reads the scan unspread) — but at sf0.01 (65-194 KB)
+    * the stage is sub-exchange-cost work. */
   val SpreadMinComputeBytes: Long = 256L * 1024
 
   /** [[spread]] floor for LINEAR token/scan pipelines (tokenize +

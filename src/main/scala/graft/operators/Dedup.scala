@@ -1099,8 +1099,8 @@ object Dedup {
 
   /** Ceiling on hot-arm planes: 16 planes = 65,536 buckets/table (the
     * [[Similarity.knnPlanes]] ceiling — the 8-to-27-table bucket
-    * expression stays one codegen'd projection; knn_graph runs the
-    * identical expression shape at the same width). Blocks beyond
+    * expression stays one codegen'd projection; knn_graph folds the
+    * same hyperplanes at the same width on its packed plane). Blocks beyond
     * 65,536·64 ≈ 4.2·10⁶ rows get proportionally larger buckets rather
     * than an unbounded expression tree. Was 10 through round 11 —
     * 1024 buckets saturate at ~2.6·10⁵-row blocks, past which the
@@ -1631,7 +1631,7 @@ object Dedup {
       // at scale a CATASTROPHE: the anchor's within-label candidate set
       // is O(N²/labels) pairs (~2·10⁹ at sf10), and re-attaching two
       // 64-dim vectors to each pair shuffles TBs. Vectors ride the
-      // bucket join instead (the knn_graph discipline): the only big
+      // bucket join instead: the only big
       // volume is the in-partition pair stream, compute-bound dots,
       // nothing corpus-squared ever hits an exchange.
       // repartition the probe side: a 100k-vector corpus is ~25 MB of
@@ -1662,8 +1662,8 @@ object Dedup {
           graft.functions.DotProduct($"v", $"vb") / ($"nrm" * $"nb"), 4)
           .as("cosine"))
     } else {
-      // Multi-table production path: VECTORS RIDE THE BUCKET JOIN (the
-      // knn_graph discipline, Similarity.knnGraphWith). The former shape
+      // Multi-table production path: VECTORS RIDE THE BUCKET JOIN, so
+      // each pair is scored where its bucket meets. The former shape
       // — ids-only candidates through a distinct, vectors re-attached by
       // two joins — was the round-11 sf10 gate's 57×/decade outlier:
       // re-attaching two 64-dim vectors to O(Σ b²/2^planes) candidate

@@ -1,12 +1,14 @@
 package graft.operators
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.LongAccumulator
 import graft.{PackedPlane, PlaneChunk, PlaneRow, Tables}
 
 /** SURVEY.md §2.D — similarity search over the `embeddings` table
@@ -30,8 +32,10 @@ import graft.{PackedPlane, PlaneChunk, PlaneRow, Tables}
   *   - PQ / IVF+PQ: one pipeline — a compressed-domain ADC scan over the
   *     codes (restricted to the probed inverted lists; PQ probes all of
   *     them), then an exact re-rank of the shortlist.
-  *   - k-NN graph: every vector is a query; LSH-bucketed self-join with
-  *     the vectors riding the join.
+  *   - k-NN graph: every vector is a query; on the packed plane that
+  *     trains the ANN index, one shuffle groups the vectors by LSH
+  *     bucket, each bucket is scored all-pairs in one task, and a merge
+  *     of per-node top-k lists (ids and cosines only) ranks the edges.
   *
   * Every approximate query (IVF, LSH, PQ, IVF+PQ) collects its query
   * set once ([[queryRows]]), generates candidates, and scores them
@@ -334,7 +338,7 @@ object Similarity {
   /** Deterministic pseudo-random hyperplane component in [-1, 1) from a
     * 64-bit mix of (table, plane, dim) — no RNG state, reproducible
     * everywhere. */
-  private def planeComponent(t: Int, p: Int, d: Int): Double = {
+  private[graft] def planeComponent(t: Int, p: Int, d: Int): Double = {
     var x = t.toLong * 0x9E3779B97F4A7C15L + p.toLong * 0xC2B2AE3D27D4EB4FL +
       d.toLong * 0x165667B19E3779F9L + 0x27D4EB2F165667C5L
     x ^= x >>> 33; x *= 0xFF51AFD7ED558CCDL
@@ -416,13 +420,12 @@ object Similarity {
   val KnnNodes = 200      // exactness-anchor node sample: vec_id < 200
 
   /** Bytes-per-task target for the graph build's shuffle width (§2.2:
-    * size partitions from measured volume). The build's dominant
-    * exchanges carry the CANDIDATE PAIR STREAM (n·L·bucket ~48-byte
-    * rows), not the input vectors; at the session-default width
-    * (32 = local cores) a 200k-vector sf10 build put ~150 MB of agg
-    * hash-map state in every task and spilled 750 MB+ to disk — AQE
-    * can merge post-shuffle partitions but never split them, so the
-    * INITIAL width must come from the estimate. */
+    * size partitions from measured volume). The bucket shuffle carries
+    * the n·L member rows (vec_id, d doubles, norm) and a bucket task
+    * holds its share of them while it scores, so the width is that
+    * volume over this target, floored at the session parallelism and
+    * capped at 4096. Both shuffles of the build take it as an argument;
+    * no session conf is written. */
   val KnnShufflePartitionBytes: Long = 32L * 1024 * 1024
   val KnnTables = Tables_ // L hash tables, same family as annLsh
   val KnnTargetBucket = 64 // planes sized so an average bucket ≈ this
@@ -430,11 +433,11 @@ object Similarity {
   /** Hyperplane count sized to the corpus: enough sign bits that the
     * expected bucket holds ≈ [[KnnTargetBucket]] vectors. A FIXED plane
     * count cannot scale a full-graph build — bucket population grows
-    * linearly with the corpus and the within-bucket join quadratically —
-    * so the signature width is a deterministic function of the corpus
-    * count (exactly how IVF sizes nlist to the data), clamped to [1, 16]
-    * (≤ 65k buckets per table). Candidate volume is then
-    * O(N · bucket · L) at every scale. */
+    * linearly with the corpus and the within-bucket scoring
+    * quadratically — so the signature width is a deterministic function
+    * of the corpus count (exactly how IVF sizes nlist to the data),
+    * clamped to [1, 16] (≤ 65k buckets per table). Pairs scored are
+    * then O(N · bucket · L) at every scale. */
   private[operators] def knnPlanes(n: Long): Int =
     math.min(16, math.max(1,
       math.ceil(math.log(n.toDouble / KnnTargetBucket) / math.log(2.0)).toInt))
@@ -443,72 +446,37 @@ object Similarity {
     * (the primitive under SemDeDup-style pruning, graph-based dedup,
     * and label propagation; Abbas et al. 2023). Unlike the `ann_*`
     * family (tiny broadcast query set), EVERY node is a query, so the
-    * only scalable shape is bucketed self-join:
+    * engine ([[knnGraphOf]]) scores inside LSH buckets and merges
+    * per-node lists, on the packed plane that trains the ANN index:
     *
-    *   1. per-row LSH signatures ([[withBuckets]], [[knnPlanes]]-sized);
-    *   2. bucket equi-join with the VECTORS RIDING THE JOIN — both
-    *      sides carry (v, nrm), the cosine is computed inside the
-    *      bucket partition, and only (q_id, n_id, cos) leaves: the
-    *      shuffle is O(N·L) vector rows in, 24-byte edge rows out
-    *      (re-attaching vectors to candidate PAIRS instead would
-    *      shuffle O(N·bucket·L) full vectors);
-    *   3. multi-table dedup by `groupBy(q_id, n_id).max(cos)` (the
-    *      cosine is identical per duplicate — max is just the
-    *      associative pick), map-side partials;
-    *   4. per-node top-k: row_number over q_id — N distinct partition
-    *      keys, WindowGroupLimit heaps before the exchange.
+    *   1. one job packs the vectors ([[graft.PackedPlane]]) and returns
+    *      (n, d);
+    *   2. each row's [[KnnTables]] signatures of [[knnPlanes]]`(n)` bits
+    *      — the [[bucketCol]] hyperplanes and sign fold — key it into
+    *      one (table, bucket) group per table, and one RDD shuffle
+    *      carries the n·L member rows (vec_id, vector, norm);
+    *   3. each bucket task scores its members all-pairs (DotProduct's
+    *      fold, `dot / (‖q‖·‖v‖)`) and keeps a bounded top-K per member
+    *      by (cos DESC, vec_id ASC);
+    *   4. a `reduceByKey(q_id)` merges the per-bucket lists, keeping a
+    *      neighbor once (a pair scores the same cosine in every table):
+    *      only ids and cosines cross this shuffle, never a vector.
     *
-    * rows-only; SimilaritySpec gates recall ≥ 0.8 on the anchor node
-    * sample vs [[knnGraphExact]] and degree/rank invariants. */
+    * Pairs scored are Σ b·(b−1) over the (table, bucket) sizes b —
+    * nothing quadratic in N. rows-only; SimilaritySpec gates recall ≥
+    * 0.8 on the anchor node sample vs [[knnGraphExact]] and
+    * degree/rank invariants. */
   def knnGraph(s: SparkSession, dir: String): DataFrame =
     knnEdges(s, dir)
 
   /** The BUILT graph, memoized per (session, dir) — a production
     * pipeline materializes the k-NN graph once and serves every
     * consumer from it (here: the `knn_graph` read itself and the
-    * label spread, which otherwise re-ran the whole bucket join —
-    * measured 77 of its 77.3 s at sf10 was exactly that rebuild).
-    * `localCheckpoint` (eager) truncates the plan to the edge ROWS
-    * (N·K skinny rows), built once per (session, dir),
-    * [[graft.SessionCache]] lifecycle. */
+    * label spread, which would otherwise rebuild it). The engine ends
+    * in an eager `localCheckpoint` of the edge ROWS (N·K skinny rows),
+    * built once per (session, dir), [[graft.SessionCache]] lifecycle. */
   def knnEdges(s: SparkSession, dir: String): DataFrame =
-    knnCache.getOrCompute(s, dir) {
-      // r15 (§2.2/§5): derive the build's shuffle width from the
-      // estimated pair-stream volume and let AQE's byte-based
-      // coalescing trim it back — the session default (local core
-      // count) left ~150 MB of pair-agg state per task at sf10 and
-      // spilled 750 MB+; AQE cannot split an under-partitioned
-      // exchange after the fact. The width is restored afterwards so
-      // only this build's materialization sees it; at sf0.1/sf1 the
-      // estimate floors at the session parallelism and the plan is
-      // byte-identical to r14.
-      val shape = vectorShape(embedded(s, dir))
-      val n = shape._1
-      val pairBytes = n * KnnTables.toLong * KnnTargetBucket * 48L
-      val np = math.max(s.sparkContext.defaultParallelism,
-        math.min(4096L, pairBytes / KnnShufflePartitionBytes).toInt)
-      val pinned = if (np > s.sparkContext.defaultParallelism) Some(np) else None
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", np.toString)
-        knnGraphFresh(s, dir, pinned, Some(shape)).localCheckpoint()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    }
-
-  /** The un-checkpointed build plan — PlanShapeSpec asserts the bucket
-    * join / edge-exchange / WindowGroupLimit shape on THIS (the memoized
-    * [[knnEdges]] frame's plan is just the checkpoint scan). `shape` is
-    * the corpus's [[vectorShape]] when the caller already has it. */
-  private[graft] def knnGraphFresh(s: SparkSession, dir: String,
-      pinnedWidth: Option[Int] = None, shape: Option[(Long, Int)] = None): DataFrame = {
-    import s.implicits._
-    // r14: spread the bucket-signature scan (see Tables.spread) — the
-    // per-row multi-table bucket projection is the map-side cost here
-    val e = graft.Tables.spread(embedded(s, dir), dir, "embeddings",
-      Tables.SpreadMinComputeBytes, $"vec_id")
-    val (n, dim) = shape.getOrElse(vectorShape(embedded(s, dir)))
-    knnGraphWith(e, dim, KnnTables, knnPlanes(n), None, pinnedWidth)
-  }
+    knnCache.getOrCompute(s, dir)(knnGraphOf(embedded(s, dir), None))
 
   /** (row count, vector dimension) of `e`'s `v` column in one job;
     * fails unless every vector has the same dimension (a null vector
@@ -525,63 +493,201 @@ object Similarity {
     }
   }
 
-  /** The kNN-graph EXACTNESS ANCHOR ([[annLshExact]] discipline): zero
-    * planes collapse every vector into one bucket per table, so with the
-    * node side restricted to the [[KnnNodes]]-vector sample the bucket
-    * join emits exactly the sample × corpus pairs and the graph rows for
-    * those nodes are BRUTE-FORCE EXACT — DuckDB-oracle-checked. The node
-    * restriction keeps the anchor O(sample · N) (a full exact graph is
-    * O(N²) — infeasible by definition at scale, which is the point of
-    * the bucketed production path). The node side broadcasts: the
-    * corpus never shuffles at all. */
-  def knnGraphExact(s: SparkSession, dir: String): DataFrame = {
+  /** The kNN-graph EXACTNESS ANCHOR ([[annLshExact]] discipline): one
+    * table of zero planes puts every vector in one bucket, so with the
+    * nodes restricted to the [[KnnNodes]]-vector sample every node
+    * scores the whole corpus and its edges are BRUTE-FORCE EXACT —
+    * DuckDB-oracle-checked. The node restriction keeps the anchor
+    * O(sample · N) (a full exact graph is O(N²) — infeasible by
+    * definition at scale, which is the point of the bucketed production
+    * path). It runs on the same engine: the sample is broadcast, each
+    * plane partition scores its rows against it into per-node lists,
+    * and the same merge ranks them — the corpus vectors never shuffle. */
+  def knnGraphExact(s: SparkSession, dir: String): DataFrame =
+    knnGraphOf(embedded(s, dir), Some(KnnNodes))
+
+  /** The kNN-graph engine over `e` (vec_id bigint, v array<double>):
+    * the edges (q_id, n_id, rk, cosine) of every node, LSH-bucketed
+    * ([[knnGraph]]), or with `nodeMax` of the nodes vec_id < nodeMax
+    * against the whole corpus ([[knnGraphExact]]); ordered by
+    * (q_id, rk) and checkpointed eagerly, after which the plane is
+    * released. A zero-norm or non-finite vector fails naming its
+    * vec_id, so no NaN/∞ cosine reaches an edge; null, empty and ragged
+    * vectors fail in the pack. `scored`, when given, counts the
+    * (node, candidate) pairs scored. */
+  private[graft] def knnGraphOf(e: DataFrame, nodeMax: Option[Long],
+      scored: Option[LongAccumulator] = None): DataFrame = {
+    val s = e.sparkSession
     import s.implicits._
-    // r14: spread — the sample × corpus brute-force pair stream
-    // otherwise runs inside the single-row-group scan's one task
-    val e = graft.Tables.spread(embedded(s, dir), dir, "embeddings",
-      Tables.SpreadMinComputeBytes, $"vec_id")
-    knnGraphWith(e, vectorShape(embedded(s, dir))._2, tables = 1, nplanes = 0,
-      nodeMax = Some(KnnNodes))
+    val sc = s.sparkContext
+    val plane = vectorPlane(e)
+    try {
+      val (n, d) = planeShape(plane)
+      val parts = new HashPartitioner(math.max(sc.defaultParallelism, math.min(4096L,
+        n * KnnTables * (8L * d + 16) / KnnShufflePartitionBytes).toInt))
+      val lists = nodeMax match {
+        case None =>
+          val signer = new KnnSigner(KnnTables, knnPlanes(n), d)
+          plane.flatMap(signer.members).groupByKey(parts)
+            .flatMap { case (_, ms) => KnnScore.bucket(ms.toArray, scored) }
+        case Some(m) =>
+          val sample = plane.flatMap(c => Iterator.range(0, c.rows).filter(c.ids(_) < m)
+            .map(r => (c.ids(r), java.util.Arrays.copyOfRange(c.vals, r * d, (r + 1) * d))))
+            .collect()
+          val nodes = sc.broadcast(PlaneChunk(sample.map(_._1), sample.flatMap(_._2), d))
+          plane.mapPartitions(cs => KnnScore.against(nodes.value, cs, scored))
+      }
+      val rows = lists.reduceByKey(parts, (a, b) => a.merge(b))
+        .flatMap { case (q, top) => top.rows(q) }
+      GraftShims.internalCreateDataFrame(s, rows, KnnEdgeSchema)
+        .select($"q_id", $"n_id", $"rk", round($"cos", 4).as("cosine"))
+        .orderBy($"q_id", $"rk")
+        .localCheckpoint()
+    } finally plane.unpersist(blocking = false)
   }
 
-  private def knnGraphWith(e: DataFrame, dim: Int, tables: Int, nplanes: Int,
-      nodeMax: Option[Int], pinnedWidth: Option[Int] = None): DataFrame = {
-    import e.sparkSession.implicits._
-    val corpus = withBuckets(e, dim, tables, nplanes)
-      .select($"vec_id", $"v", $"nrm", $"t", $"bucket")
-    val nodeSide = nodeMax match {
-      case Some(m) => broadcast(
-        withBuckets(e.filter($"vec_id" < m), dim, tables, nplanes)
-          .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn"),
-            $"t", $"bucket"))
-      case None => corpus
-        .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn"),
-          $"t", $"bucket")
+  private val KnnEdgeSchema = StructType(Seq(
+    StructField("q_id", LongType, nullable = false),
+    StructField("n_id", LongType, nullable = false),
+    StructField("rk", IntegerType, nullable = false),
+    StructField("cos", DoubleType, nullable = false)))
+
+  /** A bucket member: a row's id, its vector and its norm. */
+  private final class KnnMember(val id: Long, val v: Array[Double], val nrm: Double)
+    extends Serializable
+
+  /** Each plane row's `tables` LSH signatures of `nplanes` bits: bit p
+    * of table t is `dot(v, plane(t, p)) > 0` by DotProduct's fold over
+    * [[planeComponent]] — the buckets of [[bucketCol]]. Keys are
+    * `t << 16 | bucket` (nplanes ≤ 16). */
+  private final class KnnSigner(tables: Int, nplanes: Int, d: Int) extends Serializable {
+    private val planes = Array.tabulate(tables * nplanes * d)(i =>
+      planeComponent(i / (nplanes * d), i / d % nplanes, i % d))
+
+    def members(c: PlaneChunk): Iterator[(Int, KnnMember)] =
+      Iterator.range(0, c.rows).flatMap { r =>
+        val (id, off) = (c.ids(r), r * d)
+        val m = new KnnMember(id, java.util.Arrays.copyOfRange(c.vals, off, off + d),
+          KnnScore.norm(c.vals, off, d, id))
+        Iterator.range(0, tables).map { t =>
+          var bucket = 0
+          var p = 0
+          while (p < nplanes) {
+            if (dotOf(m.v, 0, planes, (t * nplanes + p) * d, d) > 0) bucket |= 1 << p
+            p += 1
+          }
+          (t << 16 | bucket, m)
+        }
+      }
+  }
+
+  /** One node's bounded top-k neighbors by (cos DESC, vec_id ASC), best
+    * first, in primitive arrays. */
+  private final class TopK(k: Int) extends Serializable {
+    private val ids = new Array[Long](k)
+    private val cos = new Array[Double](k)
+    private var size = 0
+
+    private def ranksBefore(id: Long, c: Double, i: Int): Boolean =
+      c > cos(i) || (c == cos(i) && id < ids(i))
+
+    /** Offers neighbor `id` at cosine `c`: the list keeps the k best ids
+      * by their largest cosine offered. A pair scores the same cosine in
+      * every table, so a repeat offer changes nothing. */
+    def offer(id: Long, c: Double): Unit = {
+      var h = 0
+      while (h < size && ids(h) != id) h += 1
+      if (h == size || c > cos(h)) {
+        if (h < size) { // a larger cosine for a held id: drop the old entry
+          System.arraycopy(ids, h + 1, ids, h, size - h - 1)
+          System.arraycopy(cos, h + 1, cos, h, size - h - 1)
+          size -= 1
+        }
+        if (size < k || ranksBefore(id, c, k - 1)) {
+          var at = if (size < k) size else k - 1
+          if (size < k) size += 1
+          while (at > 0 && ranksBefore(id, c, at - 1)) {
+            ids(at) = ids(at - 1); cos(at) = cos(at - 1); at -= 1
+          }
+          ids(at) = id; cos(at) = c
+        }
+      }
     }
-    // r15: at scale the bucket join's INPUT is byte-light (n·L vector
-    // rows) but its OUTPUT is the n·L·bucket pair stream — AQE's
-    // byte-based coalescing reads the input and merged the join down
-    // to ~14 tasks at sf10, putting ~0.5 GB of pair-agg state in each
-    // (the suite's one spill site, 750 MB+). A pinned REPARTITION_BY_NUM
-    // at the pair-stream-derived width (see [[knnEdges]]) is exempt
-    // from coalescing — the ER verify join's documented discipline.
-    // Only pinned when the caller derived a width above the session
-    // parallelism, so small scales keep the planner's broadcast pick.
-    val joined = (nodeMax, pinnedWidth) match {
-      case (None, Some(np)) =>
-        corpus.repartition(np, $"t", $"bucket")
-          .join(nodeSide.repartition(np, $"t", $"bucket"), Seq("t", "bucket"))
-      case _ => corpus.join(nodeSide, Seq("t", "bucket"))
+
+    def merge(o: TopK): TopK = {
+      var i = 0
+      while (i < o.size) { offer(o.ids(i), o.cos(i)); i += 1 }
+      this
     }
-    val edges = joined
-      .filter($"vec_id" =!= $"q_id")
-      .withColumn("cos", dot($"qv", $"v") / ($"qn" * $"nrm"))
-      .groupBy($"q_id", $"vec_id").agg(max($"cos").as("cos"))
-    val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id")
-    edges.withColumn("rk", row_number().over(w))
-      .filter($"rk" <= KnnK)
-      .select($"q_id", $"vec_id".as("n_id"), $"rk", round($"cos", 4).as("cosine"))
-      .orderBy($"q_id", $"rk")
+
+    def nonEmpty: Boolean = size > 0
+
+    /** Node q's edge rows (q_id, n_id, rk, cos). */
+    def rows(q: Long): Iterator[InternalRow] =
+      Iterator.range(0, size).map(i => InternalRow(q, ids(i), i + 1, cos(i)))
+  }
+
+  /** The graph's task-side kernels: checked norms and cosines, and the
+    * two scoring loops (bucket all-pairs, sample against a partition). */
+  private object KnnScore {
+    def bad(msg: String) = new IllegalArgumentException(s"kNN graph: $msg")
+
+    /** The norm of row `id`, which must be finite and non-zero. */
+    def norm(v: Array[Double], off: Int, d: Int, id: Long): Double = {
+      val n = normOf(v, off, d)
+      if (!(n > 0.0 && n <= Double.MaxValue))
+        throw bad(s"vec_id $id has norm $n; a cosine needs a finite non-zero norm")
+      n
+    }
+
+    def cosine(q: Long, a: Array[Double], ao: Int, an: Double,
+        n: Long, b: Array[Double], bo: Int, bn: Double, d: Int): Double = {
+      val c = dotOf(a, ao, b, bo, d) / (an * bn)
+      if (!java.lang.Double.isFinite(c)) throw bad(s"cosine of vec_id $q and vec_id $n is $c")
+      c
+    }
+
+    /** One bucket's members scored all-pairs (each cosine computed once
+      * and offered to both ends): their per-bucket lists. */
+    def bucket(ms: Array[KnnMember], scored: Option[LongAccumulator])
+        : Iterator[(Long, TopK)] = {
+      val tops = Array.fill(ms.length)(new TopK(KnnK))
+      var pairs = 0L
+      for (i <- ms.indices; j <- i + 1 until ms.length) {
+        val (a, b) = (ms(i), ms(j))
+        if (a.id != b.id) {
+          val c = cosine(a.id, a.v, 0, a.nrm, b.id, b.v, 0, b.nrm, a.v.length)
+          tops(i).offer(b.id, c)
+          tops(j).offer(a.id, c)
+          pairs += 2
+        }
+      }
+      scored.foreach(_.add(pairs))
+      ms.indices.iterator.filter(tops(_).nonEmpty).map(i => (ms(i).id, tops(i)))
+    }
+
+    /** One plane partition's rows scored against every sampled node:
+      * the partition's per-node lists. */
+    def against(nodes: PlaneChunk, chunks: Iterator[PlaneChunk],
+        scored: Option[LongAccumulator]): Iterator[(Long, TopK)] = {
+      val d = nodes.d
+      val norms = Array.tabulate(nodes.rows)(i => norm(nodes.vals, i * d, d, nodes.ids(i)))
+      val tops = Array.fill(nodes.rows)(new TopK(KnnK))
+      var pairs = 0L
+      chunks.foreach { c =>
+        for (r <- 0 until c.rows) {
+          val id = c.ids(r)
+          val nrm = norm(c.vals, r * d, d, id)
+          for (i <- nodes.ids.indices if nodes.ids(i) != id) {
+            tops(i).offer(id, cosine(nodes.ids(i), nodes.vals, i * d, norms(i),
+              id, c.vals, r * d, nrm, d))
+            pairs += 1
+          }
+        }
+      }
+      scored.foreach(_.add(pairs))
+      nodes.ids.indices.iterator.filter(tops(_).nonEmpty).map(i => (nodes.ids(i), tops(i)))
+    }
   }
 
   // ------------------------------------------- label spread over the graph
@@ -757,13 +863,7 @@ object Similarity {
     * element or a ragged dimension fails the pack naming its vec_id;
     * n < K (or vec_ids that leave two seeds equal) fails the init. */
   private[graft] def trainIndex(e: DataFrame): AnnIndex = {
-    val src = e.select("vec_id", "v")
-    require(src.schema(0).dataType == LongType && (src.schema(1).dataType match {
-        case ArrayType(DoubleType, _) => true
-        case _ => false
-      }), s"ANN training needs vec_id bigint, v array<double>; got ${src.schema.simpleString}")
-    val plane = src.queryExecution.toRdd.mapPartitions(packVectors)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val plane = vectorPlane(e)
     val (ivf, cb, dim) = try lloyd(plane) finally plane.unpersist(blocking = false)
     val subdim = dim / PqBlocks
     val codebooks = cb.map(_.grouped(subdim).map(_.toSeq).toArray)
@@ -810,13 +910,29 @@ object Similarity {
     (ivf, cb, d)
   }
 
-  /** ‖v(off until off + d)‖ — [[graft.functions.DotProduct.norm]]'s
-    * left-to-right fold. */
-  private def normOf(v: Array[Double], off: Int, d: Int): Double = {
+  /** `a(ao until ao + d) · b(bo until bo + d)` by
+    * [[graft.functions.DotProduct]]'s left-to-right fold. */
+  private def dotOf(a: Array[Double], ao: Int, b: Array[Double], bo: Int, d: Int): Double = {
     var s = 0.0
     var j = 0
-    while (j < d) { s += v(off + j) * v(off + j); j += 1 }
-    math.sqrt(s)
+    while (j < d) { s += a(ao + j) * b(bo + j); j += 1 }
+    s
+  }
+
+  /** ‖v(off until off + d)‖ — [[graft.functions.DotProduct.norm]]'s
+    * left-to-right fold. */
+  private def normOf(v: Array[Double], off: Int, d: Int): Double =
+    math.sqrt(dotOf(v, off, v, off, d))
+
+  /** `e`'s (vec_id, v) rows packed once into a persisted plane — the
+    * input of [[trainIndex]] and [[knnGraphOf]], which release it. */
+  private def vectorPlane(e: DataFrame): RDD[PlaneChunk] = {
+    val src = e.select("vec_id", "v")
+    require(src.schema(0).dataType == LongType && (src.schema(1).dataType match {
+        case ArrayType(DoubleType, _) => true
+        case _ => false
+      }), s"a vector plane needs vec_id bigint, v array<double>; got ${src.schema.simpleString}")
+    src.queryExecution.toRdd.mapPartitions(packVectors).persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Packs one partition of (vec_id, v) rows at its first row's
@@ -854,7 +970,7 @@ object Similarity {
   // an object, not a method of Similarity: task closures that call it
   // must not capture the (unserializable) Similarity module
   private object VectorRow {
-    def bad(msg: String) = new IllegalArgumentException(s"ANN training: $msg")
+    def bad(msg: String) = new IllegalArgumentException(s"packing vectors: $msg")
   }
 
   /** The pack job: (n, d) of the plane. The packer holds a partition
@@ -930,10 +1046,7 @@ object Similarity {
           var bestCos = 0.0
           var l = 0
           while (l < NList) {
-            var dot = 0.0
-            var j = 0
-            while (j < d) { dot += v(off + j) * cents(l * d + j); j += 1 }
-            val cos = dot / (nrm * cnorm(l))
+            val cos = dotOf(v, off, cents, l * d, d) / (nrm * cnorm(l))
             if (l == 0 || cos > bestCos || (cos.isNaN && !bestCos.isNaN)) {
               best = l; bestCos = cos
             }

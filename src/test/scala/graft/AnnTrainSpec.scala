@@ -52,11 +52,53 @@ object AnnReference {
   }
 }
 
+/** Plain-Scala kNN graph: the LSH buckets of the production build
+  * ([[Similarity.planeComponent]] hyperplanes, sign bits by a
+  * left-to-right fold, planes sized to ≈ [[Similarity.KnnTargetBucket]]
+  * rows per bucket), brute force inside each bucket, then per node the
+  * top [[Similarity.KnnK]] by (cos DESC, n_id ASC). */
+object KnnReference {
+  import Similarity.{KnnK, KnnTables, KnnTargetBucket, planeComponent}
+
+  private def dot(a: Array[Double], b: Array[Double]): Double =
+    a.indices.foldLeft(0.0)((s, j) => s + a(j) * b(j))
+
+  def planes(n: Int): Int = math.min(16, math.max(1,
+    math.ceil(math.log(n.toDouble / KnnTargetBucket) / math.log(2.0)).toInt))
+
+  /** The members of every non-empty (table, bucket) of `vecs`. */
+  def buckets(vecs: Seq[(Long, Array[Double])]): Seq[Seq[Long]] = {
+    val (np, d) = (planes(vecs.size), vecs.head._2.length)
+    (0 until KnnTables).flatMap { t =>
+      val hp = Array.tabulate(np)(p => Array.tabulate(d)(planeComponent(t, p, _)))
+      vecs.groupBy { case (_, v) =>
+        (0 until np).map(p => if (dot(v, hp(p)) > 0) 1 << p else 0).sum
+      }.values.map(_.map(_._1))
+    }
+  }
+
+  /** The graph's rows (q_id, n_id, rk, cosine), ordered by (q_id, rk). */
+  def edges(vecs: Seq[(Long, Array[Double])]): Seq[(Long, Long, Int, Double)] = {
+    val v = vecs.toMap
+    def cos(q: Long, n: Long) = dot(v(q), v(n)) / (math.sqrt(dot(v(q), v(q))) * math.sqrt(dot(v(n), v(n))))
+    val cands = buckets(vecs).flatMap(b => for (q <- b; n <- b if q != n) yield (q, n)).distinct
+    cands.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, ns) =>
+      ns.map { case (_, n) => (n, cos(q, n)) }
+        .sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && a._1 < b._1))
+        .take(KnnK).zipWithIndex.map { case ((n, c), i) =>
+          (q, n, i + 1, BigDecimal(c).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+        }
+    }
+  }
+}
+
 /** ANN index training: one packed plane, one fused Lloyd pass per
   * iteration — job count, reads, equality with [[AnnReference]], the
   * init's seeds and the pack's input checks. Also the Spark-job budget
-  * of one IVF+PQ query against a trained index and the LSH paths'
-  * vector-dimension check. */
+  * of one IVF+PQ query against a trained index, the LSH paths'
+  * vector-dimension check, and the kNN-graph engine on the same plane:
+  * its job budget, equality with [[KnnReference]] under ties and any
+  * partitioning, and its input checks. */
 class AnnTrainSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sf = "/root/testdata/sf0.001"
   private lazy val spark = SparkSession.builder()
@@ -254,5 +296,66 @@ class AnnTrainSpec extends AnyFunSuite with BeforeAndAfterAll {
       val msg = messages(intercept[Exception](run()))
       assert(msg.contains("vectors must share one dimension"), s"$name: $msg")
     }
+  }
+
+  /** 300 vectors of width 8 over 40 directions, each direction at
+    * scales 1, 2 and 4: same-direction vectors share every bucket and
+    * score bit-identical cosines against any node (power-of-two scaling
+    * is exact), so ranks are decided by vec_id ties; duplicates
+    * (ids i and i + 120 at the same scale) collide in every table. */
+  private lazy val tieFixture: Seq[(Long, Array[Double])] = (0 until 300).map { i =>
+    val dir = i % 40
+    val scale = (1 << (i / 40 % 3)).toDouble
+    i.toLong -> Array.tabulate(8)(j => ((dir * 37 + j * 11) % 13 - 6 + (if (j == dir % 8) 9 else 0)) * scale)
+  }
+
+  private def rowsOf(df: DataFrame): Seq[(Long, Long, Int, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq
+
+  test("knnEdges runs at most 6 Spark jobs") {
+    Similarity.clearTrainCache()
+    try {
+      val jobs = jobsOf(Similarity.knnEdges(spark, sf))
+      assert(jobs <= 6, s"knnEdges ran $jobs Spark jobs")
+    } finally Similarity.clearTrainCache()
+  }
+
+  test("kNN graph with exact cosine ties and multi-table collisions equals KnnReference") {
+    val s = spark
+    import s.implicits._
+    val e = spark.createDataset(tieFixture).toDF("vec_id", "v")
+    val expected = KnnReference.edges(tieFixture)
+    assert(expected.exists { case (q, _, rk, c) =>
+      expected.exists(x => x._1 == q && x._3 == rk + 1 && x._4 == c) }, "fixture has no tie")
+    assert(rowsOf(Similarity.knnGraphOf(e, None)) == expected)
+  }
+
+  test("kNN graph rows do not depend on the partitioning: repartition(1/3/7)") {
+    val s = spark
+    import s.implicits._
+    val e = spark.createDataset(tieFixture).toDF("vec_id", "v")
+    val base = rowsOf(Similarity.knnGraphOf(e.repartition(1), None))
+    for (parts <- Seq(3, 7)) {
+      assert(rowsOf(Similarity.knnGraphOf(e.repartition(parts), None)) == base, s"repartition($parts)")
+      assert(rowsOf(Similarity.knnGraphOf(e.repartition(parts), Some(50L))) ==
+        rowsOf(Similarity.knnGraphOf(e.repartition(1), Some(50L))), s"anchor, repartition($parts)")
+    }
+  }
+
+  test("a zero-norm vector fails the kNN build naming its vec_id") {
+    def vec(i: Int) = Seq.tabulate(8)(j => ((i * 31 + j * 7) % 13 - 6).toFloat)
+    val zero = writeEmbeddings((0 until 40).map(i =>
+      Row(i.toLong, if (i == 17) Seq.fill(8)(0f) else vec(i), 0)))
+    val nul = writeEmbeddings((0 until 40).map(i => Row(i.toLong, if (i == 19) null else vec(i), 0)))
+    for ((name, run) <- Seq[(String, () => Unit)](
+        "knnEdges" -> (() => Similarity.knnEdges(spark, zero)),
+        "knnGraphExact" -> (() => Similarity.knnGraphExact(spark, zero)))) {
+      Similarity.clearTrainCache()
+      val msg = messages(intercept[Exception](run()))
+      assert(msg.contains("vec_id 17") && msg.contains("norm 0.0"), s"$name: $msg")
+    }
+    Similarity.clearTrainCache()
+    val msg = messages(intercept[Exception](Similarity.knnEdges(spark, nul)))
+    assert(msg.contains("null vector at vec_id 19") && !msg.contains("ANN training"), msg)
   }
 }

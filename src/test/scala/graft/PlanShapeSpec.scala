@@ -291,45 +291,70 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("knn_graph: bucket equi-join (no nested loop), edge-only dedup exchange, group-limited top-k") {
-    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-    // the registry query reads the memoized edge checkpoint — the build
-    // shape lives in knnGraphFresh, which is what this test pins
-    val plan = graft.operators.Similarity.knnGraphFresh(spark, sf)
-      .queryExecution.executedPlan
-    // the self-join must be a hash/merge join on (t, bucket) — a nested
-    // loop here is the O(N²) regime the bucketing exists to avoid
-    val loops = plan.collect { case j: BroadcastNestedLoopJoinExec => j }
-    assert(loops.isEmpty, "bucketed self-join must not be a nested loop")
-    // the multi-table dedup exchange carries (q_id, vec_id, cos) edges,
-    // never vectors: the vectors ride the bucket join and stay behind
-    val dedupExchanges = plan.collect { case e: ShuffleExchangeExec => e }
-      .filter { e =>
-        val p = e.outputPartitioning.toString
-        p.contains("q_id#") && p.contains("vec_id#")
+  /** (shuffle bytes read, shuffle bytes written, records written) of
+    * every stage `body` runs. */
+  private def stageShuffles(body: => Unit): Seq[(Long, Long, Long)] = {
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          ev: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        val m = ev.stageInfo.taskMetrics
+        if (m != null) stages.add((m.shuffleReadMetrics.totalBytesRead,
+          m.shuffleWriteMetrics.bytesWritten, m.shuffleWriteMetrics.recordsWritten))
       }
-    assert(dedupExchanges.nonEmpty, "expected the (q_id, vec_id) dedup exchange")
-    dedupExchanges.foreach { e =>
-      val width = e.child.schema.fields.map(_.dataType.defaultSize).sum
-      assert(width <= 24,
-        s"edge exchange rows must be ids+cos (≤24 bytes), got $width bytes: ${e.child.schema}")
     }
-    // per-node top-k must heap before the window exchange
-    assert(plan.toString.contains("WindowGroupLimit"),
-      "rank<=K must compile to WindowGroupLimit")
+    org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try body
+    finally {
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    stages.toArray(Array.empty[(Long, Long, Long)]).toSeq
+  }
+
+  /** sf's embeddings as (vec_id, v array<double>) and as plain rows. */
+  private def knnInput = {
+    import org.apache.spark.sql.functions.{col, transform}
+    val e = Tables(spark, sf, "embeddings")
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+    (e, e.collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq)
+  }
+
+  test("knn_graph: only bucket-mates are scored, the merge shuffle moves no vectors") {
+    val (e, vecs) = knnInput
+    val (n, d) = (vecs.size.toLong, vecs.head._2.length)
+    // only bucket-mates are scored: the work is Σ b·(b−1), which grows
+    // as N·L·bucket, never the N² of an all-pairs pass
+    val scored = spark.sparkContext.longAccumulator("kNN pairs scored")
+    val stages = stageShuffles(operators.Similarity.knnGraphOf(e, None, Some(scored)))
+    val buckets = KnnReference.buckets(vecs)
+    assert(scored.value == buckets.map(b => b.size.toLong * (b.size - 1)).sum,
+      s"pairs scored ${scored.value} over bucket sizes ${buckets.map(_.size)}")
+    // the bucket shuffle carries one member row per (vector, table);
+    // every shuffle after it (the per-node merge, the final ordering)
+    // carries ids and cosines, well under the n·L·d·8 vector bytes
+    val tables = operators.Similarity.KnnTables
+    val vectorBytes = n * tables * d * 8
+    val (later, first) = stages.filter(_._2 > 0).partition(_._1 > 0)
+    assert(first.map(_._3).sum == n * tables, s"bucket shuffle: $stages")
+    assert(later.nonEmpty, s"expected the merge shuffle: $stages")
+    later.foreach { case (_, written, _) =>
+      assert(written < vectorBytes / 8,
+        s"a shuffle after the bucket shuffle wrote $written bytes: $stages")
+    }
   }
 
   test("knn_graph_exact: node sample broadcasts — the corpus side never shuffles") {
-    val plan = SparkEntry.queries("knn_graph_exact")(spark, sf)
-      .queryExecution.executedPlan
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    val bhj = plan.collect { case j: BroadcastHashJoinExec => j }
-    assert(bhj.nonEmpty, "anchor must broadcast the node-sample side")
-    // only the edge dedup + window exchanges remain; nothing upstream of
-    // the join (i.e. carrying the corpus vectors into it) may shuffle
-    val vectorExchanges = plan.collect { case e: ShuffleExchangeExec => e }
-      .filter(_.child.schema.fieldNames.count(_ == "v") > 0)
-    assert(vectorExchanges.isEmpty,
-      s"corpus vectors must not shuffle: ${vectorExchanges.map(_.child.schema)}")
+    import operators.Similarity.{KnnK, KnnNodes}
+    val (e, vecs) = knnInput
+    val parts = e.rdd.getNumPartitions
+    val stages = stageShuffles(SparkEntry.queries("knn_graph_exact")(spark, sf))
+    // every record shuffled is a node's list from one plane partition
+    // or an edge row; shuffling the corpus would add one per vector
+    val records = stages.map(_._3).sum
+    assert(records > 0 && records <= KnnNodes * (parts + KnnK),
+      s"$records records shuffled for $KnnNodes nodes over $parts partitions " +
+        s"(${vecs.size} vectors): $stages")
   }
 }
