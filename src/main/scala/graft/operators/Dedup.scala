@@ -993,53 +993,40 @@ object Dedup {
 
   val CosineTau = 0.35
 
-  /** Label blocks larger than this route through the LSH candidate
-    * stage instead of exact all-pairs inside [[dedupEmbedding]] — the
-    * round-4 verdict's one scale-killer: a popular label's block is
-    * O(b²) pair fan-out, so at 100 TB a viral label would dominate the
-    * whole job. Over the cap, candidates come from the same random-
-    * hyperplane bucket join as [[dedupEmbeddingLsh]] with a block-size-
-    * adaptive plane count ([[HotTargetBucketRows]]) — recall < 1 on hot
-    * blocks only, the documented trade; precision stays exact because
-    * the cosine verify is shared. Test-scale blocks sit far below the
-    * cap, so the DuckDB oracle sees the pure exact path.
+  /** Label blocks larger than this are LSH-bucketed inside
+    * [[dedupEmbedding]] instead of scored all-pairs: a popular label's
+    * block is O(b²) pairs, so at 100 TB one viral label would dominate
+    * the whole job. Over the cap, a block's rows are signed into the
+    * same random-hyperplane buckets as [[dedupEmbeddingLsh]] with a
+    * block-size-adaptive plane count ([[HotTargetBucketRows]]) —
+    * recall < 1 on hot blocks only, the documented trade; precision
+    * stays exact because every reported cosine is the exact one.
+    * Test-scale blocks sit far below the cap, so the DuckDB oracle sees
+    * the pure exact path.
     *
-    * SIZED FROM MEASUREMENT (round-5 verdict item 1, was a chosen
-    * 20,000): a round-5 probe forced a 21,800-row block over the cap
-    * at real volume and measured the exact quadratic at 2.5-2.8·10⁵
-    * verified pairs/s across runs on the 32-thread bench host
-    * (sort-merge join fan-out, 64-d codegen dot + round per pair —
-    * dominated by the pair MATERIALIZE, not the arithmetic).
-    * Derivation: a 60 s-per-block exact budget at that rate gives
-    * cap = ⌊√(2 · 60 s · rate)⌋ ≈ 5.5-5.8k → 6000. The 20,000 choice
-    * would have cost ~700-800 s per full block — an order over budget;
-    * the LSH-routed arm measured 25.8× faster than exact on the
-    * crossed block (40.4 s vs 1041.5 s) with recall 1.0000 at cosine
-    * ≥ 0.6 and ≥ 0.9 (the dup bands; 0.78 over all ≥ 0.35 pairs,
-    * misses confined to the borderline band). */
+    * Sized from measurement: the exact quadratic verified 2.5-2.8·10⁵
+    * pairs/s on a 21,800-row block (32-thread host), so a 60 s-per-block
+    * exact budget gives cap = ⌊√(2 · 60 s · rate)⌋ ≈ 5.5-5.8k → 6000.
+    * On that block the bucketed arm ran 25.8× faster than exact with
+    * recall 1.0000 at cosine ≥ 0.6 and ≥ 0.9 (the dup bands; 0.78 over
+    * all ≥ 0.35 pairs, misses confined to the borderline band). */
   val HotBlockCap = 6000
 
   /** Embedding-cosine near-dup pairs within label blocks. Sequential
     * left-to-right double folds on both engines make the cosine values
-    * bit-identical (SURVEY.md §5). Blocks over [[HotBlockCap]] fall
-    * back to LSH candidates (see there); DedupSpec plants a hot label
-    * with a tiny cap and asserts the routing + exact precision. */
+    * bit-identical (SURVEY.md §5). Blocks over [[HotBlockCap]] are
+    * LSH-bucketed (see there); DedupSpec plants a hot label with a tiny
+    * cap and asserts the routing + exact precision. */
   def dedupEmbedding(s: SparkSession, dir: String): DataFrame =
-    // same projection + norm as the similarity operators — one
-    // definition keeps the bit-identical-cosine parity in one place.
-    // Pair-stage input spread across the session parallelism (r14):
-    // the single-row-group embeddings scan otherwise pins the whole
-    // broadcast-self-join pair stream to ONE task — see Tables.spread.
-    dedupEmbeddingOn(graft.Tables.spread(
-      Similarity.embedded(s, dir), dir, "embeddings",
-      graft.Tables.SpreadMinComputeBytes,
-      org.apache.spark.sql.functions.col("vec_id")), HotBlockCap)
+    // same projection as the similarity operators — one definition
+    // keeps the bit-identical-cosine parity in one place
+    dedupEmbeddingOn(Similarity.embedded(s, dir), HotBlockCap)
 
   /** True when any label block of `e0` crosses `cap` — the regime
-    * detector behind the Verify ORACLE WAIVERS (round-12 verdict #2):
-    * over the cap, [[dedupEmbeddingOn]] routes the block to the LSH
-    * arm whose sub-dup-band recall is < 1 BY DESIGN, while the DuckDB
-    * oracle models only the exact arm — a compare in that regime is
+    * detector behind the Verify ORACLE WAIVERS: over the cap,
+    * [[dedupEmbeddingOn]] buckets the block by LSH, whose sub-dup-band
+    * recall is < 1 BY DESIGN, while the DuckDB oracle models only the
+    * exact arm — a compare in that regime is
     * designed to fail and must self-declare rows-only (the recall
     * floors are the real gate there: SimilaritySpec and DedupSpec at
     * sf0.01, perfbench's ann_embed check) instead of recording a
@@ -1072,97 +1059,93 @@ object Dedup {
     else None
   }
 
-  /** Most over-cap labels the driver will hold as literals — hot
-    * labels are structurally few (each owns > cap rows, and isin lists
-    * beyond this size stop being codegen-friendly); more than this
-    * means the label column isn't a usable blocking key and the
+  /** Most over-cap labels the driver collects and hands the signer —
+    * hot labels are structurally few (each owns > cap rows); more than
+    * this means the label column isn't a usable blocking key and the
     * operator fails loudly toward [[dedupEmbeddingLsh]]. */
   val MaxHotLabels = 1000
 
-  /** Target rows per (table, bucket) cell in the hot-block/LSH arm.
-    * [[Similarity.NPlanes]] = 3 (8 buckets/table) is sized for
-    * ANN-scale blocks; on a block of b rows the per-table candidate
-    * fan-out is ~b²/2^planes — with 3 planes a 21,800-row hot block
-    * would emit b²/8 pairs PER TABLE, i.e. the full quadratic it was
-    * routed here to avoid (measured: the fixed-plane hot arm ran no
-    * faster than exact all-pairs in the round-5 probe). So the arm
-    * sizes its plane count from the measured largest block:
-    * planes = ⌈log₂(maxBlock/64)⌉ — the same 64-row expected bucket the
-    * kNN-graph build targets ([[Similarity.KnnTargetBucket]]), which
-    * held 6.2×/decade at the sf10 gate — so per-cell candidate fan-out
-    * stays ~2·10³ pairs at any block size. Was 256 through round 11:
-    * with vectors now riding the bucket join, per-candidate cost is a
-    * codegen'd 64-dim dot rather than a re-attach shuffle row, and the
-    * 16× smaller quadratic term beats the extra tables' linear cost at
-    * every block size past the clamp floor. */
+  /** Target rows per (table, bucket) cell on a hot block.
+    * [[Similarity.NPlanes]] = 3 (8 buckets/table) is sized for ANN-scale
+    * corpora; on a block of b rows the per-table pairs are
+    * ~b²/2^planes, so a fixed 3 planes keeps an eighth of the quadratic
+    * the block was bucketed to avoid. The plane count is sized from the
+    * largest block instead: planes = ⌈log₂(maxBlock/64)⌉, the same
+    * 64-row expected bucket the kNN graph targets
+    * ([[Similarity.KnnTargetBucket]]), so per-cell pairs stay ~2·10³ at
+    * any block size. */
   val HotTargetBucketRows = 64
 
-  /** Ceiling on hot-arm planes: 16 planes = 65,536 buckets/table (the
-    * [[Similarity.knnPlanes]] ceiling — the 8-to-27-table bucket
-    * expression stays one codegen'd projection; knn_graph folds the
-    * same hyperplanes at the same width on its packed plane). Blocks beyond
-    * 65,536·64 ≈ 4.2·10⁶ rows get proportionally larger buckets rather
-    * than an unbounded expression tree. Was 10 through round 11 —
-    * 1024 buckets saturate at ~2.6·10⁵-row blocks, past which the
-    * within-bucket quadratic refills (the round-11 verdict's
-    * dedup_embedding_lsh flag). */
+  /** Ceiling on hot-block planes: 16 planes = 65,536 buckets/table (the
+    * [[Similarity.knnPlanes]] ceiling and the signer's key width).
+    * Blocks beyond 65,536·64 ≈ 4.2·10⁶ rows get proportionally larger
+    * buckets. */
   val MaxHotPlanes = 16
 
-  /** [[dedupEmbedding]] over a prepared (vec_id, label, v, nrm) frame
-    * with an explicit hot-block threshold — spec surface.
+  /** [[dedupEmbedding]] over a prepared (vec_id, label, v) frame with an
+    * explicit hot-block threshold — spec surface. The input's `nrm`
+    * column, if any, is no longer read: norms are computed and checked
+    * by the engine.
     *
-    * The regime split is driven by a DRIVER-collected hot-label list
-    * (one tiny aggregate job, ≤ [[MaxHotLabels]] values — the K-row
-    * centroid discipline), not a broadcast-join of block sizes: a
-    * sizes join would re-evaluate its aggregate subtree in every plan
-    * arm that references it (measured: 6 scans), while literal isin
-    * predicates cost nothing — and in the common no-hot-label case the
-    * whole hot arm folds away at planning time, leaving exactly the
-    * plain all-pairs plan. */
+    * One aggregate job ([[labelBlocks]]) sizes the label blocks and
+    * checks the vector dimension; the labels over the cap (at most
+    * [[MaxHotLabels]]) go to the driver. Then one engine,
+    * [[Similarity.labelPairsOf]], scores every pair sharing a (label,
+    * table, bucket) key: a label at or under the cap is one bucket (all
+    * its pairs, exact), a hot label gets [[adaptiveTables]] tables of
+    * [[adaptivePlanes]] planes sized from the largest hot block. */
   def dedupEmbeddingOn(e0: DataFrame, hotBlockCap: Int): DataFrame = {
-    import e0.sparkSession.implicits._
-    val hotRows =
-      if (hotBlockCap == Int.MaxValue) Array.empty[org.apache.spark.sql.Row]
-      else e0.groupBy($"label").agg(count(lit(1)).as("bn"))
-        .filter($"bn" > hotBlockCap)
-        .select($"label", $"bn").limit(MaxHotLabels + 1)
-        .collect()
-    val hotLabels: Seq[Any] = hotRows.map(_.get(0)).toSeq
-    require(hotLabels.size <= MaxHotLabels,
+    val blocks = labelBlocks(e0, hotBlockCap)
+    require(blocks.hot.size <= MaxHotLabels,
       s"more than $MaxHotLabels labels exceed hotBlockCap=$hotBlockCap — " +
         "the label column is not a usable blocking key at this " +
         "threshold; run dedupEmbeddingLsh (all-LSH candidates) instead")
-    // The pair-stage input arrives pre-spread across the session's
-    // parallelism by [[graft.Tables]] (r14: the single-row-group scan
-    // otherwise put the whole broadcast-self-join pair stream in ONE
-    // task — measured 78 of dedup_semantic's 78.4 s at sf1 in a single
-    // bhj_doConsume task; the substrate spread cut it to ~16 s).
-    val small =
-      if (hotLabels.isEmpty) e0 else e0.filter(!$"label".isin(hotLabels: _*))
-    val exact = small.as("a").join(small.as("b"),
-        $"a.label" === $"b.label" && $"a.vec_id" < $"b.vec_id")
-      .select($"a.vec_id".as("a_id"), $"b.vec_id".as("b_id"),
-        round(graft.functions.DotProduct($"a.v", $"b.v") /
-          ($"a.nrm" * $"b.nrm"), 4).as("cosine"))
-    // a pair's two members share a label, and a label is in exactly one
-    // regime — the union is disjoint by construction
-    val pairs =
-      if (hotLabels.isEmpty) exact
-      else {
-        val hot = e0.filter($"label".isin(hotLabels: _*))
-        val dim = Similarity.vectorShape(e0)._2
-        // plane count sized from the largest hot block (see
-        // [[HotTargetBucketRows]]): fixed NPlanes=3 keeps only 8
-        // buckets/table, which on a block ≫ 8·bucket leaves the
-        // quadratic intact inside each bucket
-        val maxBn = hotRows.map(_.getLong(1)).max
-        val planes = adaptivePlanes(maxBn)
-        exact.union(
-          lshCosinePairs(hot, dim, adaptiveTables(planes), planes))
-      }
-    pairs
+    val planes = adaptivePlanes(blocks.hot.values.maxOption.getOrElse(0L))
+    cosinePairs(e0, blocks, Some(blocks.hot.keySet), adaptiveTables(planes), planes)
+  }
+
+  /** Label blocks of a (vec_id, label, v) frame: its rows n, the vector
+    * width d (of vec_id `dimId`), the largest block, and the blocks of
+    * more than `cap` rows (label → rows, at most [[MaxHotLabels]] + 1
+    * of them). */
+  private final case class LabelBlocks(n: Long, d: Int, dimId: Long, maxBn: Long,
+      hot: Map[Any, Long])
+
+  /** [[LabelBlocks]] of `e0` in one aggregate job. Vectors whose widths
+    * differ fail here naming a vec_id of each; null vectors are left to
+    * the engine's pack check. */
+  private def labelBlocks(e0: DataFrame, cap: Long): LabelBlocks = {
+    import e0.sparkSession.implicits._
+    val dim = when($"v".isNotNull, struct(size($"v").as("d"), $"vec_id".as("id")))
+    val r = e0.groupBy($"label")
+      .agg(count(lit(1)).as("bn"), min(dim).as("lo"), max(dim).as("hi"))
+      .agg(sum($"bn"), max($"bn"), min($"lo"), max($"hi"), slice(
+        collect_list(when($"bn" > cap, struct($"label", $"bn"))), 1, MaxHotLabels + 1))
+      .head()
+    if (r.isNullAt(0)) LabelBlocks(0L, 0, 0L, 0L, Map.empty)
+    else {
+      val (lo, hi) = (Option(r.getStruct(2)), Option(r.getStruct(3)))
+      for (a <- lo; b <- hi if a.getInt(0) != b.getInt(0))
+        throw Similarity.VectorRow.ragged(a.getLong(1), a.getInt(0), b.getLong(1), b.getInt(0))
+      val hot = r.getSeq[org.apache.spark.sql.Row](4).map(x => x.get(0) -> x.getLong(1))
+      LabelBlocks(r.getLong(0), lo.fold(0)(_.getInt(0)), lo.fold(0L)(_.getLong(1)),
+        r.getLong(1), hot.toMap)
+    }
+  }
+
+  /** The pairs (a_id, b_id, cosine) of `e0` scored by
+    * [[Similarity.labelPairsOf]] — labels in `hot` (every label when
+    * None) on `tables` tables of `planes` planes — with cosine
+    * `round(cos, 4)` ≥ [[CosineTau]], ordered by (a_id, b_id). The
+    * engine drops pairs under CosineTau − 1e-4 before its merge; none
+    * of them rounds up to CosineTau. */
+  private def cosinePairs(e0: DataFrame, blocks: LabelBlocks, hot: Option[Set[Any]],
+      tables: Int, planes: Int): DataFrame = {
+    import e0.sparkSession.implicits._
+    Similarity.labelPairsOf(e0, blocks.n, blocks.d, blocks.dimId, hot, tables, planes,
+        CosineTau - 1e-4)
+      .select($"a_id", $"b_id", round($"cos", 4).as("cosine"))
       .filter($"cosine" >= CosineTau)
-      .select($"a_id", $"b_id", $"cosine")
       .orderBy($"a_id", $"b_id")
   }
 
@@ -1201,9 +1184,10 @@ object Dedup {
     * clusters skew exactly that way — the guard matters MORE here
     * than for metadata blocks). Assignment is one codegen'd scan
     * against K literal seeds (no shuffle carries vectors); the pair
-    * stage shuffles ids by cluster. Test-scale clusters sit under the
-    * cap, so the oracle sees the pure exact path (the crossed regime
-    * is DedupSpec's planted-hot-label territory). */
+    * stage groups the rows by cluster in one shuffle. Test-scale
+    * clusters sit under the cap, so the oracle sees the pure exact
+    * path (the crossed regime is DedupSpec's planted-hot-label
+    * territory). */
   def dedupSemantic(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     dedupEmbeddingOn(
@@ -1528,164 +1512,64 @@ object Dedup {
        |LIMIT $TopRedacted""".stripMargin
 
   /** Sub-quadratic embedding dedup — the 100-TB path [[dedupEmbedding]]
-    * is the exactness baseline for: candidate pairs share a random-
-    * hyperplane LSH bucket (same [[Similarity.Tables_]] × 8-bucket
-    * machinery as ann_lsh) within the label block, so the join fanout is
-    * per-bucket instead of per-block-squared; candidates carry IDS ONLY
-    * through the distinct, vectors re-attach for the exact cosine
-    * verify. Approximate in recall (a pair can land in different buckets
-    * in all L tables — probability falls exponentially with cosine;
-    * DedupSpec measures recall vs the exact baseline), exact in
-    * precision (every reported cosine is verified). rows-only. */
+    * is the exactness baseline for: every label's rows are signed into
+    * random-hyperplane LSH buckets (the kNN graph's [[Similarity]]
+    * signer and bucket scorer, keyed by (label, table, bucket)), so the
+    * pairs scored are per-bucket instead of per-block-squared. Plane
+    * count and table count are sized from the largest label block
+    * ([[adaptivePlanes]], [[adaptiveTables]]). Approximate in recall (a
+    * pair can land in different buckets in all L tables — probability
+    * falls exponentially with cosine; DedupSpec measures recall vs the
+    * exact baseline), exact in precision (every reported cosine is the
+    * exact one). rows-only. */
   def dedupEmbeddingLsh(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // plane count sized from the largest label block (one tiny agg,
-    // K-row collect) — the fixed ANN-scale NPlanes=3 leaves only 8
-    // buckets per table, which on a 25k-row sf10 block keeps ~b²/8 of
-    // the quadratic alive INSIDE each bucket; ~64-row buckets bound
-    // per-cell fan-out regardless of block size (the hot-arm sizing,
-    // now shared), with the table count compensating the dup-band
-    // recall (adaptiveTables)
-    val maxBn = Similarity.embedded(s, dir)
-      .groupBy($"label").agg(count(lit(1)).as("bn"))
-      .agg(max($"bn")).head().getLong(0)
-    val planes = adaptivePlanes(maxBn)
-    dedupEmbeddingLshWith(s, dir, adaptiveTables(planes), planes)
+    val e = Similarity.embedded(s, dir)
+    val blocks = labelBlocks(e, Long.MaxValue)
+    val planes = adaptivePlanes(blocks.maxBn)
+    cosinePairs(e, blocks, None, adaptiveTables(planes), planes)
   }
 
-  /** Hot-arm/LSH plane count for a largest block of `maxBn` rows:
+  /** Hot-block/LSH plane count for a largest block of `maxBn` rows:
     * ⌈log₂(maxBn/[[HotTargetBucketRows]])⌉ clamped to
     * [[[Similarity.NPlanes]], [[MaxHotPlanes]]] — ~64-row buckets, so
-    * per-(table,bucket) candidate fan-out stays ~2·10³ pairs at any
-    * block size. Pair with [[adaptiveTables]]: more planes cut the
-    * quadratic term 4× per 2 bits but thin each table's collision odds,
-    * so the table count rises to hold the dup-band recall floor. */
-  private[operators] def adaptivePlanes(maxBn: Long): Int =
+    * per-(table,bucket) pairs stay ~2·10³ at any block size. Pair with
+    * [[adaptiveTables]]: more planes cut the quadratic term 4× per 2
+    * bits but thin each table's collision odds, so the table count
+    * rises to hold the dup-band recall floor. */
+  private[graft] def adaptivePlanes(maxBn: Long): Int =
     math.min(MaxHotPlanes, math.max(Similarity.NPlanes,
       math.ceil(math.log(maxBn.toDouble / HotTargetBucketRows) /
         math.log(2)).toInt))
 
-  /** Table count compensating [[adaptivePlanes]]'s recall thinning (the
-    * round-11 verdict's prescription: size planes to the data, buy the
-    * recall back with tables — a LINEAR cost, vs the quadratic one the
-    * planes remove). For random hyperplanes the per-table collision
-    * probability of a cosine-c pair is (1 − acos(c)/π)^planes; the
-    * count is the smallest L with 1 − (1 − q)^L ≥ 0.95 at c = 0.9 (the
-    * conservative EDGE of the dup band — true near-dups in any corpus
-    * this operator prunes sit ≥ 0.95 where the odds are far better),
-    * floored at [[Similarity.Tables_]] so small corpora keep the
-    * round-11 behavior exactly: L = 8 through 7 planes (every scale up
-    * to sf1), 11 at the sf10 shape (9 planes), 35 at the 16-plane
-    * ceiling. Sub-dup-band pairs (CosineTau 0.35 .. ~0.6) are
-    * explicitly NOT chased at scale — collision odds at 0.35 fall as
-    * 0.61^planes and no affordable table count recovers them; the
-    * recall specs gate the ≥ 0.6 and ≥ 0.9 bands. */
-  private[operators] def adaptiveTables(planes: Int): Int = {
+  /** Table count compensating [[adaptivePlanes]]'s recall thinning: size
+    * planes to the data, buy the recall back with tables — a LINEAR
+    * cost, vs the quadratic one the planes remove. For random
+    * hyperplanes the per-table collision probability of a cosine-c pair
+    * is (1 − acos(c)/π)^planes; the count is the smallest L with
+    * 1 − (1 − q)^L ≥ 0.95 at c = 0.9 (the conservative EDGE of the dup
+    * band — true near-dups in any corpus this operator prunes sit ≥ 0.95
+    * where the odds are far better), floored at [[Similarity.Tables_]]:
+    * L = 8 through 7 planes (every scale up to sf1), 11 at the sf10
+    * shape (9 planes), 35 at the 16-plane ceiling. Sub-dup-band pairs
+    * (CosineTau 0.35 .. ~0.6) are explicitly NOT chased at scale —
+    * collision odds at 0.35 fall as 0.61^planes and no affordable table
+    * count recovers them; the recall specs gate the ≥ 0.6 and ≥ 0.9
+    * bands. */
+  private[graft] def adaptiveTables(planes: Int): Int = {
     val q = math.pow(1.0 - math.acos(0.9) / math.Pi, planes.toDouble)
     math.max(Similarity.Tables_,
       math.ceil(math.log(0.05) / math.log1p(-q)).toInt)
   }
 
-  /** The embedding-LSH EXACTNESS ANCHOR (round-4 verdict item 4): one
-    * table with ZERO planes puts every vector in bucket 0, so the
-    * within-label bucket join degenerates to all same-label pairs and
-    * the operator must reproduce [[dedupEmbedding]]'s exact result —
-    * oracle-checked against [[dedupEmbeddingSql]] with zero new SQL
-    * through the same signature/bucket-join machinery. The single-table
-    * regime takes the vectors-ride-the-join fast path in
-    * [[lshCosinePairs]] (nothing corpus-squared reaches an exchange —
-    * the round-10 sf10 gate found the old distinct+re-attach shape
-    * shuffling O(N²/labels) vector pairs); the production multi-table
-    * configuration keeps the ids-only distinct that path exists for. */
-  def dedupEmbeddingLshExact(s: SparkSession, dir: String): DataFrame =
-    dedupEmbeddingLshWith(s, dir, tables = 1, nplanes = 0)
-
-  private def dedupEmbeddingLshWith(s: SparkSession, dir: String,
-      tables: Int, nplanes: Int): DataFrame = {
-    import s.implicits._
-    // r14: spread the signature scan (multi-table bucket projection is
-    // per-row × tables work; single-row-group scan = one task)
-    val e = graft.Tables.spread(
-      Similarity.embedded(s, dir), dir, "embeddings",
-      graft.Tables.SpreadMinComputeBytes, $"vec_id")
-    val dim = Similarity.vectorShape(Similarity.embedded(s, dir))._2
-    lshCosinePairs(e, dim, tables, nplanes)
-      .filter($"cosine" >= CosineTau)
-      .select($"a_id", $"b_id", $"cosine")
-      .orderBy($"a_id", $"b_id")
-  }
-
-  /** Within-label LSH candidate pairs with the exact cosine attached —
-    * ids-only through the distinct (a candidate hitting in several
-    * tables would otherwise drag two vectors through the shuffle per
-    * hit); vectors re-attach afterwards for the verify. Shared by
-    * [[dedupEmbeddingLsh]]/[[dedupEmbeddingLshExact]] and
-    * [[dedupEmbeddingOn]]'s hot-block path. */
-  private def lshCosinePairs(e: DataFrame, dim: Int,
-      tables: Int, nplanes: Int): DataFrame = {
-    import e.sparkSession.implicits._
-    if (tables == 1) {
-      // Single-table regime (the 0-plane exactness anchor): no second
-      // table can produce a duplicate candidate, so the ids-only
-      // distinct + vector re-attach below would be pure overhead — and
-      // at scale a CATASTROPHE: the anchor's within-label candidate set
-      // is O(N²/labels) pairs (~2·10⁹ at sf10), and re-attaching two
-      // 64-dim vectors to each pair shuffles TBs. Vectors ride the
-      // bucket join instead: the only big
-      // volume is the in-partition pair stream, compute-bound dots,
-      // nothing corpus-squared ever hits an exchange.
-      // repartition the probe side: a 100k-vector corpus is ~25 MB of
-      // parquet = ONE scan partition, which would put the whole
-      // quadratic pair stream in one task (the sf10 gate measured
-      // exactly that); hash-spreading the left side on vec_id makes the
-      // stream width the configured parallelism, and the broadcast
-      // right side keeps the join exchange-free.
-      // SCOPE: this branch only runs for the tables == 1 exactness
-      // ANCHOR (dedup_embedding_lsh_exact and the hot-block arm), whose
-      // corpus is bounded — broadcasting the vector-attached right side
-      // is O(N) executor memory, fine at anchor size, wrong for an
-      // unbounded input. The shipped multi-table path below never
-      // broadcasts the corpus.
-      // EXPLICIT partition count (r14): the bare repartition(col) here
-      // was AQE-coalesced back down by bytes — the pair stream's cost
-      // is CPU, not bytes, so pin the width to the core budget
-      val buckets = Similarity.withBuckets(e, dim, tables, nplanes)
-        .select($"vec_id", $"label", $"v", $"nrm", $"t", $"bucket")
-        .repartition(e.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
-      val b = broadcast(Similarity.withBuckets(e, dim, tables, nplanes)
-        .select($"vec_id".as("b_id"), $"label", $"v".as("vb"),
-          $"nrm".as("nb"), $"t", $"bucket"))
-      buckets.as("a").join(b,
-          Seq("label", "t", "bucket"))
-        .filter($"vec_id" < $"b_id")
-        .select($"vec_id".as("a_id"), $"b_id", round(
-          graft.functions.DotProduct($"v", $"vb") / ($"nrm" * $"nb"), 4)
-          .as("cosine"))
-    } else {
-      // Multi-table production path: VECTORS RIDE THE BUCKET JOIN, so
-      // each pair is scored where its bucket meets. The former shape
-      // — ids-only candidates through a distinct, vectors re-attached by
-      // two joins — was the round-11 sf10 gate's 57×/decade outlier:
-      // re-attaching two 64-dim vectors to O(Σ b²/2^planes) candidate
-      // pairs shuffles ~1 KB per pair (tens of GB at sf10, most of the
-      // suite's spill), while the pair KEYS are 16 bytes. Instead both
-      // join sides carry (v, nrm), the cosine is computed inside the
-      // bucket partition, and only (a_id, b_id, cosine) — 24-byte rows —
-      // ever reaches an exchange; the cross-table dedup is a
-      // groupBy(a_id, b_id).max(cosine) with map-side partials (the
-      // cosine is bit-identical per duplicate hit — same expression on
-      // the same operands — so max is just the associative pick, and
-      // precision/parity vs the exact arm is untouched).
-      val buckets = Similarity.withBuckets(e, dim, tables, nplanes)
-        .select($"vec_id", $"label", $"v", $"nrm", $"t", $"bucket")
-      buckets.as("a").join(buckets.as("b"),
-          $"a.label" === $"b.label" && $"a.t" === $"b.t" &&
-          $"a.bucket" === $"b.bucket" && $"a.vec_id" < $"b.vec_id")
-        .select($"a.vec_id".as("a_id"), $"b.vec_id".as("b_id"), round(
-          graft.functions.DotProduct($"a.v", $"b.v") /
-            ($"a.nrm" * $"b.nrm"), 4).as("cosine"))
-        .groupBy($"a_id", $"b_id").agg(max($"cosine").as("cosine"))
-    }
+  /** The embedding-LSH EXACTNESS ANCHOR: one table of zero planes puts
+    * every row of a label in one bucket, so the engine scores all
+    * same-label pairs and the operator must reproduce
+    * [[dedupEmbedding]]'s exact result — oracle-checked against
+    * [[dedupEmbeddingSql]] with zero new SQL through the same signer,
+    * scorer and merge as [[dedupEmbeddingLsh]]. */
+  def dedupEmbeddingLshExact(s: SparkSession, dir: String): DataFrame = {
+    val e = Similarity.embedded(s, dir)
+    cosinePairs(e, labelBlocks(e, Long.MaxValue), None, tables = 1, planes = 0)
   }
 
   // ------------------------------------------------------- materialization

@@ -27,19 +27,23 @@ import graft.{PackedPlane, PlaneChunk, PlaneRow, Tables}
   *     nprobe/nlist of the data — the scan cost drops proportionally, and
   *     the list assignment is a plain partition key a 1000-executor
   *     cluster co-locates by.
-  *   - LSH: per-row signature (L tables × nplanes sign bits, all codegen
-  *     arithmetic), candidates = bucket equi-join — no pairwise scan.
   *   - PQ / IVF+PQ: one pipeline — a compressed-domain ADC scan over the
   *     codes (restricted to the probed inverted lists; PQ probes all of
   *     them), then an exact re-rank of the shortlist.
-  *   - k-NN graph: every vector is a query; on the packed plane that
-  *     trains the ANN index, one shuffle groups the vectors by LSH
-  *     bucket, each bucket is scored all-pairs in one task, and a merge
-  *     of per-node top-k lists (ids and cosines only) ranks the edges.
+  *   - LSH and the k-NN graph: one cosine engine ([[cosineTopK]]) on the
+  *     packed plane that trains the ANN index. Each row's signatures (L
+  *     tables × nplanes sign bits, [[KnnSigner]]) key it into buckets;
+  *     the graph groups the rows by bucket in one shuffle and scores
+  *     each bucket all-pairs in one task, LSH ANN broadcasts its queries
+  *     and scores each partition's rows against the queries they share
+  *     a bucket with, and a merge of per-node top-k lists (ids and
+  *     cosines only) ranks the rows. Dedup's embedding operators run
+  *     the same signer and bucket scorer keyed by label
+  *     ([[labelPairsOf]]).
   *
-  * Every approximate query (IVF, LSH, PQ, IVF+PQ) collects its query
-  * set once ([[queryRows]]), generates candidates, and scores them
-  * exactly; the probe ranking ([[probeLists]]) and the exact re-rank
+  * The IVF and PQ queries collect their query set once
+  * ([[queryRows]]), generate candidates, and score them exactly; the
+  * probe ranking ([[probeLists]]) and the exact re-rank
   * ([[rerankExact]]) are written once.
   *
   * Cosine math is sequential left-to-right double folds, identical to the
@@ -157,7 +161,7 @@ object Similarity {
   /** The query set (vec_id, v, nrm) — vec_id < [[NumQueries]] — in one
     * collect, sorted on the driver (NumQueries rows need no distributed
     * sort). Every approximate query reads these rows for its query side:
-    * probe sets, ADC tables, LSH query buckets and the exact re-rank. */
+    * probe sets, ADC tables and the exact re-rank. */
   private def queryRows(s: SparkSession, dir: String): Array[(Long, Seq[Double], Double)] = {
     import s.implicits._
     embedded(s, dir).filter($"vec_id" < NumQueries)
@@ -347,72 +351,32 @@ object Similarity {
     (x >>> 11).toDouble / (1L << 53).toDouble * 2.0 - 1.0
   }
 
-  private def plane(t: Int, p: Int, dim: Int): Seq[Double] =
-    (0 until dim).map(planeComponent(t, p, _))
-
-  /** Per-table bucket id: sign bits of the vector against `nplanes`
-    * hyperplanes. Zero planes folds to the constant bucket 0 — every
-    * vector collides, which is what makes the exactness anchors
-    * ([[annLshExact]], [[Dedup.dedupEmbeddingLshExact]]) degrade to
-    * exhaustive search through the unchanged bucket-join machinery. */
-  private[operators] def bucketCol(t: Int, dim: Int, nplanes: Int = NPlanes): Column =
-    (0 until nplanes).map { p =>
-      when(dot(col("v"), typedlit(plane(t, p, dim))) > 0, lit(1 << p))
-        .otherwise(lit(0))
-    }.foldLeft(lit(0))(_ + _)
-
-  /** Explode `df` into one row per (LSH table, bucket) membership —
-    * shared by [[annLsh]] and [[Dedup.dedupEmbeddingLsh]]. */
-  private[operators] def withBuckets(df: DataFrame, dim: Int,
-      tables: Int = Tables_, nplanes: Int = NPlanes): DataFrame = {
-    val tableCols = (0 until tables).map(t =>
-      struct(lit(t).as("t"), bucketCol(t, dim, nplanes).as("bucket")))
-    df.withColumn("tb", explode(array(tableCols: _*)))
-      .select(df.columns.map(col) :+
-        col("tb.t").as("t") :+ col("tb.bucket").as("bucket"): _*)
-  }
-
-  /** LSH ANN: candidates share a bucket in any of the L tables; exact
-    * cosine rank within candidates. rows-only; recall asserted in
-    * SimilaritySpec.
-    *
-    * The candidate pipeline is ID-ONLY until after the distinct: the
-    * bucket join emits (q_id, vec_id) pairs and the dedup exchange moves
-    * 16-byte rows — a candidate that hits in several of the L tables
-    * would otherwise drag two full vectors through the shuffle per hit.
-    * Vectors re-attach afterwards: corpus vectors by a vec_id equi-join
-    * (candidate set ≪ corpus, AQE broadcasts the small side at runtime),
-    * query vectors by explicit broadcast (NumQueries rows). */
+  /** LSH ANN: each query's top-[[TopK]] by exact cosine among the
+    * corpus rows that share a bucket with it in one of [[Tables_]]
+    * tables of [[NPlanes]] sign bits ([[KnnSigner]]). It is the
+    * engine's `against` path ([[cosineTopK]]): the queries (vec_id <
+    * [[NumQueries]]) broadcast, each plane partition scores its rows
+    * against the queries they share a bucket with, and a merge of the
+    * per-partition lists ranks them by (cos DESC, vec_id ASC) — the
+    * corpus never shuffles. rows-only; recall asserted in
+    * SimilaritySpec. */
   def annLsh(s: SparkSession, dir: String): DataFrame =
-    annLshWith(s, dir, Tables_, NPlanes)
+    annLshOf(embedded(s, dir), Tables_, NPlanes)
 
-  /** The LSH EXACTNESS ANCHOR (the [[annIvfExact]]/[[annPqExact]]
-    * pattern applied to LSH, round-4 verdict item 4): one table with
-    * ZERO planes puts every vector in bucket 0, so the bucket join
-    * emits every (query, vector) pair, the candidate set is the whole
-    * corpus, and the operator must reproduce brute force — DuckDB-
-    * oracle-checked against [[annBruteForceSql]] with zero new SQL
-    * while exercising the full signature/bucket-join/distinct/re-attach
-    * machinery. The production configuration ([[annLsh]]) stays
-    * rows-only with its recall spec. */
+  /** The LSH EXACTNESS ANCHOR: one table of zero planes puts every
+    * vector in one bucket, so every query scores the whole corpus and
+    * the operator must reproduce brute force — DuckDB-oracle-checked
+    * against [[annBruteForceSql]] with zero new SQL through the same
+    * signer, scoring loop and merge as [[annLsh]]. */
   def annLshExact(s: SparkSession, dir: String): DataFrame =
-    annLshWith(s, dir, tables = 1, nplanes = 0)
+    annLshOf(embedded(s, dir), tables = 1, nplanes = 0)
 
-  private def annLshWith(s: SparkSession, dir: String,
-      tables: Int, nplanes: Int): DataFrame = {
-    import s.implicits._
-    val e = embedded(s, dir)
-    val dim = vectorShape(e)._2
-    val qs = queryRows(s, dir)
-    val corpusBuckets = withBuckets(e, dim, tables, nplanes)
-      .select($"vec_id", $"t", $"bucket")
-    val qBuckets = withBuckets(qs.toSeq.toDF("q_id", "v", "nrm"), dim, tables, nplanes)
-      .select($"q_id", $"t", $"bucket")
-    val candIds = corpusBuckets.join(broadcast(qBuckets), Seq("t", "bucket"))
-      .filter($"vec_id" =!= $"q_id")
-      .select($"q_id", $"vec_id").distinct()
-    rerankExact(s, dir, candIds, qs)
-  }
+  /** [[annLsh]] over `e` (vec_id bigint, v array<double>) with `tables`
+    * tables of `nplanes` planes; `scored`, when given, counts the
+    * (query, row) pairs scored. */
+  private[graft] def annLshOf(e: DataFrame, tables: Int, nplanes: Int,
+      scored: Option[LongAccumulator] = None): DataFrame =
+    cosineTopK(e, Some(NumQueries), TopK, _ => (tables, nplanes), scored)
 
   // ------------------------------------------------------------ kNN graph
 
@@ -452,9 +416,9 @@ object Similarity {
     *   1. one job packs the vectors ([[graft.PackedPlane]]) and returns
     *      (n, d);
     *   2. each row's [[KnnTables]] signatures of [[knnPlanes]]`(n)` bits
-    *      — the [[bucketCol]] hyperplanes and sign fold — key it into
-    *      one (table, bucket) group per table, and one RDD shuffle
-    *      carries the n·L member rows (vec_id, vector, norm);
+    *      ([[KnnSigner]]) key it into one (table, bucket) group per
+    *      table, and one RDD shuffle carries the n·L member rows
+    *      (vec_id, vector, norm);
     *   3. each bucket task scores its members all-pairs (DotProduct's
     *      fold, `dot / (‖q‖·‖v‖)`) and keeps a bounded top-K per member
     *      by (cos DESC, vec_id ASC);
@@ -478,21 +442,6 @@ object Similarity {
   def knnEdges(s: SparkSession, dir: String): DataFrame =
     knnCache.getOrCompute(s, dir)(knnGraphOf(embedded(s, dir), None))
 
-  /** (row count, vector dimension) of `e`'s `v` column in one job;
-    * fails unless every vector has the same dimension (a null vector
-    * counts as dimension -1). An empty frame reads (0, 0). */
-  private[operators] def vectorShape(e: DataFrame): (Long, Int) = {
-    val sizes = coalesce(size(col("v")), lit(-1))
-    val r = e.agg(count(lit(1)), min(sizes), max(sizes)).head()
-    val n = r.getLong(0)
-    if (n == 0L) (0L, 0)
-    else {
-      require(r.getInt(1) == r.getInt(2), "vectors must share one dimension; sizes " +
-        s"range over [${r.getInt(1)}, ${r.getInt(2)}] (-1 is a null vector)")
-      (n, r.getInt(1))
-    }
-  }
-
   /** The kNN-graph EXACTNESS ANCHOR ([[annLshExact]] discipline): one
     * table of zero planes puts every vector in one bucket, so with the
     * nodes restricted to the [[KnnNodes]]-vector sample every node
@@ -509,33 +458,49 @@ object Similarity {
   /** The kNN-graph engine over `e` (vec_id bigint, v array<double>):
     * the edges (q_id, n_id, rk, cosine) of every node, LSH-bucketed
     * ([[knnGraph]]), or with `nodeMax` of the nodes vec_id < nodeMax
-    * against the whole corpus ([[knnGraphExact]]); ordered by
-    * (q_id, rk) and checkpointed eagerly, after which the plane is
-    * released. A zero-norm or non-finite vector fails naming its
-    * vec_id, so no NaN/∞ cosine reaches an edge; null, empty and ragged
-    * vectors fail in the pack. `scored`, when given, counts the
-    * (node, candidate) pairs scored. */
+    * against the whole corpus ([[knnGraphExact]]). `scored`, when
+    * given, counts the (node, candidate) pairs scored. */
   private[graft] def knnGraphOf(e: DataFrame, nodeMax: Option[Long],
-      scored: Option[LongAccumulator] = None): DataFrame = {
+      scored: Option[LongAccumulator] = None): DataFrame =
+    cosineTopK(e, nodeMax, KnnK,
+      n => if (nodeMax.isEmpty) (KnnTables, knnPlanes(n)) else (1, 0), scored)
+
+  /** The cosine top-k engine behind [[knnGraphOf]] and [[annLshOf]],
+    * over `e` (vec_id bigint, v array<double>) packed once into a plane:
+    * each node's top-`k` neighbors by (cos DESC, vec_id ASC) among the
+    * rows that share an LSH bucket with it in one of the tables of
+    * `lsh(n)` = (tables, planes) ([[KnnSigner]]; one table of zero
+    * planes is one bucket). Without `nodeMax` every row is a node and
+    * one shuffle groups the rows by bucket, each bucket scored
+    * all-pairs in one task; with it the nodes are the rows vec_id <
+    * nodeMax, broadcast and scored against each plane partition's
+    * rows. A `reduceByKey` merges the per-bucket or per-partition lists.
+    * The rows (q_id, n_id, rk, cosine) come ordered by (q_id, rk) and
+    * checkpointed eagerly, after which the plane is released. A
+    * zero-norm or non-finite vector fails naming its vec_id, so no
+    * NaN/∞ cosine reaches a row; null, empty and ragged vectors fail in
+    * the pack. */
+  private def cosineTopK(e: DataFrame, nodeMax: Option[Long], k: Int,
+      lsh: Long => (Int, Int), scored: Option[LongAccumulator]): DataFrame = {
     val s = e.sparkSession
     import s.implicits._
     val sc = s.sparkContext
     val plane = vectorPlane(e)
     try {
       val (n, d) = planeShape(plane)
-      val parts = new HashPartitioner(math.max(sc.defaultParallelism, math.min(4096L,
-        n * KnnTables * (8L * d + 16) / KnnShufflePartitionBytes).toInt))
+      val (tables, nplanes) = lsh(n)
+      val signer = new KnnSigner(tables, nplanes, d)
+      val parts = memberParts(sc, n * tables, d)
       val lists = nodeMax match {
         case None =>
-          val signer = new KnnSigner(KnnTables, knnPlanes(n), d)
           plane.flatMap(signer.members).groupByKey(parts)
-            .flatMap { case (_, ms) => KnnScore.bucket(ms.toArray, scored) }
+            .flatMap { case (_, ms) => KnnScore.bucket(ms.toArray, k, scored) }
         case Some(m) =>
           val sample = plane.flatMap(c => Iterator.range(0, c.rows).filter(c.ids(_) < m)
             .map(r => (c.ids(r), java.util.Arrays.copyOfRange(c.vals, r * d, (r + 1) * d))))
             .collect()
           val nodes = sc.broadcast(PlaneChunk(sample.map(_._1), sample.flatMap(_._2), d))
-          plane.mapPartitions(cs => KnnScore.against(nodes.value, cs, scored))
+          plane.mapPartitions(cs => KnnScore.against(nodes.value, signer, k, cs, scored))
       }
       val rows = lists.reduceByKey(parts, (a, b) => a.merge(b))
         .flatMap { case (q, top) => top.rows(q) }
@@ -546,38 +511,94 @@ object Similarity {
     } finally plane.unpersist(blocking = false)
   }
 
+  /** The width of a shuffle of `members` bucket-member rows of width d
+    * (vec_id, d doubles, norm): their volume over
+    * [[KnnShufflePartitionBytes]], floored at the session parallelism
+    * and capped at 4096. */
+  private def memberParts(sc: org.apache.spark.SparkContext, members: Long, d: Int) =
+    new HashPartitioner(math.max(sc.defaultParallelism,
+      math.min(4096L, members * (8L * d + 16) / KnnShufflePartitionBytes).toInt))
+
+  /** The blocked cosine pairs behind Dedup's embedding operators: every
+    * pair (a_id < b_id, cos) of `e`'s rows (vec_id bigint, v
+    * array<double> of width d, label) that share a (label, table,
+    * bucket) key, at cos ≥ `floor`. Rows of a label in `hot` (every
+    * label when None) are signed into `tables` tables of `nplanes`
+    * planes, the others into one bucket per label; a null label never
+    * pairs. Each group is scored all-pairs in one task after one
+    * shuffle, and pairs met in several tables are merged by
+    * `reduceByKey(max)` — a pair scores the same bits in every table.
+    * Every row passes the pack's checks ([[VectorRow]]) and the norm
+    * check, so a bad vector fails naming its vec_id. */
+  private[operators] def labelPairsOf(e: DataFrame, n: Long, d: Int, dimId: Long,
+      hot: Option[Set[Any]], tables: Int, nplanes: Int, floor: Double): DataFrame = {
+    val src = e.select("vec_id", "v", "label")
+    requireVectors(src)
+    val dt = src.schema(2).dataType
+    val (warm, cold) = (new KnnSigner(tables, nplanes, d), new KnnSigner(1, 0, d))
+    val members = src.queryExecution.toRdd.mapPartitions { rows =>
+      val put = new VectorRow(d, dimId)
+      val toLabel = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(dt)
+      rows.flatMap { r =>
+        val v = new Array[Double](d)
+        val m = new KnnMember(put.put(r, v, 0), v)
+        if (r.isNullAt(2)) Iterator.empty
+        else {
+          val label = toLabel(r.get(2, dt))
+          val signer = if (hot.forall(_.contains(label))) warm else cold
+          signer.keys(v, 0).iterator.map(key => ((label, key), m))
+        }
+      }
+    }
+    val parts = memberParts(e.sparkSession.sparkContext, n * tables, d)
+    val pairs = members.groupByKey(parts)
+      .flatMap { case (_, ms) => KnnScore.pairs(ms.toArray, floor) }
+      .reduceByKey(parts, (a, b) => math.max(a, b))
+      .map { case ((a, b), c) => InternalRow(a, b, c) }
+    GraftShims.internalCreateDataFrame(e.sparkSession, pairs, PairSchema)
+  }
+
   private val KnnEdgeSchema = StructType(Seq(
     StructField("q_id", LongType, nullable = false),
     StructField("n_id", LongType, nullable = false),
     StructField("rk", IntegerType, nullable = false),
     StructField("cos", DoubleType, nullable = false)))
 
-  /** A bucket member: a row's id, its vector and its norm. */
-  private final class KnnMember(val id: Long, val v: Array[Double], val nrm: Double)
-    extends Serializable
+  private val PairSchema = StructType(Seq(
+    StructField("a_id", LongType, nullable = false),
+    StructField("b_id", LongType, nullable = false),
+    StructField("cos", DoubleType, nullable = false)))
 
-  /** Each plane row's `tables` LSH signatures of `nplanes` bits: bit p
-    * of table t is `dot(v, plane(t, p)) > 0` by DotProduct's fold over
-    * [[planeComponent]] — the buckets of [[bucketCol]]. Keys are
-    * `t << 16 | bucket` (nplanes ≤ 16). */
+  /** A bucket member: a row's id, its vector and its checked norm. */
+  private final class KnnMember(val id: Long, val v: Array[Double]) extends Serializable {
+    val nrm: Double = KnnScore.norm(v, 0, v.length, id)
+  }
+
+  /** A vector's `tables` LSH signatures of `nplanes` bits: bit p of
+    * table t is `dot(v, plane(t, p)) > 0` by DotProduct's fold over
+    * [[planeComponent]]. Keys are `t << 16 | bucket` (nplanes ≤ 16);
+    * one table of zero planes keys every vector 0. */
   private final class KnnSigner(tables: Int, nplanes: Int, d: Int) extends Serializable {
     private val planes = Array.tabulate(tables * nplanes * d)(i =>
       planeComponent(i / (nplanes * d), i / d % nplanes, i % d))
 
+    /** The keys of `v(off until off + d)`, one per table. */
+    def keys(v: Array[Double], off: Int): Array[Int] =
+      Array.tabulate(tables) { t =>
+        var bucket = 0
+        var p = 0
+        while (p < nplanes) {
+          if (dotOf(v, off, planes, (t * nplanes + p) * d, d) > 0) bucket |= 1 << p
+          p += 1
+        }
+        t << 16 | bucket
+      }
+
+    /** A chunk's rows as members keyed by each of their buckets. */
     def members(c: PlaneChunk): Iterator[(Int, KnnMember)] =
       Iterator.range(0, c.rows).flatMap { r =>
-        val (id, off) = (c.ids(r), r * d)
-        val m = new KnnMember(id, java.util.Arrays.copyOfRange(c.vals, off, off + d),
-          KnnScore.norm(c.vals, off, d, id))
-        Iterator.range(0, tables).map { t =>
-          var bucket = 0
-          var p = 0
-          while (p < nplanes) {
-            if (dotOf(m.v, 0, planes, (t * nplanes + p) * d, d) > 0) bucket |= 1 << p
-            p += 1
-          }
-          (t << 16 | bucket, m)
-        }
+        val m = new KnnMember(c.ids(r), java.util.Arrays.copyOfRange(c.vals, r * d, (r + 1) * d))
+        keys(m.v, 0).iterator.map(_ -> m)
       }
   }
 
@@ -627,10 +648,10 @@ object Similarity {
       Iterator.range(0, size).map(i => InternalRow(q, ids(i), i + 1, cos(i)))
   }
 
-  /** The graph's task-side kernels: checked norms and cosines, and the
-    * two scoring loops (bucket all-pairs, sample against a partition). */
+  /** The engine's task-side kernels: checked norms and cosines, and the
+    * scoring loops (a bucket all-pairs, nodes against a partition). */
   private object KnnScore {
-    def bad(msg: String) = new IllegalArgumentException(s"kNN graph: $msg")
+    def bad(msg: String) = new IllegalArgumentException(s"cosine: $msg")
 
     /** The norm of row `id`, which must be finite and non-zero. */
     def norm(v: Array[Double], off: Int, d: Int, id: Long): Double = {
@@ -647,38 +668,68 @@ object Similarity {
       c
     }
 
-    /** One bucket's members scored all-pairs (each cosine computed once
-      * and offered to both ends): their per-bucket lists. */
-    def bucket(ms: Array[KnnMember], scored: Option[LongAccumulator])
-        : Iterator[(Long, TopK)] = {
-      val tops = Array.fill(ms.length)(new TopK(KnnK))
+    /** Bucket member i scored against every later member j of another
+      * id, `visit(j, cos)`; the number of pairs. */
+    def later(ms: Array[KnnMember], i: Int)(visit: (Int, Double) => Unit): Long = {
+      val a = ms(i)
       var pairs = 0L
-      for (i <- ms.indices; j <- i + 1 until ms.length) {
-        val (a, b) = (ms(i), ms(j))
+      var j = i + 1
+      while (j < ms.length) {
+        val b = ms(j)
+        if (a.v.length != b.v.length) throw VectorRow.ragged(a.id, a.v.length, b.id, b.v.length)
         if (a.id != b.id) {
-          val c = cosine(a.id, a.v, 0, a.nrm, b.id, b.v, 0, b.nrm, a.v.length)
-          tops(i).offer(b.id, c)
-          tops(j).offer(a.id, c)
-          pairs += 2
+          visit(j, cosine(a.id, a.v, 0, a.nrm, b.id, b.v, 0, b.nrm, a.v.length))
+          pairs += 1
         }
+        j += 1
       }
-      scored.foreach(_.add(pairs))
+      pairs
+    }
+
+    /** A bucket's per-member top-`k` lists (each cosine offered to both
+      * ends). */
+    def bucket(ms: Array[KnnMember], k: Int, scored: Option[LongAccumulator])
+        : Iterator[(Long, TopK)] = {
+      val tops = Array.fill(ms.length)(new TopK(k))
+      var pairs = 0L
+      for (i <- ms.indices) pairs += later(ms, i) { (j, c) =>
+        tops(i).offer(ms(j).id, c)
+        tops(j).offer(ms(i).id, c)
+      }
+      scored.foreach(_.add(2 * pairs))
       ms.indices.iterator.filter(tops(_).nonEmpty).map(i => (ms(i).id, tops(i)))
     }
 
-    /** One plane partition's rows scored against every sampled node:
-      * the partition's per-node lists. */
-    def against(nodes: PlaneChunk, chunks: Iterator[PlaneChunk],
+    /** A bucket's pairs (min id, max id) at cosine ≥ `floor`, one
+      * member's at a time. */
+    def pairs(ms: Array[KnnMember], floor: Double): Iterator[((Long, Long), Double)] =
+      ms.indices.iterator.flatMap { i =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[((Long, Long), Double)]
+        later(ms, i) { (j, c) =>
+          if (c >= floor) {
+            val (a, b) = (ms(i).id, ms(j).id)
+            out += ((math.min(a, b), math.max(a, b)) -> c)
+          }
+        }
+        out
+      }
+
+    /** One plane partition's rows scored against every node they share
+      * a bucket with: the partition's per-node top-`k` lists. */
+    def against(nodes: PlaneChunk, signer: KnnSigner, k: Int, chunks: Iterator[PlaneChunk],
         scored: Option[LongAccumulator]): Iterator[(Long, TopK)] = {
       val d = nodes.d
       val norms = Array.tabulate(nodes.rows)(i => norm(nodes.vals, i * d, d, nodes.ids(i)))
-      val tops = Array.fill(nodes.rows)(new TopK(KnnK))
+      val keys = Array.tabulate(nodes.rows)(i => signer.keys(nodes.vals, i * d))
+      val tops = Array.fill(nodes.rows)(new TopK(k))
       var pairs = 0L
       chunks.foreach { c =>
         for (r <- 0 until c.rows) {
           val id = c.ids(r)
           val nrm = norm(c.vals, r * d, d, id)
-          for (i <- nodes.ids.indices if nodes.ids(i) != id) {
+          val rk = signer.keys(c.vals, r * d)
+          for (i <- nodes.ids.indices
+              if nodes.ids(i) != id && rk.indices.exists(t => rk(t) == keys(i)(t))) {
             tops(i).offer(id, cosine(nodes.ids(i), nodes.vals, i * d, norms(i),
               id, c.vals, r * d, nrm, d))
             pairs += 1
@@ -925,15 +976,18 @@ object Similarity {
     math.sqrt(dotOf(v, off, v, off, d))
 
   /** `e`'s (vec_id, v) rows packed once into a persisted plane — the
-    * input of [[trainIndex]] and [[knnGraphOf]], which release it. */
+    * input of [[trainIndex]] and [[cosineTopK]], which release it. */
   private def vectorPlane(e: DataFrame): RDD[PlaneChunk] = {
     val src = e.select("vec_id", "v")
+    requireVectors(src)
+    src.queryExecution.toRdd.mapPartitions(packVectors).persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  private def requireVectors(src: DataFrame): Unit =
     require(src.schema(0).dataType == LongType && (src.schema(1).dataType match {
         case ArrayType(DoubleType, _) => true
         case _ => false
-      }), s"a vector plane needs vec_id bigint, v array<double>; got ${src.schema.simpleString}")
-    src.queryExecution.toRdd.mapPartitions(packVectors).persist(StorageLevel.MEMORY_AND_DISK)
-  }
+      }), s"vectors need vec_id bigint, v array<double>; got ${src.schema.simpleString}")
 
   /** Packs one partition of (vec_id, v) rows at its first row's
     * dimension (a null first vector fails in [[VectorRow]]);
@@ -943,20 +997,21 @@ object Similarity {
     if (!in.hasNext) Iterator.empty
     else {
       val d = if (in.head.isNullAt(1)) 1 else in.head.getArray(1).numElements()
-      if (d == 0) throw VectorRow.bad(s"empty vector at vec_id ${in.head.getLong(0)}")
-      PackedPlane.pack(in, d, new VectorRow(d))
+      val first = in.head.getLong(0)
+      if (d == 0) throw VectorRow.bad(s"empty vector at vec_id $first")
+      PackedPlane.pack(in, d, new VectorRow(d, first))
     }
   }
 
-  /** One (vec_id, v) row into a plane of width d. */
-  private final class VectorRow(d: Int) extends PlaneRow {
+  /** One (vec_id, v) row into a plane of width d, the width of vec_id
+    * `dimId`. */
+  private final class VectorRow(d: Int, dimId: Long) extends PlaneRow {
     def put(r: InternalRow, vals: Array[Double], off: Int): Long = {
       if (r.isNullAt(0)) throw VectorRow.bad("null vec_id")
       val id = r.getLong(0)
       if (r.isNullAt(1)) throw VectorRow.bad(s"null vector at vec_id $id")
       val v = r.getArray(1)
-      if (v.numElements() != d) throw VectorRow.bad(
-        s"ragged vectors: vec_id $id has dimension ${v.numElements()}, its partition $d")
+      if (v.numElements() != d) throw VectorRow.ragged(id, v.numElements(), dimId, d)
       var j = 0
       while (j < d) {
         if (v.isNullAt(j)) throw VectorRow.bad(s"null element $j in vec_id $id")
@@ -969,8 +1024,12 @@ object Similarity {
 
   // an object, not a method of Similarity: task closures that call it
   // must not capture the (unserializable) Similarity module
-  private object VectorRow {
+  private[operators] object VectorRow {
     def bad(msg: String) = new IllegalArgumentException(s"packing vectors: $msg")
+
+    /** The failure of two vectors whose dimensions differ. */
+    def ragged(a: Long, da: Int, b: Long, db: Int) = bad(
+      s"vectors must share one dimension: vec_id $a has dimension $da, vec_id $b has dimension $db")
   }
 
   /** The pack job: (n, d) of the plane. The packer holds a partition
@@ -981,8 +1040,7 @@ object Similarity {
     def join(a: Shape, b: Shape): Shape =
       if (a._1 == 0L) b
       else if (b._1 == 0L || a._2 == b._2) (a._1 + b._1, a._2, a._3)
-      else throw VectorRow.bad(
-        s"ragged vectors: vec_id ${a._3} has dimension ${a._2}, vec_id ${b._3} has dimension ${b._2}")
+      else throw VectorRow.ragged(a._3, a._2, b._3, b._2)
     val (n, d, _) = plane.treeAggregate[Shape]((0L, 0, 0L))(
       seqOp = (a, c) => join(a, (c.rows.toLong, c.d, c.ids(0))), combOp = join)
     (n, d)

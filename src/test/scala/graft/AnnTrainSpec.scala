@@ -67,9 +67,13 @@ object KnnReference {
     math.ceil(math.log(n.toDouble / KnnTargetBucket) / math.log(2.0)).toInt))
 
   /** The members of every non-empty (table, bucket) of `vecs`. */
-  def buckets(vecs: Seq[(Long, Array[Double])]): Seq[Seq[Long]] = {
-    val (np, d) = (planes(vecs.size), vecs.head._2.length)
-    (0 until KnnTables).flatMap { t =>
+  def buckets(vecs: Seq[(Long, Array[Double])]): Seq[Seq[Long]] =
+    buckets(vecs, KnnTables, planes(vecs.size))
+
+  /** The same on `tables` tables of `np` planes. */
+  def buckets(vecs: Seq[(Long, Array[Double])], tables: Int, np: Int): Seq[Seq[Long]] = {
+    val d = vecs.head._2.length
+    (0 until tables).flatMap { t =>
       val hp = Array.tabulate(np)(p => Array.tabulate(d)(planeComponent(t, p, _)))
       vecs.groupBy { case (_, v) =>
         (0 until np).map(p => if (dot(v, hp(p)) > 0) 1 << p else 0).sum
@@ -77,16 +81,30 @@ object KnnReference {
     }
   }
 
+  private def round4(c: Double): Double =
+    BigDecimal(c).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  private def cosine(v: Map[Long, Array[Double]])(q: Long, n: Long): Double =
+    dot(v(q), v(n)) / (math.sqrt(dot(v(q), v(q))) * math.sqrt(dot(v(n), v(n))))
+
+  /** The pairs (a_id < b_id, cosine) that share one of `buckets` at
+    * `round(cos, 4)` ≥ `tau`, ordered by (a_id, b_id). */
+  def pairs(vecs: Seq[(Long, Array[Double])], buckets: Seq[Seq[Long]],
+      tau: Double): Seq[(Long, Long, Double)] = {
+    val cos = cosine(vecs.toMap) _
+    buckets.flatMap(b => for (a <- b; n <- b if a < n) yield (a, n)).distinct.sorted
+      .map { case (a, n) => (a, n, round4(cos(a, n))) }.filter(_._3 >= tau)
+  }
+
   /** The graph's rows (q_id, n_id, rk, cosine), ordered by (q_id, rk). */
   def edges(vecs: Seq[(Long, Array[Double])]): Seq[(Long, Long, Int, Double)] = {
-    val v = vecs.toMap
-    def cos(q: Long, n: Long) = dot(v(q), v(n)) / (math.sqrt(dot(v(q), v(q))) * math.sqrt(dot(v(n), v(n))))
+    val cos = cosine(vecs.toMap) _
     val cands = buckets(vecs).flatMap(b => for (q <- b; n <- b if q != n) yield (q, n)).distinct
     cands.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, ns) =>
       ns.map { case (_, n) => (n, cos(q, n)) }
         .sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && a._1 < b._1))
         .take(KnnK).zipWithIndex.map { case ((n, c), i) =>
-          (q, n, i + 1, BigDecimal(c).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+          (q, n, i + 1, round4(c))
         }
     }
   }
@@ -98,7 +116,8 @@ object KnnReference {
   * of one IVF+PQ query against a trained index, the LSH paths'
   * vector-dimension check, and the kNN-graph engine on the same plane:
   * its job budget, equality with [[KnnReference]] under ties and any
-  * partitioning, and its input checks. */
+  * partitioning, and its input checks — with Dedup's embedding pairs
+  * and LSH ANN, which run on the same signer and scorer. */
 class AnnTrainSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sf = "/root/testdata/sf0.001"
   private lazy val spark = SparkSession.builder()
@@ -328,28 +347,60 @@ class AnnTrainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(expected.exists { case (q, _, rk, c) =>
       expected.exists(x => x._1 == q && x._3 == rk + 1 && x._4 == c) }, "fixture has no tie")
     assert(rowsOf(Similarity.knnGraphOf(e, None)) == expected)
+    // Dedup's embedding pairs on the same signer and scorer: label
+    // blocks of 100 rows, one bucket each at or under the cap, LSH
+    // buckets sized from the largest block over it
+    val labelled = e.withColumn("label", col("vec_id") % 3)
+    val blocks = tieFixture.groupBy(_._1 % 3).values.toSeq
+    val planes = Dedup.adaptivePlanes(100)
+    for (cap <- Seq(Int.MaxValue, 50)) {
+      val buckets = blocks.flatMap(b =>
+        if (b.size > cap) KnnReference.buckets(b, Dedup.adaptiveTables(planes), planes)
+        else Seq(b.map(_._1)))
+      val pairs = KnnReference.pairs(tieFixture, buckets, Dedup.CosineTau)
+      assert(pairs.nonEmpty && Dedup.dedupEmbeddingOn(labelled, cap).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq == pairs, s"cap $cap")
+    }
   }
 
   test("kNN graph rows do not depend on the partitioning: repartition(1/3/7)") {
     val s = spark
     import s.implicits._
     val e = spark.createDataset(tieFixture).toDF("vec_id", "v")
+    val labelled = e.withColumn("label", col("vec_id") % 3)
+    def pairsOf(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val base = rowsOf(Similarity.knnGraphOf(e.repartition(1), None))
+    // the hot arm at cap 50 buckets all three 100-row label blocks
+    val dedupArms = Seq(Int.MaxValue, 50).map(cap =>
+      cap -> pairsOf(Dedup.dedupEmbeddingOn(labelled.repartition(1), cap)))
+    val lsh = rowsOf(Similarity.annLshOf(e.repartition(1), Similarity.Tables_, Similarity.NPlanes))
+    assert(dedupArms.forall(_._2.nonEmpty) && lsh.nonEmpty)
     for (parts <- Seq(3, 7)) {
       assert(rowsOf(Similarity.knnGraphOf(e.repartition(parts), None)) == base, s"repartition($parts)")
       assert(rowsOf(Similarity.knnGraphOf(e.repartition(parts), Some(50L))) ==
         rowsOf(Similarity.knnGraphOf(e.repartition(1), Some(50L))), s"anchor, repartition($parts)")
+      dedupArms.foreach { case (cap, rows) =>
+        assert(pairsOf(Dedup.dedupEmbeddingOn(labelled.repartition(parts), cap)) == rows,
+          s"dedupEmbeddingOn cap $cap, repartition($parts)")
+      }
+      assert(rowsOf(Similarity.annLshOf(e.repartition(parts), Similarity.Tables_,
+        Similarity.NPlanes)) == lsh, s"annLsh, repartition($parts)")
     }
   }
 
   test("a zero-norm vector fails the kNN build naming its vec_id") {
+    // also the cosine operators on the same engine: dedup embedding and LSH ANN
     def vec(i: Int) = Seq.tabulate(8)(j => ((i * 31 + j * 7) % 13 - 6).toFloat)
     val zero = writeEmbeddings((0 until 40).map(i =>
       Row(i.toLong, if (i == 17) Seq.fill(8)(0f) else vec(i), 0)))
     val nul = writeEmbeddings((0 until 40).map(i => Row(i.toLong, if (i == 19) null else vec(i), 0)))
     for ((name, run) <- Seq[(String, () => Unit)](
         "knnEdges" -> (() => Similarity.knnEdges(spark, zero)),
-        "knnGraphExact" -> (() => Similarity.knnGraphExact(spark, zero)))) {
+        "knnGraphExact" -> (() => Similarity.knnGraphExact(spark, zero)),
+        "dedupEmbedding" -> (() => Dedup.dedupEmbedding(spark, zero).collect()),
+        "dedupEmbeddingLsh" -> (() => Dedup.dedupEmbeddingLsh(spark, zero).collect()),
+        "annLsh" -> (() => Similarity.annLsh(spark, zero).collect()))) {
       Similarity.clearTrainCache()
       val msg = messages(intercept[Exception](run()))
       assert(msg.contains("vec_id 17") && msg.contains("norm 0.0"), s"$name: $msg")

@@ -636,6 +636,49 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"hot recall $hit/${hotConfident.size}")
   }
 
+  /** A corpus of three 8-d near-dup clusters: 12 rows labelled "hot",
+    * 6 labelled "cold" and 6 with a null label, each cluster spread
+    * over all three. */
+  private def nullLabelCorpus: Seq[(Long, String, Seq[Double])] =
+    (0 until 24).map { i =>
+      val label = if (i % 4 < 2) "hot" else if (i % 4 == 2) "cold" else null
+      (i.toLong, label, Seq.tabulate(8)(j => (if (j == i % 3) 10.0 else 1.0) + 0.01 * ((i + j) % 5)))
+    }
+
+  test("dedup embedding: rows with a null label never pair (exact arm, hot arm, LSH)") {
+    import spark.implicits._
+    val rows = nullLabelCorpus
+    val nulls = rows.filter(_._2 == null).map(_._1).toSet
+    val e = rows.toDF("vec_id", "label", "v")
+      .withColumn("nrm", graft.functions.DotProduct.norm($"v"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_nulllabel").toString
+    rows.map { case (id, l, v) => (id, v.map(_.toFloat), Option(l).map(x => if (x == "hot") 1 else 2)) }
+      .toDF("vec_id", "embedding", "label").coalesce(1)
+      .write.parquet(s"$dir/embeddings.parquet")
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1)))
+    for ((arm, out) <- Seq(
+        "exact" -> pairs(Dedup.dedupEmbeddingOn(e, Int.MaxValue)),
+        // cap 8: only the 12-row "hot" block is over it
+        "hot" -> pairs(Dedup.dedupEmbeddingOn(e, 8)),
+        "lsh" -> pairs(Dedup.dedupEmbeddingLsh(spark, dir)))) {
+      assert(out.nonEmpty, arm)
+      assert(out.forall { case (a, b) => !nulls(a) && !nulls(b) }, s"$arm: ${out.toSeq}")
+    }
+  }
+
+  test("dedup embedding: a null-label block over the cap keeps the other blocks' pairs") {
+    import spark.implicits._
+    val e = nullLabelCorpus.map { case (id, l, v) => (id, if (l == "hot") null else l, v) }
+      .toDF("vec_id", "label", "v")
+      .withColumn("nrm", graft.functions.DotProduct.norm($"v"))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toSet
+    // cap 8: the 18-row null block is the only block over it
+    val guarded = pairs(Dedup.dedupEmbeddingOn(e, 8))
+    val exact = pairs(Dedup.dedupEmbeddingOn(e, Int.MaxValue))
+    assert(exact.nonEmpty && guarded == exact)
+  }
+
   test("dedupEmbeddingOn: crossed-cap recall on REAL embeddings (sf0.01)") {
     // round-5 verdict item 1: the ≥0.8 recall floor re-asserted on real
     // data rather than a planted cap=10 toy — cap 50 pushes the four

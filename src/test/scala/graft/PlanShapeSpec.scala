@@ -276,21 +276,6 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"no global sort may precede the cut: $plan")
   }
 
-  test("ann_lsh: the candidate-dedup exchange carries ids only") {
-    val plan = SparkEntry.queries("ann_lsh")(spark, sf).queryExecution.executedPlan
-    val candExchanges = plan.collect { case e: ShuffleExchangeExec => e }
-      .filter { e =>
-        val p = e.outputPartitioning.toString
-        p.contains("q_id#") && p.contains("vec_id#")
-      }
-    assert(candExchanges.nonEmpty, "expected the (q_id, vec_id) distinct exchange")
-    candExchanges.foreach { e =>
-      val width = e.child.schema.fields.map(_.dataType.defaultSize).sum
-      assert(width <= 16,
-        s"candidate exchange rows must be two ids (≤16 bytes), got $width bytes: ${e.child.schema}")
-    }
-  }
-
   /** (shuffle bytes read, shuffle bytes written, records written) of
     * every stage `body` runs. */
   private def stageShuffles(body: => Unit): Seq[(Long, Long, Long)] = {
@@ -343,6 +328,27 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(written < vectorBytes / 8,
         s"a shuffle after the bucket shuffle wrote $written bytes: $stages")
     }
+  }
+
+  test("ann_lsh: only a query's bucket-mates are scored, the corpus never shuffles") {
+    import operators.Similarity.{NPlanes, NumQueries, Tables_, TopK}
+    val (e, vecs) = knnInput
+    val parts = e.rdd.getNumPartitions
+    val scored = spark.sparkContext.longAccumulator("LSH pairs scored")
+    val stages = stageShuffles(operators.Similarity.annLshOf(e, Tables_, NPlanes, Some(scored)))
+    // a query scores each corpus row that shares a bucket with it in
+    // some table once, never itself
+    val buckets = KnnReference.buckets(vecs, Tables_, NPlanes)
+    val expected = vecs.map(_._1).filter(_ < NumQueries).map { q =>
+      buckets.filter(_.contains(q)).flatten.distinct.count(_ != q).toLong
+    }.sum
+    assert(scored.value == expected, s"pairs scored ${scored.value}, expected $expected")
+    // every record shuffled is a query's list from one plane partition
+    // or an output row; shuffling the corpus would add one per vector
+    val records = stages.map(_._3).sum
+    assert(records > 0 && records <= NumQueries * (parts + TopK),
+      s"$records records shuffled for $NumQueries queries over $parts partitions " +
+        s"(${vecs.size} vectors): $stages")
   }
 
   test("knn_graph_exact: node sample broadcasts — the corpus side never shuffles") {
