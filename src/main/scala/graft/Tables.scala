@@ -113,19 +113,11 @@ object Tables {
   private def scanMeta(spark: SparkSession, dir: String, name: String): ScanMeta =
     metaCache.computeIfAbsent((dir, name), _ => {
       try {
-        val conf = spark.sparkContext.hadoopConfiguration
-        val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-        val fs = path.getFileSystem(conf)
-        val files = if (fs.getFileStatus(path).isDirectory)
-          fs.listStatus(path).filter(f => f.getPath.getName.endsWith(".parquet"))
-        else Array(fs.getFileStatus(path))
         var groups = 0
         var bytes = 0L
-        files.foreach { f =>
+        dataFiles(spark, s"$dir/$name.parquet").foreach { f =>
           bytes += f.getLen
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try groups += r.getRowGroups.size finally r.close()
+          groups += footer(spark, f).getBlocks.size
         }
         ScanMeta(groups, bytes)
       } catch { case scala.util.control.NonFatal(_) =>
@@ -133,6 +125,35 @@ object Tables {
         ScanMeta(Int.MaxValue, 0L)
       }
     })
+
+  /** The parquet data files of the table at `path` (a file, or the
+    * top level of a directory), by name. */
+  private def dataFiles(spark: SparkSession, path: String): Array[org.apache.hadoop.fs.FileStatus] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.getFileStatus(p).isDirectory) Array(fs.getFileStatus(p))
+    else fs.listStatus(p).filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName)
+  }
+
+  private def footer(spark: SparkSession, f: org.apache.hadoop.fs.FileStatus) = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, spark.sparkContext.hadoopConfiguration))
+    try r.getFooter finally r.close()
+  }
+
+  /** The schema of the parquet table at `path` from its first data
+    * file's footer, read on the driver: the schema Spark's inference
+    * reads from one file, without the one-task Spark job it runs for
+    * every read. None (inference decides) without a readable file. */
+  private def footerSchema(spark: SparkSession, path: String)
+      : Option[org.apache.spark.sql.types.StructType] =
+    try dataFiles(spark, path).headOption.map { f =>
+      import org.apache.spark.sql.execution.datasources.parquet._
+      ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(f.getPath, footer(spark, f)),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   private def spreadOn(spark: SparkSession): Boolean =
     spark.conf.get("spark.graft.spreadNarrowScans", "true") == "true"
@@ -171,7 +192,8 @@ object Tables {
     // table that already stores µs timestamps (e.g. one re-written by
     // Spark) reads through unchanged.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = footerSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
     val fixed =
       if (name == "events" &&
           df.schema("ts").dataType == org.apache.spark.sql.types.LongType)

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -15,8 +16,8 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: ${describe(e)}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -40,14 +41,14 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .flatMap { case (k, g) =>
         try g(spark, sfDir).map(k -> _)
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] guard $k failed: ${e.getMessage}")
+        catch { case NonFatal(e) =>
+          System.err.println(s"[verify] guard $k failed: ${describe(e)}")
           // a guard that THROWS must not silently re-arm the oracle it
           // exists to waive (round-13 ADVICE): in the over-cap regime
           // that compare is designed to fail, so a dropped waiver would
           // record a spurious FAIL. Record a flagged guard_error waiver
           // instead — the gate sees rows-only plus the reason.
-          Some(k -> s"guard_error: ${e.getMessage}")
+          Some(k -> s"guard_error: ${describe(e)}")
         }
       }
     waivers.foreach { case (k, r) =>
@@ -60,4 +61,11 @@ object Verify {
       waivers.map { case (k, r) => s"${q(k)}: ${q(r)}" }.mkString("{", ",", "}"))
     spark.stop()
   }
+
+  /** A failure and its causes, outermost first, as `class: message | …`:
+    * a Spark job failure wraps the task's own exception, whose class
+    * (e.g. `NotSerializableException`) is often the whole story. */
+  def describe(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString(" | ")
 }

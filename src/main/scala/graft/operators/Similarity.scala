@@ -2,11 +2,13 @@ package graft.operators
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField,
+  StructType}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
 import graft.{PackedPlane, PlaneChunk, PlaneRow, Tables}
@@ -18,33 +20,30 @@ import graft.{PackedPlane, PlaneChunk, PlaneRow, Tables}
   * (PQ), the IVF+PQ composite and the LSH-bucketed k-NN graph — all
   * deterministic and recall-tested against the brute force in ScalaTest.
   *
-  * Scale shapes:
-  *   - brute force: the query set is tiny and broadcast; the corpus scan
-  *     is embarrassingly parallel; per-partition candidate scoring feeds
-  *     one k-row-per-query window. Exactness baseline, O(N·Q).
-  *   - IVF: corpus partitioned once into nlist inverted lists by nearest
-  *     coarse centroid (a narrow scan + integer key); queries probe only
-  *     nprobe/nlist of the data — the scan cost drops proportionally, and
-  *     the list assignment is a plain partition key a 1000-executor
-  *     cluster co-locates by.
-  *   - PQ / IVF+PQ: one pipeline — a compressed-domain ADC scan over the
-  *     codes (restricted to the probed inverted lists; PQ probes all of
-  *     them), then an exact re-rank of the shortlist.
-  *   - LSH and the k-NN graph: one cosine engine ([[cosineTopK]]) on the
-  *     packed plane that trains the ANN index. Each row's signatures (L
-  *     tables × nplanes sign bits, [[KnnSigner]]) key it into buckets;
-  *     the graph groups the rows by bucket in one shuffle and scores
-  *     each bucket all-pairs in one task, LSH ANN broadcasts its queries
-  *     and scores each partition's rows against the queries they share
-  *     a bucket with, and a merge of per-node top-k lists (ids and
-  *     cosines only) ranks the rows. Dedup's embedding operators run
-  *     the same signer and bucket scorer keyed by label
-  *     ([[labelPairsOf]]).
+  * Every top-k query — brute force, hard negatives, IVF, LSH, PQ,
+  * IVF+PQ and the kNN anchor — runs on one engine ([[queryTopK]]): the
+  * query set is collected once, one pass over the corpus scores each
+  * row against the queries its candidate rule admits into a bounded
+  * top-k list per query and partition, and the lists merge into a
+  * local result frame. The operators differ only in the rule:
+  *   - brute force: every row; hard negatives: every row of another
+  *     label. Exactness baseline, O(N·Q).
+  *   - IVF: the rows of the query's nprobe nearest inverted lists, a
+  *     row's list being its nearest coarse centroid, computed in-row —
+  *     the scored share drops to nprobe/nlist of the corpus.
+  *   - LSH: the rows that share a bucket with the query in one of L
+  *     tables of sign bits ([[KnnSigner]]).
+  *   - PQ / IVF+PQ: the query's shortlist, which one compressed-domain
+  *     ADC pass over the codes (restricted to the probed lists; PQ
+  *     probes all of them) ranks before the exact pass re-ranks it.
   *
-  * The IVF and PQ queries collect their query set once
-  * ([[queryRows]]), generate candidates, and score them exactly; the
-  * probe ranking ([[probeLists]]) and the exact re-rank
-  * ([[rerankExact]]) are written once.
+  * The full kNN graph, where every row is a query, runs the bucket
+  * engine ([[cosineTopK]]) on the packed plane that trains the ANN
+  * index: one shuffle groups the rows by LSH bucket, each bucket is
+  * scored all-pairs in one task, and a merge of per-node top-k lists
+  * (ids and cosines only) ranks the rows. Dedup's embedding operators
+  * run the same signer and bucket scorer keyed by label
+  * ([[labelPairsOf]]).
   *
   * Cosine math is sequential left-to-right double folds, identical to the
   * DuckDB oracle (SURVEY.md §5).
@@ -81,10 +80,12 @@ object Similarity {
     * ~50×-compressed codes, and every consumer should read them, not
     * retrain): `ivf` (coarse quantizer: cid, vector, norm),
     * `pq_codebook` (block, code, sub-vector; `dim` denormalized onto
-    * every row), `pq_codes` (vec_id, codes, reconstructed norm). */
+    * every row), `pq_codes` (vec_id, codes, reconstructed norm vn,
+    * list_id — the row's IVF inverted list, which routes the ADC scan
+    * without reading the vector). */
   def saveAnnIndex(s: SparkSession, dir: String, path: String): Unit = {
     import s.implicits._
-    ivfCentroids(s, dir).toSeq.toDF("cid", "v", "nrm")
+    annIndex(s, dir).ivf.toSeq.toDF("cid", "v", "nrm")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/ivf")
     val pm = pqModel(s, dir)
     (for { b <- pm.cb.indices; k <- pm.cb(b).indices }
@@ -99,16 +100,20 @@ object Similarity {
     * equality with fresh training, and that a post-load query runs
     * zero training jobs). */
   def loadAnnIndex(s: SparkSession, dir: String, path: String): Unit = {
-    import s.implicits._
-    val ivf = s.read.parquet(s"$path/ivf")
-      .select($"cid", $"v", $"nrm").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1), r.getDouble(2)))
-      .sortBy(_._1)
     val (cb, dim) = readCodebooks(s, path)
     // localCheckpoint: downstream plans read materialized code rows,
     // matching the freshly-trained frame's plan shape
     val codes = s.read.parquet(s"$path/pq_codes").localCheckpoint()
-    annCache.put(s, dir, AnnIndex(ivf, PqModel(cb, codes, dim)))
+    annCache.put(s, dir, AnnIndex(readIvf(s, path), PqModel(cb, codes, dim)))
+  }
+
+  /** The IVF coarse quantizer of a [[saveAnnIndex]] index. */
+  private def readIvf(s: SparkSession, path: String): Array[(Int, Seq[Double], Double)] = {
+    import s.implicits._
+    s.read.parquet(s"$path/ivf")
+      .select($"cid", $"v", $"nrm").collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1), r.getDouble(2)))
+      .sortBy(_._1)
   }
 
   /** The per-block codebooks (block → code → sub-vector) and the
@@ -144,68 +149,96 @@ object Similarity {
       .withColumn("nrm", graft.functions.DotProduct.norm($"v"))
   }
 
-  /** Codegen'd sequential dot — same fold order as the DuckDB oracle. */
-  private def dot(a: Column, b: Column): Column =
-    graft.functions.DotProduct(a, b)
+  /** The corpus side of a top-k query: (vec_id, v) of every embedding. */
+  private def vectors(s: SparkSession, dir: String): DataFrame =
+    embedded(s, dir).select("vec_id", "v")
 
-  /** Rank candidate rows (q_id, vec_id, cos) to top-k per query. */
-  private def topk(cands: DataFrame): DataFrame = {
-    import cands.sparkSession.implicits._
-    val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id")
-    cands.withColumn("rk", row_number().over(w))
-      .filter($"rk" <= TopK)
-      .select($"q_id", $"vec_id".as("n_id"), $"rk", round($"cos", 4).as("cosine"))
-      .orderBy($"q_id", $"rk")
+  /** The query rows of `e`: vec_id < [[NumQueries]]. */
+  private def queriesOf(e: DataFrame): DataFrame = e.filter(col("vec_id") < NumQueries)
+
+  // ------------------------------------------------------ top-k queries
+
+  /** The top-k query engine behind every `ann_*` query, hard negatives
+    * and the kNN anchor: each query's top `k` rows of `corpus` (vec_id
+    * bigint, v array<double>, then any columns the rule reads) by
+    * (cos DESC, vec_id ASC) among the rows `candidates` admits, never
+    * itself. One job collects `queries` (same columns) through the
+    * pack's checks ([[VectorRow]]) and the norm check; `candidates`
+    * builds the rule from them (the PQ shortlist runs its own pass
+    * here, [[adcShortlist]]); one [[mergedLists]] job scores every
+    * corpus row, through the same checks, against each query the rule
+    * admits ([[KnnScore.exact]]). The rows come as an [[edgeFrame]].
+    * `scored`, when given, counts the (query, row) pairs scored. */
+  private def queryTopK(queries: DataFrame, corpus: DataFrame, k: Int,
+      scored: Option[LongAccumulator] = None)(candidates: QuerySet => Candidates): DataFrame = {
+    requireVectors(corpus)
+    val qs = collectQueries(queries)
+    val tops =
+      if (qs.size == 0) Array.empty[TopK]
+      else mergedLists(corpus.queryExecution.toRdd, qs.size, k)(
+        KnnScore.exact(qs.chunk, qs.norms, k, candidates(qs), scored))
+    edgeFrame(corpus.sparkSession, qs.ids, tops)
   }
 
-  /** The query set (vec_id, v, nrm) — vec_id < [[NumQueries]] — in one
-    * collect, sorted on the driver (NumQueries rows need no distributed
-    * sort). Every approximate query reads these rows for its query side:
-    * probe sets, ADC tables and the exact re-rank. */
-  private def queryRows(s: SparkSession, dir: String): Array[(Long, Seq[Double], Double)] = {
-    import s.implicits._
-    embedded(s, dir).filter($"vec_id" < NumQueries)
-      .select($"vec_id", $"v", $"nrm").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
-      .sortBy(_._1)
+  /** A collected query set: the vectors packed in vec_id order at the
+    * first one's width (`chunk`), their checked norms, and the rows for
+    * the columns after v. */
+  private final case class QuerySet(chunk: PlaneChunk, norms: Array[Double],
+      rows: Array[InternalRow]) {
+    def ids: Array[Long] = chunk.ids
+    def size: Int = chunk.rows
+    def d: Int = chunk.d
+    def vector(i: Int): Seq[Double] = chunk.vals.slice(i * d, (i + 1) * d).toSeq
   }
 
-  /** The `nprobe` inverted lists a query (qv, qn) probes: the lists by
-    * (cosine DESC, list_id), the cosine by the same left-to-right dot
-    * fold as the corpus-side assignment ([[centroidCosines]]). */
-  private def probeLists(cents: Array[(Int, Seq[Double], Double)],
-      qv: Seq[Double], qn: Double, nprobe: Int): Seq[Int] =
-    cents.map { case (lid, cv, cn) =>
-      (-cv.zip(qv).map { case (x, y) => x * y }.sum / (qn * cn), lid)
-    }.sorted.take(nprobe).map(_._2).toSeq
+  private def collectQueries(queries: DataFrame): QuerySet = {
+    requireVectors(queries)
+    val rows = queries.queryExecution.toRdd.map(_.copy()).collect().sortBy(_.getLong(0))
+    val cs = packVectors(rows.iterator).toArray
+    val c = PlaneChunk(cs.flatMap(_.ids), cs.flatMap(_.vals), cs.headOption.fold(1)(_.d))
+    QuerySet(c, Array.tabulate(c.rows)(i => KnnScore.norm(c.vals, i * c.d, c.d, c.ids(i))), rows)
+  }
 
-  /** The exact re-rank every candidate-generating query ends in:
-    * candidate (q_id, vec_id) ids re-attach their corpus vectors by an
-    * id equi-join (candidate set ≪ corpus) and the query vectors from a
-    * broadcast frame of `qs` ([[queryRows]]), are scored by exact cosine
-    * and ranked by [[topk]] — reported cosines are exact, recall is the
-    * only approximation. */
-  private def rerankExact(s: SparkSession, dir: String, cands: DataFrame,
-      qs: Array[(Long, Seq[Double], Double)]): DataFrame = {
+  /** A candidate rule: for a corpus row `r` with its checked vector and
+    * norm, which query indices may score it. */
+  private type Candidates = (InternalRow, Array[Double], Double) => Int => Boolean
+
+  private val everyRow: Candidates = (_, _, _) => _ => true
+
+  /** One pass over `rows` into `queries` lists of `k`: `partition`
+    * scores one partition into a list per query, and the non-empty
+    * lists merge in one reduce task of the same job — only ids and
+    * scores shuffle, at most one record per (query, partition). */
+  private def mergedLists(rows: RDD[InternalRow], queries: Int, k: Int)
+      (partition: Iterator[InternalRow] => Array[TopK]): Array[TopK] = {
+    val tops = Array.fill(queries)(new TopK(k))
+    rows.mapPartitions { in =>
+      val lists = partition(in)
+      lists.indices.iterator.filter(lists(_).nonEmpty).map(i => (i, lists(i)))
+    }.reduceByKey(new HashPartitioner(1), (a, b) => a.merge(b))
+      .collect().foreach { case (i, top) => tops(i) = top }
+    tops
+  }
+
+  /** Query `ids(i)`'s list as rows (q_id, n_id, rk, cosine =
+    * round(cos, 4)) ordered by (q_id, rk), in a local frame: Spark's
+    * `round` folds into the local relation, so collecting it runs no
+    * job. */
+  private def edgeFrame(s: SparkSession, ids: Array[Long], tops: Array[TopK]): DataFrame = {
     import s.implicits._
-    val qVecs = qs.toSeq.toDF("q_id", "qv", "qn")
-    topk(cands
-      .join(embedded(s, dir).select($"vec_id", $"v", $"nrm"), Seq("vec_id"))
-      .join(broadcast(qVecs), Seq("q_id"))
-      .withColumn("cos", dot($"qv", $"v") / ($"qn" * $"nrm")))
+    val rows = ids.indices.flatMap(i => tops(i).rows(ids(i)))
+      .map(r => Row.fromSeq(r.toSeq(KnnEdgeSchema)))
+    s.createDataFrame(rows.asJava, KnnEdgeSchema)
+      .select($"q_id", $"n_id", $"rk", round($"cos", 4).as("cosine"))
   }
 
   // ----------------------------------------------------------- bruteforce
 
-  /** Exact top-k cosine neighbors for the query set. */
+  /** Exact top-k cosine neighbors for the query set: [[queryTopK]] over
+    * every row. */
   def annBruteForce(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val e = embedded(s, dir)
-    val q = e.filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn"))
-    val cands = e.join(broadcast(q), $"vec_id" =!= $"q_id")
-      .withColumn("cos", dot($"qv", $"v") / ($"qn" * $"nrm"))
-    topk(cands)
+    val e = vectors(s, dir)
+    queryTopK(queriesOf(e), e, TopK)(_ => everyRow)
   }
 
   val annBruteForceSql: String =
@@ -239,20 +272,25 @@ object Similarity {
     * negative)` triples, and the hard negatives are exactly the
     * highest-cosine vectors that are NOT the query's class): per query
     * vector, the top-k most similar vectors with a DIFFERENT label.
-    * Same broadcast-query/one-scan/window shape as [[annBruteForce]] —
-    * the label predicate rides inside the codegen'd scan, so mining
-    * negatives costs the same one corpus pass as mining neighbors; at
-    * 100 TB the scan parallelizes per-partition with zero vector
-    * shuffle (ids+cos into the final k-row-per-query TakeOrdered). */
+    * The same [[queryTopK]] pass as [[annBruteForce]] with a label
+    * rule, so mining negatives costs the same one corpus pass as
+    * mining neighbors. */
   def hardNegatives(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val e = embedded(s, dir)
-    val q = e.filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("q_id"), $"label".as("q_label"),
-        $"v".as("qv"), $"nrm".as("qn"))
-    val cands = e.join(broadcast(q), $"label" =!= $"q_label")
-      .withColumn("cos", dot($"qv", $"v") / ($"qn" * $"nrm"))
-    topk(cands)
+    val e = embedded(s, dir).select("vec_id", "v", "label")
+    queryTopK(queriesOf(e), e, TopK)(otherLabel(e.schema(2).dataType))
+  }
+
+  /** Rows whose label (column 2, of type `dt`) differs from the
+    * query's by SQL `!=` (NaN equals NaN, -0.0 equals 0.0); a null
+    * label on either side never pairs. */
+  private def otherLabel(dt: DataType)(qs: QuerySet): Candidates = {
+    val labels = qs.rows.map(r => if (r.isNullAt(2)) null else r.get(2, dt))
+    (r, _, _) =>
+      if (r.isNullAt(2)) _ => false
+      else {
+        val l = r.get(2, dt)
+        i => labels(i) != null && !(labels(i) == l || labels(i).equals(l))
+      }
   }
 
   val hardNegativesSql: String =
@@ -287,17 +325,12 @@ object Similarity {
   val NProbe = 11
   val QuantizerIters = 3
 
-  /** Cosine of the row vector against each centroid, as an array column. */
-  private def centroidCosines(cents: Array[(Int, Seq[Double], Double)]): Column =
-    array(cents.map { case (_, cv, cn) =>
-      dot(col("v"), typedlit(cv)) / (col("nrm") * lit(cn))
-    }: _*)
-
-  /** IVF ANN: assign corpus to nearest coarse centroid (inverted lists),
-    * probe the NProbe nearest lists per query. Approximate → rows-only;
-    * recall vs brute force asserted in SimilaritySpec. */
+  /** IVF ANN: each query scores the rows of its [[NProbe]] nearest
+    * inverted lists, a row's list being its nearest coarse centroid.
+    * Approximate → rows-only; recall vs brute force asserted in
+    * SimilaritySpec. */
   def annIvf(s: SparkSession, dir: String): DataFrame =
-    annIvfProbing(s, dir, NProbe)
+    annIvfWith(s, dir, NProbe)
 
   /** The IVF EXACTNESS ANCHOR: at nprobe = nlist every query probes
     * every inverted list, so the candidate set is the whole corpus and
@@ -307,31 +340,41 @@ object Similarity {
     * recall spec; this entry pins the machinery (assignment, probe
     * ranking, scoring, top-k) to the exact result it must degrade to. */
   def annIvfExact(s: SparkSession, dir: String): DataFrame =
-    annIvfProbing(s, dir, NList)
+    annIvfWith(s, dir, NList)
 
-  /** The IVF coarse quantizer of a data dir, (list_id, vector, norm):
-    * [[NList]] centroids refined by [[QuantizerIters]] spherical Lloyd
-    * iterations (cosine argmax, first max wins) from evenly spaced
-    * vec_id seeds. The memoized index's half — trained with the PQ
-    * codebooks in the same passes ([[trainIndex]]). */
-  private[operators] def ivfCentroids(s: SparkSession, dir: String)
-      : Array[(Int, Seq[Double], Double)] =
-    annIndex(s, dir).ivf
+  private def annIvfWith(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
+    val ivf = annIndex(s, dir).ivf
+    val e = vectors(s, dir)
+    queryTopK(queriesOf(e), e, TopK)(inProbedLists(ivf, _, nprobe))
+  }
 
-  private def annIvfProbing(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
-    import s.implicits._
-    val cents = ivfCentroids(s, dir)
-    val lists = embedded(s, dir).withColumn("ds", centroidCosines(cents))
-      .withColumn("list_id", expr("array_position(ds, array_max(ds)) - 1"))
-      .select($"vec_id", $"v", $"nrm", $"list_id")
-    val probes = (for {
-      (qId, qv, qn) <- queryRows(s, dir).toSeq
-      l <- probeLists(cents, qv, qn, nprobe)
-    } yield (qId, qv, qn, l)).toDF("q_id", "qv", "qn", "list_id")
-    val cands = lists.join(broadcast(probes),
-        lists("list_id") === probes("list_id") && $"vec_id" =!= $"q_id")
-      .withColumn("cos", dot($"qv", $"v") / ($"qn" * $"nrm"))
-    topk(cands)
+  /** The `nprobe` inverted lists a query (qv, qn) probes: the lists by
+    * (cosine DESC, list_id), the cosine by the same left-to-right dot
+    * fold as the row-side assignment ([[nearestList]]). */
+  private def probeLists(cents: Array[(Int, Seq[Double], Double)],
+      qv: Seq[Double], qn: Double, nprobe: Int): Seq[Int] =
+    cents.map { case (lid, cv, cn) =>
+      (-cv.zip(qv).map { case (x, y) => x * y }.sum / (qn * cn), lid)
+    }.sorted.take(nprobe).map(_._2).toSeq
+
+  /** Per query, whether it probes each list ([[probeLists]]). */
+  private def probed(ivf: Array[(Int, Seq[Double], Double)], qs: QuerySet,
+      nprobe: Int): Array[Array[Boolean]] =
+    Array.tabulate(qs.size) { i =>
+      val lists = probeLists(ivf, qs.vector(i), qs.norms(i), nprobe).toSet
+      Array.tabulate(ivf.length)(lists)
+    }
+
+  /** Rows in one of the query's `nprobe` probed lists; a row's list is
+    * its cosine argmax over the centroids ([[nearestList]]). */
+  private def inProbedLists(ivf: Array[(Int, Seq[Double], Double)], qs: QuerySet,
+      nprobe: Int): Candidates = {
+    val lists = probed(ivf, qs, nprobe)
+    val (cents, cnorm) = (ivf.flatMap(_._2), ivf.map(_._3))
+    (_, v, nrm) => {
+      val l = nearestList(v, 0, nrm, cents, cnorm, v.length)
+      i => lists(i)(l)
+    }
   }
 
   // ------------------------------------------------------------------ LSH
@@ -353,13 +396,9 @@ object Similarity {
 
   /** LSH ANN: each query's top-[[TopK]] by exact cosine among the
     * corpus rows that share a bucket with it in one of [[Tables_]]
-    * tables of [[NPlanes]] sign bits ([[KnnSigner]]). It is the
-    * engine's `against` path ([[cosineTopK]]): the queries (vec_id <
-    * [[NumQueries]]) broadcast, each plane partition scores its rows
-    * against the queries they share a bucket with, and a merge of the
-    * per-partition lists ranks them by (cos DESC, vec_id ASC) — the
-    * corpus never shuffles. rows-only; recall asserted in
-    * SimilaritySpec. */
+    * tables of [[NPlanes]] sign bits ([[KnnSigner]]) — one
+    * [[queryTopK]] pass, the corpus never shuffles. rows-only; recall
+    * asserted in SimilaritySpec. */
   def annLsh(s: SparkSession, dir: String): DataFrame =
     annLshOf(embedded(s, dir), Tables_, NPlanes)
 
@@ -375,8 +414,21 @@ object Similarity {
     * tables of `nplanes` planes; `scored`, when given, counts the
     * (query, row) pairs scored. */
   private[graft] def annLshOf(e: DataFrame, tables: Int, nplanes: Int,
-      scored: Option[LongAccumulator] = None): DataFrame =
-    cosineTopK(e, Some(NumQueries), TopK, _ => (tables, nplanes), scored)
+      scored: Option[LongAccumulator] = None): DataFrame = {
+    val ev = e.select("vec_id", "v")
+    queryTopK(queriesOf(ev), ev, TopK, scored)(sharedBucket(tables, nplanes))
+  }
+
+  /** Rows that share a bucket with the query in one of `tables` tables
+    * of `nplanes` planes ([[KnnSigner]]). */
+  private def sharedBucket(tables: Int, nplanes: Int)(qs: QuerySet): Candidates = {
+    val signer = new KnnSigner(tables, nplanes, qs.d)
+    val keys = Array.tabulate(qs.size)(i => signer.keys(qs.chunk.vals, i * qs.d))
+    (_, v, _) => {
+      val rk = signer.keys(v, 0)
+      i => rk.indices.exists(t => rk(t) == keys(i)(t))
+    }
+  }
 
   // ------------------------------------------------------------ kNN graph
 
@@ -449,60 +501,47 @@ object Similarity {
     * DuckDB-oracle-checked. The node restriction keeps the anchor
     * O(sample · N) (a full exact graph is O(N²) — infeasible by
     * definition at scale, which is the point of the bucketed production
-    * path). It runs on the same engine: the sample is broadcast, each
-    * plane partition scores its rows against it into per-node lists,
-    * and the same merge ranks them — the corpus vectors never shuffle. */
+    * path). The sample is the query set of one [[queryTopK]] pass, so
+    * the corpus vectors never shuffle. */
   def knnGraphExact(s: SparkSession, dir: String): DataFrame =
     knnGraphOf(embedded(s, dir), Some(KnnNodes))
 
   /** The kNN-graph engine over `e` (vec_id bigint, v array<double>):
     * the edges (q_id, n_id, rk, cosine) of every node, LSH-bucketed
-    * ([[knnGraph]]), or with `nodeMax` of the nodes vec_id < nodeMax
-    * against the whole corpus ([[knnGraphExact]]). `scored`, when
-    * given, counts the (node, candidate) pairs scored. */
+    * ([[cosineTopK]]), or with `nodeMax` of the nodes vec_id < nodeMax
+    * against the whole corpus, one table of zero planes being one
+    * bucket ([[queryTopK]]). `scored`, when given, counts the (node,
+    * candidate) pairs scored. */
   private[graft] def knnGraphOf(e: DataFrame, nodeMax: Option[Long],
-      scored: Option[LongAccumulator] = None): DataFrame =
-    cosineTopK(e, nodeMax, KnnK,
-      n => if (nodeMax.isEmpty) (KnnTables, knnPlanes(n)) else (1, 0), scored)
+      scored: Option[LongAccumulator] = None): DataFrame = nodeMax match {
+    case None => cosineTopK(e, KnnK, scored)
+    case Some(m) =>
+      val ev = e.select("vec_id", "v")
+      queryTopK(ev.filter(col("vec_id") < m), ev, KnnK, scored)(sharedBucket(1, 0))
+  }
 
-  /** The cosine top-k engine behind [[knnGraphOf]] and [[annLshOf]],
-    * over `e` (vec_id bigint, v array<double>) packed once into a plane:
-    * each node's top-`k` neighbors by (cos DESC, vec_id ASC) among the
-    * rows that share an LSH bucket with it in one of the tables of
-    * `lsh(n)` = (tables, planes) ([[KnnSigner]]; one table of zero
-    * planes is one bucket). Without `nodeMax` every row is a node and
-    * one shuffle groups the rows by bucket, each bucket scored
-    * all-pairs in one task; with it the nodes are the rows vec_id <
-    * nodeMax, broadcast and scored against each plane partition's
-    * rows. A `reduceByKey` merges the per-bucket or per-partition lists.
-    * The rows (q_id, n_id, rk, cosine) come ordered by (q_id, rk) and
-    * checkpointed eagerly, after which the plane is released. A
-    * zero-norm or non-finite vector fails naming its vec_id, so no
-    * NaN/∞ cosine reaches a row; null, empty and ragged vectors fail in
-    * the pack. */
-  private def cosineTopK(e: DataFrame, nodeMax: Option[Long], k: Int,
-      lsh: Long => (Int, Int), scored: Option[LongAccumulator]): DataFrame = {
+  /** The bucket engine behind [[knnGraph]], over `e` (vec_id bigint, v
+    * array<double>) packed once into a plane: every node's top-`k`
+    * neighbors by (cos DESC, vec_id ASC) among the rows that share an
+    * LSH bucket with it in one of [[KnnTables]] tables of
+    * [[knnPlanes]]`(n)` planes ([[KnnSigner]]). One shuffle groups the
+    * rows by bucket, each bucket is scored all-pairs in one task, and a
+    * `reduceByKey` merges the per-bucket lists. The rows (q_id, n_id,
+    * rk, cosine) come ordered by (q_id, rk) and checkpointed eagerly,
+    * after which the plane is released. A zero-norm or non-finite
+    * vector fails naming its vec_id, so no NaN/∞ cosine reaches a row;
+    * null, empty and ragged vectors fail in the pack. */
+  private def cosineTopK(e: DataFrame, k: Int, scored: Option[LongAccumulator]): DataFrame = {
     val s = e.sparkSession
     import s.implicits._
-    val sc = s.sparkContext
     val plane = vectorPlane(e)
     try {
       val (n, d) = planeShape(plane)
-      val (tables, nplanes) = lsh(n)
-      val signer = new KnnSigner(tables, nplanes, d)
-      val parts = memberParts(sc, n * tables, d)
-      val lists = nodeMax match {
-        case None =>
-          plane.flatMap(signer.members).groupByKey(parts)
-            .flatMap { case (_, ms) => KnnScore.bucket(ms.toArray, k, scored) }
-        case Some(m) =>
-          val sample = plane.flatMap(c => Iterator.range(0, c.rows).filter(c.ids(_) < m)
-            .map(r => (c.ids(r), java.util.Arrays.copyOfRange(c.vals, r * d, (r + 1) * d))))
-            .collect()
-          val nodes = sc.broadcast(PlaneChunk(sample.map(_._1), sample.flatMap(_._2), d))
-          plane.mapPartitions(cs => KnnScore.against(nodes.value, signer, k, cs, scored))
-      }
-      val rows = lists.reduceByKey(parts, (a, b) => a.merge(b))
+      val signer = new KnnSigner(KnnTables, knnPlanes(n), d)
+      val parts = memberParts(s.sparkContext, n * KnnTables, d)
+      val rows = plane.flatMap(signer.members).groupByKey(parts)
+        .flatMap { case (_, ms) => KnnScore.bucket(ms.toArray, k, scored) }
+        .reduceByKey(parts, (a, b) => a.merge(b))
         .flatMap { case (q, top) => top.rows(q) }
       GraftShims.internalCreateDataFrame(s, rows, KnnEdgeSchema)
         .select($"q_id", $"n_id", $"rk", round($"cos", 4).as("cosine"))
@@ -602,29 +641,32 @@ object Similarity {
       }
   }
 
-  /** One node's bounded top-k neighbors by (cos DESC, vec_id ASC), best
-    * first, in primitive arrays. */
+  /** One node's bounded top-k neighbors by (score DESC, vec_id ASC)
+    * under Spark's double ordering (NaN above every number, -0.0 equal
+    * to 0.0), best first, in primitive arrays. */
   private final class TopK(k: Int) extends Serializable {
     private val ids = new Array[Long](k)
     private val cos = new Array[Double](k)
     private var size = 0
 
-    private def ranksBefore(id: Long, c: Double, i: Int): Boolean =
-      c > cos(i) || (c == cos(i) && id < ids(i))
+    private def ranksBefore(id: Long, c: Double, i: Int): Boolean = {
+      val o = if (c == cos(i)) 0 else java.lang.Double.compare(c, cos(i))
+      o > 0 || (o == 0 && id < ids(i))
+    }
 
-    /** Offers neighbor `id` at cosine `c`: the list keeps the k best ids
-      * by their largest cosine offered. A pair scores the same cosine in
+    /** Offers neighbor `id` at score `c`: the list keeps the k best ids
+      * by their largest score offered. A pair scores the same cosine in
       * every table, so a repeat offer changes nothing. */
-    def offer(id: Long, c: Double): Unit = {
-      var h = 0
-      while (h < size && ids(h) != id) h += 1
-      if (h == size || c > cos(h)) {
-        if (h < size) { // a larger cosine for a held id: drop the old entry
-          System.arraycopy(ids, h + 1, ids, h, size - h - 1)
-          System.arraycopy(cos, h + 1, cos, h, size - h - 1)
-          size -= 1
-        }
-        if (size < k || ranksBefore(id, c, k - 1)) {
+    def offer(id: Long, c: Double): Unit =
+      if (size < k || ranksBefore(id, c, k - 1)) {
+        var h = 0
+        while (h < size && ids(h) != id) h += 1
+        if (h == size || ranksBefore(id, c, h)) {
+          if (h < size) { // a larger score for a held id: drop the old entry
+            System.arraycopy(ids, h + 1, ids, h, size - h - 1)
+            System.arraycopy(cos, h + 1, cos, h, size - h - 1)
+            size -= 1
+          }
           var at = if (size < k) size else k - 1
           if (size < k) size += 1
           while (at > 0 && ranksBefore(id, c, at - 1)) {
@@ -633,7 +675,6 @@ object Similarity {
           ids(at) = id; cos(at) = c
         }
       }
-    }
 
     def merge(o: TopK): TopK = {
       var i = 0
@@ -643,13 +684,16 @@ object Similarity {
 
     def nonEmpty: Boolean = size > 0
 
+    /** The ids held. */
+    def idSet: Set[Long] = ids.iterator.take(size).toSet
+
     /** Node q's edge rows (q_id, n_id, rk, cos). */
     def rows(q: Long): Iterator[InternalRow] =
       Iterator.range(0, size).map(i => InternalRow(q, ids(i), i + 1, cos(i)))
   }
 
-  /** The engine's task-side kernels: checked norms and cosines, and the
-    * scoring loops (a bucket all-pairs, nodes against a partition). */
+  /** The engines' task-side kernels: checked norms and cosines, and the
+    * scoring loops (a bucket all-pairs, a partition against queries). */
   private object KnnScore {
     def bad(msg: String) = new IllegalArgumentException(s"cosine: $msg")
 
@@ -666,6 +710,30 @@ object Similarity {
       val c = dotOf(a, ao, b, bo, d) / (an * bn)
       if (!java.lang.Double.isFinite(c)) throw bad(s"cosine of vec_id $q and vec_id $n is $c")
       c
+    }
+
+    /** One partition of corpus rows (vec_id, v, ...), each through the
+      * pack's checks and the norm check, scored against every query of
+      * `qs` (norms `qn`) that `admit` lets score it, never itself: one
+      * top-`k` list per query. */
+    def exact(qs: PlaneChunk, qn: Array[Double], k: Int, admit: Candidates,
+        scored: Option[LongAccumulator])(rows: Iterator[InternalRow]): Array[TopK] = {
+      val d = qs.d
+      val put = new VectorRow(d, qs.ids(0))
+      val v = new Array[Double](d)
+      val tops = Array.fill(qs.rows)(new TopK(k))
+      var pairs = 0L
+      rows.foreach { r =>
+        val id = put.put(r, v, 0)
+        val nrm = norm(v, 0, d, id)
+        val admits = admit(r, v, nrm)
+        for (i <- 0 until qs.rows if qs.ids(i) != id && admits(i)) {
+          tops(i).offer(id, cosine(qs.ids(i), qs.vals, i * d, qn(i), id, v, 0, nrm, d))
+          pairs += 1
+        }
+      }
+      scored.foreach(_.add(pairs))
+      tops
     }
 
     /** Bucket member i scored against every later member j of another
@@ -713,32 +781,6 @@ object Similarity {
         }
         out
       }
-
-    /** One plane partition's rows scored against every node they share
-      * a bucket with: the partition's per-node top-`k` lists. */
-    def against(nodes: PlaneChunk, signer: KnnSigner, k: Int, chunks: Iterator[PlaneChunk],
-        scored: Option[LongAccumulator]): Iterator[(Long, TopK)] = {
-      val d = nodes.d
-      val norms = Array.tabulate(nodes.rows)(i => norm(nodes.vals, i * d, d, nodes.ids(i)))
-      val keys = Array.tabulate(nodes.rows)(i => signer.keys(nodes.vals, i * d))
-      val tops = Array.fill(nodes.rows)(new TopK(k))
-      var pairs = 0L
-      chunks.foreach { c =>
-        for (r <- 0 until c.rows) {
-          val id = c.ids(r)
-          val nrm = norm(c.vals, r * d, d, id)
-          val rk = signer.keys(c.vals, r * d)
-          for (i <- nodes.ids.indices
-              if nodes.ids(i) != id && rk.indices.exists(t => rk(t) == keys(i)(t))) {
-            tops(i).offer(id, cosine(nodes.ids(i), nodes.vals, i * d, norms(i),
-              id, c.vals, r * d, nrm, d))
-            pairs += 1
-          }
-        }
-      }
-      scored.foreach(_.add(pairs))
-      nodes.ids.indices.iterator.filter(tops(_).nonEmpty).map(i => (nodes.ids(i), tops(i)))
-    }
   }
 
   // ------------------------------------------- label spread over the graph
@@ -858,18 +900,18 @@ object Similarity {
 
   /** Product-quantization ANN (the FAISS-style compressed-domain scan):
     * [[annIvfPq]] with every inverted list probed, so the ADC scan
-    * covers all codes and no routing runs. rows-only; recall vs brute
-    * force asserted in SimilaritySpec. */
+    * covers all codes. rows-only; recall vs brute force asserted in
+    * SimilaritySpec. */
   def annPq(s: SparkSession, dir: String): DataFrame =
     annIvfPqWith(s, dir, NList, PqRerank)
 
-  /** The PQ EXACTNESS ANCHOR: at rerank ≥ corpus size the shortlist is
-    * every (query, vector) pair and the exact re-rank scores all of
-    * them — the output ranking is brute force regardless of the
-    * compressed-domain approximation, so this configuration is
-    * oracle-checked against [[annBruteForceSql]] while still
-    * exercising the full train/encode/ADC machinery. It runs the same
-    * plan as [[annIvfPqExact]]; both registry keys stay. The production
+  /** The PQ EXACTNESS ANCHOR: at an unbounded rerank the shortlist is
+    * every row and the exact re-rank scores all of them — the output
+    * ranking is brute force regardless of the compressed-domain
+    * approximation, so this configuration is oracle-checked against
+    * [[annBruteForceSql]] while exercising training, the in-row list
+    * routing and the re-rank. It runs the same pass as
+    * [[annIvfPqExact]]; both registry keys stay. The production
     * shortlist depth ([[annPq]]) stays rows-only with its recall spec. */
   def annPqExact(s: SparkSession, dir: String): DataFrame =
     annIvfPqWith(s, dir, NList, Int.MaxValue)
@@ -884,8 +926,11 @@ object Similarity {
   private[graft] def pqModel(s: SparkSession, dir: String): PqModel =
     annIndex(s, dir).pq
 
-  /** The ANN index: the IVF coarse quantizer and the PQ model, trained
-    * together and memoized as one value. */
+  /** The ANN index: the IVF coarse quantizer — (list_id, vector, norm)
+    * of [[NList]] centroids refined by [[QuantizerIters]] spherical
+    * Lloyd iterations (cosine argmax, first max wins) from evenly spaced
+    * vec_id seeds — and the PQ model, trained together and memoized as
+    * one value. */
   private[graft] final case class AnnIndex(
       ivf: Array[(Int, Seq[Double], Double)], pq: PqModel)
 
@@ -908,7 +953,8 @@ object Similarity {
     *      after its own count, and an empty list or codeword keeps its
     *      old value;
     *   4. one encode of a fresh scan of `e` through [[encodeWith]] —
-    *      the path [[appendAnnIndex]] shares — checkpointed eagerly.
+    *      the path [[appendAnnIndex]] shares — checkpointed eagerly;
+    *      it fails on a zero-norm vector, naming its vec_id.
     *
     * The plane is released once training ends. A null vector, a null
     * element or a ragged dimension fails the pack naming its vec_id;
@@ -918,7 +964,7 @@ object Similarity {
     val (ivf, cb, dim) = try lloyd(plane) finally plane.unpersist(blocking = false)
     val subdim = dim / PqBlocks
     val codebooks = cb.map(_.grouped(subdim).map(_.toSeq).toArray)
-    val codes = encodeWith(codebooks, subdim, e).localCheckpoint()
+    val codes = encodeWith(codebooks, ivf, e).localCheckpoint()
     AnnIndex(ivf, PqModel(codebooks, codes, dim))
   }
 
@@ -959,6 +1005,25 @@ object Similarity {
     val ivf = Array.tabulate(NList)(l =>
       (l, cents.slice(l * d, (l + 1) * d).toSeq, cnorm(l)))
     (ivf, cb, d)
+  }
+
+  /** The inverted list of `v(off until off + d)`, whose norm is `nrm`:
+    * the cosine argmax over the centroids `cents` (row-major, norms
+    * `cnorm`) by DotProduct's fold, first max wins, NaN above every
+    * number as in `array_max`. */
+  private def nearestList(v: Array[Double], off: Int, nrm: Double, cents: Array[Double],
+      cnorm: Array[Double], d: Int): Int = {
+    var best = 0
+    var bestCos = 0.0
+    var l = 0
+    while (l < cnorm.length) {
+      val cos = dotOf(v, off, cents, l * d, d) / (nrm * cnorm(l))
+      if (l == 0 || cos > bestCos || (cos.isNaN && !bestCos.isNaN)) {
+        best = l; bestCos = cos
+      }
+      l += 1
+    }
+    best
   }
 
   /** `a(ao until ao + d) · b(bo until bo + d)` by
@@ -1088,9 +1153,8 @@ object Similarity {
     val pqSum = new Array[Double](PqBlocks * PqCodes * subdim)
     val pqCnt = new Array[Long](PqBlocks * PqCodes)
 
-    /** The whole-chunk kernel: per vector, the cosine argmax over the
-      * NList centroids (DotProduct's fold, first max wins, NaN above
-      * every number as in `array_max`) and the per-block
+    /** The whole-chunk kernel: per vector, its [[nearestList]] over the
+      * NList centroids and the per-block
       * [[graft.functions.PqCode.argmin]]. */
     def add(c: PlaneChunk, cents: Array[Double], cnorm: Array[Double],
         cb: Array[Array[Double]], ivfOn: Boolean, pqOn: Boolean): LloydSums = {
@@ -1099,17 +1163,7 @@ object Similarity {
       while (r < c.rows) {
         val off = r * d
         if (ivfOn) {
-          val nrm = normOf(v, off, d)
-          var best = 0
-          var bestCos = 0.0
-          var l = 0
-          while (l < NList) {
-            val cos = dotOf(v, off, cents, l * d, d) / (nrm * cnorm(l))
-            if (l == 0 || cos > bestCos || (cos.isNaN && !bestCos.isNaN)) {
-              best = l; bestCos = cos
-            }
-            l += 1
-          }
+          val best = nearestList(v, off, normOf(v, off, d), cents, cnorm, d)
           var j = 0
           while (j < d) { ivfSum(best * d + j) += v(off + j); j += 1 }
           ivfCnt(best) += 1L
@@ -1139,22 +1193,33 @@ object Similarity {
     }
   }
 
-  /** ENCODE `e` (vec_id, v) against FROZEN per-block codebooks: M 4-bit
-    * codes + the exact reconstructed norm per vector — shared by the
-    * initial build ([[pqModel]]) and the incremental append
-    * ([[appendAnnIndex]]), so the two paths cannot diverge: appending
-    * vectors one batch at a time produces byte-identical code rows to
-    * encoding them all in the initial pass. */
-  private def encodeWith(cb: Array[Array[Seq[Double]]], subdim: Int,
+  /** ENCODE `e` (vec_id, v) against a FROZEN index — per-block
+    * codebooks `cb` and the IVF quantizer `ivf` — into the codes frame:
+    * M 4-bit codes, the exact reconstructed norm vn (blocks are
+    * disjoint coordinates, so ‖v̂‖² = Σ_b ‖c_b‖²) and the inverted list
+    * (list_id, [[nearestList]] by the checked norm) per vector, in one
+    * map-only projection. Shared by the initial build ([[pqModel]]) and
+    * the incremental append ([[appendAnnIndex]]), so the two paths
+    * cannot diverge: appending vectors one batch at a time produces
+    * byte-identical code rows to encoding them all in the initial pass. */
+  private def encodeWith(cb: Array[Array[Seq[Double]]], ivf: Array[(Int, Seq[Double], Double)],
       e: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
+    val subdim = cb(0)(0).length
     val withC = e.withColumn("codes", array((0 until PqBlocks).map(b =>
       graft.functions.PqCode(col("v"), b * subdim, subdim, cb(b))): _*))
     val normSqTables = cb.map(_.map(c => c.map(x => x * x).sum))
     val reconNorm = sqrt((0 until PqBlocks).map(b =>
       element_at(typedlit(normSqTables(b).toSeq), col("codes")(b) + 1))
       .reduce(_ + _))
-    withC.select($"vec_id", $"codes").withColumn("vn", reconNorm)
+    val (cents, cnorm, d) = (ivf.flatMap(_._2), ivf.map(_._3), subdim * PqBlocks)
+    val listOf = udf { (id: Long, v: Seq[Double]) =>
+      if (v == null || v.length != d)
+        throw VectorRow.bad(s"vec_id $id has no vector of the index's dimension $d")
+      val a = v.toArray
+      nearestList(a, 0, KnnScore.norm(a, 0, d, id), cents, cnorm, d)
+    }
+    withC.select($"vec_id", $"codes", reconNorm.as("vn"), listOf($"vec_id", $"v").as("list_id"))
   }
 
   /** INCREMENTAL APPEND — the ANN production steady-state (the
@@ -1164,9 +1229,10 @@ object Similarity {
     * persisted codes table. No training pass runs — at 100 TB the
     * append costs one map-only encode scan over the BATCH (codebook
     * read is KB-scale), never a corpus pass, and the frozen IVF
-    * centroids need no maintenance at all (list membership is computed
-    * from the centroids at query time, so appended vectors probe
-    * correctly with zero index surgery). Caller contract: `extra`
+    * centroids need no maintenance at all (each appended code row
+    * carries its list_id, computed from the saved centroids, so
+    * appended vectors probe correctly with zero index surgery). Caller
+    * contract: `extra`
     * carries vec_ids not already in the index (same contract as the
     * batch side of `dedup_incremental`); a re-appended id would shadow
     * nothing but duplicate candidates. AnnIndexSpec proves append ≡
@@ -1175,10 +1241,9 @@ object Similarity {
     * a fresh rebuild's. */
   def appendAnnIndex(s: SparkSession, path: String, extra: DataFrame): Unit = {
     import s.implicits._
-    val (cb, dim) = readCodebooks(s, path)
     val e = extra.select($"vec_id",
       transform($"embedding", x => x.cast("double")).as("v"))
-    encodeWith(cb, dim / PqBlocks, e)
+    encodeWith(readCodebooks(s, path)._1, readIvf(s, path), e)
       .write.mode("append").parquet(s"$path/pq_codes")
   }
 
@@ -1201,23 +1266,23 @@ object Similarity {
     *      disjoint coordinates, so ‖v̂‖² = Σ_b ‖c_b‖² exactly) — the
     *      ~50× compression that lets a 100-TB vector corpus live in
     *      executor memory.
-    *   3. QUERY (ADC): the queries are collected once ([[queryRows]]);
-    *      per query, the q·codeword partial dots form an M×K literal
-    *      lookup table and the [[probeLists]] probe set a literal array,
-    *      both baked into the plan; approximate cosine = table lookups
-    *      summed / (‖q‖·‖v̂‖) — a codegen scan over the CODES of the
-    *      probed lists, never the vectors. The top `rerank` per query
-    *      form the shortlist.
-    *   4. RE-RANK: the shortlist re-attaches its true vectors and is
-    *      re-scored exactly ([[rerankExact]]) — reported cosines are
-    *      exact, recall is the only approximation (measured vs brute
-    *      force in SimilaritySpec).
+    *      Each code row also stores its inverted list (list_id), IVFADC's
+    *      inverted-list layout.
+    *   3. QUERY (ADC): the queries are collected once ([[queryTopK]]);
+    *      per query, the q·codeword partial dots form an M×K table on
+    *      the driver and [[probeLists]] its probe set. One pass over the
+    *      CODES ([[adcShortlist]]) scores the rows of the probed lists
+    *      by approximate cosine = table entries summed / (‖q‖·‖v̂‖) and
+    *      keeps each partition's top `rerank` per query; their merge is
+    *      the shortlist.
+    *   4. RE-RANK: one [[queryTopK]] pass over the vectors scores the
+    *      shortlisted ids exactly — reported cosines are exact, recall
+    *      is the only approximation (measured vs brute force in
+    *      SimilaritySpec).
     *
-    * Scale shape: the fact side is the ~50×-compressed codes frame
-    * joined to a slim `(vec_id, list_id)` routing projection — full
-    * vectors are read only by the routing scan and the re-rank. At
-    * nprobe ≥ nlist every list is probed, so the routing join and the
-    * probe filter are skipped and the scan reads the codes alone. */
+    * Scale shape: the ADC pass reads only the ~50×-compressed codes;
+    * full vectors are read only by the query collect and the re-rank,
+    * and only per-query lists of ids and scores ever shuffle. */
   def annIvfPq(s: SparkSession, dir: String): DataFrame =
     annIvfPqWith(s, dir, NProbe, PqRerank)
 
@@ -1225,61 +1290,60 @@ object Similarity {
     * and rerank ≥ corpus makes the ADC shortlist the whole corpus, so
     * the output is brute force by construction — oracle-checked against
     * [[annBruteForceSql]] while exercising ADC scoring over the codes
-    * and the re-rank. With every list probed no routing runs, so this
-    * anchor no longer covers the routing join; it runs the same plan as
-    * [[annPqExact]]. The production shape ([[annIvfPq]]) stays
-    * rows-only with its recall spec, like the other approximate
-    * defaults. */
+    * and the re-rank. With an unbounded shortlist no ADC pass runs: the
+    * re-rank scores every row of the probed (here: all) lists, routed
+    * in-row. It runs the same pass as [[annPqExact]]. The production
+    * shape ([[annIvfPq]]) stays rows-only with its recall spec, like
+    * the other approximate defaults. */
   def annIvfPqExact(s: SparkSession, dir: String): DataFrame =
     annIvfPqWith(s, dir, NList, Int.MaxValue)
 
   private def annIvfPqWith(s: SparkSession, dir: String,
       nprobe: Int, rerank: Int): DataFrame = {
-    import s.implicits._
-    val cents = ivfCentroids(s, dir)
-    val model = pqModel(s, dir)
-    val (cb, subdim) = (model.cb, model.dim / PqBlocks)
-    val routed = nprobe < NList
-    val qs = queryRows(s, dir)
-    // query side: ADC tables and probe sets, driver-computed literals
-    // (queries and centroids are already K-row driver state)
-    val scored = qs.map { case (qId, qv, qn) =>
-      val tables = Array.tabulate(PqBlocks) { b =>
-        cb(b).map(c => c.zip(qv.slice(b * subdim, (b + 1) * subdim))
-          .map { case (x, y) => x * y }.sum).toSeq
+    val ix = annIndex(s, dir)
+    val e = vectors(s, dir)
+    queryTopK(queriesOf(e), e, TopK) { qs =>
+      if (rerank == Int.MaxValue) inProbedLists(ix.ivf, qs, nprobe)
+      else {
+        val shortlist = adcShortlist(ix, qs, nprobe, rerank)
+        (r, _, _) => {
+          val id = r.getLong(0)
+          i => shortlist(i).contains(id)
+        }
       }
-      val approxDot = (0 until PqBlocks).map(b =>
-        element_at(typedlit(tables(b)), col("codes")(b) + 1)).reduce(_ + _)
-      val probe =
-        if (routed) Seq(typedlit(probeLists(cents, qv, qn, nprobe)).as("probe")) else Nil
-      struct((lit(qId).as("q_id") +: probe) :+
-        (approxDot / (lit(qn) * col("vn"))).as("approx"): _*)
     }
-    val approx =
-      if (routed) {
-        // slim routing projection: ids only, vectors stay in the scan
-        val lists = embedded(s, dir)
-          .withColumn("ds", centroidCosines(cents))
-          .withColumn("list_id",
-            expr("CAST(array_position(ds, array_max(ds)) - 1 AS INT)"))
-          .select($"vec_id", $"list_id")
-        model.codes.join(lists, Seq("vec_id"))
-          .select($"vec_id", $"list_id", explode(array(scored: _*)).as("qa"))
-          .filter(array_contains($"qa.probe", $"list_id"))
-      } else model.codes.select($"vec_id", explode(array(scored: _*)).as("qa"))
-    val w = Window.partitionBy($"q_id").orderBy($"approx".desc, $"vec_id")
-    val candIds = approx
-      .filter($"vec_id" =!= $"qa.q_id")
-      .select($"vec_id", $"qa.q_id".as("q_id"), $"qa.approx".as("approx"))
-      .withColumn("rk", row_number().over(w))
-      .filter($"rk" <= rerank)
-      .select($"q_id", $"vec_id")
-    // at production depths the shortlist is queries×rerank rows of bare
-    // ids — BROADCAST it so the re-rank is a shuffle-free probe of the
-    // corpus scan and full vectors never enter an exchange (plan-asserted
-    // in PlanShapeSpec). The exactness anchor's corpus-sized shortlist
-    // keeps the shuffled join.
-    rerankExact(s, dir, if (rerank == Int.MaxValue) candIds else broadcast(candIds), qs)
+  }
+
+  /** Step 3 of [[annIvfPq]]: per query, the ids of the top `rerank`
+    * code rows by (approx DESC, vec_id ASC) among the rows of its
+    * `nprobe` probed lists, never itself. approx is the ADC estimate:
+    * the driver-built table entries of the row's codes summed in block
+    * order, over (‖q‖·‖v̂‖). One pass over the codes checkpoint; every
+    * global top-`rerank` row is in its partition's top `rerank`, so the
+    * merge of the partitions' lists is exactly the global shortlist. */
+  private def adcShortlist(ix: AnnIndex, qs: QuerySet, nprobe: Int,
+      rerank: Int): Array[Set[Long]] = {
+    val (cb, subdim) = (ix.pq.cb, ix.pq.dim / PqBlocks)
+    val tables = Array.tabulate(qs.size) { i =>
+      val qv = qs.vector(i)
+      Array.tabulate(PqBlocks)(b => cb(b).map(c => c.zip(qv.slice(b * subdim, (b + 1) * subdim))
+        .map { case (x, y) => x * y }.sum))
+    }
+    val lists = probed(ix.ivf, qs, nprobe)
+    val (ids, qn) = (qs.ids, qs.norms)
+    val codes = ix.pq.codes.select("vec_id", "codes", "vn", "list_id").queryExecution.toRdd
+    mergedLists(codes, qs.size, rerank) { rows =>
+      val tops = Array.fill(ids.length)(new TopK(rerank))
+      rows.foreach { r =>
+        val (id, code, vn, l) = (r.getLong(0), r.getArray(1), r.getDouble(2), r.getInt(3))
+        for (i <- ids.indices if ids(i) != id && lists(i)(l)) {
+          val t = tables(i)
+          val dot = (1 until PqBlocks).foldLeft(t(0)(code.getInt(0)))((a, b) => a + t(b)(code.getInt(b)))
+          tops(i).offer(id, dot / (qn(i) * vn))
+        }
+      }
+      tops
+    }.map(_.idSet)
   }
 
   // ------------------------------------------------------------ clusters
@@ -1346,7 +1410,8 @@ object Similarity {
       .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
       .sortBy(_._1)
     val withCos = seeds.foldLeft(emb) { case (df, (sid, sv, snrm)) =>
-      df.withColumn(s"c_$sid", dot($"v", typedlit(sv)) / ($"nrm" * lit(snrm)))
+      df.withColumn(s"c_$sid",
+        graft.functions.DotProduct($"v", typedlit(sv)) / ($"nrm" * lit(snrm)))
     }
     val ids = seeds.map(_._1)
     val chosenSeed = ids.foldRight(lit(-1L)) { (sid, els) =>

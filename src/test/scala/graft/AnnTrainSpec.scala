@@ -56,7 +56,8 @@ object AnnReference {
   * ([[Similarity.planeComponent]] hyperplanes, sign bits by a
   * left-to-right fold, planes sized to ≈ [[Similarity.KnnTargetBucket]]
   * rows per bucket), brute force inside each bucket, then per node the
-  * top [[Similarity.KnnK]] by (cos DESC, n_id ASC). */
+  * top [[Similarity.KnnK]] by (cos DESC, n_id ASC). Also the plain
+  * top-k query: each query's top k by (cos DESC, n_id ASC). */
 object KnnReference {
   import Similarity.{KnnK, KnnTables, KnnTargetBucket, planeComponent}
 
@@ -96,6 +97,19 @@ object KnnReference {
       .map { case (a, n) => (a, n, round4(cos(a, n))) }.filter(_._3 >= tau)
   }
 
+  /** Each query's top `k` rows of `vecs` by (cos DESC, n_id ASC) among
+    * the n that `keep(q, n)` admits, never q itself: rows (q_id, n_id,
+    * rk, cosine) ordered by (q_id, rk). */
+  def topK(vecs: Seq[(Long, Array[Double])], queries: Seq[Long], k: Int)
+      (keep: (Long, Long) => Boolean): Seq[(Long, Long, Int, Double)] = {
+    val cos = cosine(vecs.toMap) _
+    queries.sorted.flatMap { q =>
+      vecs.map(_._1).filter(n => n != q && keep(q, n)).map(n => (n, cos(q, n)))
+        .sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && a._1 < b._1))
+        .take(k).zipWithIndex.map { case ((n, c), i) => (q, n, i + 1, round4(c)) }
+    }
+  }
+
   /** The graph's rows (q_id, n_id, rk, cosine), ordered by (q_id, rk). */
   def edges(vecs: Seq[(Long, Array[Double])]): Seq[(Long, Long, Int, Double)] = {
     val cos = cosine(vecs.toMap) _
@@ -113,11 +127,11 @@ object KnnReference {
 /** ANN index training: one packed plane, one fused Lloyd pass per
   * iteration — job count, reads, equality with [[AnnReference]], the
   * init's seeds and the pack's input checks. Also the Spark-job budget
-  * of one IVF+PQ query against a trained index, the LSH paths'
+  * of the ANN queries against a trained index, the LSH paths'
   * vector-dimension check, and the kNN-graph engine on the same plane:
   * its job budget, equality with [[KnnReference]] under ties and any
   * partitioning, and its input checks — with Dedup's embedding pairs
-  * and LSH ANN, which run on the same signer and scorer. */
+  * and the top-k query engine, which run on the same scorer. */
 class AnnTrainSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sf = "/root/testdata/sf0.001"
   private lazy val spark = SparkSession.builder()
@@ -154,13 +168,13 @@ class AnnTrainSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def messages(e: Throwable): String =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
 
-  private def writeEmbeddings(rows: Seq[Row]): String = {
+  private def writeEmbeddings(rows: Seq[Row], files: Int = 1): String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_anntrain").toString
     val schema = StructType(Seq(
       StructField("vec_id", LongType, nullable = false),
       StructField("embedding", ArrayType(FloatType, containsNull = true)),
       StructField("label", IntegerType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, files), schema)
       .write.parquet(s"$dir/embeddings.parquet")
     dir
   }
@@ -331,6 +345,47 @@ class AnnTrainSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rowsOf(df: DataFrame): Seq[(Long, Long, Int, Double)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq
 
+  /** The tie fixture as an embeddings table of `files` files, label
+    * vec_id % 3 (the values are small integers: exact as floats). */
+  private def tieDir(files: Int): String =
+    writeEmbeddings(tieFixture.map { case (id, v) =>
+      Row(id, v.map(_.toFloat).toSeq, (id % 3).toInt)
+    }, files)
+
+  test("ANN queries on a trained index run at most 3 (IVF+PQ) / 2 (brute force, hard negatives, LSH, kNN anchor) Spark jobs") {
+    Similarity.clearTrainCache()
+    Similarity.trainAnn(spark, sf)
+    try {
+      for ((name, most, run) <- Seq[(String, Int, () => DataFrame)](
+          ("annIvfPq", 3, () => Similarity.annIvfPq(spark, sf)),
+          ("annBruteForce", 2, () => Similarity.annBruteForce(spark, sf)),
+          ("hardNegatives", 2, () => Similarity.hardNegatives(spark, sf)),
+          ("annLsh", 2, () => Similarity.annLsh(spark, sf)),
+          ("knnGraphExact", 2, () => Similarity.knnGraphExact(spark, sf)))) {
+        val jobs = jobsOf(run().collect())
+        assert(jobs <= most, s"$name ran $jobs Spark jobs")
+      }
+    } finally Similarity.clearTrainCache()
+  }
+
+  test("top-k queries under exact cosine ties equal the plain (cos DESC, vec_id ASC) top-k") {
+    val dir = tieDir(1)
+    val ids = tieFixture.map(_._1)
+    val queries = ids.filter(_ < Similarity.NumQueries)
+    val k = Similarity.TopK
+    val all = KnnReference.topK(tieFixture, queries, k)((_, _) => true)
+    // every query has a same-direction twin at another scale: a tie
+    assert(all.exists { case (q, _, rk, c) =>
+      all.exists(x => x._1 == q && x._3 == rk + 1 && x._4 == c) }, "fixture has no tie")
+    Similarity.clearTrainCache()
+    try {
+      assert(rowsOf(Similarity.annBruteForce(spark, dir)) == all, "annBruteForce")
+      assert(rowsOf(Similarity.annIvfExact(spark, dir)) == all, "annIvfExact")
+      assert(rowsOf(Similarity.hardNegatives(spark, dir)) ==
+        KnnReference.topK(tieFixture, queries, k)((q, n) => q % 3 != n % 3), "hardNegatives")
+    } finally Similarity.clearTrainCache()
+  }
+
   test("knnEdges runs at most 6 Spark jobs") {
     Similarity.clearTrainCache()
     try {
@@ -387,10 +442,28 @@ class AnnTrainSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rowsOf(Similarity.annLshOf(e.repartition(parts), Similarity.Tables_,
         Similarity.NPlanes)) == lsh, s"annLsh, repartition($parts)")
     }
+    // the query operators read a table: the same rows stored as 1, 3
+    // and 7 files scan as that many partitions
+    Similarity.clearTrainCache()
+    try {
+      val byFiles = Seq(1, 3, 7).map { files =>
+        val dir = tieDir(files)
+        (files, rowsOf(Similarity.annBruteForce(spark, dir)), rowsOf(Similarity.annIvfPq(spark, dir)),
+          rowsOf(Similarity.annLsh(spark, dir)))
+      }
+      val (_, bf, ivfPq, lshRows) = byFiles.head
+      assert(bf.nonEmpty && ivfPq.nonEmpty && lshRows.nonEmpty)
+      byFiles.tail.foreach { case (files, b, p, l) =>
+        assert(b == bf, s"annBruteForce, $files files")
+        assert(p == ivfPq, s"annIvfPq, $files files")
+        assert(l == lshRows, s"annLsh, $files files")
+      }
+    } finally Similarity.clearTrainCache()
   }
 
   test("a zero-norm vector fails the kNN build naming its vec_id") {
-    // also the cosine operators on the same engine: dedup embedding and LSH ANN
+    // also the cosine operators on the same scorer: dedup embedding and
+    // the top-k queries
     def vec(i: Int) = Seq.tabulate(8)(j => ((i * 31 + j * 7) % 13 - 6).toFloat)
     val zero = writeEmbeddings((0 until 40).map(i =>
       Row(i.toLong, if (i == 17) Seq.fill(8)(0f) else vec(i), 0)))
@@ -400,7 +473,10 @@ class AnnTrainSpec extends AnyFunSuite with BeforeAndAfterAll {
         "knnGraphExact" -> (() => Similarity.knnGraphExact(spark, zero)),
         "dedupEmbedding" -> (() => Dedup.dedupEmbedding(spark, zero).collect()),
         "dedupEmbeddingLsh" -> (() => Dedup.dedupEmbeddingLsh(spark, zero).collect()),
-        "annLsh" -> (() => Similarity.annLsh(spark, zero).collect()))) {
+        "annLsh" -> (() => Similarity.annLsh(spark, zero).collect()),
+        "annBruteForce" -> (() => Similarity.annBruteForce(spark, zero).collect()),
+        "hardNegatives" -> (() => Similarity.hardNegatives(spark, zero).collect()),
+        "annIvfPq" -> (() => Similarity.annIvfPq(spark, zero).collect()))) {
       Similarity.clearTrainCache()
       val msg = messages(intercept[Exception](run()))
       assert(msg.contains("vec_id 17") && msg.contains("norm 0.0"), s"$name: $msg")

@@ -144,4 +144,11 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(recovered, "no seed in 1..5 recovered the three blobs")
   }
+
+  test("Verify names every cause of a failed query, class and message") {
+    val cause = new java.io.NotSerializableException("graft.operators.Similarity$")
+    val e = new org.apache.spark.SparkException("Task not serializable", cause)
+    assert(Verify.describe(e) == "org.apache.spark.SparkException: Task not serializable | " +
+      "java.io.NotSerializableException: graft.operators.Similarity$")
+  }
 }

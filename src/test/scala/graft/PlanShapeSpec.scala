@@ -212,19 +212,33 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("ann_ivf_pq: no exchange carries full vectors") {
-    // the composite's contract: vectors are read only by the routing
-    // scan and the re-rank probe — every shuffle moves codes, slim
-    // routing ids, or scalar scores; the bounded shortlist broadcasts
-    val plan = SparkEntry.queries("ann_ivf_pq")(spark, sf)
-      .queryExecution.executedPlan
-    val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
-    assert(exchanges.nonEmpty)
-    exchanges.foreach { e =>
-      val fields = e.child.schema.fieldNames.toSet
-      assert(!fields.contains("v") && !fields.contains("qv"),
-        s"no shuffle may carry full vectors, got $fields")
+  test("ann_ivf_pq: only per-query lists shuffle, only the re-rank rescans embeddings") {
+    // the composite's contract on a trained index: one collect of the
+    // queries, one ADC pass over the codes checkpoint, one exact re-rank
+    // over the embeddings scan; every record shuffled is one query's
+    // list from one partition, never a corpus row
+    import operators.Similarity.NumQueries
+    operators.Similarity.trainAnn(spark, sf)
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        scans.add(e.stageInfos.exists(_.rddInfos.exists(_.name == "FileScanRDD")))
     }
+    org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val stages =
+      try stageShuffles(SparkEntry.queries("ann_ivf_pq")(spark, sf).collect())
+      finally {
+        org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    val codesParts = operators.Similarity.pqModel(spark, sf).codes.rdd.getNumPartitions
+    val corpusParts = Tables(spark, sf, "embeddings").rdd.getNumPartitions
+    val records = stages.map(_._3).sum
+    assert(records <= NumQueries * (codesParts + corpusParts),
+      s"$records records shuffled for $NumQueries queries: $stages")
+    assert(scans.toArray.toSeq == Seq(true, false, true),
+      s"jobs reading the embeddings scan, in order: $scans")
   }
 
   test("dedup_spans: census leg is column-pruned — one postings exchange, KB-scale census shuffle") {

@@ -9,7 +9,9 @@ tree (each tree builds into its own .bench_build/). The first side of a
 pair alternates: odd seeds run the parent first, even seeds the change.
 Every run is appended to BENCH_PAIRS_<name>.json (written after each
 run; runs already in the file are skipped, so an interrupted batch
-resumes). For each workload and end-to-end metric of BENCHMARK.json it
+resumes). Each run's row records its wall seconds (`wall_s`), and the
+report prints each workload's total batch wall time, so a later batch
+can be budgeted. For each workload and end-to-end metric of BENCHMARK.json it
 prints both sides' median and quartiles, the change's win count and a
 verdict:
 
@@ -35,6 +37,7 @@ import math
 import os
 import subprocess
 import sys
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -60,8 +63,10 @@ def quartiles(xs):
 def run_one(tree, workload, seed, seconds):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+    start = time.monotonic()
     p = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE,
                        stderr=subprocess.DEVNULL, text=True)
+    wall = round(time.monotonic() - start, 2)
     lines = p.stdout.strip().splitlines()
     # a non-zero exit is an errored run, whatever it printed: perfbench
     # prints the harness's result line before it exits 1
@@ -71,10 +76,11 @@ def run_one(tree, workload, seed, seconds):
         res = None
     if res is None:
         return {"correct": False, "attempted": 1, "failed": 1, "exit_code": p.returncode,
-                "error": "exit %d" % p.returncode if p.returncode
+                "wall_s": wall, "error": "exit %d" % p.returncode if p.returncode
                 else "exit 0, no result line"}
     row = {k: res[k] for k in ("correct", "attempted", "failed")}
     row["exit_code"] = p.returncode
+    row["wall_s"] = wall
     for name, m in res["metrics"].items():
         row[name] = m["value"]
     return row
@@ -127,6 +133,10 @@ def report(runs, bench):
         print("%s: %d pairs (seeds %s), failed %d/%d parent, %d/%d change, all correct: %s"
               % (w, len(seeds), ",".join(map(str, seeds)), fail["parent"], att["parent"],
                  fail["change"], att["change"], correct))
+        walls = [r["wall_s"] for r in by.values() if "wall_s" in r]
+        if walls:
+            print("  batch wall time %.0f s over %d runs (%.1f s a pair)"
+                  % (sum(walls), len(walls), 2 * sum(walls) / len(walls)))
         for m in bench["end_to_end"]:
             name = m["name"]
             pairs = [tuple(by[(side, s)].get(name) if by[(side, s)]["correct"] else None
