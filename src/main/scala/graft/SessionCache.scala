@@ -53,7 +53,7 @@ import org.apache.spark.sql.SparkSession
 final class SessionCache[V](val maxEntries: Int = 4,
     onEvict: V => Unit = (_: V) => (),
     onClear: V => Unit = (_: V) => ()) {
-  private final class Holder(build: () => V) {
+  private final class Holder(val stamp: String, build: () => V) {
     @volatile var forced = false
     val released = new java.util.concurrent.atomic.AtomicBoolean(false)
     lazy val value: V = { val v = build(); forced = true; v }
@@ -96,10 +96,14 @@ final class SessionCache[V](val maxEntries: Int = 4,
     h
   }
 
-  def getOrCompute(s: SparkSession, key: String)(build: => V): V = {
+  /** The value of (s, key), built on a miss. `stamp` fingerprints the
+    * input the value was built from (e.g. [[Tables.fingerprint]]): an
+    * entry stamped differently is stale, leaves through the eviction
+    * path (its hooks run) and is rebuilt. */
+  def getOrCompute(s: SparkSession, key: String, stamp: String = "")(build: => V): V = {
     // re-insert on hit = LRU order; a miss reserves the slot with an
     // unforced holder so a concurrent same-key caller joins this fit
-    val h = touch(s, key)(_.getOrElse(new Holder(() => build)))
+    val h = touch(s, key)(_.filter(_.stamp == stamp).getOrElse(new Holder(stamp, () => build)))
     val v = h.value
     // evicted mid-build? the eviction pass saw forced=false and skipped
     // the hook — the builder releases its own orphaned value
@@ -111,7 +115,7 @@ final class SessionCache[V](val maxEntries: Int = 4,
   /** Seed (s, key) with an already-built value. A value it replaces
     * leaves through the eviction path (onEvict only). */
   def put(s: SparkSession, key: String, v: V): Unit = {
-    val h = new Holder(() => v)
+    val h = new Holder("", () => v)
     h.value
     touch(s, key)(_ => h)
     ()

@@ -136,6 +136,14 @@ object Tables {
       .sortBy(_.getPath.getName)
   }
 
+  /** The (path, length, modification time) of every data file of table
+    * `name` under `dir`, in path order: one driver-side listing, no
+    * Spark job. A memo stamped with it rebuilds once the table is
+    * rewritten in place ([[SessionCache.getOrCompute]]). */
+  def fingerprint(spark: SparkSession, dir: String, name: String): String =
+    dataFiles(spark, s"$dir/$name.parquet")
+      .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").mkString(";")
+
   private def footer(spark: SparkSession, f: org.apache.hadoop.fs.FileStatus) = {
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, spark.sparkContext.hadoopConfiguration))

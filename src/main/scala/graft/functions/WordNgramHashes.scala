@@ -122,17 +122,19 @@ object WordNgramHashes {
     * wordNgrams→PolyHash form spent ~4 s/sweep at sf0.1 allocating and
     * re-decoding gram strings). */
   def compute(text: UTF8String, n: Int, sortedDistinct: Boolean = true): ArrayData = {
-    val hs = hashArray(text, n)
-    val m = hs.length
-    if (m == 0) return new GenericArrayData(Array.empty[Any])
-    if (!sortedDistinct) {
-      val outPos = new Array[Any](m)
-      var i = 0
-      while (i < m) { outPos(i) = hs(i); i += 1 }
-      return new GenericArrayData(outPos)
-    }
-    new GenericArrayData(sortDedup(hs, m))
+    val hs = if (sortedDistinct) hashes(text, n) else hashArray(text, n)
+    val out = new Array[Any](hs.length)
+    var i = 0
+    while (i < hs.length) { out(i) = hs(i); i += 1 }
+    new GenericArrayData(out)
   }
+
+  /** The sorted distinct packed hashes of [[compute]] as a primitive
+    * array (empty for a null text) — the gram set of Dedup's document
+    * profile. */
+  def hashes(text: UTF8String, n: Int): Array[Long] =
+    if (text == null) Array.emptyLongArray
+    else { val hs = hashArray(text, n); sortDedup(hs, hs.length) }
 
   /** Winnowing selection (Schleimer et al., SIGMOD 2003) in the SAME
     * native pass: positional gram hashes, then the minimum of every
@@ -166,12 +168,12 @@ object WordNgramHashes {
       i += 1
     }
     if (m < w) mins(0) = hs(dq(head)) // the single clipped window
-    new GenericArrayData(sortDedup(mins, nw))
+    new GenericArrayData(sortDedup(mins, nw).map(h => h: Any))
   }
 
   /** Sort the first `m` elements in place and return the distinct
-    * prefix boxed for [[GenericArrayData]]. */
-  private def sortDedup(hs: Array[Long], m: Int): Array[Any] = {
+    * prefix. */
+  private def sortDedup(hs: Array[Long], m: Int): Array[Long] = {
     java.util.Arrays.sort(hs, 0, m)
     var w = 0
     var i = 0
@@ -179,10 +181,7 @@ object WordNgramHashes {
       if (w == 0 || hs(i) != hs(w - 1)) { hs(w) = hs(i); w += 1 }
       i += 1
     }
-    val out = new Array[Any](w)
-    i = 0
-    while (i < w) { out(i) = hs(i); i += 1 }
-    out
+    if (w == hs.length) hs else java.util.Arrays.copyOf(hs, w)
   }
 
   /** Column API: sorted distinct 62-bit n-gram hashes of a text column. */

@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import graft.Tables
 import graft.functions.{PolyHash, SimHash64, WordNgramHashes, TextFeatures => TF}
 
@@ -29,16 +34,18 @@ import graft.functions.{PolyHash, SimHash64, WordNgramHashes, TextFeatures => TF
   *     non-polynomial fingerprint (e.g. HMAC-truncated) — the operator
   *     shape (hash-key groupBy, min-id survivor) is unchanged.
   *   - ngram: inverted-index posting lists keyed by (block, gram),
-  *     blocked by (lang × length-bucket); a document-frequency cap
+  *     blocked by (lang × length-bucket), read from one memoized
+  *     per-document profile (gram hashes + MinHash signature) by the
+  *     posting-pair engine shared with MinHash; a document-frequency cap
   *     ([[NgramDfCap]]) keeps boilerplate grams from squaring a posting
   *     list, with over-cap grams falling back to a linear representative
   *     STAR so heavy near-dup clusters still surface; candidates are
   *     then verified with EXACT Jaccard over full gram sets — the
   *     standard candidate/verify set-similarity split.
-  *   - minhash: signatures via 16 parallel min-aggregations over one
-  *     gram-hash scan (map-side partial agg; NO 16× row fanout), then an
-  *     LSH band-bucket equi-join whose output is only the candidate set;
-  *     exact Jaccard verification touches candidates, not all pairs.
+  *   - minhash: the 16 signature mins are computed in the profile row
+  *     from its gram hashes; band buckets are postings of the same
+  *     engine (occupancy-capped like the n-gram df), and exact Jaccard
+  *     verification touches candidates, not all pairs.
   *   - simhash: one-pass codegen'd [[SimHash64]] fingerprint, then a
   *     4×16-bit chunk equi-join (pigeonhole: Hamming ≤ 3 ⇒ some chunk
   *     equal) — no quadratic pair scan.
@@ -145,6 +152,272 @@ object Dedup {
   val NgramN = 3
   val JaccardTau = 0.5
 
+  /** Exploded 62-bit gram-hash rows ([[WordNgramHashes]]) with the
+    * blocking key — the posting representation of
+    * [[dedupIncrementalOn]]: the exchange carries an 8-byte hash
+    * instead of a ~20-byte gram string. */
+  private def hashedGramsOf(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.withColumn("hs", WordNgramHashes($"text", NgramN))
+      .select($"doc_id", $"lang", expr("n_chars DIV 100").as("lb"),
+        explode($"hs").as("gh"))
+  }
+
+  private val duckGrams: String =
+    s"""SELECT doc_id, lang, lb, len(gs) AS n, unnest(gs) AS gram FROM (
+       |    SELECT doc_id, lang, n_chars // 100 AS lb,
+       |      list_distinct(${TF.duckNgrams(TF.duckToks, NgramN)}) AS gs
+       |    FROM documents)""".stripMargin
+
+  // ---------------------------------------------------- document profile
+
+  /** One document's near-dup profile: its block key (lang, and lb =
+    * n_chars DIV 100), the sorted distinct gram hashes of
+    * [[WordNgramHashes]] and the [[MinHashK]] signature mins computed
+    * from them, h_i = min over grams of ((2i+1)·(gh mod 2^31) +
+    * 1000003·i) mod p. The packed hash's low 31 bits are PolyHash base
+    * 31, so the mins are the ones the DuckDB oracle folds. A null lang
+    * is its own block, as in a DataFrame groupBy; a null lb is
+    * [[Postings.NullLb]]. A text without grams (null, empty or under
+    * [[NgramN]] tokens) has no postings, so it never pairs. */
+  private[operators] final class DocProfile(val lang: String, val lb: Long,
+      val grams: Array[Long]) extends Serializable {
+    val sig: Array[Long] = Array.tabulate(if (grams.isEmpty) 0 else MinHashK) { i =>
+      var m = Long.MaxValue
+      var j = 0
+      while (j < grams.length) {
+        m = math.min(m, ((2L * i + 1) * (grams(j) & 0x7FFFFFFFL) + 1000003L * i) % P)
+        j += 1
+      }
+      m
+    }
+  }
+
+  /** The profiles of `docs` (doc_id, lang, n_chars, text) keyed by
+    * doc_id. One pass: the scan's rows are hash-spread by doc_id across
+    * max(session parallelism, scan partitions) — the `documents` file
+    * is one row group, so an unspread scan is one task — and each is
+    * profiled after the spread. The spread is unconditional (not
+    * [[Tables.spread]]'s gated one): the verify reads the profile by
+    * doc_id on this same partitioner, so it never shuffles the profile
+    * again. Unpersisted: a caller whose verify re-reads it persists it
+    * ([[persisted]]). */
+  private def profileOf(docs: DataFrame): Profile = {
+    val rows = docs.select(col("doc_id").cast("long"), col("lang").cast("string"),
+      expr("n_chars DIV 100").cast("long"), col("text")).queryExecution.toRdd
+    val part = new HashPartitioner(
+      math.max(docs.sparkSession.sparkContext.defaultParallelism, rows.getNumPartitions))
+    rows.map { r =>
+      if (r.isNullAt(0)) throw new IllegalArgumentException("documents: a null doc_id")
+      (r.getLong(0), (if (r.isNullAt(1)) null else r.getUTF8String(1).toString,
+        if (r.isNullAt(2)) Postings.NullLb else r.getLong(2),
+        if (r.isNullAt(3)) null else r.getUTF8String(3).clone()))
+    }.partitionBy(part)
+      .mapValues { case (lang, lb, text) =>
+        new DocProfile(lang, lb, WordNgramHashes.hashes(text, NgramN))
+      }
+  }
+
+  private type Profile = RDD[(Long, DocProfile)]
+
+  /** The profile of `docs`, persisted: the pair builds read it three
+    * times (postings and both ends of the verify). */
+  private def persisted(docs: DataFrame): Profile =
+    profileOf(docs).persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** The `documents` profile of (session, dir), built once and shared
+    * by [[ngramPairs]] and [[dedupMinHash]]; stamped with the table's
+    * [[Tables.fingerprint]], so a rewritten table is re-profiled. */
+  private def profile(s: SparkSession, dir: String, stamp: String): Profile =
+    profileCache.getOrCompute(s, dir, stamp)(persisted(Tables(s, dir, "documents")))
+
+  private[graft] val profileCache =
+    new graft.SessionCache[Profile](onEvict = _.unpersist(blocking = false))
+
+  /** The [[Tables.fingerprint]] of `documents` that stamps the
+    * profile, pair and label memos: one driver listing, taken once per
+    * public call and passed down. */
+  private def documentsStamp(s: SparkSession, dir: String): String =
+    Tables.fingerprint(s, dir, "documents")
+
+  // ------------------------------------------------ posting-pair engine
+
+  /** The posting-pair engine's task-side parts. */
+  private object Postings {
+    /** lb of a document whose n_chars is null: below any n_chars DIV 100. */
+    val NullLb: Long = Long.MinValue
+
+    /** A posting key: (lang, lb, gram hash) of an n-gram posting, or
+      * (null, band, band key) of a MinHash band bucket. */
+    final case class Key(s: String, x: Long, y: Long)
+
+    /** Postings sort by (key, doc_id), so each key's run starts with its
+      * minimum id. Any total order that agrees with key equality
+      * serves; a null `s` sorts first. */
+    implicit object Order extends Ordering[(Key, Long)] {
+      def compare(p: (Key, Long), q: (Key, Long)): Int = {
+        val (a, b) = (p._1, q._1)
+        val c0 = if (a.s eq b.s) 0 else if (a.s == null) -1 else if (b.s == null) 1
+          else a.s.compareTo(b.s)
+        if (c0 != 0) c0
+        else if (a.x != b.x) java.lang.Long.compare(a.x, b.x)
+        else if (a.y != b.y) java.lang.Long.compare(a.y, b.y)
+        else java.lang.Long.compare(p._2, q._2)
+      }
+    }
+
+    /** Partitions a (k, _) record by k's hashCode — for a (doc_id, _)
+      * pair the partition HashPartitioner puts doc_id in, i.e. the
+      * profile's. */
+    final class ByFirst(val numPartitions: Int) extends Partitioner {
+      def getPartition(key: Any): Int = {
+        val m = key.asInstanceOf[Product2[Any, Any]]._1.hashCode % numPartitions
+        if (m < 0) m + numPartitions else m
+      }
+    }
+
+    def gramKeys(p: DocProfile): Iterator[Key] =
+      p.grams.iterator.map(Key(p.lang, p.lb, _))
+
+    /** Band b's key: the base-31 polynomial of its 4 signature rows. */
+    def bandKeys(p: DocProfile): Iterator[Key] =
+      Iterator.range(0, p.sig.length / 4).map { b =>
+        val s = p.sig
+        Key(null, b, (s(4 * b) * 29791 + s(4 * b + 1) * 961 + s(4 * b + 2) * 31 + s(4 * b + 3)) % P)
+      }
+
+    /** The candidate pairs (a < b) of one partition of postings sorted
+      * by (key, doc_id). A key with at most `cap` postings pairs all its
+      * ids; a longer one pairs its minimum (the run's first id) with
+      * every other id as they stream by. A task holds at most cap + 1
+      * ids, whatever the run length. */
+    def pairs(sorted: Iterator[(Key, Long)], cap: Long): Iterator[(Long, Long)] = {
+      val in = sorted.buffered
+      var buf = new Array[Long](16)
+      Iterator.continually(in.hasNext).takeWhile(identity).flatMap { _ =>
+        val key = in.head._1
+        var n = 0
+        while (n <= cap && in.hasNext && in.head._1 == key) {
+          if (n == buf.length) buf = java.util.Arrays.copyOf(buf, 2 * n)
+          buf(n) = in.next()._2; n += 1
+        }
+        if (n <= cap) {
+          val ids = buf.take(n)
+          for (i <- ids.iterator; j <- ids.iterator if i < j) yield (i, j)
+        } else {
+          val mn = buf(0)
+          val head = buf.iterator.slice(1, n)
+          val rest = Iterator.continually(in.hasNext && in.head._1 == key)
+            .takeWhile(identity).map(_ => in.next()._2)
+          (head ++ rest).filter(_ != mn).map((mn, _))
+        }
+      }
+    }
+
+    /** The keys of one sorted partition holding more than `cap` postings. */
+    def hotKeys(sorted: Iterator[(Key, Long)], cap: Long): Long = {
+      var hot = 0L
+      var key: Key = null
+      var n = 0L
+      sorted.foreach { case (k, _) =>
+        if (key == null || k != key) { key = k; n = 0 }
+        n += 1
+        if (n == cap + 1) hot += 1
+      }
+      hot
+    }
+
+    /** |A ∩ B| of two sorted distinct arrays, by merge. */
+    def shared(a: Array[Long], b: Array[Long]): Int = {
+      var (i, j, n) = (0, 0, 0)
+      while (i < a.length && j < b.length) {
+        if (a(i) < b(j)) i += 1
+        else if (a(i) > b(j)) j += 1
+        else { n += 1; i += 1; j += 1 }
+      }
+      n
+    }
+
+    /** The grams of every profile in one partition, by doc_id. */
+    def gramsById(docs: Iterator[(Long, DocProfile)]): scala.collection.mutable.LongMap[Array[Long]] = {
+      val m = scala.collection.mutable.LongMap.empty[Array[Long]]
+      docs.foreach { case (id, p) => m.update(id, p.grams) }
+      m
+    }
+
+    /** (a, b, raw Jaccard) of a verified pair, or None when the sizes
+      * alone rule it out: jaccard ≤ min/max, with half-ulp slack
+      * (τ − 0.00005) because the final filter compares the ROUNDED
+      * jaccard. */
+    def jaccard(a: Long, ga: Array[Long], b: Long, gb: Array[Long]): Option[InternalRow] = {
+      val (na, nb) = (ga.length, gb.length)
+      if (math.min(na, nb) < (JaccardTau - 0.00005) * math.max(na, nb)) None
+      else {
+        val sh = shared(ga, gb)
+        Some(InternalRow(a, b, sh.toDouble / (na + nb - sh)))
+      }
+    }
+  }
+
+  /** The engine's postings: every profile's `keys` paired with its
+    * doc_id, shuffled by key and sorted by (key, doc_id) within each
+    * partition. */
+  private def postingsOf(prof: Profile)(keys: DocProfile => Iterator[Postings.Key])
+      : RDD[(Postings.Key, Long)] = {
+    val byKey = new Postings.ByFirst(prof.getNumPartitions)
+    import Postings.Order
+    prof.flatMap { case (id, p) => keys(p).map(k => ((k, id), ())) }
+      .repartitionAndSortWithinPartitions(byKey)
+      .map(_._1)
+  }
+
+  /** The distinct candidate pairs (a_id < b_id) of sorted postings
+    * under `cap` ([[Postings.pairs]]), partitioned like the profile by
+    * a_id. */
+  private def candidatePairs(postings: RDD[(Postings.Key, Long)], cap: Long)
+      : RDD[(Long, Long)] =
+    postings.mapPartitions(Postings.pairs(_, cap)).map((_, ()))
+      .reduceByKey(new Postings.ByFirst(postings.getNumPartitions), (_, _) => ())
+      .keys
+
+  /** The verify: both ends of every candidate pair read their gram sets
+    * from the profile — a by a_id on the candidates' own partitioning,
+    * b after one shuffle of (b, a, grams of a) by b_id — and a pair the
+    * size ratio admits gets its exact Jaccard by a merge of the two
+    * sorted arrays. Rows (a_id, b_id, jaccard) carry the raw ratio; the
+    * callers round it. */
+  private def verifiedRows(s: SparkSession, prof: Profile, cands: RDD[(Long, Long)])
+      : DataFrame = {
+    val withA = cands.zipPartitions(prof) { (ps, docs) =>
+      val grams = Postings.gramsById(docs)
+      ps.map { case (a, b) => (b, (a, grams(a))) }
+    }
+    val rows = withA.partitionBy(prof.partitioner.get).zipPartitions(prof) { (ps, docs) =>
+      val grams = Postings.gramsById(docs)
+      ps.flatMap { case (b, (a, ga)) => Postings.jaccard(a, ga, b, grams(b)) }
+    }
+    GraftShims.internalCreateDataFrame(s, rows, JaccardSchema)
+  }
+
+  /** The candidate pairs (a_id, b_id) of `docs`' profile under `cap`;
+    * the profile is read once, so it is not persisted. */
+  private def candidatesOf(docs: DataFrame, cap: Long)
+      (keys: DocProfile => Iterator[Postings.Key]): DataFrame =
+    GraftShims.internalCreateDataFrame(docs.sparkSession,
+      candidatePairs(postingsOf(profileOf(docs))(keys), cap)
+        .map { case (a, b) => InternalRow(a, b) },
+      StructType(JaccardSchema.take(2)))
+
+  private val JaccardSchema = StructType(Seq(
+    StructField("a_id", LongType, nullable = false),
+    StructField("b_id", LongType, nullable = false),
+    StructField("jaccard", DoubleType, nullable = false)))
+
+  /** Pairs at round(jaccard, 4) ≥ [[JaccardTau]]. */
+  private def atTau(rows: DataFrame): DataFrame =
+    rows.select(col("a_id"), col("b_id"), round(col("jaccard"), 4).as("jaccard"))
+      .filter(col("jaccard") >= JaccardTau)
+
   /** Document-frequency cap for n-gram CANDIDATE GENERATION: a gram
     * present in more than this many documents of one block is excluded
     * from the all-pairs posting-list expansion — one such gram in a
@@ -171,144 +444,56 @@ object Dedup {
     * cluster (the round-2 advisor's blind spot). */
   val NgramDfCap = 64L
 
-  /** Exploded 62-bit gram-hash rows ([[WordNgramHashes]]) with the
-    * blocking key — the candidate-stage representation: the exchange
-    * carries an 8-byte hash instead of a ~20-byte gram string. */
-  private def hashedGramsOf(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.withColumn("hs", WordNgramHashes($"text", NgramN))
-      .select($"doc_id", $"lang", expr("n_chars DIV 100").as("lb"),
-        explode($"hs").as("gh"))
-  }
-
-  private val duckGrams: String =
-    s"""SELECT doc_id, lang, lb, len(gs) AS n, unnest(gs) AS gram FROM (
-       |    SELECT doc_id, lang, n_chars // 100 AS lb,
-       |      list_distinct(${TF.duckNgrams(TF.duckToks, NgramN)}) AS gs
-       |    FROM documents)""".stripMargin
-
-  /** Candidate (a_id, b_id) pairs from the DF-capped inverted-index
-    * self-join — public so DedupSpec can measure the candidate-count
-    * reduction the cap buys on a boilerplate corpus.
-    *
-    * The gram explode runs ONCE: the frame is persisted across its two
-    * consumers (the posting-list aggregation and the star-fallback
-    * re-join — without the persist the over-cap branch re-evaluates
-    * the full explode, which is exactly the per-leg re-scan the
-    * posting-list formulation exists to avoid). The persisted frame is
-    * released eagerly by [[ngramPairs]] (the production entry, which
-    * materializes the result first); direct callers lean on Spark's
-    * context cleaner to reclaim it once the frame is unreachable —
-    * the [[labelsOf]] pattern. */
+  /** The n-gram candidate (a_id, b_id) pairs of `docs` under the
+    * document-frequency cap `dfCap`: the posting-pair engine over the
+    * documents' profile, with one posting per (lang, n_chars DIV 100,
+    * gram hash). Blocking on (lang, length bucket) because similar
+    * sizes are a precondition of J ≥ τ; the operator for pairs whose
+    * sizes DIFFER is [[dedupContainmentOn]]. Public so DedupSpec and
+    * the benchmark can count what the cap buys on boilerplate. */
   def ngramCandidates(docs: DataFrame, dfCap: Long): DataFrame =
-    ngramCandidates(docs, dfCap, hashedGramsOf(docs).persist())
+    candidatesOf(docs, dfCap)(Postings.gramKeys)
 
-  /** As above with the hashed-gram rows supplied by the caller (who
-    * owns their persistence lifecycle). Blocking is (lang, length-
-    * bucket) — similar sizes are a precondition of J ≥ τ; the operator
-    * for pairs whose sizes DIFFER is [[dedupContainmentOn]], which has
-    * its own prefix-filtered candidate stage. */
-  def ngramCandidates(docs: DataFrame, dfCap: Long, g: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    // Posting-list formulation: ONE gram scan, ONE shuffle for the
-    // under-cap path. Each (block, gram) group gathers its doc ids via
-    // the bounded [[graft.functions.BoundedCollect]] aggregate (buffer
-    // ≤ cap+1 longs per group under any skew — a corpus-boilerplate
-    // gram can't OOM a reducer) plus an O(1) exact df count and group
-    // min. Under-cap grams expand to all pairs (≤ cap²/2 per gram);
-    // over-cap grams expand to the linear STAR against the group min by
-    // re-joining the (persisted) gram rows on the (typically tiny —
-    // AQE broadcasts it when measured small) over-cap key set. An
-    // inverted-index SELF-JOIN would instead re-evaluate the gram
-    // explode per join leg (measured 3× slower at sf0.1) and a
-    // window-df formulation buffers whole blocks in the sort (measured
-    // 10× slower).
-    val lim = if (dfCap >= Int.MaxValue) Int.MaxValue
-      else (dfCap + 1).toInt
-    val keyCols = Seq("lang", "lb", "gh")
-    val agg = g
-      .groupBy(keyCols.map(col): _*)
-      .agg(graft.functions.BoundedCollect($"doc_id", lim).as("ids"),
-        count(lit(1)).as("df"), min($"doc_id").as("mn"))
-    val allPairs = agg.filter($"df" <= dfCap)
-      .select(explode(expr(
-        "filter(flatten(transform(ids, a -> transform(ids, b -> " +
-          "struct(a AS a_id, b AS b_id)))), p -> p.a_id < p.b_id)")).as("p"))
-      .select($"p.a_id", $"p.b_id")
-    val starPairs = agg.filter($"df" > dfCap)
-      .select((keyCols :+ "mn").map(col): _*)
-      .join(g, keyCols)
-      .filter($"doc_id" =!= $"mn")
-      .select($"mn".as("a_id"), $"doc_id".as("b_id"))
-    allPairs.union(starPairs).distinct()
-  }
+  /** N-gram Jaccard near-dup pairs within blocks, over the profile of
+    * `docs` (see [[ngramPairs]]). */
+  def dedupNgramOn(docs: DataFrame, dfCap: Long = NgramDfCap): DataFrame =
+    ngramPairsOf(docs.sparkSession, persisted(docs), dfCap).orderBy(col("a_id"), col("b_id"))
 
-  /** N-gram Jaccard near-dup pairs within blocks: DF-capped posting-list
-    * candidates, then EXACT Jaccard verification over the full gram-HASH
-    * sets (the minhash shape: candidates bound the work, the verify
-    * restores exactness). Two verify accelerations, both lossless:
-    * a size-ratio prefilter (jaccard ≤ min(na,nb)/max(na,nb), so pairs
-    * with >1/τ size skew can't pass and skip the intersection), and long
-    * arrays instead of gram strings (see [[WordNgramHashes]]) — together
-    * they cut the sf0.1 verify from ~5 s to well under a second. */
-  /** EXACT Jaccard verification of a candidate frame over full gram-
-    * hash sets (unordered) — the verify stage shared by the public
-    * operator and the [[ngramPairs]] materialized cache. */
-  private def verifyPairs(docs: DataFrame, cands: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    val sets = docs.withColumn("hs", WordNgramHashes($"text", NgramN))
-      .select($"doc_id", $"hs", size($"hs").as("n"))
-    cands
-      .join(sets.select($"doc_id".as("a_id"), $"hs".as("ha"), $"n".as("na")), "a_id")
-      .join(sets.select($"doc_id".as("b_id"), $"hs".as("hb"), $"n".as("nb")), "b_id")
-      // jaccard ≤ min/max, so size-skewed pairs can't reach τ — with
-      // half-ulp slack (τ − 0.00005) because the FINAL filter compares
-      // the ROUNDED jaccard: a pair at true J ∈ [τ−0.00005, τ) rounds
-      // up to τ and must not be prefiltered away
-      .filter(least($"na", $"nb") >=
-        lit(JaccardTau - 0.00005) * greatest($"na", $"nb"))
-      .withColumn("shared", size(array_intersect($"ha", $"hb")))
-      .withColumn("jaccard",
-        round($"shared".cast("double") / ($"na" + $"nb" - $"shared"), 4))
-      .filter($"jaccard" >= JaccardTau)
-      .select($"a_id", $"b_id", $"jaccard")
-  }
+  /** The verified n-gram pairs of a profile under `dfCap`. */
+  private def ngramPairsOf(s: SparkSession, prof: Profile, dfCap: Long): DataFrame =
+    atTau(verifiedRows(s, prof, candidatePairs(postingsOf(prof)(Postings.gramKeys), dfCap)))
 
-  def dedupNgramOn(docs: DataFrame, dfCap: Long = NgramDfCap): DataFrame = {
-    import docs.sparkSession.implicits._
-    verifyPairs(docs, ngramCandidates(docs, dfCap)).orderBy($"a_id", $"b_id")
-  }
-
-  /** The verified near-dup pair list, MATERIALIZED ONCE per (session,
-    * data dir) and shared by every consumer — [[dedupNgram]],
-    * [[dedupComponents]], [[dedupCanonical]], [[dedupSurvivors]] each
-    * need the same candidates+verify result, and recomputing it per
-    * consumer was ~2/3 of the dedup family's round-3 cost (the
-    * round-3 verdict's top finding; SURVEY §8c concedes a real
-    * pipeline materializes this stage). `localCheckpoint` (eager)
-    * truncates the plan to the materialized partitions, so each
-    * consumer's plan starts from the pair ROWS, not the gram scan.
-    * [[graft.SessionCache]] lifecycle: LRU eviction only drops the
-    * entry and leaves the blocks to the ContextCleaner (a still-held
-    * frame stays executable: localCheckpoint truncated its lineage, so
-    * unpersisting under it would fail later executions), and
-    * [[clearPairCache]] drops+releases everything (perfbench clears it
+  /** The verified n-gram near-dup pair list (a_id, b_id, jaccard) of
+    * (session, dir), MATERIALIZED ONCE and shared by every consumer —
+    * [[dedupNgram]], [[dedupComponents]], [[dedupCanonical]],
+    * [[dedupSurvivors]] each need the same result.
+    *
+    * It is the posting-pair engine over the memoized `documents`
+    * profile ([[DocProfile]]): every gram hash of a document is a
+    * posting keyed (lang, n_chars DIV 100, gram); one shuffle sorts
+    * the postings by (key, doc_id), and each key's run pairs all its
+    * ids under [[NgramDfCap]], else stars its minimum against the rest
+    * ([[Postings.pairs]]). The distinct pairs are verified by EXACT
+    * Jaccard over the full gram-hash sets, after a lossless size-ratio
+    * prefilter ([[verifiedRows]]). The whole build — profile, postings,
+    * pairs, verify — is one Spark job.
+    *
+    * `localCheckpoint` (eager) truncates the plan to the materialized
+    * rows. [[graft.SessionCache]] lifecycle: the entry is stamped with
+    * the table's [[Tables.fingerprint]], so a rewritten `documents`
+    * rebuilds; LRU eviction only drops the entry and leaves the blocks
+    * to the ContextCleaner (a still-held frame stays executable:
+    * localCheckpoint truncated its lineage, so unpersisting under it
+    * would fail later executions), and [[clearPairCache]] drops and
+    * releases everything, the profile included (perfbench clears it
     * before every job, so each job pays the build exactly once).
-    * DedupSpec exercises the eviction. */
+    * DedupSpec exercises the eviction and the rewrite. */
   def ngramPairs(s: SparkSession, dir: String): DataFrame =
-    pairCache.getOrCompute(s, dir) {
-      // r14: spread the gram explode + verify substrate (see
-      // Tables.spread) — measured −0.7 s at sf0.1, and at sf1+ the
-      // single-row-group documents scan serializes the whole
-      // candidates+verify build otherwise. Quadratic pair-stage
-      // compute per byte ⇒ the low floor.
-      val docs = graft.Tables.spread(
-        Tables(s, dir, "documents"), dir, "documents",
-        graft.Tables.SpreadMinComputeBytes, col("doc_id"))
-      val g = hashedGramsOf(docs).persist()
-      try verifyPairs(docs, ngramCandidates(docs, NgramDfCap, g))
-        .localCheckpoint() // eager: materializes before g is released
-      finally g.unpersist(blocking = false)
+    ngramPairs(s, dir, documentsStamp(s, dir))
+
+  private def ngramPairs(s: SparkSession, dir: String, stamp: String): DataFrame =
+    pairCache.getOrCompute(s, dir, stamp) {
+      ngramPairsOf(s, profile(s, dir, stamp), NgramDfCap).localCheckpoint()
     }
 
   private[graft] val pairCache =
@@ -335,8 +520,12 @@ object Dedup {
     checkpointRdd(df).exists(r =>
       r.sparkContext.getPersistentRDDs.contains(r.id))
 
-  /** Drop all materialized pair lists (next [[ngramPairs]] rebuilds). */
-  def clearPairCache(): Unit = pairCache.clear()
+  /** Drop all materialized pair lists and document profiles (the next
+    * [[ngramPairs]] or [[dedupMinHash]] rebuilds them). */
+  def clearPairCache(): Unit = {
+    pairCache.clear()
+    profileCache.clear()
+  }
 
   def dedupNgram(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -652,108 +841,43 @@ object Dedup {
     * fold-for-fold, so the compare is decidable at every scale. */
   val BandBucketCap = 64L
 
-  /** MinHash+LSH near-dup pairs: signatures → band buckets (occupancy-
-    * capped, see [[BandBucketCap]]) → candidate equi-join → exact-
-    * Jaccard verify of candidates only. */
+  /** MinHash+LSH near-dup pairs over the memoized `documents` profile
+    * (the one [[ngramPairs]] builds): see [[dedupMinHashOn]]. */
   def dedupMinHash(s: SparkSession, dir: String): DataFrame =
-    dedupMinHashOn(Tables(s, dir, "documents"), BandBucketCap)
+    minHashPairsOf(s, profile(s, dir, documentsStamp(s, dir)), BandBucketCap)
 
   /** The band-bucket candidate (a_id, b_id) pairs under `bucketCap` —
     * public so DedupSpec can plant a viral near-identical group and
     * assert the star fallback bounds candidate volume while preserving
     * the component (the [[containmentCandidates]] precedent). */
-  def minHashCandidates(docs: DataFrame, bucketCap: Long): DataFrame = {
-    import docs.sparkSession.implicits._
-    val bands = minHashBands(minHashProfile(docs))
-    val occ = bands.groupBy($"band", $"bkey")
-      .agg(count(lit(1)).as("occ"), min($"doc_id").as("mn"))
-    bandCandidates(bands, occ, bucketCap)
-  }
+  def minHashCandidates(docs: DataFrame, bucketCap: Long): DataFrame =
+    candidatesOf(docs, bucketCap)(Postings.bandKeys)
 
-  def dedupMinHashOn(docs: DataFrame, bucketCap: Long): DataFrame = {
-    import docs.sparkSession.implicits._
-    val profile = minHashProfile(docs)
-    val bands = minHashBands(profile)
-    // exact per-bucket occupancy + representative: one map-side-combined
-    // count over the band rows (O(1) state per bucket); the band rows'
-    // underlying signature exchange is shared with the verify stage via
-    // ReusedExchange, so the census costs a count, not a second gram scan
-    val occ = bands.groupBy($"band", $"bkey")
-      .agg(count(lit(1)).as("occ"), min($"doc_id").as("mn"))
-    val cand = bandCandidates(bands, occ, bucketCap)
-    // the cap's recall trade made OBSERVABLE (the dedupSpansOn census
-    // precedent): how many buckets fell back to the star
-    val census = occ.filter($"occ" > bucketCap)
-      .agg(count(lit(1)).as("n_hot_buckets"))
-    // exact-Jaccard verify on candidates only
-    val verified = cand
-      .join(profile.select($"doc_id".as("a_id"), $"gs".as("ga")), "a_id")
-      .join(profile.select($"doc_id".as("b_id"), $"gs".as("gb")), "b_id")
-      .withColumn("inter", size(array_intersect($"ga", $"gb")))
-      .withColumn("jaccard", round(
-        $"inter".cast("double") / (size($"ga") + size($"gb") - $"inter"), 4))
-      .filter($"jaccard" >= JaccardTau)
-      .select($"a_id", $"b_id", $"jaccard")
-    // census-side OUTER join (1 row × pair rows): when the cap is so
-    // tight every pair drops, the report still carries the census row
+  /** MinHash+LSH near-dup pairs of `docs`: the posting-pair engine over
+    * the documents' profile ([[DocProfile]]), with one posting per
+    * (band, band key) of the [[MinHashK]]-min signature. Buckets of at
+    * most `bucketCap` documents pair all their members, larger ones
+    * star their minimum against the rest ([[BandBucketCap]]); the
+    * distinct candidates are verified by exact Jaccard over the full
+    * gram-hash sets, as in [[ngramPairs]]. `n_hot_buckets` counts the
+    * over-cap buckets of the sorted postings themselves, so a retried
+    * task cannot count twice; a left join from that one-row census
+    * keeps a row when no pair verifies. */
+  def dedupMinHashOn(docs: DataFrame, bucketCap: Long): DataFrame =
+    minHashPairsOf(docs.sparkSession, persisted(docs), bucketCap)
+
+  private def minHashPairsOf(s: SparkSession, prof: Profile, bucketCap: Long): DataFrame = {
+    import s.implicits._
+    val postings = postingsOf(prof)(Postings.bandKeys)
+    val census = GraftShims.internalCreateDataFrame(s,
+      postings.mapPartitions(p => Iterator((0, Postings.hotKeys(p, bucketCap))))
+        .reduceByKey(new HashPartitioner(1), _ + _)
+        .map { case (_, n) => InternalRow(n) },
+      StructType(Seq(StructField("n_hot_buckets", LongType, nullable = false))))
+    val verified = atTau(verifiedRows(s, prof, candidatePairs(postings, bucketCap)))
     census.join(verified, lit(true), "left")
       .select($"a_id", $"b_id", $"jaccard", $"n_hot_buckets")
       .orderBy($"a_id", $"b_id")
-  }
-
-  /** Under-cap buckets expand to all pairs; over-cap buckets emit the
-    * linear star against the bucket min. Shared by the operator and the
-    * spec-facing [[minHashCandidates]]. */
-  private def bandCandidates(bands: DataFrame, occ: DataFrame,
-      bucketCap: Long): DataFrame = {
-    import bands.sparkSession.implicits._
-    val withOcc = bands.join(occ, Seq("band", "bkey"))
-    val underPairs = withOcc.filter($"occ" <= bucketCap)
-      .select($"band", $"bkey", $"doc_id").as("a")
-      .join(withOcc.filter($"occ" <= bucketCap)
-        .select($"band", $"bkey", $"doc_id").as("b"),
-        $"a.band" === $"b.band" && $"a.bkey" === $"b.bkey" &&
-        $"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("a_id"), $"b.doc_id".as("b_id"))
-    val starPairs = withOcc.filter($"occ" > bucketCap && $"doc_id" =!= $"mn")
-      .select(least($"mn", $"doc_id").as("a_id"),
-        greatest($"mn", $"doc_id").as("b_id"))
-    underPairs.union(starPairs).distinct()
-  }
-
-  /** Per-doc frame carrying the 16 signature mins s0..s15 AND the gram-
-    * hash set for the verify stage — one aggregation pass, one shuffle. */
-  private def minHashProfile(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    // ONE aggregation pass computes both the 16 affine min-hashes
-    // h_i(g) = ((2i+1)·g31 + 1000003·i) mod p  (no 16× row fanout) and
-    // the doc's gram-hash set for the verify stage — a single shuffle
-    // keyed by doc_id instead of separate signature/gram-set
-    // aggregations. Gram rows come from the shared [[hashedGramsOf]]
-    // pipeline; the packed hash's low 31 bits ARE PolyHash base 31
-    // (gh = h31 | h131 << 31), so `gh % 2^31` reproduces the original
-    // signature inputs exactly while the shuffle and the verify arrays
-    // carry 8-byte longs instead of gram strings.
-    val sigAggs = (0 until MinHashK).map { i =>
-      min((lit(2L * i + 1) * $"g31" + lit(1000003L * i)) % P).as(s"s$i")
-    } :+ collect_set($"gh").as("gs")
-    hashedGramsOf(docs)
-      .withColumn("g31", $"gh" % lit(2147483648L))
-      .groupBy($"doc_id").agg(sigAggs.head, sigAggs.tail: _*)
-  }
-
-  /** One row per (doc, band) with the band's packed key. */
-  private def minHashBands(profile: DataFrame): DataFrame = {
-    import profile.sparkSession.implicits._
-    // band key = base-31 polynomial combine of the band's 4 signature rows
-    val weights = Seq(29791L, 961L, 31L, 1L)
-    val bandCols = (0 until Bands).map { b =>
-      val key = (0 until 4).map(j => col(s"s${4 * b + j}") * lit(weights(j)))
-        .reduce(_ + _) % P
-      struct(lit(b).as("band"), key.as("bkey"))
-    }
-    profile.select($"doc_id", explode(array(bandCols: _*)).as("bk"))
-      .select($"doc_id", $"bk.band".as("band"), $"bk.bkey".as("bkey"))
   }
 
   // Mirrors the hashed pipeline: the packed 62-bit gram hash's low 31
@@ -1650,10 +1774,14 @@ object Dedup {
     * (~15-28 s EACH at sf10) — the same rebuild-per-consumer class the
     * round-3 verdict flagged for the pair list itself. [[labelsOf]]
     * already returns a persisted frame, so the memo holds the reference;
-    * built once per (session, dir) like the pair list,
+    * built once per (session, dir) like the pair list, and stamped
+    * like it with the `documents` [[Tables.fingerprint]];
     * [[graft.SessionCache]] lifecycle. */
   def ngramLabels(s: SparkSession, dir: String): DataFrame =
-    labelCache.getOrCompute(s, dir) { labelsOf(ngramPairs(s, dir)) }
+    ngramLabels(s, dir, documentsStamp(s, dir))
+
+  private def ngramLabels(s: SparkSession, dir: String, stamp: String): DataFrame =
+    labelCache.getOrCompute(s, dir, stamp) { labelsOf(ngramPairs(s, dir, stamp)) }
 
   private val labelCache = new graft.SessionCache[DataFrame](onEvict = _.unpersist(false))
 
@@ -2196,8 +2324,9 @@ object Dedup {
   def dedupPipeline(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables(s, dir, "documents")
-    val pairs = ngramPairs(s, dir)
-    val labels = ngramLabels(s, dir)
+    val stamp = documentsStamp(s, dir)
+    val pairs = ngramPairs(s, dir, stamp)
+    val labels = ngramLabels(s, dir, stamp)
     val exactDrops = exactDropIds(docs).persist()
     val canonicalDrops = labels.filter($"id" =!= $"lab").select($"id".as("doc_id"))
     val kept = docs.join(exactDrops.union(canonicalDrops).distinct(),

@@ -755,4 +755,119 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!Dedup.checkpointLive(last),
       "clearPairCache must unpersist checkpoint blocks")
   }
+
+  /** Plain-Scala n-gram and MinHash pairs of (doc_id, lang, n_chars,
+    * text) rows: postings per (lang, n_chars DIV 100, gram) or (band,
+    * band key) — a null lang is its own block —, all pairs of a key
+    * with at most `cap` documents, else its minimum against the rest,
+    * then the exact Jaccard of the gram-hash sets rounded to 4 places
+    * at ≥ τ. MinHash also returns the over-cap bucket count. */
+  private object PairReference {
+    type Doc = (Long, String, Option[Long], String)
+    private def grams(text: String): Set[Long] = if (text == null) Set.empty else {
+      val a = graft.functions.WordNgramHashes.compute(
+        org.apache.spark.unsafe.types.UTF8String.fromString(text), Dedup.NgramN)
+      (0 until a.numElements()).map(a.getLong).toSet
+    }
+    private def round4(x: Double) =
+      java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
+
+    private def verified(docs: Seq[Doc], keys: Doc => Seq[Any], cap: Long)
+        : (Set[(Long, Long, Double)], Long) = {
+      val posts = docs.flatMap(d => keys(d).map(_ -> d._1)).groupBy(_._1).values.map(_.map(_._2))
+      val cands = posts.flatMap { ids =>
+        if (ids.size <= cap) for (a <- ids; b <- ids if a < b) yield (a, b)
+        else ids.filter(_ != ids.min).map(b => (ids.min, b))
+      }.toSet
+      val gs = docs.map(d => d._1 -> grams(d._4)).toMap
+      (cands.flatMap { case (a, b) =>
+        val sh = (gs(a) intersect gs(b)).size
+        val j = round4(sh.toDouble / (gs(a).size + gs(b).size - sh))
+        if (j >= Dedup.JaccardTau) Some((a, b, j)) else None
+      }, posts.count(_.size > cap).toLong)
+    }
+
+    def ngram(docs: Seq[Doc], cap: Long): Set[(Long, Long, Double)] =
+      verified(docs, d => grams(d._4).toSeq.map(g => (d._2, d._3.map(_ / 100), g)), cap)._1
+
+    def minHash(docs: Seq[Doc], cap: Long): (Set[(Long, Long, Double)], Long) =
+      verified(docs, { d =>
+        val g = grams(d._4)
+        if (g.isEmpty) Nil else {
+          val sig = (0 until Dedup.MinHashK).map(i =>
+            g.map(h => ((2L * i + 1) * (h % 2147483648L) + 1000003L * i) % PolyHash.Mod).min)
+          (0 until Dedup.Bands).map(b => (b, (sig(4 * b) * 29791 + sig(4 * b + 1) * 961 +
+            sig(4 * b + 2) * 31 + sig(4 * b + 3)) % PolyHash.Mod))
+        }
+      }, cap)
+  }
+
+  test("n-gram and MinHash pairs: null/empty text, null lang and over-cap keys match the reference") {
+    import spark.implicits._
+    val near = (1 to 14).map(j => s"w$j").mkString(" ")
+    val viral = "the same template sentence that twelve documents all carry word for word"
+    val docs: Seq[PairReference.Doc] = Seq(
+      (1L, null, Some(150L), near + " alpha"),  // null lang: its own block …
+      (2L, null, Some(160L), near + " beta"),   // … so 1-2 pair
+      (3L, "en", Some(150L), near + " alpha"),  // same text as 1, lang en
+      (4L, "en", Some(150L), near + " gamma"),
+      (5L, "en", Some(150L), null),             // null text: no grams
+      (6L, "en", Some(150L), ""),               // empty text: no grams
+      (7L, "en", Some(150L), "two words"),      // under NgramN tokens
+      (8L, null, Some(150L), null),
+      (9L, "en", None, near + " alpha")) ++     // null n_chars: its own block
+      (20L to 31L).map(i => (i, "de", Some(300L), viral)) // over-cap group
+    val df = docs.toDF("doc_id", "lang", "n_chars", "text")
+    def triples(rows: Array[org.apache.spark.sql.Row]) =
+      rows.filterNot(_.isNullAt(0)).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    for (cap <- Seq(8L, Long.MaxValue)) {
+      val ngram = triples(Dedup.dedupNgramOn(df, cap).collect())
+      assert(ngram == PairReference.ngram(docs, cap), s"ngram cap $cap")
+      val mh = Dedup.dedupMinHashOn(df, cap).collect()
+      val (want, hot) = PairReference.minHash(docs, cap)
+      assert(triples(mh) == want, s"minhash cap $cap")
+      assert(mh.forall(_.getLong(3) == hot), s"minhash census cap $cap")
+    }
+    val ngram = triples(Dedup.dedupNgramOn(df, 8L).collect())
+    assert(ngram.exists(p => p._1 == 1L && p._2 == 2L), "null lang pairs within its block")
+    assert(!ngram.exists(p => p._1 == 1L && p._2 == 3L), "null lang is not the en block")
+    assert(!ngram.exists(p => p._1 == 3L && p._2 == 9L), "null n_chars is its own block")
+    assert((21L to 31L).forall(b => ngram.contains((20L, b, 1.0))), "over-cap star")
+    assert(!ngram.exists(p => p._1 > 20L), "no non-star pair in the over-cap group")
+    val quiet = Set(5L, 6L, 7L, 8L)
+    val mh = Dedup.dedupMinHashOn(df, 8L).collect()
+    assert(!(ngram ++ triples(mh)).exists(p => quiet(p._1) || quiet(p._2)),
+      "a document without grams never pairs")
+    assert(mh.head.getLong(3) == 4L, "each band's viral bucket is over the cap")
+    // a cap so tight no bucket pairs: the census row stays
+    val none = Dedup.dedupMinHashOn(df.filter($"doc_id".isin(3L, 5L, 6L, 7L)), 0L).collect()
+    assert(none.length == 1 && none(0).isNullAt(0) && none(0).getLong(3) == 4L)
+  }
+
+  test("ngramPairs and dedupMinHash follow documents rewritten in place") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_rewrite").toString
+    val base = (1 to 20).map(j => s"tok$j").mkString(" ")
+    def write(rows: Seq[(Long, String, String, Long, String)]): Unit =
+      rows.toDF("doc_id", "lang", "source", "n_chars", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val first = Seq(
+      (1L, "en", "web", 150L, base),
+      (2L, "en", "web", 150L, base + " extra"),
+      (3L, "en", "web", 150L, (1 to 20).map(j => s"other$j").mkString(" ")))
+    write(first)
+    def answer(s: SparkSession) = (
+      Dedup.ngramPairs(s, dir).collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet,
+      Dedup.dedupMinHash(s, dir).collect().toSeq.map(_.toSeq),
+      Dedup.ngramLabels(s, dir).collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    val before = answer(spark)
+    assert(before._1.map(p => (p._1, p._2)) == Set((1L, 2L)))
+    // rewrite in place with a newly planted near-duplicate of doc 3
+    write(first :+ ((4L, "en", "web", 150L, (1 to 20).map(j => s"other$j").mkString(" ") + " x")))
+    val after = answer(spark)
+    val fresh = answer(spark.newSession())
+    assert(after == fresh)
+    assert(after._1.map(p => (p._1, p._2)) == Set((1L, 2L), (3L, 4L)))
+    assert(after._3 == Set((1L, 1L), (2L, 1L), (3L, 3L), (4L, 3L)))
+  }
 }
