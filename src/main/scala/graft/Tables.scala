@@ -105,26 +105,25 @@ object Tables {
   private case class ScanMeta(rowGroups: Int, bytes: Long)
 
   private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), ScanMeta]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String), (String, ScanMeta)]()
 
   /** Parquet-footer scan metadata (row-group count = the real upper
     * bound on scan parallelism, total file bytes), memoized per
-    * (dir, table). Footer reads are driver-side metadata I/O only. */
+    * (dir, table) under the table's [[fingerprint]], so a table
+    * rewritten in place is measured again. Driver-side metadata I/O
+    * only: one listing per call, footers on a new fingerprint. */
   private def scanMeta(spark: SparkSession, dir: String, name: String): ScanMeta =
-    metaCache.computeIfAbsent((dir, name), _ => {
-      try {
-        var groups = 0
-        var bytes = 0L
-        dataFiles(spark, s"$dir/$name.parquet").foreach { f =>
-          bytes += f.getLen
-          groups += footer(spark, f).getBlocks.size
-        }
-        ScanMeta(groups, bytes)
-      } catch { case scala.util.control.NonFatal(_) =>
-        // unreadable footer: report "wide enough" so no spread fires
-        ScanMeta(Int.MaxValue, 0L)
-      }
-    })
+    try {
+      val files = dataFiles(spark, s"$dir/$name.parquet")
+      val stamp = stampOf(files)
+      metaCache.compute((dir, name), (_, old) =>
+        if (old != null && old._1 == stamp) old
+        else (stamp, ScanMeta(files.map(footer(spark, _).getBlocks.size).sum,
+          files.map(_.getLen).sum)))._2
+    } catch { case scala.util.control.NonFatal(_) =>
+      // unreadable footer: report "wide enough" so no spread fires
+      ScanMeta(Int.MaxValue, 0L)
+    }
 
   /** The parquet data files of the table at `path` (a file, or the
     * top level of a directory), by name. */
@@ -141,8 +140,10 @@ object Tables {
     * Spark job. A memo stamped with it rebuilds once the table is
     * rewritten in place ([[SessionCache.getOrCompute]]). */
   def fingerprint(spark: SparkSession, dir: String, name: String): String =
-    dataFiles(spark, s"$dir/$name.parquet")
-      .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").mkString(";")
+    stampOf(dataFiles(spark, s"$dir/$name.parquet"))
+
+  private def stampOf(files: Array[org.apache.hadoop.fs.FileStatus]): String =
+    files.map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").mkString(";")
 
   private def footer(spark: SparkSession, f: org.apache.hadoop.fs.FileStatus) = {
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(

@@ -2,11 +2,11 @@ package graft.operators
 
 import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.Tables
 import graft.functions.{PolyHash, SimHash64, WordNgramHashes, TextFeatures => TF}
@@ -46,9 +46,10 @@ import graft.functions.{PolyHash, SimHash64, WordNgramHashes, TextFeatures => TF
   *     from its gram hashes; band buckets are postings of the same
   *     engine (occupancy-capped like the n-gram df), and exact Jaccard
   *     verification touches candidates, not all pairs.
-  *   - simhash: one-pass codegen'd [[SimHash64]] fingerprint, then a
-  *     4×16-bit chunk equi-join (pigeonhole: Hamming ≤ 3 ⇒ some chunk
-  *     equal) — no quadratic pair scan.
+  *   - simhash: each document's [[SimHash64]] fingerprint posts its 20
+  *     three-of-six block keys to the same engine (Hamming ≤ 3 ⇒ some
+  *     three blocks equal); containment and incremental admission keep
+  *     their own candidates and verify them on the engine's gram profile.
   *   - embedding: label-blocked cosine pairs; the all-pairs form is the
   *     exactness baseline, [[Similarity]] holds the sub-quadratic path.
   *
@@ -179,10 +180,12 @@ object Dedup {
     * 31, so the mins are the ones the DuckDB oracle folds. A null lang
     * is its own block, as in a DataFrame groupBy; a null lb is
     * [[Postings.NullLb]]. A text without grams (null, empty or under
-    * [[NgramN]] tokens) has no postings, so it never pairs. */
+    * [[NgramN]] tokens) has no postings, so it never pairs. The
+    * signature is made on first use and never serialized: the verify
+    * ships profiles but reads only their grams. */
   private[operators] final class DocProfile(val lang: String, val lb: Long,
       val grams: Array[Long]) extends Serializable {
-    val sig: Array[Long] = Array.tabulate(if (grams.isEmpty) 0 else MinHashK) { i =>
+    @transient lazy val sig: Array[Long] = Array.tabulate(if (grams.isEmpty) 0 else MinHashK) { i =>
       var m = Long.MaxValue
       var j = 0
       while (j < grams.length) {
@@ -193,46 +196,51 @@ object Dedup {
     }
   }
 
-  /** The profiles of `docs` (doc_id, lang, n_chars, text) keyed by
-    * doc_id. One pass: the scan's rows are hash-spread by doc_id across
-    * max(session parallelism, scan partitions) — the `documents` file
-    * is one row group, so an unspread scan is one task — and each is
-    * profiled after the spread. The spread is unconditional (not
-    * [[Tables.spread]]'s gated one): the verify reads the profile by
-    * doc_id on this same partitioner, so it never shuffles the profile
-    * again. Unpersisted: a caller whose verify re-reads it persists it
-    * ([[persisted]]). */
-  private def profileOf(docs: DataFrame): Profile = {
-    val rows = docs.select(col("doc_id").cast("long"), col("lang").cast("string"),
-      expr("n_chars DIV 100").cast("long"), col("text")).queryExecution.toRdd
-    val part = new HashPartitioner(
-      math.max(docs.sparkSession.sparkContext.defaultParallelism, rows.getNumPartitions))
+  /** Per-document payloads by doc_id, hash-partitioned by doc_id. */
+  private type Profile[P] = RDD[(Long, P)]
+
+  /** The profile of `docs`: each row (doc_id, `cols`...) is hash-spread
+    * by doc_id across max(session parallelism, scan partitions) — the
+    * `documents` file is one row group, so an unspread scan is one
+    * task — and `build` (`cols` from ordinal 1) makes its payload after
+    * the spread; a row without one never pairs. The spread is
+    * unconditional (not [[Tables.spread]]'s gated one): the verify reads
+    * the profile by doc_id on this same partitioner. A null doc_id
+    * fails the build. Unpersisted: a caller whose verify re-reads it
+    * persists it. */
+  private def profileOf[P](docs: DataFrame, cols: Column*)
+      (build: InternalRow => Option[P]): Profile[P] = {
+    val rows = docs.select(col("doc_id").cast("long") +: cols: _*).queryExecution.toRdd
     rows.map { r =>
       if (r.isNullAt(0)) throw new IllegalArgumentException("documents: a null doc_id")
-      (r.getLong(0), (if (r.isNullAt(1)) null else r.getUTF8String(1).toString,
-        if (r.isNullAt(2)) Postings.NullLb else r.getLong(2),
-        if (r.isNullAt(3)) null else r.getUTF8String(3).clone()))
-    }.partitionBy(part)
-      .mapValues { case (lang, lb, text) =>
-        new DocProfile(lang, lb, WordNgramHashes.hashes(text, NgramN))
-      }
+      (r.getLong(0), r.copy())
+    }.partitionBy(new HashPartitioner(
+        math.max(docs.sparkSession.sparkContext.defaultParallelism, rows.getNumPartitions)))
+      .flatMapValues(build)
   }
 
-  private type Profile = RDD[(Long, DocProfile)]
+  /** The [[DocProfile]]s of `docs` (doc_id, lang, n_chars, text). */
+  private def gramProfile(docs: DataFrame): Profile[DocProfile] =
+    profileOf(docs, col("lang").cast("string"),
+        expr("n_chars DIV 100").cast("long"), col("text")) { r =>
+      Some(new DocProfile(if (r.isNullAt(1)) null else r.getString(1),
+        if (r.isNullAt(2)) Postings.NullLb else r.getLong(2),
+        WordNgramHashes.hashes(r.getUTF8String(3), NgramN)))
+    }
 
-  /** The profile of `docs`, persisted: the pair builds read it three
-    * times (postings and both ends of the verify). */
-  private def persisted(docs: DataFrame): Profile =
-    profileOf(docs).persist(StorageLevel.MEMORY_AND_DISK)
+  /** The gram profile of `docs`, persisted: the pair builds read it
+    * three times (postings and both ends of the verify). */
+  private def persisted(docs: DataFrame): Profile[DocProfile] =
+    gramProfile(docs).persist(StorageLevel.MEMORY_AND_DISK)
 
   /** The `documents` profile of (session, dir), built once and shared
     * by [[ngramPairs]] and [[dedupMinHash]]; stamped with the table's
     * [[Tables.fingerprint]], so a rewritten table is re-profiled. */
-  private def profile(s: SparkSession, dir: String, stamp: String): Profile =
+  private def profile(s: SparkSession, dir: String, stamp: String): Profile[DocProfile] =
     profileCache.getOrCompute(s, dir, stamp)(persisted(Tables(s, dir, "documents")))
 
   private[graft] val profileCache =
-    new graft.SessionCache[Profile](onEvict = _.unpersist(blocking = false))
+    new graft.SessionCache[Profile[DocProfile]](onEvict = _.unpersist(blocking = false))
 
   /** The [[Tables.fingerprint]] of `documents` that stamps the
     * profile, pair and label memos: one driver listing, taken once per
@@ -242,13 +250,15 @@ object Dedup {
 
   // ------------------------------------------------ posting-pair engine
 
-  /** The posting-pair engine's task-side parts. */
+  /** The posting-pair engine's task-side parts, with its clients' key
+    * and score functions. */
   private object Postings {
     /** lb of a document whose n_chars is null: below any n_chars DIV 100. */
     val NullLb: Long = Long.MinValue
 
-    /** A posting key: (lang, lb, gram hash) of an n-gram posting, or
-      * (null, band, band key) of a MinHash band bucket. */
+    /** A posting key: (lang, lb, gram hash) of an n-gram posting,
+      * (null, band, band key) of a MinHash band bucket, or (null,
+      * table, block key) of a SimHash table bucket. */
     final case class Key(s: String, x: Long, y: Long)
 
     /** Postings sort by (key, doc_id), so each key's run starts with its
@@ -284,6 +294,16 @@ object Dedup {
       Iterator.range(0, p.sig.length / 4).map { b =>
         val s = p.sig
         Key(null, b, (s(4 * b) * 29791 + s(4 * b + 1) * 961 + s(4 * b + 2) * 31 + s(4 * b + 3)) % P)
+      }
+
+    /** Table t's key: the [[SimCombos]] blocks of the fingerprint,
+      * packed 11 bits apart (each block is narrower). */
+    def simKeys(fp: Long): Iterator[Key] =
+      SimCombos.iterator.zipWithIndex.map { case (combo, t) =>
+        Key(null, t, combo.foldLeft(0L) { (k, i) =>
+          val (lo, hi) = SimBlocks(i)
+          k * 2048 + ((fp >>> lo) & ((1L << (hi - lo)) - 1))
+        })
       }
 
     /** The candidate pairs (a < b) of one partition of postings sorted
@@ -338,31 +358,44 @@ object Dedup {
       n
     }
 
-    /** The grams of every profile in one partition, by doc_id. */
-    def gramsById(docs: Iterator[(Long, DocProfile)]): scala.collection.mutable.LongMap[Array[Long]] = {
-      val m = scala.collection.mutable.LongMap.empty[Array[Long]]
-      docs.foreach { case (id, p) => m.update(id, p.grams) }
+    /** The payloads of one profile partition, by doc_id. */
+    def byId[P](docs: Iterator[(Long, P)]): scala.collection.mutable.LongMap[P] = {
+      val m = scala.collection.mutable.LongMap.empty[P]
+      docs.foreach { case (id, p) => m.update(id, p) }
       m
     }
 
-    /** (a, b, raw Jaccard) of a verified pair, or None when the sizes
-      * alone rule it out: jaccard ≤ min/max, with half-ulp slack
-      * (τ − 0.00005) because the final filter compares the ROUNDED
-      * jaccard. */
-    def jaccard(a: Long, ga: Array[Long], b: Long, gb: Array[Long]): Option[InternalRow] = {
-      val (na, nb) = (ga.length, gb.length)
+    /** (a, b, raw Jaccard of the gram sets) of a verified pair, or None
+      * when the sizes alone rule it out: jaccard ≤ min/max, with
+      * half-ulp slack (τ − 0.00005) because the final filter compares
+      * the ROUNDED jaccard. */
+    def jaccard(a: Long, pa: DocProfile, b: Long, pb: DocProfile): Option[InternalRow] = {
+      val (na, nb) = (pa.grams.length, pb.grams.length)
       if (math.min(na, nb) < (JaccardTau - 0.00005) * math.max(na, nb)) None
       else {
-        val sh = shared(ga, gb)
+        val sh = shared(pa.grams, pb.grams)
         Some(InternalRow(a, b, sh.toDouble / (na + nb - sh)))
       }
     }
+
+    /** (a, b, raw containment |A ∩ B| / min(|A|, |B|)) of the gram sets;
+      * no size prefilter, since containment admits any size skew. */
+    def containment(a: Long, pa: DocProfile, b: Long, pb: DocProfile): Option[InternalRow] =
+      Some(InternalRow(a, b,
+        shared(pa.grams, pb.grams).toDouble / math.min(pa.grams.length, pb.grams.length)))
+
+    /** (a, b, Hamming distance) of two fingerprints at most
+      * [[HammingTau]] bits apart, or None. */
+    def hamming(a: Long, fa: Long, b: Long, fb: Long): Option[InternalRow] = {
+      val h = java.lang.Long.bitCount(fa ^ fb)
+      if (h <= HammingTau) Some(InternalRow(a, b, h)) else None
+    }
   }
 
-  /** The engine's postings: every profile's `keys` paired with its
+  /** The engine's postings: every payload's `keys` paired with its
     * doc_id, shuffled by key and sorted by (key, doc_id) within each
     * partition. */
-  private def postingsOf(prof: Profile)(keys: DocProfile => Iterator[Postings.Key])
+  private def postingsOf[P](prof: Profile[P])(keys: P => Iterator[Postings.Key])
       : RDD[(Postings.Key, Long)] = {
     val byKey = new Postings.ByFirst(prof.getNumPartitions)
     import Postings.Order
@@ -380,23 +413,44 @@ object Dedup {
       .reduceByKey(new Postings.ByFirst(postings.getNumPartitions), (_, _) => ())
       .keys
 
-  /** The verify: both ends of every candidate pair read their gram sets
-    * from the profile — a by a_id on the candidates' own partitioning,
-    * b after one shuffle of (b, a, grams of a) by b_id — and a pair the
-    * size ratio admits gets its exact Jaccard by a merge of the two
-    * sorted arrays. Rows (a_id, b_id, jaccard) carry the raw ratio; the
-    * callers round it. */
-  private def verifiedRows(s: SparkSession, prof: Profile, cands: RDD[(Long, Long)])
-      : DataFrame = {
-    val withA = cands.zipPartitions(prof) { (ps, docs) =>
-      val grams = Postings.gramsById(docs)
-      ps.map { case (a, b) => (b, (a, grams(a))) }
+  /** The (a_id, b_id) pairs of a candidate frame, partitioned by a_id
+    * on `part` as [[verifiedRows]] reads them. */
+  private def pairsByA(cands: DataFrame, part: Partitioner): RDD[(Long, Long)] =
+    cands.select(col("a_id"), col("b_id")).queryExecution.toRdd
+      .map(r => (r.getLong(0), r.getLong(1))).partitionBy(part)
+
+  /** The verify: a candidate's a end reads its payload from `as` on the
+    * candidates' own partitioning by a_id, its b end from `bs` after one
+    * shuffle of (b, a, payload of a) onto `bs`' partitioner, and `score`
+    * turns the two payloads into the pair's row of `schema` — (a_id,
+    * b_id, raw score), which the callers round and filter — or None. */
+  private def verifiedRows[P](s: SparkSession, cands: RDD[(Long, Long)], as: Profile[P],
+      bs: Profile[P], schema: StructType)
+      (score: (Long, P, Long, P) => Option[InternalRow]): DataFrame = {
+    val withA = cands.zipPartitions(as) { (ps, docs) =>
+      val pa = Postings.byId(docs)
+      ps.map { case (a, b) => (b, (a, pa(a))) }
     }
-    val rows = withA.partitionBy(prof.partitioner.get).zipPartitions(prof) { (ps, docs) =>
-      val grams = Postings.gramsById(docs)
-      ps.flatMap { case (b, (a, ga)) => Postings.jaccard(a, ga, b, grams(b)) }
+    val rows = withA.partitionBy(bs.partitioner.get).zipPartitions(bs) { (ps, docs) =>
+      val pb = Postings.byId(docs)
+      ps.flatMap { case (b, (a, p)) => score(a, p, b, pb(b)) }
     }
-    GraftShims.internalCreateDataFrame(s, rows, JaccardSchema)
+    GraftShims.internalCreateDataFrame(s, rows, schema)
+  }
+
+  /** `verified` with the `n_hot_buckets` census of `postings` under
+    * `cap`, counted from the sorted runs (a retried task cannot count
+    * twice); the left join keeps a row when no pair verifies. */
+  private def withCensus(s: SparkSession, postings: RDD[(Postings.Key, Long)], cap: Long,
+      verified: DataFrame): DataFrame = {
+    val census = GraftShims.internalCreateDataFrame(s,
+      postings.mapPartitions(p => Iterator((0, Postings.hotKeys(p, cap))))
+        .reduceByKey(new HashPartitioner(1), _ + _)
+        .map { case (_, n) => InternalRow(n) },
+      StructType(Seq(StructField("n_hot_buckets", LongType, nullable = false))))
+    census.join(verified, lit(true), "left")
+      .select((verified.columns.toSeq :+ "n_hot_buckets").map(col): _*)
+      .orderBy(col("a_id"), col("b_id"))
   }
 
   /** The candidate pairs (a_id, b_id) of `docs`' profile under `cap`;
@@ -404,14 +458,17 @@ object Dedup {
   private def candidatesOf(docs: DataFrame, cap: Long)
       (keys: DocProfile => Iterator[Postings.Key]): DataFrame =
     GraftShims.internalCreateDataFrame(docs.sparkSession,
-      candidatePairs(postingsOf(profileOf(docs))(keys), cap)
+      candidatePairs(postingsOf(gramProfile(docs))(keys), cap)
         .map { case (a, b) => InternalRow(a, b) },
       StructType(JaccardSchema.take(2)))
 
-  private val JaccardSchema = StructType(Seq(
+  /** The verify's row schema: (a_id, b_id, `score` of type `t`). */
+  private def scored(score: String, t: DataType): StructType = StructType(Seq(
     StructField("a_id", LongType, nullable = false),
     StructField("b_id", LongType, nullable = false),
-    StructField("jaccard", DoubleType, nullable = false)))
+    StructField(score, t, nullable = false)))
+
+  private val JaccardSchema = scored("jaccard", DoubleType)
 
   /** Pairs at round(jaccard, 4) ≥ [[JaccardTau]]. */
   private def atTau(rows: DataFrame): DataFrame =
@@ -460,8 +517,9 @@ object Dedup {
     ngramPairsOf(docs.sparkSession, persisted(docs), dfCap).orderBy(col("a_id"), col("b_id"))
 
   /** The verified n-gram pairs of a profile under `dfCap`. */
-  private def ngramPairsOf(s: SparkSession, prof: Profile, dfCap: Long): DataFrame =
-    atTau(verifiedRows(s, prof, candidatePairs(postingsOf(prof)(Postings.gramKeys), dfCap)))
+  private def ngramPairsOf(s: SparkSession, prof: Profile[DocProfile], dfCap: Long): DataFrame =
+    atTau(verifiedRows(s, candidatePairs(postingsOf(prof)(Postings.gramKeys), dfCap),
+      prof, prof, JaccardSchema)(Postings.jaccard))
 
   /** The verified n-gram near-dup pair list (a_id, b_id, jaccard) of
     * (session, dir), MATERIALIZED ONCE and shared by every consumer —
@@ -655,20 +713,15 @@ object Dedup {
   /** ⌈τ'·n⌉ numerator/denominator for the prefix bound, with τ' =
     * [[ContainmentTau]] − 0.00005 (the verify filter's rounded-compare
     * slack) as an exact rational — see the integer-ceil note in
-    * [[dedupContainmentOn]]. */
+    * [[containmentCandidates]]. */
   private val ContainNum = 79995L
   private val ContainDen = 100000L
 
-  /** N-gram CONTAINMENT near-dup pairs: C(a,b) = |A∩B| / min(|A|,|B|)
-    * ≥ τ — the asymmetric complement of [[dedupNgramOn]]'s Jaccard. A
-    * short document quoted wholesale inside a longer one (press-release
-    * reposts with added commentary, quoted posts, boilerplate-wrapped
-    * articles — the inclusion dups a pretraining corpus actually has)
-    * scores high containment but LOW Jaccard: the very size skew that
-    * Jaccard's lossless min/max prefilter discards is the pair class
-    * this operator exists to find. Consequently the candidate stage
-    * blocks on lang alone (no length bucket — inclusion pairs sit in
-    * different buckets by construction).
+  /** The prefix-filtered candidate (a_id, b_id) pairs of
+    * [[dedupContainmentOn]], blocked on lang alone (inclusion pairs sit
+    * in different length buckets by construction) — public so DedupSpec
+    * can measure the reduction the prefix buys over plain share-a-gram
+    * generation, and check losslessness against a brute-force verify.
     *
     * Candidate generation is PREFIX-FILTERED (Bayardo/Ma/Srikant,
     * "Scaling Up All Pairs Similarity Search", WWW 2007): under a
@@ -687,15 +740,10 @@ object Dedup {
     * hold each doc's RAREST grams, so boilerplate grams (the df² risk)
     * almost never probe and the equi-join runs over mostly-tiny
     * posting lists (measured candidate reduction asserted in
-    * DedupSpec; sf0.1 operator time in SURVEY §8d). Verification is
-    * the same exact hash-set intersection, so precision is exact. The
-    * gram frame is persisted across its three consumers (df agg,
-    * probe ranking, index join) and reclaimed by the context cleaner
-    * — the [[labelsOf]] pattern. */
-  /** The prefix-filtered candidate (a_id, b_id) pairs — public so
-    * DedupSpec can measure the reduction the prefix buys over plain
-    * share-a-gram generation, and check losslessness against a
-    * brute-force verify. */
+    * DedupSpec; sf0.1 operator time in SURVEY §8d). The gram frame is
+    * persisted across its three consumers (df agg, probe ranking,
+    * index join) and reclaimed by the context cleaner — the
+    * [[labelsOf]] pattern. */
   def containmentCandidates(docs: DataFrame, dfCap: Long): DataFrame = {
     import docs.sparkSession.implicits._
     // gram rows carrying the doc's distinct-gram count n
@@ -742,20 +790,24 @@ object Dedup {
     prefixPairs.union(starPairs).distinct()
   }
 
+  /** N-gram CONTAINMENT near-dup pairs: C(a,b) = |A∩B| / min(|A|,|B|)
+    * ≥ τ — the asymmetric complement of [[dedupNgramOn]]'s Jaccard. A
+    * short document quoted wholesale inside a longer one (press-release
+    * reposts with added commentary, quoted posts, boilerplate-wrapped
+    * articles — the inclusion dups a pretraining corpus actually has)
+    * scores high containment but LOW Jaccard: the very size skew that
+    * Jaccard's lossless min/max prefilter discards is the pair class
+    * this operator exists to find. Its [[containmentCandidates]] get the
+    * engine's exact sorted-merge verify on the gram profile
+    * ([[verifiedRows]]), with no size prefilter. */
   def dedupContainmentOn(docs: DataFrame, dfCap: Long = NgramDfCap): DataFrame = {
-    import docs.sparkSession.implicits._
-    val sets = docs.withColumn("hs", WordNgramHashes($"text", NgramN))
-      .select($"doc_id", $"hs", size($"hs").as("n"))
-    val out = containmentCandidates(docs, dfCap)
-      .join(sets.select($"doc_id".as("a_id"), $"hs".as("ha"), $"n".as("na")), "a_id")
-      .join(sets.select($"doc_id".as("b_id"), $"hs".as("hb"), $"n".as("nb")), "b_id")
-      .withColumn("shared", size(array_intersect($"ha", $"hb")))
-      .withColumn("containment",
-        round($"shared".cast("double") / least($"na", $"nb"), 4))
-      .filter($"containment" >= ContainmentTau)
-      .select($"a_id", $"b_id", $"containment")
-      .orderBy($"a_id", $"b_id")
-    out
+    val prof = persisted(docs)
+    val cands = pairsByA(containmentCandidates(docs, dfCap), prof.partitioner.get)
+    verifiedRows(docs.sparkSession, cands, prof, prof, scored("containment", DoubleType))(
+        Postings.containment)
+      .select(col("a_id"), col("b_id"), round(col("containment"), 4).as("containment"))
+      .filter(col("containment") >= ContainmentTau)
+      .orderBy(col("a_id"), col("b_id"))
   }
 
   def dedupContainment(s: SparkSession, dir: String): DataFrame =
@@ -838,7 +890,9 @@ object Dedup {
     * non-zero tells the user the pair list inside hot groups is the
     * representative star, not all τ-pairs. Verification stays exact, so
     * precision is unaffected; the oracle SQL mirrors the cap
-    * fold-for-fold, so the compare is decidable at every scale. */
+    * fold-for-fold, so the compare is decidable at every scale. It caps
+    * both bucketed clients of the posting-pair engine ([[Postings.pairs]]):
+    * MinHash band buckets and the SimHash tables ([[dedupSimHashOn]]). */
   val BandBucketCap = 64L
 
   /** MinHash+LSH near-dup pairs over the memoized `documents` profile
@@ -859,25 +913,16 @@ object Dedup {
     * most `bucketCap` documents pair all their members, larger ones
     * star their minimum against the rest ([[BandBucketCap]]); the
     * distinct candidates are verified by exact Jaccard over the full
-    * gram-hash sets, as in [[ngramPairs]]. `n_hot_buckets` counts the
-    * over-cap buckets of the sorted postings themselves, so a retried
-    * task cannot count twice; a left join from that one-row census
-    * keeps a row when no pair verifies. */
+    * gram-hash sets, as in [[ngramPairs]]; `n_hot_buckets` is the
+    * over-cap bucket census ([[withCensus]]). */
   def dedupMinHashOn(docs: DataFrame, bucketCap: Long): DataFrame =
     minHashPairsOf(docs.sparkSession, persisted(docs), bucketCap)
 
-  private def minHashPairsOf(s: SparkSession, prof: Profile, bucketCap: Long): DataFrame = {
-    import s.implicits._
+  private def minHashPairsOf(s: SparkSession, prof: Profile[DocProfile], bucketCap: Long)
+      : DataFrame = {
     val postings = postingsOf(prof)(Postings.bandKeys)
-    val census = GraftShims.internalCreateDataFrame(s,
-      postings.mapPartitions(p => Iterator((0, Postings.hotKeys(p, bucketCap))))
-        .reduceByKey(new HashPartitioner(1), _ + _)
-        .map { case (_, n) => InternalRow(n) },
-      StructType(Seq(StructField("n_hot_buckets", LongType, nullable = false))))
-    val verified = atTau(verifiedRows(s, prof, candidatePairs(postings, bucketCap)))
-    census.join(verified, lit(true), "left")
-      .select($"a_id", $"b_id", $"jaccard", $"n_hot_buckets")
-      .orderBy($"a_id", $"b_id")
+    withCensus(s, postings, bucketCap, atTau(verifiedRows(s,
+      candidatePairs(postings, bucketCap), prof, prof, JaccardSchema)(Postings.jaccard)))
   }
 
   // Mirrors the hashed pipeline: the packed 62-bit gram hash's low 31
@@ -968,8 +1013,9 @@ object Dedup {
     * pair shares that combination's table key. */
   private val SimCombos = (0 until SimBlocks.size).combinations(HammingTau).toSeq
 
-  /** SimHash near-dup pairs: codegen'd 62-bit fingerprint, then the
-    * Manku-style block-combination candidate join at Hamming ≤ 3.
+  /** SimHash near-dup pairs at Hamming ≤ 3: the posting-pair engine
+    * over a profile of one 62-bit [[SimHash64]] fingerprint per
+    * document, with Manku-style block-combination keys.
     *
     * Naive 4×16-bit single-chunk blocking is quadratic on correlated
     * corpora: shared vocabulary makes whole 16-bit chunks collide
@@ -977,64 +1023,26 @@ object Dedup {
     * candidate pairs). Keying each of the C(6,3)=20 tables on a ~33-bit
     * THREE-block concatenation keeps the pigeonhole recall guarantee
     * while cutting candidates 18× (96k at sf0.1) — the difference
-    * between a quadratic blow-up and a bounded equi-join at 100 TB.
-    * Residual viral groups (identical fingerprints put n docs in ONE
-    * bucket of all 20 tables) get the same [[BandBucketCap]] occupancy
-    * cap + min-id star fallback + `n_hot_buckets` census as minhash. */
+    * between a quadratic blow-up and a bounded bucket expansion at
+    * 100 TB. Residual viral groups (identical fingerprints put n docs
+    * in ONE bucket of all 20 tables) get the same [[BandBucketCap]]
+    * occupancy cap + min-id star fallback + `n_hot_buckets` census as
+    * minhash. A document without tokens (null, empty or blank text) has
+    * no fingerprint, so it never pairs and fills no bucket, as in the
+    * oracle. */
   def dedupSimHash(s: SparkSession, dir: String): DataFrame =
     dedupSimHashOn(Tables(s, dir, "documents"), BandBucketCap)
 
   def dedupSimHashOn(docs: DataFrame, bucketCap: Long): DataFrame = {
-    import docs.sparkSession.implicits._
-    val fps = docs
-      .select($"doc_id", SimHash64(TF.toks(lower($"text"))).as("fp"))
-      // three consumers (keys, star fa, star fb) — the labelsOf pattern:
-      // persisted across them, reclaimed by the context cleaner
-      .persist()
-    def block(lo: Int, hi: Int) =
-      expr(s"shiftright(fp, $lo) & ${(1 << (hi - lo)) - 1}")
-    val keyCols = SimCombos.zipWithIndex.map { case (combo, cid) =>
-      val key = combo.map(i => block(SimBlocks(i)._1, SimBlocks(i)._2))
-        .reduce((a, b) => a * lit(2048L) + b) // pack: each block < 2^11
-      struct(lit(cid).as("cid"), key.as("key"))
-    }
-    val keys = fps.select($"doc_id", $"fp",
-        explode(array(keyCols: _*)).as("ck"))
-      .select($"doc_id", $"fp", $"ck.cid".as("cid"), $"ck.key".as("key"))
-    val occ = keys.groupBy($"cid", $"key")
-      .agg(count(lit(1)).as("occ"), min($"doc_id").as("mn"))
-    val withOcc = keys.join(occ, Seq("cid", "key"))
-    // verify BEFORE the distinct (the ER linkPairs discipline): the
-    // Hamming filter runs on the streaming join output, so the dedup
-    // exchange sees only VERIFIED pairs (~1/20 of candidates here; at
-    // sf1 the difference is an oracle that finishes vs one that spills
-    // ~100 GB materializing every hot-bucket candidate for DISTINCT).
-    // hamming is a function of the pair, so distinct semantics match.
-    val under = withOcc.filter($"occ" <= bucketCap)
-      .select($"cid", $"key", $"doc_id", $"fp").as("a")
-      .join(withOcc.filter($"occ" <= bucketCap)
-        .select($"cid", $"key", $"doc_id", $"fp").as("b"),
-        $"a.cid" === $"b.cid" && $"a.key" === $"b.key" &&
-        $"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("a_id"), $"b.doc_id".as("b_id"),
-        expr("bit_count(a.fp ^ b.fp)").as("hamming"))
-    // over-cap buckets: linear star against the bucket min, Hamming
-    // verified against the representative's fingerprint
-    val star = withOcc.filter($"occ" > bucketCap && $"doc_id" =!= $"mn")
-      .select(least($"mn", $"doc_id").as("a_id"),
-        greatest($"mn", $"doc_id").as("b_id"))
-      .distinct()
-      .join(fps.select($"doc_id".as("a_id"), $"fp".as("fa")), "a_id")
-      .join(fps.select($"doc_id".as("b_id"), $"fp".as("fb")), "b_id")
-      .select($"a_id", $"b_id", expr("bit_count(fa ^ fb)").as("hamming"))
-    val verified = under.union(star)
-      .filter($"hamming" <= HammingTau)
-      .distinct()
-    val census = occ.filter($"occ" > bucketCap)
-      .agg(count(lit(1)).as("n_hot_buckets"))
-    census.join(verified, lit(true), "left")
-      .select($"a_id", $"b_id", $"hamming", $"n_hot_buckets")
-      .orderBy($"a_id", $"b_id")
+    val s = docs.sparkSession
+    val toks = TF.toks(lower(col("text")))
+    // the fingerprint is taken before the spread, which ships it, not the tokens
+    val prof = profileOf(docs, size(toks), SimHash64(toks)) { r =>
+      if (r.isNullAt(1) || r.getInt(1) <= 0) None else Some(r.getLong(2))
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    val postings = postingsOf(prof)(Postings.simKeys)
+    withCensus(s, postings, bucketCap, verifiedRows(s, candidatePairs(postings, bucketCap),
+      prof, prof, scored("hamming", IntegerType))(Postings.hamming))
   }
 
   val dedupSimHashSql: String = {
@@ -1049,15 +1057,10 @@ object Dedup {
       val key = combo.map(blockExprs).reduce((a, b) => s"($a * 2048 + $b)")
       s"SELECT doc_id, fp, $cid AS cid, $key AS key FROM fp"
     }.mkString("\n  UNION ALL ")
-    // Occupancy cap mirror (see [[BandBucketCap]]): the round-13 SQL
-    // used a first-equal-combo CASE to emit each pair once because a
-    // viral identical-fingerprint group matched all 20 tables and the
-    // DISTINCT absorbed 20× the quadratic output (~1e9 pre-distinct
-    // rows at sf10, the isolated oracle's 69 GB spill cap). With the
-    // cap, viral buckets collapse to the linear star BEFORE the join
-    // output exists, so the residual under-cap DISTINCT absorbs at
-    // most 20× of a bounded, Hamming-filtered volume and the CASE is
-    // no longer needed — the arms now mirror the Spark plan exactly.
+    // Occupancy cap mirror (see [[BandBucketCap]]): the under/star
+    // arms are the engine's all-pairs and star expansions, and viral
+    // buckets collapse to the star before any join output exists, so
+    // the under-cap DISTINCT absorbs at most 20× of a bounded volume.
     // one grouped pass with 62 columnar conditional sums — the earlier
     // `wh CROSS JOIN range(0, 62)` form exploded the (doc, word) rows
     // 62× before aggregating (billions of rows at sf1: the oracle
@@ -2166,10 +2169,12 @@ object Dedup {
     * cross batch × posting (never corpus × corpus), under-cap grams
     * expand to their posting members and over-cap grams fall back to
     * the posting-min star (the batch [[NgramDfCap]] discipline, same
-    * caveat). Verification is the exact hash-set Jaccard with the
-    * same lossless size-ratio prefilter as [[dedupNgramOn]], touching
-    * only candidate existing docs. Nothing in the plan scales with
-    * corpus × corpus.
+    * caveat). Verification is the posting-pair engine's verify
+    * ([[verifiedRows]]): the exact gram-set Jaccard, with the same
+    * lossless size-ratio prefilter as [[dedupNgramOn]], reading a from
+    * the existing side's gram profile and b from the batch side's — it
+    * touches only candidate existing docs. Nothing in the plan scales
+    * with corpus × corpus.
     *
     * The entry splits the documents table deterministically
     * (doc_id % 5 == 0 plays the arriving batch, ~20%; the rest is the
@@ -2207,17 +2212,9 @@ object Dedup {
       .union(probed.filter($"df" > dfCap)
         .select($"doc_id".as("b_id"), $"mn".as("a_id")))
       .distinct()
-    val setsOld = existing.withColumn("hs", WordNgramHashes($"text", NgramN))
-      .select($"doc_id".as("a_id"), $"hs".as("ha"), size($"hs").as("na"))
-    val setsNew = batch.withColumn("hs", WordNgramHashes($"text", NgramN))
-      .select($"doc_id".as("b_id"), $"hs".as("hb"), size($"hs").as("nb"))
-    val nearIds = cands.join(setsOld, "a_id").join(setsNew, "b_id")
-      .filter(least($"na", $"nb") >=
-        lit(JaccardTau - 0.00005) * greatest($"na", $"nb"))
-      .withColumn("shared", size(array_intersect($"ha", $"hb")))
-      .withColumn("jaccard",
-        round($"shared".cast("double") / ($"na" + $"nb" - $"shared"), 4))
-      .filter($"jaccard" >= JaccardTau)
+    val (ex, nw) = (gramProfile(existing), gramProfile(batch))
+    val nearIds = atTau(verifiedRows(existing.sparkSession,
+        pairsByA(cands, ex.partitioner.get), ex, nw, JaccardSchema)(Postings.jaccard))
       .select($"b_id".as("doc_id")).distinct()
     batch.select($"doc_id", $"source")
       .join(exactIds.withColumn("is_exact", lit(1L)), Seq("doc_id"), "left")

@@ -870,4 +870,73 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(after._1.map(p => (p._1, p._2)) == Set((1L, 2L), (3L, 4L)))
     assert(after._3 == Set((1L, 1L), (2L, 1L), (3L, 3L), (4L, 3L)))
   }
+
+  private def fingerprints(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.select(col("doc_id"), size(TextFeatures.toks(lower(col("text")))).as("n"),
+        SimHash64(TextFeatures.toks(lower(col("text")))).as("fp"))
+      .collect().filter(r => !r.isNullAt(1) && r.getInt(1) > 0)
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
+
+  test("simhash: a text without tokens has no fingerprint, so it never pairs or fills a bucket") {
+    import spark.implicits._
+    def docs(rows: Seq[(Long, String)]) =
+      rows.toDF("doc_id", "text").withColumn("lang", lit("en"))
+        .withColumn("n_chars", coalesce(length($"text"), lit(0)))
+    val copy = (1 to 30).map(j => s"w$j").mkString(" ")
+    val blank = docs(Seq((1L, ""), (2L, "   "), (3L, ""), (4L, copy), (5L, copy),
+      (6L, (1 to 30).map(j => s"other$j").mkString(" "))))
+    val out = Dedup.dedupSimHashOn(blank, Dedup.BandBucketCap).collect()
+    assert(out.map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSeq ==
+      Seq((4L, 5L, 0, 0L)), out.mkString(";"))
+    // null texts fill no (table, null) bucket: the census reads 0, as
+    // the oracle's and dedupMinHashOn's do
+    val nulls = docs((1L to 10L).map(i => (i, null: String)))
+    val sh = Dedup.dedupSimHashOn(nulls, 8L).collect()
+    assert(sh.length == 1 && sh(0).isNullAt(0) && sh(0).getLong(3) == 0L, sh.mkString(";"))
+    val mh = Dedup.dedupMinHashOn(nulls, 8L).collect()
+    assert(mh.length == 1 && mh(0).getLong(3) == 0L, mh.mkString(";"))
+  }
+
+  test("simhash recall: uncapped pairs equal brute-force all pairs at Hamming <= 3") {
+    import spark.implicits._
+    // near-dup clusters: each member swaps 0-3 words of its cluster's
+    // base text, which moves its fingerprint by a few bits
+    val rnd = new scala.util.Random(7)
+    def words(n: Int) = Seq.fill(n)(s"v${rnd.nextInt(5000)}")
+    val rows = (0 until 8).flatMap { c =>
+      val base = words(120 + c)
+      (0 until 6).map { m =>
+        val doc = (0 until m % 4).foldLeft(base)((d, _) =>
+          d.updated(rnd.nextInt(d.size), s"x${rnd.nextInt(5000)}"))
+        ((c * 10 + m).toLong, doc.mkString(" "))
+      }
+    } ++ (0 until 20).map(i => ((100 + i).toLong, words(20).mkString(" ")))
+    val docs = rows.toDF("doc_id", "text").withColumn("lang", lit("en"))
+      .withColumn("n_chars", length($"text"))
+    val fps = fingerprints(docs).toSeq
+    val brute = (for ((a, fa) <- fps; (b, fb) <- fps if a < b;
+      h = java.lang.Long.bitCount(fa ^ fb) if h <= Dedup.HammingTau) yield (a, b, h)).toSet
+    assert(brute.exists(_._3 > 0) && brute.exists(_._3 == 0), s"corpus too easy: $brute")
+    val got = Dedup.dedupSimHashOn(docs, Long.MaxValue).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(got == brute, s"missing ${brute -- got}, extra ${got -- brute}")
+  }
+
+  test("a null doc_id fails the simhash, containment and incremental profiles") {
+    import spark.implicits._
+    val docs = Seq((Option(1L), "a b c d e"), (Option.empty[Long], "a b c d e"))
+      .toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("n_chars", length($"text"))
+      .withColumn("source", lit("S"))
+    val ok = docs.filter($"doc_id".isNotNull)
+    def failsOnNullId(run: => Any): Unit = {
+      val e = intercept[Exception](run)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => t.getMessage != null && t.getMessage.contains("null doc_id")), e.toString)
+    }
+    failsOnNullId(Dedup.dedupSimHashOn(docs, Dedup.BandBucketCap).collect())
+    failsOnNullId(Dedup.dedupContainmentOn(docs).collect())
+    failsOnNullId(Dedup.dedupIncrementalOn(docs, ok).collect())
+    failsOnNullId(Dedup.dedupIncrementalOn(ok, docs).collect())
+  }
 }

@@ -85,4 +85,20 @@ class TablesSpreadSpec extends AnyFunSuite with BeforeAndAfterAll {
       finally spark.conf.set("spark.graft.spreadNarrowScans", "true")
     assert(on == off, "spread must be result-invisible")
   }
+
+  test("spread follows a table rewritten in place from under its floor to over it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_spread").toString
+    val session = spark
+    import session.implicits._
+    def write(n: Int): Unit =
+      (1 to n).map(i => (i.toLong, s"row $i ${scala.util.Random.alphanumeric.take(40).mkString}"))
+        .toDF("doc_id", "text").coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def spreads: Boolean = hasSpread(Tables.spread(
+      Tables(spark, dir, "documents"), dir, "documents", 64L * 1024, col("doc_id")))
+    write(10)
+    assert(!spreads, "a KB-scale table is under the 64 KB floor")
+    write(20000)
+    assert(spreads, "the rewritten table is over the floor, so the spread must fire")
+  }
 }
